@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.io.BatchLog
 
 /** Structured Streaming counterparts of the reference's online mutation and
   * query paths (`/root/reference/storage/dataset.go:238-348`): the batch
@@ -266,12 +267,13 @@ object StreamingOps {
     * rows in a `bands` table, and per batch: candidate pairs come from
     * joining the batch's band rows against the accumulated table
     * (column-pruned, bucket-key join), exact hashed-Jaccard verification
-    * joins the two sides' sets by id, and everything appends O(batch) with
-    * the same per-batch manifest-merge completeness contract as the index
-    * maintenance sinks (a lost delta file fails the next batch loudly;
-    * at-least-once replays are absorbed by an id replay guard + distinct
-    * at read). Per-batch cost includes a column-pruned scan of the
-    * accumulated id/band tables, so size micro-batches to minutes — the
+    * joins the two sides' sets by id, and everything appends O(batch)
+    * through the same [[BatchLog]] as the index maintenance sinks (a lost
+    * delta file fails the next batch loudly; at-least-once replays are
+    * absorbed by an id replay guard + distinct at read; a restart with a
+    * different band layout refuses). Per-batch cost includes a
+    * column-pruned scan of the accumulated id/band tables, so size
+    * micro-batches to minutes — the
     * state-store form serves the ms regime under its memory bound; this
     * form serves the 100 TB corpus under disk.
     *
@@ -291,16 +293,13 @@ object StreamingOps {
       maxBucketSize: Int = 4096): (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rowsPerBand = numHashes / bands
+    val log = new BatchLog(spark, dir, Seq("docs", "bands"), "near-dup", None, exactlyOnce = false)
+    openFingerprinted(spark, log, s"$dir/nd_meta", s"numHashes=$numHashes,bands=$bands")
 
     (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
       import graft.internal.SqlBridge.{column => gc, expression => ge}
-      val haveDocs = graft.io.HadoopIO.exists(s"$dir/docs", hconf)
-      if (haveDocs) {
-        validateDelta(s"$dir/docs", hconf)
-        validateDelta(s"$dir/bands", hconf)
-      }
+      val oldDocs = log.read("docs").map(_.select("id", "hs"))
+      val oldBandsAll = log.read("bands").map(_.select("id", "band", "bh"))
 
       val preparedAll = batch
         .select(col("doc_id").cast("long").as("id"),
@@ -310,16 +309,14 @@ object StreamingOps {
         .dropDuplicates("id")
       // replay guard: ids already accumulated (a redelivered micro-batch)
       // must not pair with themselves or re-append
-      val prepared = (if (!haveDocs) preparedAll
-        else preparedAll.join(sess.read.parquet(s"$dir/docs").select("id"), Seq("id"), "left_anti"))
+      val prepared = oldDocs.fold(preparedAll)(d =>
+        preparedAll.join(d.select("id"), Seq("id"), "left_anti"))
         .persist()
       try {
         val newBands = prepared
           .select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-        val oldBands =
-          if (!haveDocs) newBands.filter(lit(false))
-          else sess.read.parquet(s"$dir/bands").select("id", "band", "bh")
-            .join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi")
+        val oldBands = oldBandsAll.fold(newBands.filter(lit(false)))(
+          _.join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi"))
         val allBands = newBands.unionByName(oldBands)
 
         // bucket sizes on the join's own key; oversized buckets emit
@@ -350,9 +347,7 @@ object StreamingOps {
         // old ids from the accumulated docs table (semi-filtered by the
         // candidate ids before the join fans out)
         val setsNew = prepared.select(col("id"), col("hs"))
-        val sets =
-          if (!haveDocs) setsNew
-          else setsNew.unionByName(sess.read.parquet(s"$dir/docs").select("id", "hs"))
+        val sets = oldDocs.fold(setsNew)(setsNew.unionByName(_))
         val verified = candidates
           .join(sets.select(col("id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
           .join(sets.select(col("id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
@@ -360,16 +355,11 @@ object StreamingOps {
           .filter(col("jaccard") >= threshold)
           .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
-        // pairs first (their replay dedupes at read); the correctness-
-        // bearing state tables land AFTER with manifest merges, so a crash
-        // mid-batch is either invisible (no manifest update → extra files
-        // tolerated) or complete
+        // pairs first (their replay dedupes at read), then the state tables
         verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
-        prepared.select("id", "hs")
-          .write.mode("append").parquet(s"$dir/docs/batch=$batchId")
-        mergeDeltaManifest(s"$dir/docs", s"batch=$batchId", hconf)
-        newBands.write.mode("append").parquet(s"$dir/bands/batch=$batchId")
-        mergeDeltaManifest(s"$dir/bands", s"batch=$batchId", hconf)
+        log.commit(batchId)(
+          p => prepared.select("id", "hs").write.mode("append").parquet(p),
+          p => newBands.write.mode("append").parquet(p))
       } finally prepared.unpersist()
     }
   }
@@ -394,9 +384,9 @@ object StreamingOps {
     * band rows joined against batch + (bucket-key semi-filtered)
     * accumulated band rows, with [[graft.dedup.HammingLsh]]'s star-pair
     * degradation on oversized buckets, verified by the exact bit_count
-    * Hamming gate — O(batch) appends, the same per-batch manifest-merge
-    * completeness contract as the other maintained sinks, at-least-once
-    * replays absorbed by an id guard + distinct at read.
+    * Hamming gate — O(batch) appends through the same [[BatchLog]] as the
+    * other maintained sinks, at-least-once replays absorbed by an id guard
+    * + distinct at read.
     *
     * Converges to [[graft.dedup.HammingLsh.bandedPairs]]'s pair set on
     * buckets within `maxBucketSize` regardless of batch boundaries
@@ -419,22 +409,20 @@ object StreamingOps {
       s"pigeonhole completeness needs maxDist < bands, got maxDist=$maxDist bands=$bands")
     val bandW = 64 / bands
     val mask = if (bandW == 64) -1L else (1L << bandW) - 1L
+    val log = new BatchLog(spark, dir, Seq("hashes", "bands"), "media-phash", None,
+      exactlyOnce = false)
+    openFingerprinted(spark, log, s"$dir/mp_meta", s"bands=$bands")
 
     (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      val haveHashes = graft.io.HadoopIO.exists(s"$dir/hashes", hconf)
-      if (haveHashes) {
-        validateDelta(s"$dir/hashes", hconf)
-        validateDelta(s"$dir/bands", hconf)
-      }
+      val oldHashes = log.read("hashes").map(_.select("id", "dhash"))
+      val oldBandsAll = log.read("bands").map(_.select("id", "band", "bh"))
 
       val preparedAll = batch
         .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("dhash"))
         .dropDuplicates("id")
       // replay guard: ids already accumulated must not re-pair or re-append
-      val prepared = (if (!haveHashes) preparedAll
-        else preparedAll.join(sess.read.parquet(s"$dir/hashes").select("id"), Seq("id"), "left_anti"))
+      val prepared = oldHashes.fold(preparedAll)(h =>
+        preparedAll.join(h.select("id"), Seq("id"), "left_anti"))
         .persist()
       try {
         val newBands = prepared.select(
@@ -442,10 +430,8 @@ object StreamingOps {
           posexplode(array((0 until bands).map { b =>
             shiftrightunsigned(col("dhash"), b * bandW).bitwiseAND(lit(mask))
           }: _*)).as(Seq("band", "bh")))
-        val oldBands =
-          if (!haveHashes) newBands.filter(lit(false))
-          else sess.read.parquet(s"$dir/bands").select("id", "band", "bh")
-            .join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi")
+        val oldBands = oldBandsAll.fold(newBands.filter(lit(false)))(
+          _.join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi"))
         val allBands = newBands.unionByName(oldBands)
 
         // bucket sizes on the join key across old + new; oversized
@@ -474,10 +460,7 @@ object StreamingOps {
         // exact Hamming verify: new ids resolve from the batch, old ids
         // from the accumulated table (candidate-semi-filtered first)
         val hashesNew = prepared.select(col("id"), col("dhash"))
-        val sides =
-          if (!haveHashes) hashesNew
-          else hashesNew.unionByName(
-            sess.read.parquet(s"$dir/hashes").select("id", "dhash"))
+        val sides = oldHashes.fold(hashesNew)(hashesNew.unionByName(_))
         val verified = candidates
           .join(sides.select(col("id").as("id_a"), col("dhash").as("__h_a")), Seq("id_a"))
           .join(sides.select(col("id").as("id_b"), col("dhash").as("__h_b")), Seq("id_b"))
@@ -485,13 +468,11 @@ object StreamingOps {
           .filter(col("hamming") <= maxDist)
           .select(col("id_a"), col("id_b"), col("hamming"))
 
-        // pairs first (replays dedupe at read); state tables land AFTER
-        // with manifest merges — a crash mid-batch is invisible or complete
+        // pairs first (replays dedupe at read), then the state tables
         verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
-        prepared.write.mode("append").parquet(s"$dir/hashes/batch=$batchId")
-        mergeDeltaManifest(s"$dir/hashes", s"batch=$batchId", hconf)
-        newBands.write.mode("append").parquet(s"$dir/bands/batch=$batchId")
-        mergeDeltaManifest(s"$dir/bands", s"batch=$batchId", hconf)
+        log.commit(batchId)(
+          p => prepared.write.mode("append").parquet(p),
+          p => newBands.write.mode("append").parquet(p))
       } finally prepared.unpersist()
     }
   }
@@ -538,9 +519,8 @@ object StreamingOps {
     * with the SAME pointer-doubling operator batch mode uses, so the
     * converged output is row-for-row the batch `dedup_groups` answer.
     *
-    * The per-batch manifest-merge completeness contract matches the
-    * other maintained sinks: a lost delta file fails the next batch
-    * loudly ([[validateDelta]]).
+    * State commits through a [[BatchLog]] like the other maintained
+    * sinks: a lost delta file fails the next batch loudly.
     */
   def dedupGroupsSink(
       spark: SparkSession,
@@ -549,11 +529,11 @@ object StreamingOps {
       bCol: String = "doc_b",
       maxResolveRounds: Int = 1000,
       maxDriverEdges: Int = 100000): (DataFrame, Long) => Unit = {
+    val log = dedupGroupsLog(spark, dir)
+    openFingerprinted(spark, log, s"$dir/dg_meta", s"aCol=$aCol,bCol=$bCol")
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      val haveLabels = graft.io.HadoopIO.exists(s"$dir/labels", hconf)
-      if (haveLabels) validateDelta(s"$dir/labels", hconf)
+      val oldLabels = log.read("labels").map(_.select("id", "parent"))
 
       // no dedup pass: duplicate pairs (and at-least-once replays) are
       // harmless to union-find — they re-derive the same root edges,
@@ -577,8 +557,7 @@ object StreamingOps {
           // — and compressing THEM (not just the endpoints) is what keeps
           // chains from growing one hop per merge between walks
           val gens = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-          if (haveLabels) {
-            val labels = sess.read.parquet(s"$dir/labels").select("id", "parent")
+          oldLabels.foreach { labels =>
             def step(f: org.apache.spark.sql.DataFrame) = {
               val keys = f.select(col("label")).distinct()
               val hop = labels.join(broadcast(keys.withColumnRenamed("label", "id")), Seq("id"))
@@ -670,9 +649,8 @@ object StreamingOps {
             .select(col("node").as("id"),
               coalesce(col("group_id"), col("label")).as("parent"))
             .filter(col("id") =!= col("parent"))
-          rootRows.unionByName(compress).dropDuplicates("id", "parent")
-            .write.mode("append").parquet(s"$dir/labels/batch=$batchId")
-          mergeDeltaManifest(s"$dir/labels", s"batch=$batchId", hconf)
+          log.commit(batchId)(p => rootRows.unionByName(compress).dropDuplicates("id", "parent")
+            .write.mode("append").parquet(p))
           rootEdges.unpersist()
           gens.foreach(_.unpersist())
           frontier.unpersist()
@@ -699,8 +677,10 @@ object StreamingOps {
       spark: SparkSession,
       dir: String,
       maxRounds: Int = 64): DataFrame = {
-    validateDelta(s"$dir/labels", spark.sparkContext.hadoopConfiguration)
-    val forest = spark.read.parquet(s"$dir/labels")
+    val forest = dedupGroupsLog(spark, dir).read("labels").getOrElse {
+      import spark.implicits._
+      return Seq.empty[(Long, Long)].toDF("id", "group_id")
+    }
       .groupBy("id").agg(min("parent").as("parent"))
       .persist()
     // roots never carry a row of their own — they enter as their own group
@@ -733,6 +713,29 @@ object StreamingOps {
       s"dedupGroupsSinkGroups: resolution exceeded $maxRounds pointer-halving rounds — " +
         "forest deeper than 2^64 is impossible, so the state is corrupt")
     labels.select(col("id"), col("label").as("group_id"))
+  }
+
+  private def dedupGroupsLog(spark: SparkSession, dir: String) =
+    new BatchLog(spark, dir, Seq("labels"), "dedup-groups", None, exactlyOnce = false)
+
+  /** Open `log` under a one-string fingerprint sidecar at `metaPath` —
+    * the meta of the sinks whose restart contract is a few parameters
+    * ([[nearDupSink]]'s band layout, [[mediaPhashSink]]'s band width,
+    * [[dedupGroupsSink]]'s pair columns). A restart with a different
+    * fingerprint would join new state against incompatible old state.
+    */
+  private def openFingerprinted(
+      spark: SparkSession, log: BatchLog, metaPath: String, fingerprint: String): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val stored =
+      if (!graft.io.HadoopIO.exists(metaPath, hconf)) None
+      else Some(graft.io.HadoopIO.read(metaPath, hconf)(_.readUTF()))
+    log.open(stored) { s =>
+      require(s == fingerprint,
+        s"sink state at $metaPath was maintained with ($s); restarting with ($fingerprint) " +
+          "would join new state against incompatible old state — delete the directory or " +
+          "pass matching parameters")
+    }(graft.io.HadoopIO.write(metaPath, hconf)(_.writeUTF(fingerprint)))
   }
 
   /** Streaming benchmark decontamination: flag arriving documents that
@@ -839,48 +842,53 @@ object StreamingOps {
     * stale-version safety; within a batch, [[ivfMaintainedState]]'s
     * version order decides.
     */
-  /** Quantizer sidecars (centroids + meta) at sink construction, shared by
-    * [[ivfMaintenanceSink]] and [[ivfPqMaintenanceSink]]: write them if the
-    * directory is fresh, otherwise VERIFY the passed quantizer matches the
-    * stored one and throw on mismatch — existing delta rows were assigned
-    * under the stored quantizer, so silently overwriting it would leave
-    * searches probing new centroids against stale cell ids (a silent
-    * recall hole in a codebase that otherwise fails loudly on exactly this
-    * class of mismatch).
+  /** Open the delta log of [[ivfMaintenanceSink]] and
+    * [[ivfPqMaintenanceSink]] with its quantizer sidecars (centroids +
+    * meta) as the fingerprint: write them if the directory is fresh,
+    * otherwise VERIFY the passed quantizer matches the stored one and throw
+    * on mismatch — existing delta rows were assigned under the stored
+    * quantizer, so silently overwriting it would leave searches probing new
+    * centroids against stale cell ids (a silent recall hole in a codebase
+    * that otherwise fails loudly on exactly this class of mismatch).
     */
   private def ensureIvfSidecars(
       spark: SparkSession,
       indexDir: String,
       centroids: Array[Array[Float]],
       metric: String,
-      spill: Int): Unit = {
+      spill: Int): BatchLog = {
     import spark.implicits._
     val dim = centroids.headOption.map(_.length).getOrElse(0)
-    graft.knn.Ivf.loadMeta(spark, indexDir) match {
-      case Some(existing) =>
-        require(existing.metric == metric && existing.spill == spill &&
-          existing.c == centroids.length && existing.dim == dim,
-          s"index at $indexDir is already maintained under (metric=${existing.metric}, " +
-            s"spill=${existing.spill}, c=${existing.c}, dim=${existing.dim}); restarting the " +
-            s"sink with (metric=$metric, spill=$spill, c=${centroids.length}, dim=$dim) would " +
-            "rewrite the quantizer under delta rows assigned with the old one — delete the " +
-            "directory (or retrain and compact explicitly) instead")
-        val stored = spark.read.parquet(s"$indexDir/centroids")
-          .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-          .sortBy(_._1).map(_._2.toArray)
-        require(stored.length == centroids.length &&
-          stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
-          s"index at $indexDir is already maintained with DIFFERENT centroid values — old " +
-            "delta rows carry cell ids from the stored quantizer; refusing to overwrite it")
-      case None =>
-        centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-          .toDF("cell", "centroid").coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/centroids")
-        Seq((metric, spill, centroids.length, dim))
-          .toDF("metric", "spill", "c", "dim").coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/meta")
+    val log = ivfLog(spark, indexDir)
+    log.open(graft.knn.Ivf.loadMeta(spark, indexDir)) { existing =>
+      require(existing.metric == metric && existing.spill == spill &&
+        existing.c == centroids.length && existing.dim == dim,
+        s"index at $indexDir is already maintained under (metric=${existing.metric}, " +
+          s"spill=${existing.spill}, c=${existing.c}, dim=${existing.dim}); restarting the " +
+          s"sink with (metric=$metric, spill=$spill, c=${centroids.length}, dim=$dim) would " +
+          "rewrite the quantizer under delta rows assigned with the old one — delete the " +
+          "directory (or retrain and compact explicitly) instead")
+      val stored = spark.read.parquet(s"$indexDir/centroids")
+        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
+        .sortBy(_._1).map(_._2.toArray)
+      require(stored.length == centroids.length &&
+        stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
+        s"index at $indexDir is already maintained with DIFFERENT centroid values — old " +
+          "delta rows carry cell ids from the stored quantizer; refusing to overwrite it")
+    } {
+      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+        .toDF("cell", "centroid").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/centroids")
+      Seq((metric, spill, centroids.length, dim))
+        .toDF("metric", "spill", "c", "dim").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/meta")
     }
+    log
   }
+
+  private def ivfLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("delta"), "maintained IVF", Some("compactIvfMaintained"),
+      exactlyOnce = false)
 
   def ivfMaintenanceSink(
       spark: SparkSession,
@@ -888,7 +896,7 @@ object StreamingOps {
       centroids: Array[Array[Float]],
       metric: String = "euclidean",
       spill: Int = 1): (Dataset[VectorOp], Long) => Unit = {
-    ensureIvfSidecars(spark, indexDir, centroids, metric, spill)
+    val log = ensureIvfSidecars(spark, indexDir, centroids, metric, spill)
 
     (batch: Dataset[VectorOp], batchId: Long) => {
       val sess = batch.sparkSession
@@ -925,99 +933,14 @@ object StreamingOps {
         val tombstones = ops.filter(col("op") === "remove")
           .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
             col("version"), lit("remove").as("op"))
-        // one subdirectory per micro-batch: the completeness registry then
-        // lists only THIS batch's files (O(batch), not O(history) — an S3
-        // maintenance stream must not re-list months of deltas per batch)
-        // and merges them into the manifest. Parquet partition discovery
-        // surfaces `batch` as a column; the view reader ignores it.
         // repartition on the partition column first: otherwise every write
         // task emits a file per cell it saw (tasks × cells files per
         // batch — the classic small-files explosion an S3 delta log at
         // corpus scale cannot absorb); after the shuffle each cell is
         // written by one task, so files ≈ cells
-        assigned.unionByName(tombstones).repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-          sess.sparkContext.hadoopConfiguration)
+        log.commit(batchId)(p => assigned.unionByName(tombstones).repartition(col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(p))
       } finally ops.unpersist()
-    }
-  }
-
-  /** (relative parquet path, length) pairs under a delta dir, optionally
-    * restricted to one batch subdirectory. Layout-independent: the IVF
-    * delta is cell-partitioned (`batch=&#42;/cell=&#42;/file`), the HNSW delta is
-    * flat (`batch=&#42;/file`); a batch directory holds exactly one of the two
-    * shapes, so globbing both depths never double-counts.
-    */
-  private def listDelta(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      onlyBatch: Option[String] = None): Seq[(String, Long)] = {
-    val dir = onlyBatch.map(b => s"$deltaDir/$b").getOrElse(deltaDir)
-    val prefix = onlyBatch.map(_ + "/").getOrElse("")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val qualified = p.getFileSystem(conf).makeQualified(p).toString
-    val patterns =
-      if (onlyBatch.isDefined) Seq("*.parquet", "*/*.parquet")
-      else Seq("*/*.parquet", "*/*/*.parquet")
-    patterns.flatMap(pat => graft.io.HadoopIO.globWithLength(dir, pat, conf))
-      .map { case (uri, len) => (prefix + uri.stripPrefix(qualified + "/"), len) }
-      .sortBy(_._1)
-  }
-
-  /** Fold one batch subdirectory's files into the delta manifest —
-    * O(batch) listing + one manifest rewrite, never a full-history glob
-    * (the same incremental shape as the HNSW artifact manifest merge).
-    */
-  private def mergeDeltaManifest(
-      deltaDir: String,
-      batchSubdir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val prior = graft.io.Manifest.read(deltaDir, conf).getOrElse(Seq.empty)
-    val batchEntries = listDelta(deltaDir, conf, Some(batchSubdir))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
-    val batchNames = batchEntries.map(_.name).toSet
-    graft.io.Manifest.write(deltaDir,
-      prior.filterNot(e => batchNames(e.name)) ++ batchEntries, conf)
-  }
-
-  private def writeDeltaManifest(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    graft.io.Manifest.write(deltaDir,
-      listDelta(deltaDir, conf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-      conf)
-
-  /** Fail-loud completeness check for a maintenance delta log: every file
-    * the manifest lists must be present with its recorded length (a lost
-    * or truncated delta file would otherwise silently drop mutations from
-    * the reconstructed view). EXTRA unlisted files are tolerated — they
-    * are uncommitted appends from an at-least-once `foreachBatch`
-    * redelivery (a crash between append and manifest update), and the
-    * latest-wins view dedupes their replayed rows. A MISSING manifest is
-    * an error, not a passthrough: the sink merges one from batch 0 and
-    * [[compactIvfMaintained]] writes one before its swap, so a
-    * manifest-less delta dir is either foreign or the surviving half of a
-    * non-atomic (S3-style file-by-file) rename that died mid-swap — in
-    * both cases serving it silently could drop mutations.
-    */
-  private def validateDelta(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val entries = graft.io.Manifest.read(deltaDir, conf).getOrElse(
-      throw new IllegalStateException(
-        s"maintained delta log at $deltaDir has no manifest — sinks write one from " +
-          "batch 0 and compaction writes one before its swap, so this directory is foreign or " +
-          "a torn compaction swap; refusing to serve unverifiable state"))
-    val present = listDelta(deltaDir, conf).toMap
-    val missing = entries.filterNot(e => present.contains(e.name))
-    require(missing.isEmpty,
-      s"maintained delta log at $deltaDir is INCOMPLETE: manifest lists ${entries.size} " +
-        s"files, missing [${missing.map(_.name).mkString(", ")}] — refusing to serve a view " +
-        "with silently dropped mutations")
-    entries.foreach { e =>
-      require(present(e.name) == e.length,
-        s"delta file ${e.name} at $deltaDir is ${present(e.name)}B, manifest says ${e.length}B (torn)")
     }
   }
 
@@ -1043,8 +966,8 @@ object StreamingOps {
     */
   private def latestDeltaRows(spark: SparkSession, indexDir: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    validateDelta(s"$indexDir/delta", spark.sparkContext.hadoopConfiguration)
-    val delta = spark.read.parquet(s"$indexDir/delta")
+    val delta = ivfLog(spark, indexDir).read("delta").getOrElse(throw new IllegalStateException(
+      s"maintained IVF delta log at $indexDir/delta has no committed batch — nothing to serve"))
     val scoped = asOfVersion match {
       case None => delta
       case Some(v) =>
@@ -1097,44 +1020,16 @@ object StreamingOps {
   /** Compact an [[ivfMaintenanceSink]] delta log to each id's winning rows
     * (upserts AND tombstones — see [[latestDeltaRows]]): read cost of the
     * maintained view stops growing with mutation history. Run while the
-    * maintenance stream is STOPPED (the swap below and a concurrent
-    * micro-batch append race).
-    *
-    * Swap protocol: write the compacted rows AND their manifest to
-    * `delta.compact` (relative names survive the rename), delete `delta`,
-    * rename into place. Every crash window fails LOUDLY on the next load
-    * (never silent partial state): before the delete the old `delta` is
-    * intact; between delete and rename there is no `delta` and re-running
-    * compact resumes the swap from the manifest-complete `delta.compact`;
-    * a crash INSIDE a non-atomic file-by-file rename (S3-style stores)
-    * leaves a partial `delta` whose manifest either lists files still
-    * stranded in `delta.compact` (missing → [[validateDelta]] error) or
-    * has not moved yet (no manifest → [[validateDelta]] error).
+    * maintenance stream is STOPPED (the [[BatchLog]] swap and a concurrent
+    * micro-batch append race); re-running it resumes an interrupted swap.
     */
-  def compactIvfMaintained(spark: SparkSession, indexDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val deltaDir = s"$indexDir/delta"
-    val tmpDir = s"$indexDir/delta.compact"
-    if (!graft.io.HadoopIO.exists(deltaDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf),
-        s"neither $deltaDir nor $tmpDir exists — not a maintained IVF directory")
-      require(graft.io.Manifest.read(tmpDir, hconf).isDefined,
-        s"$tmpDir exists without a manifest but $deltaDir is gone — inconsistent state " +
-          "(the manifest is written before the swap begins); refusing to resume")
-      graft.io.HadoopIO.rename(tmpDir, deltaDir, hconf)
-      return
+  def compactIvfMaintained(spark: SparkSession, indexDir: String): Unit =
+    ivfLog(spark, indexDir).compact("delta") { seg =>
+      latestDeltaRows(spark, indexDir)
+        .drop("batch") // discovered partition column; compacted history is one pseudo-batch
+        .repartition(col("cell")) // one writer per cell: files ≈ cells, not tasks × cells
+        .write.partitionBy("cell").parquet(seg)
     }
-    graft.io.HadoopIO.delete(tmpDir, hconf) // stale tmp from an interrupted attempt
-    latestDeltaRows(spark, indexDir)
-      .drop("batch") // discovered partition column; compacted history is one pseudo-batch
-      .repartition(col("cell")) // one writer per cell: files ≈ cells, not tasks × cells
-      .write.partitionBy("cell").parquet(s"$tmpDir/batch=compacted")
-    // manifest BEFORE the destructive steps: from here on, any partial
-    // state under deltaDir fails validateDelta instead of serving silently
-    writeDeltaManifest(tmpDir, hconf)
-    graft.io.HadoopIO.delete(deltaDir, hconf)
-    graft.io.HadoopIO.rename(tmpDir, deltaDir, hconf)
-  }
 
   private def deltaToBaseRatio(deltaBytes: Long, baseBytes: Long): Double =
     if (deltaBytes == 0L) 0.0
@@ -1148,12 +1043,8 @@ object StreamingOps {
     * compacted history (a never-compacted log is always worth one pass).
     */
   def ivfMaintainedDeltaRatio(spark: SparkSession, indexDir: String): Double = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val entries = graft.io.Manifest.read(s"$indexDir/delta", hconf).getOrElse(
-      throw new IllegalStateException(
-        s"maintained IVF delta log at $indexDir/delta has no manifest — not a maintained IVF dir"))
-    val (compacted, fresh) = entries.partition(_.name.startsWith("batch=compacted/"))
-    deltaToBaseRatio(fresh.map(_.length).sum, compacted.map(_.length).sum)
+    val (fresh, compacted) = ivfLog(spark, indexDir).bytes("delta")
+    deltaToBaseRatio(fresh, compacted)
   }
 
   /** [[compactIvfMaintained]] gated on [[ivfMaintainedDeltaRatio]]: the
@@ -1168,15 +1059,9 @@ object StreamingOps {
       indexDir: String,
       maxDeltaRatio: Double = 0.25): (Double, Boolean) = {
     require(maxDeltaRatio >= 0, s"maxDeltaRatio must be non-negative, got $maxDeltaRatio")
-    // a missing delta/ under a live index is an interrupted compaction
-    // swap: its ratio is unknowable until the swap completes, and
-    // compactIvfMaintained IS the resume path — finish it unconditionally
-    // instead of throwing the gauge's misleading "not maintained" error
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta", hconf)) {
-      compactIvfMaintained(spark, indexDir)
-      return (Double.NaN, true)
-    }
+    // an interrupted compaction swap: its ratio is unknowable until the
+    // swap completes — finish it instead of throwing the gauge's error
+    if (ivfLog(spark, indexDir).resumeSwap("delta")) return (Double.NaN, true)
     val ratio = ivfMaintainedDeltaRatio(spark, indexDir)
     if (ratio > maxDeltaRatio) { compactIvfMaintained(spark, indexDir); (ratio, true) }
     else (ratio, false)
@@ -1517,10 +1402,10 @@ object StreamingOps {
       val tombstones = winners.filter(col("op") === "remove")
         .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
           col("version"), col("op"))
-      assigned.unionByName(tombstones)
-        .repartition(col("cell")) // files ≈ cells, not tasks × cells
-        .write.partitionBy("cell").parquet(s"$tmpDir/delta/batch=retrained")
-      writeDeltaManifest(s"$tmpDir/delta", hconf)
+      BatchLog.writeWhole(s"$tmpDir/delta", "retrained", hconf)(seg =>
+        assigned.unionByName(tombstones)
+          .repartition(col("cell")) // files ≈ cells, not tasks × cells
+          .write.partitionBy("cell").parquet(seg))
       centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
         .toDF("cell", "centroid").coalesce(1)
         .write.parquet(s"$tmpDir/centroids")
@@ -1720,7 +1605,7 @@ object StreamingOps {
       s"codebooks cover ${cb.m * cb.dsub} dims, centroids have $dim")
     opq.foreach(m => require(m.dim == dim,
       s"OPQ rotation dimension ${m.dim} != centroid dimension $dim"))
-    ensureIvfSidecars(spark, indexDir, centroids, "euclidean", spill)
+    val log = ensureIvfSidecars(spark, indexDir, centroids, "euclidean", spill)
     // OPQ-rotated maintenance: every arriving vector rotates through the
     // FROZEN model before assignment/encoding (centroids and codebooks
     // live in rotated coordinates — pass rotated artifacts), queries
@@ -1793,11 +1678,9 @@ object StreamingOps {
         val tombstones = ops.filter(col("op") === "remove")
           .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
             lit(null).cast("binary").as("pq_codes"), col("version"), lit("remove").as("op"))
-        encoded.unionByName(tombstones)
+        log.commit(batchId)(p => encoded.unionByName(tombstones)
           .repartition(col("cell")) // files ≈ cells per batch, not tasks × cells
-          .write.mode("append").partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-          sess.sparkContext.hadoopConfiguration)
+          .write.mode("append").partitionBy("cell").parquet(p))
       } finally ops.unpersist()
     }
   }
@@ -2032,10 +1915,10 @@ object StreamingOps {
       val tombstones = winners.filter(col("op") === "remove")
         .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
           lit(null).cast("binary").as("pq_codes"), col("version"), col("op"))
-      encoded.unionByName(tombstones)
-        .repartition(col("cell")) // files ≈ cells, not tasks × cells
-        .write.partitionBy("cell").parquet(s"$tmpDir/delta/batch=retrained")
-      writeDeltaManifest(s"$tmpDir/delta", hconf)
+      BatchLog.writeWhole(s"$tmpDir/delta", "retrained", hconf)(seg =>
+        encoded.unionByName(tombstones)
+          .repartition(col("cell")) // files ≈ cells, not tasks × cells
+          .write.partitionBy("cell").parquet(seg))
       centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
         .toDF("cell", "centroid").coalesce(1)
         .write.parquet(s"$tmpDir/centroids")
@@ -2146,43 +2029,33 @@ object StreamingOps {
       metric: String = "euclidean",
       config: graft.hnsw.HnswConfig = graft.hnsw.HnswConfig()): (Dataset[VectorOp], Long) => Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val passed = HnswMaintainedMeta(numPartitions, metric, config)
-    val deltaDir = s"$indexDir/delta"
+    // the sidecar stores the resolved config (mMax, mMax0, level multiplier):
+    // compare in that form, or a default-config restart could never match
+    val passed = HnswMaintainedMeta(numPartitions, metric, config.copy(mMaxOpt = config.mMax,
+      mMax0Opt = config.mMax0, levelMultiplierOpt = config.levelMultiplier))
     val baseDir = s"$indexDir/base"
-    loadHnswMaintainedMeta(spark, indexDir) match {
-      case Some(existing) =>
-        require(existing == passed,
-          s"index at $indexDir is already maintained under $existing; restarting the sink " +
-            s"with $passed would change the routing/graph contract old delta rows and base " +
-            "graphs were written under — delete the directory or pass matching parameters")
-        // committed meta implies committed manifests (init seeds them
-        // before meta, compaction rewrites them before its swap): a
-        // missing one is LOST state — or the torn-compaction window whose
-        // documented resume is compactHnswMaintained — and re-seeding it
-        // from a raw listing would bless orphaned half-written batch
-        // files as committed; fail loudly with the right remedy instead
-        requireCommittedManifests("maintained HNSW", indexDir,
-          Seq(deltaDir, baseDir), "compactHnswMaintained", hconf)
-      case None =>
-        // fresh init: seed manifests ONLY where none exists — an adopted
-        // pre-built base (the HnswSpark persist → maintain flow) keeps
-        // its CRC-bearing manifest, which both preserves checksum
-        // verification and keeps orphaned files from a crashed rebuild
-        // REJECTED by the load-time validation instead of silently
-        // blessed by a glob. Then meta LAST as the init commit marker —
-        // a crash above leaves no meta and init re-runs whole.
-        graft.io.HadoopIO.mkdirs(deltaDir, hconf)
-        if (graft.io.Manifest.read(deltaDir, hconf).isEmpty)
-          graft.io.Manifest.write(deltaDir,
-            listDelta(deltaDir, hconf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-            hconf)
-        graft.io.HadoopIO.mkdirs(baseDir, hconf)
-        if (graft.io.Manifest.read(baseDir, hconf).isEmpty)
-          graft.io.Manifest.write(baseDir,
-            graft.io.HadoopIO.globWithLength(baseDir, "*.hnsw", hconf)
-              .map { case (uri, len) => graft.io.ManifestEntry(graft.io.Manifest.baseName(uri), len, -1L) },
-            hconf)
-        writeHnswMaintainedMeta(spark, indexDir, passed)
+    val log = hnswLog(spark, indexDir)
+    log.open(loadHnswMaintainedMeta(spark, indexDir)) { existing =>
+      require(existing == passed,
+        s"index at $indexDir is already maintained under $existing; restarting the sink " +
+          s"with $passed would change the routing/graph contract old delta rows and base " +
+          "graphs were written under — delete the directory or pass matching parameters")
+      require(graft.io.Manifest.read(baseDir, hconf).isDefined,
+        s"maintained HNSW dir $indexDir has committed meta but no manifest under [base] — " +
+          "either lost/foreign state, or a compaction swap died mid-flight (run " +
+          "compactHnswMaintained to resume it); refusing to extend unverifiable state")
+    } {
+      // the base graph registry is seeded ONLY where none exists — an
+      // adopted pre-built base (the HnswSpark persist → maintain flow)
+      // keeps its CRC-bearing manifest, so orphaned files from a crashed
+      // rebuild stay REJECTED by the load-time validation
+      graft.io.HadoopIO.mkdirs(baseDir, hconf)
+      if (graft.io.Manifest.read(baseDir, hconf).isEmpty)
+        graft.io.Manifest.write(baseDir,
+          graft.io.HadoopIO.globWithLength(baseDir, "*.hnsw", hconf)
+            .map { case (uri, len) => graft.io.ManifestEntry(graft.io.Manifest.baseName(uri), len, -1L) },
+          hconf)
+      writeHnswMaintainedMeta(spark, indexDir, passed)
     }
 
     (batch: Dataset[VectorOp], batchId: Long) => {
@@ -2199,17 +2072,19 @@ object StreamingOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id", "version")
         .orderBy(col("op"), xxhash64(col("vector")))
-      batch.toDF()
+      log.commit(batchId)(p => batch.toDF()
         .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
         .select(col("id"),
           when(col("op") === "upsert", col("vector")).otherwise(lit(null).cast("array<float>"))
             .as("vector"),
           col("version"), col("op"), lit(false).as("guard"))
-        .write.mode("append").parquet(s"$indexDir/delta/batch=$batchId")
-      mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-        batch.sparkSession.sparkContext.hadoopConfiguration)
+        .write.mode("append").parquet(p))
     }
   }
+
+  private def hnswLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("delta"), "maintained HNSW", Some("compactHnswMaintained"),
+      exactlyOnce = false)
 
   /** Each id's winning HNSW delta row, latest-version-wins: 'remove' beats
     * 'upsert' on an exact version tie (conservative read of a malformed
@@ -2221,40 +2096,37 @@ object StreamingOps {
   private def hnswLatestDeltaRows(spark: SparkSession, indexDir: String,
       asOfVersion: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val deltaDir = s"$indexDir/delta"
-    validateDelta(deltaDir, hconf)
-    if (graft.io.Manifest.read(deltaDir, hconf).get.isEmpty)
-      Seq.empty[(Long, Array[Float], Long, String, Boolean)]
-        .toDF("id", "vector", "version", "op", "guard")
-    else {
-      val delta = spark.read.parquet(deltaDir)
-      val scoped = asOfVersion match {
-        case None => delta
-        case Some(v) =>
-          // Same horizon rule as [[latestDeltaRows]]: compaction collapses
-          // each id's history to its winning row (a guard or tombstone in
-          // `batch=compacted`), so the newest compacted version is the
-          // time-travel floor — at or above it every compacted winner
-          // already satisfies version <= v and base serves the exact at-v
-          // state; below it overwritten/removed history is gone and the
-          // read must fail loudly. (The partition column is int-inferred
-          // while no compacted batch exists — the string cast keeps the
-          // filter well-typed in both layouts.)
-          val floor = delta.filter(col("batch").cast("string") === "compacted")
-            .agg(max(col("version"))).head().get(0)
-          if (floor != null) require(v >= floor.asInstanceOf[Long],
-            s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
-              "below the newest compacted version was collapsed by compactHnswMaintained and " +
-              "cannot be replayed; keep the delta log un-compacted as far back as reads need")
-          delta.filter(col("version") <= v)
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id")
-        .orderBy(col("version").desc, col("op").asc, col("guard").desc, xxhash64(col("vector")))
-      scoped
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-        .select("id", "vector", "version", "op", "guard")
+    hnswLog(spark, indexDir).read("delta") match {
+      case None =>
+        Seq.empty[(Long, Array[Float], Long, String, Boolean)]
+          .toDF("id", "vector", "version", "op", "guard")
+      case Some(delta) =>
+        val scoped = asOfVersion match {
+          case None => delta
+          case Some(v) =>
+            // Same horizon rule as [[latestDeltaRows]]: compaction collapses
+            // each id's history to its winning row (a guard or tombstone in
+            // `batch=compacted`), so the newest compacted version is the
+            // time-travel floor — at or above it every compacted winner
+            // already satisfies version <= v and base serves the exact at-v
+            // state; below it overwritten/removed history is gone and the
+            // read must fail loudly. (The partition column is int-inferred
+            // while no compacted batch exists — the string cast keeps the
+            // filter well-typed in both layouts.)
+            val floor = delta.filter(col("batch").cast("string") === "compacted")
+              .agg(max(col("version"))).head().get(0)
+            if (floor != null) require(v >= floor.asInstanceOf[Long],
+              s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
+                "below the newest compacted version was collapsed by compactHnswMaintained and " +
+                "cannot be replayed; keep the delta log un-compacted as far back as reads need")
+            delta.filter(col("version") <= v)
+        }
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("id")
+          .orderBy(col("version").desc, col("op").asc, col("guard").desc, xxhash64(col("vector")))
+        scoped
+          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+          .select("id", "vector", "version", "op", "guard")
     }
   }
 
@@ -2361,23 +2233,22 @@ object StreamingOps {
     *
     * The fold works on a COPY of base (`base.compact`): remove every
     * overridden id from its routed graph (HNSW insert is add-only), insert
-    * the live winners, then write the compacted delta (`delta.compact`) —
-    * upsert winners collapse to payload-less GUARD rows recording "this
-    * id's newest version lives in base" (a later stale upsert loses the
-    * version tie-break to the guard instead of shadowing base with an old
-    * vector), tombstones persist payload-less (dropping one would let a
+    * the live winners, validate the copy against its manifest and swap it
+    * in. Then the delta compacts through the [[BatchLog]] swap — upsert
+    * winners collapse to payload-less GUARD rows recording "this id's
+    * newest version lives in base" (a later stale upsert loses the version
+    * tie-break to the guard instead of shadowing base with an old vector),
+    * tombstones persist payload-less (dropping one would let a
     * post-compaction stale upsert resurrect the removed vector — the same
-    * invariant [[compactIvfMaintained]] keeps). Both halves carry their
-    * manifests BEFORE the swaps, so every crash window fails loudly:
-    * base swaps first, and the overlap state (new base + old delta) is
-    * idempotent because the fold removes-then-inserts.
+    * invariant [[compactIvfMaintained]] keeps). Base swaps first; the
+    * overlap state (new base + old delta) is idempotent because the fold
+    * removes-then-inserts. Re-running it resumes either interrupted swap.
     */
   def compactHnswMaintained(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val baseDir = s"$indexDir/base"
     val baseTmp = s"$indexDir/base.compact"
-    val deltaDir = s"$indexDir/delta"
-    val deltaTmp = s"$indexDir/delta.compact"
+    val log = hnswLog(spark, indexDir)
     val meta = loadHnswMaintainedMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
 
@@ -2393,15 +2264,9 @@ object StreamingOps {
         graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
       graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
     }
-    if (!graft.io.HadoopIO.exists(deltaDir, hconf)) {
-      require(graft.io.HadoopIO.exists(deltaTmp, hconf) &&
-        graft.io.Manifest.read(deltaTmp, hconf).isDefined,
-        s"$deltaDir is gone and $deltaTmp is absent or manifest-less — inconsistent state")
-      graft.io.HadoopIO.rename(deltaTmp, deltaDir, hconf)
-      return // the interrupted run had finished its fold; the swap is now complete
-    }
-    graft.io.HadoopIO.delete(baseTmp, hconf) // stale tmps from an interrupted attempt
-    graft.io.HadoopIO.delete(deltaTmp, hconf)
+    // a resumed delta swap means the interrupted run had finished its fold
+    if (log.resumeSwap("delta")) return
+    graft.io.HadoopIO.delete(baseTmp, hconf) // stale tmp from an interrupted attempt
 
     val winners = hnswLatestDeltaRows(spark, indexDir).persist()
     try {
@@ -2414,20 +2279,16 @@ object StreamingOps {
       graft.hnsw.HnswSpark.appendAndSave(spark,
         overriding.filter(col("op") === "upsert").select("id", "vector"),
         baseTmp, meta.numPartitions, meta.metric, meta.config)
+      graft.io.Manifest.validate(baseTmp,
+        graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
+      graft.io.HadoopIO.delete(baseDir, hconf)
+      graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
 
-      winners
+      log.compact("delta")(seg => winners
         .select(col("id"), lit(null).cast("array<float>").as("vector"), col("version"),
           col("op"), (col("op") === "upsert").as("guard"))
-        .write.parquet(s"$deltaTmp/batch=compacted")
-      writeDeltaManifest(deltaTmp, hconf)
+        .write.parquet(seg))
     } finally winners.unpersist()
-
-    graft.io.Manifest.validate(baseTmp,
-      graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
-    graft.io.HadoopIO.delete(baseDir, hconf)
-    graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
-    graft.io.HadoopIO.delete(deltaDir, hconf)
-    graft.io.HadoopIO.rename(deltaTmp, deltaDir, hconf)
   }
 
   /** [[ivfMaintainedDeltaRatio]]'s HNSW twin: un-compacted delta bytes
@@ -2436,15 +2297,10 @@ object StreamingOps {
     * delta, mirroring the IVF gauge.
     */
   def hnswMaintainedDeltaRatio(spark: SparkSession, indexDir: String): Double = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val base = graft.io.Manifest.read(s"$indexDir/base", hconf).getOrElse(
-      throw new IllegalStateException(
+    val base = graft.io.Manifest.read(s"$indexDir/base", spark.sparkContext.hadoopConfiguration)
+      .getOrElse(throw new IllegalStateException(
         s"$indexDir/base has no manifest — not a maintained HNSW dir"))
-    val delta = graft.io.Manifest.read(s"$indexDir/delta", hconf).getOrElse(
-      throw new IllegalStateException(
-        s"$indexDir/delta has no manifest — not a maintained HNSW dir"))
-    val fresh = delta.filterNot(_.name.startsWith("batch=compacted/"))
-    deltaToBaseRatio(fresh.map(_.length).sum, base.map(_.length).sum)
+    deltaToBaseRatio(hnswLog(spark, indexDir).bytes("delta")._1, base.map(_.length).sum)
   }
 
   /** [[compactHnswMaintained]] gated on [[hnswMaintainedDeltaRatio]] —
@@ -2500,8 +2356,8 @@ object StreamingOps {
   /** `foreachBatch` sink maintaining a BM25 inverted index through an
     * append-only delta log — [[ivfMaintenanceSink]]'s design applied to
     * the lexical tier: per micro-batch the write cost is O(batch), never
-    * O(index). Two delta streams ride under the index dir, each with the
-    * fail-loud completeness manifest:
+    * O(index). Two delta streams ride under the index dir as one
+    * [[BatchLog]], postings first and the docs log as its commit marker:
     *   - `delta_docs/batch=<id>`: (doc_id, version, op, dl) — latest-wins
     *     document rows; removes are dl-less tombstones.
     *   - `delta_post/batch=<id>`: (doc_id, version, token, tf, bucket) —
@@ -2527,42 +2383,40 @@ object StreamingOps {
       withPositions: Boolean = false): (Dataset[DocOp], Long) => Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     import spark.implicits._
-    loadBm25MaintainedMeta(spark, indexDir) match {
-      case Some((existingB, existingP)) =>
-        require(existingB == nBuckets,
-          s"index at $indexDir is maintained with nBuckets=$existingB; restarting with " +
-            s"$nBuckets would route tokens to different buckets than old delta rows — " +
-            "pass the stored value or delete the directory")
-        require(existingP == withPositions,
-          s"index at $indexDir is maintained with withPositions=$existingP; restarting with " +
-            s"$withPositions would mix positional and tf-only posting rows — " +
-            "pass the stored value or delete the directory")
-      case None =>
-        graft.io.HadoopIO.exists(s"$indexDir/base/stats",
-          spark.sparkContext.hadoopConfiguration) match {
-          case true =>
-            val baseStats = spark.read.parquet(s"$indexDir/base/stats")
-            val baseB = baseStats.select("n_buckets").head().getInt(0)
-            require(baseB == nBuckets,
-              s"adopted base index at $indexDir/base was built with nBuckets=$baseB, " +
-                s"sink constructed with $nBuckets — bucket routing must match")
-            if (withPositions) {
-              val baseP = baseStats.columns.contains("positions") &&
-                baseStats.select("positions").head().getBoolean(0)
-              require(baseP,
-                s"adopted base index at $indexDir/base was built WITHOUT positions but the " +
-                  "sink is positional — phrase reads over base documents would be impossible; " +
-                  "rebuild the base with buildIndex(withPositions = true)")
-            }
-          case false => ()
-        }
-        Seq((nBuckets, withPositions)).toDF("n_buckets", "positions").coalesce(1)
-          .write.mode("overwrite").parquet(bm25MetaPath(indexDir))
+    val log = bm25Log(spark, indexDir)
+    log.open(loadBm25MaintainedMeta(spark, indexDir)) { case (existingB, existingP) =>
+      require(existingB == nBuckets,
+        s"index at $indexDir is maintained with nBuckets=$existingB; restarting with " +
+          s"$nBuckets would route tokens to different buckets than old delta rows — " +
+          "pass the stored value or delete the directory")
+      require(existingP == withPositions,
+        s"index at $indexDir is maintained with withPositions=$existingP; restarting with " +
+          s"$withPositions would mix positional and tf-only posting rows — " +
+          "pass the stored value or delete the directory")
+    } {
+      graft.io.HadoopIO.exists(s"$indexDir/base/stats",
+        spark.sparkContext.hadoopConfiguration) match {
+        case true =>
+          val baseStats = spark.read.parquet(s"$indexDir/base/stats")
+          val baseB = baseStats.select("n_buckets").head().getInt(0)
+          require(baseB == nBuckets,
+            s"adopted base index at $indexDir/base was built with nBuckets=$baseB, " +
+              s"sink constructed with $nBuckets — bucket routing must match")
+          if (withPositions) {
+            val baseP = baseStats.columns.contains("positions") &&
+              baseStats.select("positions").head().getBoolean(0)
+            require(baseP,
+              s"adopted base index at $indexDir/base was built WITHOUT positions but the " +
+                "sink is positional — phrase reads over base documents would be impossible; " +
+                "rebuild the base with buildIndex(withPositions = true)")
+          }
+        case false => ()
+      }
+      Seq((nBuckets, withPositions)).toDF("n_buckets", "positions").coalesce(1)
+        .write.mode("overwrite").parquet(bm25MetaPath(indexDir))
     }
 
     (batch: Dataset[DocOp], batchId: Long) => {
-      val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
       // within-batch latest-wins (remove beats upsert on a version tie —
       // same conservative convention as the vector sinks); the
       // xxhash64(text) tiebreak makes the winner DETERMINISTIC when a
@@ -2590,9 +2444,6 @@ object StreamingOps {
           .unionByName(ops.filter(col("op") === "remove")
             .select(col("id").as("doc_id"), col("version"), lit("remove").as("op"),
               lit(0L).as("dl"), lit(0L).as("text_hash")))
-        docRows.write.mode("append").parquet(s"$indexDir/delta_docs/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta_docs", s"batch=$batchId", hconf)
-
         val explodedPost = upserts
           .select(col("doc_id"), col("version"), xxhash64(col("__toks")).as("text_hash"),
             posexplode(col("__toks")).as(Seq("pos", "token")))
@@ -2604,9 +2455,9 @@ object StreamingOps {
               sort_array(collect_list(col("pos").cast("long"))).as("positions"))
           else explodedPost.agg(count(lit(1)).as("tf")))
           .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
-        postRows.write.mode("append").partitionBy("bucket")
-          .parquet(s"$indexDir/delta_post/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta_post", s"batch=$batchId", hconf)
+        log.commit(batchId)(
+          p => postRows.write.mode("append").partitionBy("bucket").parquet(p),
+          p => docRows.write.mode("append").parquet(p))
       } finally {
         upserts.unpersist()
         ops.unpersist()
@@ -2614,27 +2465,27 @@ object StreamingOps {
     }
   }
 
+  private def bm25Log(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("delta_post", "delta_docs"), "maintained BM25",
+      Some("compactBm25Maintained"), exactlyOnce = false)
+
   /** Each document's winning delta rows (tombstones KEPT — serving filters
     * them, compaction must persist them): one shuffle on doc_id over the
-    * manifest-validated delta_docs log. An absent delta_docs dir (nothing
-    * ingested yet) is an empty view, not an error; a PRESENT dir without a
-    * manifest is an error (see [[validateDelta]]).
+    * manifest-validated delta_docs log; nothing ingested yet is an empty
+    * view, not an error.
     */
   private def bm25DeltaWinners(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta_docs", hconf))
+    val docs = bm25Log(spark, indexDir).read("delta_docs").getOrElse(
       return spark.emptyDataset[(Long, Long, String, Long, Long)](
         org.apache.spark.sql.Encoders.product[(Long, Long, String, Long, Long)])
-        .toDF("doc_id", "version", "op", "dl", "text_hash")
-    validateDelta(s"$indexDir/delta_docs", hconf)
+        .toDF("doc_id", "version", "op", "dl", "text_hash"))
     // text_hash in the order: conflicting same-version upserts from
     // DIFFERENT batches (a malformed stream) resolve deterministically,
     // and serving joins the winner's OWN posting rows by the same hash
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id")
       .orderBy(col("version").desc, col("op").asc, col("text_hash").asc)
-    spark.read.parquet(s"$indexDir/delta_docs")
-      .select("doc_id", "version", "op", "dl", "text_hash")
+    docs.select("doc_id", "version", "op", "dl", "text_hash")
       .withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
       .dropDuplicates("doc_id", "op")
   }
@@ -2692,19 +2543,13 @@ object StreamingOps {
           .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
           .select("doc_id", "dl", "token", "tf")
           .join(winnerDocs, Seq("doc_id"), "left_anti")
-      val deltaPost =
-        if (!graft.io.HadoopIO.exists(s"$indexDir/delta_post", hconf))
-          basePost.limit(0)
-        else {
-          validateDelta(s"$indexDir/delta_post", hconf)
-          spark.read.parquet(s"$indexDir/delta_post")
-            .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
-            .select("doc_id", "version", "text_hash", "token", "tf")
-            .join(upsertWinners.select("doc_id", "version", "text_hash", "dl"),
-              Seq("doc_id", "version", "text_hash"))
-            .dropDuplicates("doc_id", "token") // at-least-once replay appends
-            .select("doc_id", "dl", "token", "tf")
-        }
+      val deltaPost = bm25Log(spark, indexDir).read("delta_post").fold(basePost.limit(0))(
+        _.filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
+          .select("doc_id", "version", "text_hash", "token", "tf")
+          .join(upsertWinners.select("doc_id", "version", "text_hash", "dl"),
+            Seq("doc_id", "version", "text_hash"))
+          .dropDuplicates("doc_id", "token") // at-least-once replay appends
+          .select("doc_id", "dl", "token", "tf"))
       val post = basePost.unionByName(deltaPost)
 
       // (n, sum_dl) from base doclen minus overridden docs, plus upsert
@@ -2778,8 +2623,7 @@ object StreamingOps {
           s"adopted base index at $indexDir/base has no positions — phrase reads over " +
             "base documents are impossible")
       }
-      val hasDelta = graft.io.HadoopIO.exists(s"$indexDir/delta_post", hconf)
-      if (hasDelta) validateDelta(s"$indexDir/delta_post", hconf)
+      val deltaPost = bm25Log(spark, indexDir).read("delta_post")
 
       // one bucket-pruned + token-pushed (doc_id, positions) read per term
       // over the surviving view
@@ -2792,15 +2636,13 @@ object StreamingOps {
             .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
             .select(col("doc_id"), col("positions"))
             .join(winnerDocs, Seq("doc_id"), "left_anti")
-        val delta =
-          if (!hasDelta) base.limit(0)
-          else spark.read.parquet(s"$indexDir/delta_post")
-            .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
+        val delta = deltaPost.fold(base.limit(0))(
+          _.filter(col("bucket") === lit(bucket) && col("token") === lit(t))
             .select("doc_id", "version", "text_hash", "positions")
             .join(upsertWinners.select("doc_id", "version", "text_hash"),
               Seq("doc_id", "version", "text_hash"))
             .dropDuplicates("doc_id") // at-least-once replay appends
-            .select(col("doc_id"), col("positions"))
+            .select(col("doc_id"), col("positions")))
         base.unionByName(delta)
       }
       val perPhrase = parsed.map { case (qid, terms) =>
@@ -2827,58 +2669,35 @@ object StreamingOps {
     * AND tombstones — dropping a tombstone would let a post-compaction
     * stale upsert resurrect a removed document): read cost of the
     * maintained view stops growing with mutation history. Run while the
-    * maintenance stream is STOPPED. Same manifest-before-destructive-steps
-    * swap as [[compactIvfMaintained]], independently per delta stream —
-    * the two streams join on (doc_id, version), so any mix of
-    * {compacted, original} halves serves the identical view (superseded
-    * rows in the un-compacted half simply never match a winner).
+    * maintenance stream is STOPPED. Each delta stream compacts through the
+    * [[BatchLog]] swap on its own — postings first, while the docs log
+    * (the marker) their winners come from is still live — and the two
+    * streams join on
+    * (doc_id, version, text_hash), so any mix of {compacted, original}
+    * halves serves the identical view (superseded rows in the
+    * un-compacted half simply never match a winner).
     */
   def compactBm25Maintained(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-
-    def resumeOrClear(dir: String): Unit = {
-      val tmp = s"$dir.compact"
-      if (graft.io.HadoopIO.exists(tmp, hconf)) {
-        if (graft.io.Manifest.read(tmp, hconf).isDefined) {
-          // manifest-complete tmp: finish the interrupted swap
-          graft.io.HadoopIO.delete(dir, hconf)
-          graft.io.HadoopIO.rename(tmp, dir, hconf)
-        } else graft.io.HadoopIO.delete(tmp, hconf) // torn write — rebuild
-      }
-    }
-    resumeOrClear(s"$indexDir/delta_docs")
-    resumeOrClear(s"$indexDir/delta_post")
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta_docs", hconf)) return
-
+    val log = bm25Log(spark, indexDir)
+    log.resumeSwap("delta_docs")
+    log.resumeSwap("delta_post")
     val (nBuckets, withPositions) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no bm25_meta sidecar under $indexDir — not a maintained BM25 dir"))
 
     val winners = bm25DeltaWinners(spark, indexDir).persist()
     try {
-      val docsTmp = s"$indexDir/delta_docs.compact"
-      winners.select("doc_id", "version", "op", "dl", "text_hash")
-        .write.parquet(s"$docsTmp/batch=compacted")
-      writeDeltaManifest(docsTmp, hconf)
-
-      val postTmp = s"$indexDir/delta_post.compact"
-      validateDelta(s"$indexDir/delta_post", hconf)
       val postCols = Seq("doc_id", "version", "text_hash", "token", "tf") ++
         (if (withPositions) Seq("positions") else Seq.empty)
-      spark.read.parquet(s"$indexDir/delta_post")
+      log.compact("delta_post")(seg => log.read("delta_post").foreach(_
         .select(postCols.map(col): _*)
         .join(winners.filter(col("op") === "upsert").select("doc_id", "version", "text_hash"),
           Seq("doc_id", "version", "text_hash"))
         .dropDuplicates("doc_id", "version", "text_hash", "token")
         .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
-        .write.partitionBy("bucket").parquet(s"$postTmp/batch=compacted")
-      writeDeltaManifest(postTmp, hconf)
-
-      graft.io.HadoopIO.delete(s"$indexDir/delta_docs", hconf)
-      graft.io.HadoopIO.rename(docsTmp, s"$indexDir/delta_docs", hconf)
-      graft.io.HadoopIO.delete(s"$indexDir/delta_post", hconf)
-      graft.io.HadoopIO.rename(postTmp, s"$indexDir/delta_post", hconf)
+        .write.partitionBy("bucket").parquet(seg)))
+      log.compact("delta_docs")(seg =>
+        winners.select("doc_id", "version", "op", "dl", "text_hash").write.parquet(seg))
     } finally winners.unpersist()
   }
 
@@ -2899,23 +2718,6 @@ object StreamingOps {
     }
   }
 
-  /** Replace a batch subdirectory's manifest entries wholesale — unlike
-    * [[mergeDeltaManifest]]'s same-name replacement, ALL prior entries
-    * under the batch prefix are dropped first, so a re-written batch
-    * (idempotent replay of an uncommitted attempt, whose part-file names
-    * differ) leaves no stale entries behind.
-    */
-  private def replaceBatchManifest(
-      deltaDir: String,
-      batchSubdir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val prior = graft.io.Manifest.read(deltaDir, conf).getOrElse(Seq.empty)
-    val batchEntries = listDelta(deltaDir, conf, Some(batchSubdir))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
-    graft.io.Manifest.write(deltaDir,
-      prior.filterNot(_.name.startsWith(batchSubdir + "/")) ++ batchEntries, conf)
-  }
-
   /** `foreachBatch` sink maintaining PROVABLY-EXACT top-k n-gram heavy
     * hitters across micro-batches ([[graft.text.HeavyHitters]] online).
     * The Misra–Gries summary is MERGEABLE by construction (Agarwal et al.
@@ -2926,11 +2728,10 @@ object StreamingOps {
     * batch: O(batch) bytes, no state store, executor memory bounded at m
     * counters — the same disk-state shape as [[nearDupSink]].
     *
-    * Replays are idempotent by batch id: the sketch manifest is the
-    * COMMIT MARKER (merged last), a redelivered committed batch is
-    * skipped entirely, and an uncommitted attempt's partial directories
-    * are deleted and rewritten — both manifests replace the batch's
-    * entries wholesale, so no stale file names survive.
+    * Replays are idempotent by batch id ([[BatchLog]], exactly-once with
+    * the sketch log as marker): a redelivered committed batch is skipped
+    * entirely, and an uncommitted attempt's partial directories are
+    * rewritten.
     *
     * Query with [[heavyHittersTopK]]: the per-batch summaries fold into
     * one (driver cost: batches × m counters — fold cadence, not corpus
@@ -2939,9 +2740,8 @@ object StreamingOps {
     * operator's answer over any micro-batch boundaries.
     */
   /** Shared scaffold of the global and grouped heavy-hitter sinks: meta
-    * guard, manifest seeding, the committed-by-batch-id replay check, and
-    * the write-docs-then-sketch-then-manifests commit protocol. `groupCol`
-    * selects the keyed form. The sketch schema is unified — ONE row per
+    * guard and the docs-then-sketch batch commit. `groupCol` selects the
+    * keyed form. The sketch schema is unified — ONE row per
     * (batch, group): (grp, grams, cnts, err, total) with grams/cnts as
     * aligned gram-sorted arrays and grp null for the global form (which
     * always writes its one summary row, even when empty); a grouped batch
@@ -2955,44 +2755,28 @@ object StreamingOps {
       m: Int,
       groupCol: Option[String]): (DataFrame, Long) => Unit = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    loadHeavyHittersMeta(spark, indexDir) match {
-      case Some((en, em, eg)) =>
-        require(en == n && em == m && eg == groupCol,
-          s"heavy-hitter state at $indexDir was maintained with (n=$en, m=$em, group=$eg); " +
-            s"restarting with (n=$n, m=$m, group=$groupCol) would merge incompatible " +
-            "sketches — delete the directory or pass matching parameters")
-        requireCommittedManifests("heavy-hitter", indexDir,
-          Seq(s"$indexDir/sketch", s"$indexDir/docs"),
-          "compactHeavyHitters", hconf)
-        // refuse to append array-format batches into a pre-upgrade
-        // row-per-gram sketch log — a mixed-format dir would be unreadable
-        if (graft.io.Manifest.read(s"$indexDir/sketch", hconf).exists(_.nonEmpty))
-          requireArraySketchFormat(
-            hhReadManifested(spark, s"$indexDir/sketch"), s"$indexDir/sketch")
-      case None =>
-        // fresh init: seed both manifests, meta LAST as the commit marker
-        seedDeltaManifests(Seq(s"$indexDir/sketch", s"$indexDir/docs"), hconf)
-        Seq((n, m, groupCol)).toDF("n", "m", "group").coalesce(1)
-          .write.mode("overwrite").parquet(hhMetaPath(indexDir))
+    val log = hhLog(spark, indexDir)
+    log.open(loadHeavyHittersMeta(spark, indexDir)) { case (en, em, eg) =>
+      require(en == n && em == m && eg == groupCol,
+        s"heavy-hitter state at $indexDir was maintained with (n=$en, m=$em, group=$eg); " +
+          s"restarting with (n=$n, m=$m, group=$groupCol) would merge incompatible " +
+          "sketches — delete the directory or pass matching parameters")
+      // refuse to append array-format batches into a pre-upgrade
+      // row-per-gram sketch log — a mixed-format dir would be unreadable
+      log.read("sketch").foreach(requireArraySketchFormat(_, s"$indexDir/sketch"))
+    } {
+      Seq((n, m, groupCol)).toDF("n", "m", "group").coalesce(1)
+        .write.mode("overwrite").parquet(hhMetaPath(indexDir))
     }
-    val sketchDir = s"$indexDir/sketch"
-    val docsDir = s"$indexDir/docs"
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
-      // committed = present in the sketch manifest (the commit marker) OR
-      // already folded away by compactHeavyHitters (whose sidecar
-      // remembers folded batch ids exactly so a post-compaction replay of
-      // an old micro-batch cannot re-append and double-count)
-      val committed = graft.io.Manifest.read(sketchDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$docsDir/batch=$batchId", conf)
-        graft.io.HadoopIO.delete(s"$sketchDir/batch=$batchId", conf)
+      if (!log.committed(batchId)) {
+        val docs = groupCol match {
+          case None => batch.select(col("doc_id"), col("text"))
+          case Some(gc) => batch.select(col("doc_id"), col(gc).cast("string").as("grp"), col("text"))
+        }
         // ONE row per (batch, group) with the summary's (gram, count) pairs
         // as aligned arrays — not one row per tracked gram. The summary is
         // groups × m entries; a row-per-gram layout made the driver encode
@@ -3001,11 +2785,9 @@ object StreamingOps {
         // and is pure waste at any scale (guide §2.3: move fewer, denser
         // rows). Grams sort ascending so the file bytes are layout- and
         // map-iteration-independent.
-        val sketchRows: Seq[(Option[String], Seq[String], Seq[Long], Long, Long)] =
+        def sketchRows: Seq[(Option[String], Seq[String], Seq[Long], Long, Long)] =
           groupCol match {
             case None =>
-              val docs = batch.select(col("doc_id"), col("text"))
-              docs.write.parquet(s"$docsDir/batch=$batchId")
               val mg = graft.text.HeavyHitters.ngrams(docs, n).as[String].rdd
                 .mapPartitions(it =>
                   Iterator(graft.text.HeavyHitters.sketchPartitionAcc(it, m)))
@@ -3015,10 +2797,7 @@ object StreamingOps {
                 .toSummary
               val sorted = mg.counts.toSeq.sortBy(_._1)
               Seq((None, sorted.map(_._1), sorted.map(_._2), mg.err, mg.total))
-            case Some(gc) =>
-              val docs = batch.select(col("doc_id"),
-                col(gc).cast("string").as("grp"), col("text"))
-              docs.write.parquet(s"$docsDir/batch=$batchId")
+            case Some(_) =>
               val mg = graft.text.HeavyHitters.ngramsByGroup(docs, n, "grp")
                 .as[(String, String)].rdd
                 .mapPartitions(it =>
@@ -3032,14 +2811,16 @@ object StreamingOps {
                 (Option(grp), sorted.map(_._1), sorted.map(_._2), s.err, s.total)
               }
           }
-        sketchRows.toDF("grp", "grams", "cnts", "err", "total")
-          .coalesce(1).write.parquet(s"$sketchDir/batch=$batchId")
-        replaceBatchManifest(docsDir, s"batch=$batchId", conf)
-        // sketch manifest LAST = the commit marker
-        replaceBatchManifest(sketchDir, s"batch=$batchId", conf)
+        log.commit(batchId)(
+          p => docs.write.parquet(p),
+          p => sketchRows.toDF("grp", "grams", "cnts", "err", "total").coalesce(1).write.parquet(p))
       }
     }
   }
+
+  private def hhLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("docs", "sketch"), "heavy-hitter",
+      Some("compactHeavyHitters"), exactlyOnce = true)
 
   def heavyHittersSink(
       spark: SparkSession,
@@ -3069,25 +2850,6 @@ object StreamingOps {
     * proof over the accumulated corpus. Exact or a loud error, never
     * silently approximate.
     */
-  /** Read a heavy-hitter delta dir restricted to its MANIFEST-LISTED
-    * files — the manifest is the sink's commit marker, so this is the
-    * committed view. Reading the directory wholesale would also sweep up
-    * an in-flight or crashed-uncommitted batch's files: for the
-    * count-accumulating heavy-hitter tables that is not a harmless
-    * latest-wins duplicate (as in the versioned delta logs) but a
-    * half-committed batch whose docs are counted while its sketch is
-    * missing — silently breaking the exact-or-throw proof. `basePath`
-    * keeps the `batch=` partition-column discovery identical to a
-    * whole-directory read. Caller must have run [[validateDelta]] and
-    * checked the manifest non-empty (zero paths cannot be read).
-    */
-  private def hhReadManifested(spark: SparkSession, dir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val files = graft.io.Manifest.read(dir, hconf).get.map(e => s"$dir/${e.name}")
-    require(files.nonEmpty, s"hhReadManifested on empty manifest at $dir")
-    spark.read.option("basePath", dir).parquet(files: _*)
-  }
-
   /** Fail-loud format guard: the sketch sidecar moved from one row per
     * (grp, gram) — columns (grp, gram, cnt, err, total) — to one row per
     * (batch, group) with (grams, cnts) ARRAYS. Silently reading an
@@ -3105,14 +2867,14 @@ object StreamingOps {
   /** Per-batch summaries keyed by group (the global form lives under the
     * None key), folded across batches — batches × groups × m rows on the
     * driver, bounded by sketch size and fold cadence, never corpus size.
-    * Reads only the sketch manifest's committed files ([[hhReadManifested]]).
+    * Reads only the sketch log's committed batches; empty before any.
     */
-  private def hhFoldSketches(spark: SparkSession, sketchDir: String,
+  private def hhFoldSketches(spark: SparkSession, indexDir: String,
       m: Int): Map[Option[String], graft.text.HeavyHitters.MgSummary] = {
     // one row per (batch, group), counts as aligned arrays — each row is a
     // self-contained summary (no separate meta row to cross-check)
-    val raw = hhReadManifested(spark, sketchDir)
-    requireArraySketchFormat(raw, sketchDir)
+    val raw = hhLog(spark, indexDir).read("sketch").getOrElse(return Map.empty)
+    requireArraySketchFormat(raw, s"$indexDir/sketch")
     val perBatch = raw
       .select(col("batch").cast("string"), col("grp"), col("grams"),
         col("cnts"), col("err"), col("total"))
@@ -3141,28 +2903,22 @@ object StreamingOps {
 
   def heavyHittersTopK(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
     require(group.isEmpty,
       s"$indexDir is maintained GROUPED (by '${group.get}') — read it with heavyHittersTopKByGroup")
     require(m > k, s"sketch size m ($m) must exceed k ($k)")
-    val sketchDir = s"$indexDir/sketch"
-    val docsDir = s"$indexDir/docs"
-    validateDelta(sketchDir, hconf)
-    validateDelta(docsDir, hconf)
-    if (graft.io.Manifest.read(sketchDir, hconf).get.isEmpty)
-      return Seq.empty[(String, Long, Int)].toDF("gram", "n_count", "rank")
-    val mg = hhFoldSketches(spark, sketchDir, m)
-      .getOrElse(None, graft.text.HeavyHitters.MgSummary(Map.empty, 0L, 0L))
-    val docsEntries = graft.io.Manifest.read(docsDir, hconf).get
-    val key = hhCacheKey(k, n, m, None, Map(None -> mg), docsEntries)
+    val log = hhLog(spark, indexDir)
+    val docs = log.read("docs")
+    val folded = hhFoldSketches(spark, indexDir, m)
+    if (folded.isEmpty) return Seq.empty[(String, Long, Int)].toDF("gram", "n_count", "rank")
+    val mg = folded.getOrElse(None, graft.text.HeavyHitters.MgSummary(Map.empty, 0L, 0L))
+    val key = hhCacheKey(k, n, m, None, Map(None -> mg), log.entries("docs"))
     hhCachedRecount(spark, indexDir, key) {
-      val docs =
-        if (docsEntries.isEmpty) Seq.empty[(Long, String)].toDF("doc_id", "text")
-        else hhReadManifested(spark, docsDir).select("doc_id", "text")
-      graft.text.HeavyHitters.recountAndProve(docs, n, k, m, mg)
+      graft.text.HeavyHitters.recountAndProve(
+        docs.fold(Seq.empty[(Long, String)].toDF("doc_id", "text"))(_.select("doc_id", "text")),
+        n, k, m, mg)
     }
   }
 
@@ -3175,28 +2931,24 @@ object StreamingOps {
     */
   def heavyHittersTopKByGroup(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
     require(group.isDefined,
       s"$indexDir is maintained GLOBAL — read it with heavyHittersTopK")
     require(m > k, s"sketch size m ($m) must exceed k ($k)")
-    val sketchDir = s"$indexDir/sketch"
-    val docsDir = s"$indexDir/docs"
-    validateDelta(sketchDir, hconf)
-    validateDelta(docsDir, hconf)
-    if (graft.io.Manifest.read(sketchDir, hconf).get.isEmpty)
+    val log = hhLog(spark, indexDir)
+    val docs = log.read("docs")
+    val folded = hhFoldSketches(spark, indexDir, m)
+    if (folded.isEmpty)
       return Seq.empty[(String, String, Long, Int)].toDF("grp", "gram", "n_count", "rank")
-    val folded = hhFoldSketches(spark, sketchDir, m)
     val mg = folded.collect { case (Some(grp), s) => (grp, s) } // None key = batch markers
-    val docsEntries = graft.io.Manifest.read(docsDir, hconf).get
-    val key = hhCacheKey(k, n, m, group, folded, docsEntries)
+    val key = hhCacheKey(k, n, m, group, folded, log.entries("docs"))
     hhCachedRecount(spark, indexDir, key) {
-      val docs =
-        if (docsEntries.isEmpty) Seq.empty[(Long, String, String)].toDF("doc_id", "grp", "text")
-        else hhReadManifested(spark, docsDir).select("doc_id", "grp", "text")
-      graft.text.HeavyHitters.recountAndProveByGroup(docs, n, k, m, mg, "grp")
+      graft.text.HeavyHitters.recountAndProveByGroup(
+        docs.fold(Seq.empty[(Long, String, String)].toDF("doc_id", "grp", "text"))(
+          _.select("doc_id", "grp", "text")),
+        n, k, m, mg, "grp")
     }
   }
 
@@ -3269,122 +3021,28 @@ object StreamingOps {
     }
   }
 
-  private def foldedBatchIds(spark: SparkSession, indexDir: String): Set[Long] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = {
-      val d = s"$indexDir/folded"
-      if (!graft.io.HadoopIO.exists(d, hconf)) Set.empty[Long]
-      else spark.read.parquet(d).select("batch_id").collect().map(_.getLong(0)).toSet
-    }
-    // also honor a surviving folded.tmp: it is the COMPLETE successor
-    // sidecar (old ids ∪ the ids being folded) from a compaction whose
-    // delete+rename swap was interrupted — every id in it is committed, so
-    // treating it as folded is always safe, and without it a crash between
-    // the delete and the rename would lose the replay guard entirely. A
-    // torn tmp (crash mid-write) is ignored — it never renamed, and the
-    // batches it would have listed are still in the sketch manifest.
-    val tmp = {
-      val d = s"$indexDir/folded.tmp"
-      if (!graft.io.HadoopIO.exists(d, hconf)) Set.empty[Long]
-      else scala.util.Try(
-        spark.read.parquet(d).select("batch_id").collect().map(_.getLong(0)).toSet
-      ).getOrElse(Set.empty[Long])
-    }
-    live ++ tmp
-  }
-
   /** Compact a [[heavyHittersSink]] sketch log: fold the per-batch
     * Misra–Gries summaries into ONE merged `batch=compacted` summary, so
     * the read-time driver fold stops growing with batch count (m counters
     * instead of batches × m). The corpus table is untouched — the exact
     * recount reads it wholesale either way, and rewriting it would be an
     * O(corpus) pass for nothing. Run while the maintenance stream is
-    * STOPPED.
-    *
-    * Replay safety: the `folded` sidecar accumulates every batch id ever
-    * folded, and it lands BEFORE the destructive sketch swap — a
-    * checkpoint-recovery redelivery of a pre-compaction micro-batch finds
-    * its id there and skips, instead of re-appending grams the compacted
-    * summary already counts. (A crash between the sidecar write and the
-    * swap leaves batches both listed and still present — the sink skips
-    * them either way.)
+    * STOPPED. The [[BatchLog]] swap records the folded batch ids before
+    * the destructive step, so a checkpoint-recovery redelivery of a
+    * pre-compaction micro-batch skips instead of re-appending grams the
+    * compacted summary already counts.
     */
-  /** The ONE copy of the delta-log compaction crash protocol, shared by
-    * [[compactHeavyHitters]] and [[compactTokenBudget]] (a protocol this
-    * subtle must not exist twice — a fix to one crash window that misses
-    * a hand-kept twin re-opens the double-count replay hazard there).
-    * `compute()` runs while the live log is still untouched (a failure
-    * there changes nothing) and returns the writer that materializes the
-    * folded `batch=compacted` content under the swap tmp. Sequence, and
-    * the crash window each step covers:
-    *
-    *  1. resume a torn FOLDED-sidecar swap (missing live sidecar +
-    *     surviving tmp → complete the rename first) — the guard's only
-    *     copy of the previously folded ids must never be deleted;
-    *  2. resume a torn directory swap (missing live dir + manifest-
-    *     complete tmp → finish the rename and return);
-    *  3. fold-compute over the live log (failure leaves everything
-    *     untouched); batch ids come straight off the live manifest — the
-    *     committed set, no Spark job, no uncommitted stray dir leaks in;
-    *  4. replay-guard sidecar: every numeric batch id being folded plus
-    *     all previously folded land via tmp + delete + rename, BEFORE
-    *     the destructive swap — never overwrite-in-place, whose
-    *     delete-then-write window would lose every previously folded id
-    *     and re-open the post-compaction double-count replay
-    *     (foldedBatchIds reads a surviving tmp, so every crash point in
-    *     this swap keeps the guard intact);
-    *  5. write the compacted content + completeness manifest under tmp,
-    *     delete the live dir, rename tmp over it — a crash between the
-    *     delete and the rename is resumed by step 2 on the next call. A
-    *     crash between steps 4 and 5 leaves batches both listed and
-    *     still present; consumers skip them either way.
-    */
-  private def compactDeltaLog(
-      spark: SparkSession,
-      indexDir: String,
-      liveName: String,
-      compute: () => (String => Unit)): Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val liveDir = s"$indexDir/$liveName"
-    val tmpDir = s"$indexDir/$liveName.compact"
-    if (!graft.io.HadoopIO.exists(s"$indexDir/folded", hconf) &&
-        graft.io.HadoopIO.exists(s"$indexDir/folded.tmp", hconf))
-      graft.io.HadoopIO.rename(s"$indexDir/folded.tmp", s"$indexDir/folded", hconf)
-    if (!graft.io.HadoopIO.exists(liveDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.Manifest.read(tmpDir, hconf).isDefined,
-        s"$liveDir is gone and $tmpDir is absent or manifest-less — inconsistent state")
-      graft.io.HadoopIO.rename(tmpDir, liveDir, hconf)
-      return
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf)
-    validateDelta(liveDir, hconf)
-    if (graft.io.Manifest.read(liveDir, hconf).get.isEmpty) return
-    val batchKeys = graft.io.Manifest.read(liveDir, hconf).get
-      .map(_.name.takeWhile(_ != '/').stripPrefix("batch=")).distinct
-    val numericIds = batchKeys.filter(s => s.nonEmpty && s.forall(_.isDigit))
-      .map(_.toLong).toSet
-    val write = compute()
-    val allFolded = foldedBatchIds(spark, indexDir) ++ numericIds
-    val foldedTmp = s"$indexDir/folded.tmp"
-    graft.io.HadoopIO.delete(foldedTmp, hconf)
-    allFolded.toSeq.sorted.toDF("batch_id").coalesce(1).write.parquet(foldedTmp)
-    graft.io.HadoopIO.delete(s"$indexDir/folded", hconf)
-    graft.io.HadoopIO.rename(foldedTmp, s"$indexDir/folded", hconf)
-    write(tmpDir)
-    writeDeltaManifest(tmpDir, hconf)
-    graft.io.HadoopIO.delete(liveDir, hconf)
-    graft.io.HadoopIO.rename(tmpDir, liveDir, hconf)
-  }
+  def compactHeavyHitters(spark: SparkSession, indexDir: String): Unit =
+    hhLog(spark, indexDir).compact("sketch")(hhFold(spark, indexDir))
 
-  def compactHeavyHitters(spark: SparkSession, indexDir: String): Unit = {
+  /** The compacted sketch segment writer. */
+  private def hhFold(spark: SparkSession, indexDir: String): String => Unit = {
     import spark.implicits._
-    val (_, m, _) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
-    compactDeltaLog(spark, indexDir, "sketch", () => {
-      val folded = hhFoldSketches(spark, s"$indexDir/sketch", m)
+    seg => {
+      val (_, m, _) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
+        throw new IllegalStateException(
+          s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
+      val folded = hhFoldSketches(spark, indexDir, m)
       // an all-empty fold still writes one empty summary row so the
       // compacted batch file is never schema-less
       val keys = if (folded.nonEmpty) folded
@@ -3393,26 +3051,17 @@ object StreamingOps {
         val sorted = s.counts.toSeq.sortBy(_._1)
         (grp, sorted.map(_._1), sorted.map(_._2), s.err, s.total)
       }
-      (tmp: String) => rows.toDF("grp", "grams", "cnts", "err", "total")
-        .coalesce(1).write.parquet(s"$tmp/batch=compacted")
-    })
+      rows.toDF("grp", "grams", "cnts", "err", "total").coalesce(1).write.parquet(seg)
+    }
   }
 
   /** Number of sketch batches a [[heavyHittersSink]] dir has accumulated
     * since its last compaction, measured from the sketch completeness
-    * manifest alone — no data scan, no Spark job (the same
-    * manifest-only-gauge shape as [[ivfMaintainedDeltaRatio]]). The
-    * read-time driver fold costs batches × groups × m rows, so this IS
-    * the fold-cost gauge.
+    * manifest alone — no data scan, no Spark job. The read-time driver
+    * fold costs batches × groups × m rows, so this IS the fold-cost gauge.
     */
-  def heavyHittersSketchBatches(spark: SparkSession, indexDir: String): Int = {
-    val entries = graft.io.Manifest.read(s"$indexDir/sketch",
-      spark.sparkContext.hadoopConfiguration).getOrElse(
-      throw new IllegalStateException(
-        s"heavy-hitter sketch log at $indexDir/sketch has no manifest — " +
-          "not a maintained heavy-hitter dir"))
-    entries.map(_.name.takeWhile(_ != '/')).distinct.size
-  }
+  def heavyHittersSketchBatches(spark: SparkSession, indexDir: String): Int =
+    hhLog(spark, indexDir).batchCount("sketch")
 
   /** [[compactHeavyHitters]] gated on [[heavyHittersSketchBatches]]: the
     * one-call maintenance form — fold the sketch log only when more than
@@ -3420,82 +3069,15 @@ object StreamingOps {
     * can invoke it unconditionally after every batch window and the
     * driver fold bound (batches × groups × m) is enforced by the
     * maintenance loop rather than operator discipline. Returns (measured
-    * batch count, whether a compaction ran). Run while the maintenance
-    * stream is STOPPED, like the compaction itself.
+    * batch count, whether a compaction ran; -1 after resuming an
+    * interrupted swap). Run while the maintenance stream is STOPPED, like
+    * the compaction itself.
     */
   def compactHeavyHittersIfNeeded(
       spark: SparkSession,
       indexDir: String,
       maxBatches: Int = 64): (Int, Boolean) =
-    gatedCompact(spark, indexDir, "sketch", maxBatches,
-      () => heavyHittersSketchBatches(spark, indexDir),
-      () => compactHeavyHitters(spark, indexDir))
-
-  /** ONE copy of the "committed meta implies committed manifests"
-    * contract every maintained sink's restart path enforces: a
-    * meta-committed directory missing a delta manifest is LOST state (or
-    * a torn compaction swap, whose documented resume is the named
-    * compaction call) — re-seeding it from a raw listing would bless
-    * orphaned half-written batch files as committed, so refuse loudly.
-    */
-  private def requireCommittedManifests(
-      what: String,
-      indexDir: String,
-      dirs: Seq[String],
-      resumeCall: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val missing = dirs.filter(d => graft.io.Manifest.read(d, conf).isEmpty)
-    require(missing.isEmpty,
-      s"$what dir $indexDir has committed meta but no manifest under " +
-        s"[${missing.map(_.stripPrefix(indexDir + "/")).mkString(", ")}] — either lost/foreign " +
-        s"state, or a compaction swap died mid-flight (run $resumeCall to resume it); " +
-        "refusing to extend unverifiable state")
-  }
-
-  /** ONE copy of the fresh-init manifest seeding the maintained sinks
-    * share (written BEFORE the meta sidecar, which is the init commit
-    * marker): each dir gets a manifest of whatever it currently lists —
-    * empty for a new dir, the crashed-init files for a re-run init. A
-    * dir that ALREADY carries a manifest (copied/adopted state, or a
-    * crash after manifest seeding) is preserved untouched — overwriting
-    * it with -1-CRC raw-listing entries would bless whatever files
-    * happen to be present, discarding CRC evidence the existing manifest
-    * carries (the same preserve-existing rule as the HNSW fresh init).
-    */
-  private def seedDeltaManifests(
-      dirs: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    dirs.foreach { d =>
-      graft.io.HadoopIO.mkdirs(d, conf)
-      if (graft.io.Manifest.read(d, conf).isEmpty)
-        graft.io.Manifest.write(d,
-          listDelta(d, conf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-          conf)
-    }
-
-  /** The shared gate for the compaction wrappers: a missing live dir
-    * under a maintained root is an interrupted compaction swap — the
-    * compaction IS the resume path, so finish it unconditionally instead
-    * of throwing the gauge's misleading error; otherwise compact only
-    * past the manifest batch threshold.
-    */
-  private def gatedCompact(
-      spark: SparkSession,
-      indexDir: String,
-      liveName: String,
-      maxBatches: Int,
-      gauge: () => Int,
-      compact: () => Unit): (Int, Boolean) = {
-    require(maxBatches >= 1, s"maxBatches must be >= 1, got $maxBatches")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/$liveName", hconf)) {
-      compact()
-      return (-1, true)
-    }
-    val batches = gauge()
-    if (batches > maxBatches) { compact(); (batches, true) }
-    else (batches, false)
-  }
+    hhLog(spark, indexDir).compactIfOver("sketch", maxBatches)(hhFold(spark, indexDir))
 
   // ------------------------------------------- token-budget admission sink
 
@@ -3522,15 +3104,13 @@ object StreamingOps {
     * replays it with one cumulative window ordered by (batch, bucket,
     * id).
     *
-    * Commit protocol (the heavy-hitter docs/sketch order): per batch the
-    * admitted rows land under `admitted/batch=N` and merge into the
-    * admitted manifest, then the per-source token sums land under
-    * `totals/batch=N` whose manifest merge is the COMMIT MARKER. An
+    * Commit protocol ([[BatchLog]], exactly-once, the totals log as
+    * marker): per batch the admitted rows land under `admitted/batch=N`,
+    * then the per-source token sums under `totals/batch=N`. An
     * at-least-once redelivery of a committed batch is skipped; a crashed
-    * half-committed batch is invisible to every read (all reads are
-    * totals-manifest-restricted) and the redelivery rewrites it — no
-    * double admission, which would double-count tokens and starve later
-    * documents.
+    * half-committed batch is invisible to every read and the redelivery
+    * rewrites it — no double admission, which would double-count tokens
+    * and starve later documents.
     *
     * Per batch: one totals read (batches-since-compaction × sources rows,
     * never the corpus — [[compactTokenBudget]] folds the totals log so a
@@ -3574,44 +3154,25 @@ object StreamingOps {
     require(budgetRows.map(_._1).distinct.length == budgetRows.length,
       "budgets must carry one row per source")
     require(budgetRows.forall(_._2 >= 0), s"budgets must be >= 0: ${budgetRows.toSeq}")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val admittedDir = s"$indexDir/admitted"
-    val totalsDir = s"$indexDir/totals"
-    loadTokenBudgetMeta(spark, indexDir) match {
-      case Some((eb, es)) =>
-        require(eb == budgetRows.toMap && es == seed,
-          s"token-budget state at $indexDir was maintained with (budgets=$eb, seed=$es); " +
-            s"restarting with (budgets=${budgetRows.toMap}, seed=$seed) would change who was " +
-            "admitted retroactively — delete the directory or pass matching parameters")
-        requireCommittedManifests("token-budget", indexDir,
-          Seq(admittedDir, totalsDir), "compactTokenBudget", hconf)
-      case None =>
-        // fresh init: seed both manifests, meta LAST as the commit marker
-        seedDeltaManifests(Seq(admittedDir, totalsDir), hconf)
-        budgetRows.toSeq.map { case (g, b) => (g, b, seed) }
-          .toDF("source", "budget", "seed").coalesce(1)
-          .write.mode("overwrite").parquet(tokenBudgetMetaPath(indexDir))
+    val log = tbLog(spark, indexDir)
+    log.open(loadTokenBudgetMeta(spark, indexDir)) { case (eb, es) =>
+      require(eb == budgetRows.toMap && es == seed,
+        s"token-budget state at $indexDir was maintained with (budgets=$eb, seed=$es); " +
+          s"restarting with (budgets=${budgetRows.toMap}, seed=$seed) would change who was " +
+          "admitted retroactively — delete the directory or pass matching parameters")
+    } {
+      budgetRows.toSeq.map { case (g, b) => (g, b, seed) }
+        .toDF("source", "budget", "seed").coalesce(1)
+        .write.mode("overwrite").parquet(tokenBudgetMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
-      // committed = present in the totals manifest (the commit marker) OR
-      // already folded away by compactTokenBudget (whose sidecar remembers
-      // folded batch ids exactly so a post-compaction replay of an old
-      // micro-batch cannot re-admit and double-count tokens)
-      val committed = graft.io.Manifest.read(totalsDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$admittedDir/batch=$batchId", conf)
-        graft.io.HadoopIO.delete(s"$totalsDir/batch=$batchId", conf)
-        val priorDf =
-          if (graft.io.Manifest.read(totalsDir, conf).get.isEmpty)
-            Seq.empty[(String, Long)].toDF("source", "__prior")
-          else hhReadManifested(sess, totalsDir)
-            .groupBy("source").agg(sum("batch_toks").as("__prior"))
+      if (!log.committed(batchId)) {
+        val priorDf = log.read("totals")
+          .fold(Seq.empty[(String, Long)].toDF("source", "__prior"))(
+            _.groupBy("source").agg(sum("batch_toks").as("__prior")))
         // budgets (inner: absent sources drop) and prior totals (left:
         // a source's first batch has none) join instead of CASE chains —
         // source cardinality only sizes the broadcasts
@@ -3630,26 +3191,27 @@ object StreamingOps {
             graft.ops.Sampling.bucket(col("doc_id"), seed).as("bucket"), col("n_tok"))
           .persist()
         try {
-          admitted.write.parquet(s"$admittedDir/batch=$batchId")
           // the "" sentinel guarantees the totals batch dir holds a file
           // even when nothing was admitted — the commit marker (and
           // therefore the replay guard) must exist for EVERY batch, or an
           // all-sources-full (or empty) batch would reprocess forever
-          admitted.groupBy("source").agg(sum("n_tok").as("batch_toks"))
-            .unionByName(Seq(("", 0L)).toDF("source", "batch_toks"))
-            .coalesce(1).write.parquet(s"$totalsDir/batch=$batchId")
-          replaceBatchManifest(admittedDir, s"batch=$batchId", conf)
-          // totals manifest LAST = the commit marker
-          replaceBatchManifest(totalsDir, s"batch=$batchId", conf)
+          log.commit(batchId)(
+            p => admitted.write.parquet(p),
+            p => admitted.groupBy("source").agg(sum("n_tok").as("batch_toks"))
+              .unionByName(Seq(("", 0L)).toDF("source", "batch_toks"))
+              .coalesce(1).write.parquet(p))
         } finally admitted.unpersist()
       }
     }
   }
 
+  private def tbLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("admitted", "totals"), "token-budget",
+      Some("compactTokenBudget"), exactlyOnce = true)
+
   /** The admitted set a [[tokenBudgetSink]] directory has committed:
-    * (doc_id, source, n_tok), restricted to batches the TOTALS manifest
-    * (the commit marker) lists — plus batches [[compactTokenBudget]]'s
-    * sidecar records as folded into the compacted totals (compaction
+    * (doc_id, source, n_tok), restricted to batches the totals log (the
+    * commit marker) lists or [[compactTokenBudget]] folded (compaction
     * rewrites per-source sums only; the admitted rows stay where the
     * batch committed them, so the admitted set is byte-identical before
     * and after a compaction). A crashed half-committed batch's admitted
@@ -3657,25 +3219,11 @@ object StreamingOps {
     */
   def tokenBudgetAdmitted(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     require(loadTokenBudgetMeta(spark, indexDir).isDefined,
       s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    val admittedDir = s"$indexDir/admitted"
-    val totalsDir = s"$indexDir/totals"
-    validateDelta(admittedDir, hconf)
-    validateDelta(totalsDir, hconf)
-    val committedBatches = graft.io.Manifest.read(totalsDir, hconf).get
-      .map(_.name.takeWhile(_ != '/')).toSet ++
-      foldedBatchIds(spark, indexDir).map(id => s"batch=$id")
-    if (committedBatches.isEmpty)
-      return Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok")
-    val committedFiles = graft.io.Manifest.read(admittedDir, hconf).get
-      .filter(e => committedBatches(e.name.takeWhile(_ != '/')))
-      .map(e => s"$admittedDir/${e.name}")
-    if (committedFiles.isEmpty)
-      return Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok")
-    spark.read.option("basePath", admittedDir).parquet(committedFiles: _*)
-      .select("doc_id", "source", "n_tok")
+    tbLog(spark, indexDir).read("admitted")
+      .fold(Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok"))(
+        _.select("doc_id", "source", "n_tok"))
   }
 
   /** Compact a [[tokenBudgetSink]] totals log: fold the per-batch
@@ -3684,49 +3232,41 @@ object StreamingOps {
     * with stream lifetime (one summary file instead of one per batch —
     * the only maintained sink whose per-batch read cost was O(batches)).
     * The admitted table is untouched: [[tokenBudgetAdmitted]] reads it
-    * wholesale either way (it IS the data), and the folded sidecar keeps
-    * its batches visible, so the admitted set is byte-identical across a
-    * compaction. Run while the admission stream is STOPPED.
-    *
-    * Replay safety: [[compactDeltaLog]] (the one shared copy of the
-    * crash protocol) — the `folded` sidecar lands before the destructive
-    * totals swap, so a checkpoint-recovery redelivery of a
-    * pre-compaction micro-batch skips instead of re-admitting documents
-    * the compacted totals already count (which would double-spend budget
-    * and starve later batches).
+    * wholesale either way (it IS the data), and the folded ids keep its
+    * batches visible, so the admitted set is byte-identical across a
+    * compaction. Run while the admission stream is STOPPED. The
+    * [[BatchLog]] swap records folded batch ids before the destructive
+    * step, so a checkpoint-recovery redelivery of a pre-compaction
+    * micro-batch skips instead of re-admitting documents the compacted
+    * totals already count.
     */
   def compactTokenBudget(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
     require(loadTokenBudgetMeta(spark, indexDir).isDefined,
       s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    compactDeltaLog(spark, indexDir, "totals", () => {
-      // per-source sums only — sources × 1 rows, never the corpus; every
-      // committed batch wrote the "" sentinel row, so the fold always
-      // carries it and the compacted batch directory is never empty
-      val foldedTotals = hhReadManifested(spark, s"$indexDir/totals")
-        .groupBy("source").agg(sum("batch_toks").as("batch_toks"))
-        .select(col("source"), col("batch_toks"))
-        .as[(String, Long)].collect().sortBy(_._1)
-      (tmp: String) => foldedTotals.toSeq.toDF("source", "batch_toks")
-        .coalesce(1).write.parquet(s"$tmp/batch=compacted")
-    })
+    tbLog(spark, indexDir).compact("totals")(tbFold(spark, indexDir))
+  }
+
+  /** The compacted totals writer: per-source sums only — sources × 1 rows,
+    * never the corpus; every committed batch wrote the "" sentinel row, so
+    * the fold always carries it and the compacted batch is never empty.
+    */
+  private def tbFold(spark: SparkSession, indexDir: String): String => Unit = { seg =>
+    import spark.implicits._
+    val foldedTotals = tbLog(spark, indexDir).read("totals").get
+      .groupBy("source").agg(sum("batch_toks").as("batch_toks"))
+      .select(col("source"), col("batch_toks"))
+      .as[(String, Long)].collect().sortBy(_._1)
+    foldedTotals.toSeq.toDF("source", "batch_toks").coalesce(1).write.parquet(seg)
   }
 
   /** Number of totals batches a [[tokenBudgetSink]] dir has accumulated
     * since its last compaction, measured from the totals completeness
-    * manifest alone — no data scan, no Spark job (the same
-    * manifest-only-gauge shape as [[heavyHittersSketchBatches]]). The
-    * sink's per-batch prior-totals read costs batches × sources rows, so
-    * this IS the per-batch-read-cost gauge.
+    * manifest alone — no data scan, no Spark job. The sink's per-batch
+    * prior-totals read costs batches × sources rows, so this IS the
+    * per-batch-read-cost gauge.
     */
-  def tokenBudgetTotalsBatches(spark: SparkSession, indexDir: String): Int = {
-    val entries = graft.io.Manifest.read(s"$indexDir/totals",
-      spark.sparkContext.hadoopConfiguration).getOrElse(
-      throw new IllegalStateException(
-        s"token-budget totals log at $indexDir/totals has no manifest — " +
-          "not a token-budget admission dir"))
-    entries.map(_.name.takeWhile(_ != '/')).distinct.size
-  }
+  def tokenBudgetTotalsBatches(spark: SparkSession, indexDir: String): Int =
+    tbLog(spark, indexDir).batchCount("totals")
 
   /** [[compactTokenBudget]] gated on [[tokenBudgetTotalsBatches]]: the
     * one-call maintenance form — fold the totals log only when more than
@@ -3734,22 +3274,22 @@ object StreamingOps {
     * can invoke it unconditionally after every batch window and the
     * per-batch read bound (batches × sources) is enforced by the
     * maintenance loop rather than operator discipline. Returns (measured
-    * batch count, whether a compaction ran). Run while the admission
-    * stream is STOPPED, like the compaction itself.
+    * batch count, whether a compaction ran; -1 after resuming an
+    * interrupted swap). Run while the admission stream is STOPPED, like
+    * the compaction itself.
     */
   def compactTokenBudgetIfNeeded(
       spark: SparkSession,
       indexDir: String,
       maxBatches: Int = 64): (Int, Boolean) =
-    gatedCompact(spark, indexDir, "totals", maxBatches,
-      () => tokenBudgetTotalsBatches(spark, indexDir),
-      () => compactTokenBudget(spark, indexDir))
+    tbLog(spark, indexDir).compactIfOver("totals", maxBatches)(tbFold(spark, indexDir))
 
   // ------------------------------------ streaming contamination-rate audit
 
   private def dcrBenchDir(indexDir: String) = s"$indexDir/bench"
   private def dcrDocsDir(indexDir: String) = s"$indexDir/bench_docs"
-  private def dcrMatchedDir(indexDir: String) = s"$indexDir/matched"
+  private def dcrLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("matched"), "contamination-rate", None, exactlyOnce = true)
   private def dcrMetaPath(indexDir: String) = s"$indexDir/dcr_meta"
 
   /** INGESTION-TIME contamination-rate audit — the streaming twin of
@@ -3771,10 +3311,10 @@ object StreamingOps {
     * hashes are anti-joined away, and only the NEWLY matched hashes land
     * under `matched/batch=N` — so the whole matched log is bounded by
     * the benchmark's own shingle count regardless of stream lifetime
-    * (the per-batch delta IS the rate delta), and the manifest merge is
-    * the commit marker: an at-least-once redelivery of a committed batch
-    * is skipped, a crashed half-commit is invisible to every read and
-    * rewritten on redelivery.
+    * (the per-batch delta IS the rate delta). Commits go through
+    * [[BatchLog]] exactly-once: an at-least-once redelivery of a committed
+    * batch is skipped, a crashed half-commit is invisible to every read
+    * and rewritten on redelivery.
     */
   def decontaminateRateSink(
       spark: SparkSession,
@@ -3790,7 +3330,6 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     val benchDir = dcrBenchDir(indexDir)
     val docsDir = dcrDocsDir(indexDir)
-    val matchedDir = dcrMatchedDir(indexDir)
 
     def shingles(df: DataFrame, id: String, text: String, outId: String) =
       df.select(col(id).cast("long").as(outId),
@@ -3806,49 +3345,34 @@ object StreamingOps {
         coalesce(expr("bit_xor(bench_id * 1000003 + h)"), lit(0L)).as("d")).head()
       (r.getLong(0), r.getLong(1))
     }
-    if (!graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf)) {
-      benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
-      benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(docsDir)
-      graft.io.HadoopIO.mkdirs(matchedDir, hconf)
-      graft.io.Manifest.write(matchedDir, Seq.empty, hconf)
-      // meta LAST: the init commit marker — a crash anywhere above leaves
-      // no meta and the next construction re-runs the whole init
-      val (c, d) = digestOf(spark.read.parquet(benchDir))
-      Seq((n, c, d)).toDF("n", "bench_shingles", "bench_digest")
-        .coalesce(1).write.mode("overwrite").parquet(dcrMetaPath(indexDir))
-    } else {
-      val meta = spark.read.parquet(dcrMetaPath(indexDir))
-        .select("n", "bench_shingles", "bench_digest").head()
+    val log = dcrLog(spark, indexDir)
+    val stored =
+      if (!graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf)) None
+      else Some(spark.read.parquet(dcrMetaPath(indexDir))
+        .select("n", "bench_shingles", "bench_digest").head())
+    log.open(stored) { meta =>
       val (c, d) = digestOf(benchSh)
       require(meta.getInt(0) == n && meta.getLong(1) == c && meta.getLong(2) == d,
         s"contamination-rate state at $indexDir was maintained with a different " +
           s"(benchmark, n=${meta.getInt(0)}); restarting with n=$n and a benchmark " +
           s"digesting ($c, $d) vs recorded (${meta.getLong(1)}, ${meta.getLong(2)}) " +
           "would silently change every rate — delete the directory or pass the same benchmark")
-      // fail-loud, not bootstrap: meta exists, so init committed a
-      // manifest — a missing one is lost state, and re-creating it from a
-      // raw listing would bless orphaned half-written batch files as
-      // committed (the validateDelta convention everywhere else)
-      require(graft.io.Manifest.read(matchedDir, hconf).isDefined,
-        s"contamination-rate matched log at $matchedDir has no manifest but $indexDir " +
-          "has committed meta — lost or foreign state; refusing to serve or extend it")
+    } {
+      benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
+      benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(docsDir)
+      val (c, d) = digestOf(spark.read.parquet(benchDir))
+      Seq((n, c, d)).toDF("n", "bench_shingles", "bench_digest")
+        .coalesce(1).write.mode("overwrite").parquet(dcrMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(matchedDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/"))
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$matchedDir/batch=$batchId", conf)
+      if (!log.committed(batchId)) {
         val benchH = sess.read.parquet(benchDir).select("h").distinct()
-        val priorEntries = graft.io.Manifest.read(matchedDir, conf).get
-        val prior =
-          if (priorEntries.isEmpty) Seq.empty[Long].toDF("h")
-          else hhReadManifested(sess, matchedDir)
-            .filter(col("real")).select("h").distinct()
+        val prior = log.read("matched").fold(Seq.empty[Long].toDF("h"))(
+          _.filter(col("real")).select("h").distinct())
         // the corpus batch streams ONCE through the broadcast bench gate;
         // the matched set is bounded by the benchmark's shingle count
         val newMatches = shingles(batch, idCol, textCol, "__cd")
@@ -3858,11 +3382,9 @@ object StreamingOps {
           .withColumn("real", lit(true))
         // the sentinel guarantees the batch dir (the replay guard) exists
         // even when the batch matched nothing new
-        newMatches
+        log.commit(batchId)(p => newMatches
           .unionByName(Seq((0L, false)).toDF("h", "real"))
-          .coalesce(1).write.parquet(s"$matchedDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(matchedDir, s"batch=$batchId", conf)
+          .coalesce(1).write.parquet(p))
       }
     }
   }
@@ -3879,16 +3401,11 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf),
       s"no dcr_meta sidecar under $indexDir — not a contamination-rate audit dir")
-    val matchedDir = dcrMatchedDir(indexDir)
-    validateDelta(matchedDir, hconf)
     val benchSh = spark.read.parquet(dcrBenchDir(indexDir))
-    val entries = graft.io.Manifest.read(matchedDir, hconf).get
-    val matched =
-      if (entries.isEmpty) {
-        import spark.implicits._
-        Seq.empty[Long].toDF("h")
-      } else hhReadManifested(spark, matchedDir)
-        .filter(col("real")).select("h").distinct()
+    val matched = dcrLog(spark, indexDir).read("matched").fold {
+      import spark.implicits._
+      Seq.empty[Long].toDF("h")
+    }(_.filter(col("real")).select("h").distinct())
     val perDoc = benchSh
       .join(broadcast(matched.withColumn("__m", lit(1L))), Seq("h"), "left")
       .groupBy("bench_id")
@@ -3906,7 +3423,6 @@ object StreamingOps {
   // ------------------------------------------- corpus-profile monitoring sink
 
   private def cpMetaPath(indexDir: String) = s"$indexDir/cp_meta"
-  private def cpTotalsDir(indexDir: String) = s"$indexDir/totals"
 
   /** INGESTION-TIME corpus profiling — the monitoring twin of the batch
     * `corpus_profile` diagnostic: per-(source, lang) MERGEABLE integer
@@ -3921,12 +3437,10 @@ object StreamingOps {
     *
     * Per batch: ONE partial-aggregated pass over the batch (result is
     * (sources × langs)-sized, never batch-sized), an O(sources × langs)
-    * append under `totals/batch=N`, manifest merge as the commit marker.
-    * Totals are NOT idempotent under re-merge (unlike the weighted-sample
-    * reservoir), so the marker IS load-bearing and compaction records
-    * folded batch ids via the shared [[compactDeltaLog]] crash protocol —
-    * a post-compaction redelivery finds its id in the sidecar and skips
-    * instead of double-counting.
+    * append under `totals/batch=N`, committed exactly-once through
+    * [[BatchLog]]: totals are NOT idempotent under re-merge, so committed
+    * and folded batches are skipped on redelivery instead of
+    * double-counting.
     */
   def corpusProfileSink(
       spark: SparkSession,
@@ -3937,46 +3451,38 @@ object StreamingOps {
       charsCol: String = "n_chars"): (DataFrame, Long) => Unit = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
-    val totalsDir = cpTotalsDir(indexDir)
-    if (!graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf)) {
-      seedDeltaManifests(Seq(totalsDir), hconf)
-      // meta LAST: the init commit marker
-      Seq((sourceCol, langCol, textCol, charsCol))
-        .toDF("source_col", "lang_col", "text_col", "chars_col")
-        .coalesce(1).write.mode("overwrite").parquet(cpMetaPath(indexDir))
-    } else {
-      val r = spark.read.parquet(cpMetaPath(indexDir))
-        .select("source_col", "lang_col", "text_col", "chars_col").head()
+    val log = cpLog(spark, indexDir)
+    val stored =
+      if (!graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf)) None
+      else Some(spark.read.parquet(cpMetaPath(indexDir))
+        .select("source_col", "lang_col", "text_col", "chars_col").head())
+    log.open(stored) { r =>
       require(r.getString(0) == sourceCol && r.getString(1) == langCol &&
           r.getString(2) == textCol && r.getString(3) == charsCol,
         s"corpus-profile state at $indexDir was maintained over columns " +
           s"(${r.getString(0)}, ${r.getString(1)}, ${r.getString(2)}, ${r.getString(3)}); " +
           s"restarting with ($sourceCol, $langCol, $textCol, $charsCol) would mix " +
           "incomparable totals — delete the directory or pass matching columns")
-      requireCommittedManifests("corpus-profile", indexDir,
-        Seq(totalsDir), "compactCorpusProfile", hconf)
+    } {
+      Seq((sourceCol, langCol, textCol, charsCol))
+        .toDF("source_col", "lang_col", "text_col", "chars_col")
+        .coalesce(1).write.mode("overwrite").parquet(cpMetaPath(indexDir))
     }
 
-    (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(totalsDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$totalsDir/batch=$batchId", conf)
+    (batch: DataFrame, batchId: Long) =>
+      if (!log.committed(batchId)) log.commit(batchId)(p =>
         batch
           .groupBy(col(sourceCol).cast("string").as("source"),
             col(langCol).cast("string").as("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col(charsCol).cast("long")).as("total_chars"),
             sum(size(split(trim(col(textCol)), "\\s+")).cast("long")).as("total_tokens"))
-          .coalesce(1).write.parquet(s"$totalsDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(totalsDir, s"batch=$batchId", conf)
-      }
-    }
+          .coalesce(1).write.parquet(p))
   }
+
+  private def cpLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("totals"), "corpus-profile",
+      Some("compactCorpusProfile"), exactlyOnce = true)
 
   /** The converged per-source profile a [[corpusProfileSink]] directory
     * serves: (source, n_docs, n_langs, total_chars, total_tokens,
@@ -3988,15 +3494,12 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
       s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
-    val totalsDir = cpTotalsDir(indexDir)
-    validateDelta(totalsDir, hconf)
-    val entries = graft.io.Manifest.read(totalsDir, hconf).get
-    if (entries.isEmpty) {
+    val totals = cpLog(spark, indexDir).read("totals").getOrElse {
       import spark.implicits._
       return Seq.empty[(String, Long, Long, Long, Long, Double)]
         .toDF("source", "n_docs", "n_langs", "total_chars", "total_tokens", "avg_chars")
     }
-    hhReadManifested(spark, totalsDir)
+    totals
       .groupBy("source")
       .agg(sum("n_docs").as("n_docs"),
         countDistinct("lang").as("n_langs"),
@@ -4007,35 +3510,33 @@ object StreamingOps {
   }
 
   /** Fold the totals log into ONE `batch=compacted` segment through the
-    * shared [[compactDeltaLog]] crash protocol (folded-ids sidecar lands
-    * before the destructive swap, so post-compaction redeliveries skip
-    * instead of double-counting). Run while the stream is stopped.
+    * [[BatchLog]] swap (folded batch ids land before the destructive step,
+    * so post-compaction redeliveries skip instead of double-counting). Run
+    * while the stream is stopped.
     */
   def compactCorpusProfile(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
       s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
-    compactDeltaLog(spark, indexDir, "totals", () => {
-      val folded = hhReadManifested(spark, cpTotalsDir(indexDir))
+    val log = cpLog(spark, indexDir)
+    log.compact("totals") { seg =>
+      import spark.implicits._
+      log.read("totals").get
         .groupBy("source", "lang")
         .agg(sum("n_docs").as("n_docs"),
           sum("total_chars").as("total_chars"),
           sum("total_tokens").as("total_tokens"))
         .collect()
-      (tmpDir: String) => {
-        import spark.implicits._
-        folded.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          .toSeq.sortBy(t => (t._1, t._2))
-          .toDF("source", "lang", "n_docs", "total_chars", "total_tokens")
-          .coalesce(1).write.parquet(s"$tmpDir/batch=compacted")
-      }
-    })
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toSeq.sortBy(t => (t._1, t._2))
+        .toDF("source", "lang", "n_docs", "total_chars", "total_tokens")
+        .coalesce(1).write.parquet(seg)
+    }
   }
 
   // ------------------------------------------- unbounded exact-dedup sink
 
   private def deMetaPath(indexDir: String) = s"$indexDir/de_meta"
-  private def deDigDir(indexDir: String) = s"$indexDir/dig"
 
   /** UNBOUNDED cross-batch exact dedup — the digest twin of
     * [[nearDupSink]], closing `stream_dedup`'s one semantic gap: Spark's
@@ -4053,12 +3554,10 @@ object StreamingOps {
     * left-anti against accumulated digests would freeze whichever id
     * arrived first, diverging from [[graft.dedup.Dedup.exactGroups]]'
     * min-id rule the moment a smaller id shows up in a later batch,
-    * while the min-fold is order-blind by construction. Same protocol as
-    * [[corpusProfileSink]]: per-batch manifest merge as the commit
-    * marker (a lost delta file fails the next read loudly), exact-batch
-    * replays skip via the manifest, post-compaction redeliveries skip
-    * via the folded-ids sidecar (counts are not idempotent), restarts
-    * against a half-initialized dir refuse.
+    * while the min-fold is order-blind by construction. Same exactly-once
+    * [[BatchLog]] as [[corpusProfileSink]]: committed and folded batches
+    * skip on redelivery (counts are not idempotent), a lost delta file
+    * fails the next read loudly.
     *
     * Read the converged groups with [[dedupExactMaintained]] — equal
     * row-for-row to batch `Dedup.exactGroups` over everything ingested —
@@ -4072,40 +3571,32 @@ object StreamingOps {
       textCol: String = "text"): (DataFrame, Long) => Unit = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
-    val digDir = deDigDir(indexDir)
-    if (!graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf)) {
-      seedDeltaManifests(Seq(digDir), hconf)
-      // meta LAST: the init commit marker
-      Seq((idCol, textCol)).toDF("id_col", "text_col")
-        .coalesce(1).write.mode("overwrite").parquet(deMetaPath(indexDir))
-    } else {
-      val r = spark.read.parquet(deMetaPath(indexDir)).select("id_col", "text_col").head()
+    val log = deLog(spark, indexDir)
+    val stored =
+      if (!graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf)) None
+      else Some(spark.read.parquet(deMetaPath(indexDir)).select("id_col", "text_col").head())
+    log.open(stored) { r =>
       require(r.getString(0) == idCol && r.getString(1) == textCol,
         s"exact-dedup state at $indexDir was maintained over (${r.getString(0)}, " +
           s"${r.getString(1)}); restarting with ($idCol, $textCol) would mix " +
           "incomparable digests — delete the directory or pass matching columns")
-      requireCommittedManifests("exact-dedup", indexDir, Seq(digDir),
-        "compactDedupExact", hconf)
+    } {
+      Seq((idCol, textCol)).toDF("id_col", "text_col")
+        .coalesce(1).write.mode("overwrite").parquet(deMetaPath(indexDir))
     }
 
-    (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(digDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$digDir/batch=$batchId", conf)
+    (batch: DataFrame, batchId: Long) =>
+      if (!log.committed(batchId)) log.commit(batchId)(p =>
         batch
           .groupBy(md5(col(textCol)).as("digest"))
           .agg(min(col(idCol).cast("long")).as("keep_id"),
             count(lit(1)).as("n_dups"))
-          .write.parquet(s"$digDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(digDir, s"batch=$batchId", conf)
-      }
-    }
+          .write.parquet(p))
   }
+
+  private def deLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("dig"), "exact-dedup", Some("compactDedupExact"),
+      exactlyOnce = true)
 
   /** The converged exact-dedup groups a [[dedupExactSink]] directory
     * serves: (digest, keep_id, n_dups), equal row-for-row to batch
@@ -4118,43 +3609,40 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
       s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
-    val digDir = deDigDir(indexDir)
-    validateDelta(digDir, hconf)
-    val entries = graft.io.Manifest.read(digDir, hconf).get
-    if (entries.isEmpty) {
+    val dig = deLog(spark, indexDir).read("dig").getOrElse {
       import spark.implicits._
       return Seq.empty[(String, Long, Long)].toDF("digest", "keep_id", "n_dups")
     }
-    hhReadManifested(spark, digDir)
+    dig
       .groupBy("digest")
       .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
   }
 
-  /** Fold the digest log back to one segment per digest set. Goes through
-    * the shared [[compactDeltaLog]] crash protocol (folded-ids sidecar
-    * lands before the destructive swap, so a batch redelivered after its
-    * segment was folded away skips instead of double-counting its
-    * `n_dups`). Run while the stream is stopped. The fold stays
-    * distributed — digest state is corpus-cardinality-sized, so unlike
-    * the bounded profile/heavy-hitter folds nothing is collected.
+  /** Fold the digest log back to one segment per digest set through the
+    * [[BatchLog]] swap (folded batch ids land before the destructive step,
+    * so a batch redelivered after its segment was folded away skips
+    * instead of double-counting its `n_dups`). Run while the stream is
+    * stopped. The fold stays distributed — digest state is
+    * corpus-cardinality-sized, so unlike the bounded profile/heavy-hitter
+    * folds nothing is collected.
     */
   def compactDedupExact(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
       s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
-    compactDeltaLog(spark, indexDir, "dig", () => {
-      val folded = hhReadManifested(spark, deDigDir(indexDir))
-        .groupBy("digest")
-        .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
-      (tmpDir: String) =>
-        folded.write.parquet(s"$tmpDir/batch=compacted")
-    })
+    val log = deLog(spark, indexDir)
+    log.compact("dig")(seg => log.read("dig").get
+      .groupBy("digest")
+      .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
+      .write.parquet(seg))
   }
 
   // ------------------------------------------- weighted-sample reservoir sink
 
   private def wsMetaPath(indexDir: String) = s"$indexDir/ws_meta"
-  private def wsCandDir(indexDir: String) = s"$indexDir/cand"
+  private def wsLog(spark: SparkSession, indexDir: String) =
+    new BatchLog(spark, indexDir, Seq("cand"), "weighted-sample", Some("compactWeightedSample"),
+      exactlyOnce = false)
 
   private def loadWeightedSampleMeta(
       spark: SparkSession, indexDir: String): Option[(Int, String, String, String)] = {
@@ -4177,14 +3665,14 @@ object StreamingOps {
     * committed batch's candidates — or a batch replayed after compaction
     * folded it away — cannot change the top-k, because its rows are
     * byte-identical functions of the data already folded in. That is why
-    * this sink needs none of the heavy-hitter folded-ids machinery: the
-    * manifest batch marker only SKIPS redundant work; it is not load-
+    * this sink's [[BatchLog]] records no folded batch ids: skipping a
+    * batch the manifest lists only saves redundant work; it is not load-
     * bearing for correctness.
     *
     * Per batch: one scan computing keys + a batch-local
     * TakeOrderedAndProject top-k (k rows — candidates that could ever
-    * enter the global top-k), an O(k) append under `cand/batch=N`, and
-    * the manifest merge as commit marker. The candidate log holds
+    * enter the global top-k) and an O(k) append under `cand/batch=N`.
+    * The candidate log holds
     * k × batches rows until [[compactWeightedSample]] folds it back to k.
     * Read with [[weightedSampleMaintained]] — identical rows, ranks, and
     * order as the batch operator over the union of committed batches.
@@ -4203,43 +3691,27 @@ object StreamingOps {
       seed: String = "s"): (DataFrame, Long) => Unit = {
     import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val candDir = wsCandDir(indexDir)
-    loadWeightedSampleMeta(spark, indexDir) match {
-      case Some((ek, es, eid, ew)) =>
-        require(ek == k && es == seed && eid == idCol && ew == weightCol,
-          s"weighted-sample state at $indexDir was maintained with (k=$ek, seed=$es, " +
-            s"id=$eid, weight=$ew); restarting with (k=$k, seed=$seed, id=$idCol, " +
-            s"weight=$weightCol) would change the sample retroactively — delete the " +
-            "directory or pass matching parameters")
-        requireCommittedManifests("weighted-sample", indexDir,
-          Seq(candDir), "compactWeightedSample", hconf)
-      case None =>
-        seedDeltaManifests(Seq(candDir), hconf)
-        // meta LAST: the init commit marker
-        Seq((k, seed, idCol, weightCol)).toDF("k", "seed", "id_col", "weight_col")
-          .coalesce(1).write.mode("overwrite").parquet(wsMetaPath(indexDir))
+    val log = wsLog(spark, indexDir)
+    log.open(loadWeightedSampleMeta(spark, indexDir)) { case (ek, es, eid, ew) =>
+      require(ek == k && es == seed && eid == idCol && ew == weightCol,
+        s"weighted-sample state at $indexDir was maintained with (k=$ek, seed=$es, " +
+          s"id=$eid, weight=$ew); restarting with (k=$k, seed=$seed, id=$idCol, " +
+          s"weight=$weightCol) would change the sample retroactively — delete the " +
+          "directory or pass matching parameters")
+    } {
+      Seq((k, seed, idCol, weightCol)).toDF("k", "seed", "id_col", "weight_col")
+        .coalesce(1).write.mode("overwrite").parquet(wsMetaPath(indexDir))
     }
 
-    (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(candDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/"))
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$candDir/batch=$batchId", conf)
-        // batch-local top-k: only rows that could ever enter the global
-        // reservoir; TakeOrderedAndProject, never a global sort
-        batch
-          .select(col(idCol), col(weightCol),
-            graft.ops.Sampling.aresKey(idCol, weightCol, seed).as("__skey"))
-          .orderBy(col("__skey").desc, col(idCol))
-          .limit(k)
-          .coalesce(1).write.parquet(s"$candDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(candDir, s"batch=$batchId", conf)
-      }
-    }
+    (batch: DataFrame, batchId: Long) =>
+      // batch-local top-k: only rows that could ever enter the global
+      // reservoir; TakeOrderedAndProject, never a global sort
+      if (!log.committed(batchId)) log.commit(batchId)(p => batch
+        .select(col(idCol), col(weightCol),
+          graft.ops.Sampling.aresKey(idCol, weightCol, seed).as("__skey"))
+        .orderBy(col("__skey").desc, col(idCol))
+        .limit(k)
+        .coalesce(1).write.parquet(p))
   }
 
   /** The maintained A-Res sample a [[weightedSampleSink]] directory
@@ -4253,27 +3725,19 @@ object StreamingOps {
     * not serve a different schema than the first committed batch.
     */
   def weightedSampleMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val (k, _, idCol, weightCol) = loadWeightedSampleMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
-    val candDir = wsCandDir(indexDir)
-    validateDelta(candDir, hconf)
-    val entries = graft.io.Manifest.read(candDir, hconf).get
-    if (entries.isEmpty)
+    val cands = wsLog(spark, indexDir).read("cand").getOrElse(
       return spark.emptyDataFrame
         .withColumn(idCol, lit(null).cast("long"))
         .withColumn(weightCol, lit(null).cast("double"))
         .withColumn("sample_rank", lit(null).cast("int"))
-        .limit(0)
-    val cands = hhReadManifested(spark, candDir)
+        .limit(0))
       .select(col(idCol).cast("long").as(idCol),
         col(weightCol).cast("double").as(weightCol), col("__skey"))
-    val conflicting = cands.groupBy(idCol)
-      .agg(countDistinct(weightCol).as("__nw")).filter(col("__nw") > 1).limit(1).count()
-    require(conflicting == 0,
-      s"weighted-sample log at $candDir carries an id with two different weights — " +
-        "ids must be unique across the stream with a stable weight; the sample would " +
+    requireStableWeights(cands, idCol, weightCol, s"$indexDir/cand",
+      "ids must be unique across the stream with a stable weight; the sample would " +
         "be nondeterministic")
     cands.dropDuplicates(idCol)
       .orderBy(col("__skey").desc, col(idCol))
@@ -4283,72 +3747,43 @@ object StreamingOps {
       .drop("__skey")
   }
 
-  /** Fold the candidate log back to ONE k-row file once it holds more
-    * than `maxBatches` committed batch segments: the global top-k is
-    * computed from the manifested log and written under a fresh
-    * `compact=N` segment, and the MANIFEST REWRITE to list only that
-    * segment is the atomic swap (a crash before it leaves the old
-    * manifest serving the old — equivalent — view). After the swap the
-    * sweep deletes every on-disk `batch=*` dir the fresh manifest does
-    * not reference — including dirs ORPHANED by a crash in an earlier
-    * compaction's post-swap window, which a manifest-derived segment
-    * list would never see again. Run while the stream is stopped (the
-    * sweep must not race an in-flight batch write). A batch replayed
-    * after its segment was folded away re-appends its candidates; the
-    * idempotent-merge argument above makes that harmless — the next
-    * read or compaction folds them straight back out.
+  /** Fold the candidate log back to ONE k-row `batch=compacted` segment
+    * through the [[BatchLog]] swap once it holds more than `maxBatches`
+    * committed batch segments. Returns (segments, whether a fold ran; -1
+    * after resuming an interrupted swap). Run while the stream is
+    * stopped. The swap replaces the whole log, so segments orphaned by a
+    * crashed earlier attempt go with it. A batch replayed after its
+    * segment was folded away re-appends its candidates; the
+    * idempotent-merge argument above makes that harmless — the next read
+    * or compaction folds them straight back out.
     */
   def compactWeightedSample(
       spark: SparkSession,
       indexDir: String,
       maxBatches: Int = 64): (Int, Boolean) = {
-    require(maxBatches >= 1, s"maxBatches must be >= 1, got $maxBatches")
-    val hconf = spark.sparkContext.hadoopConfiguration
     val (k, _, idCol, weightCol) = loadWeightedSampleMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
-    val candDir = wsCandDir(indexDir)
-    validateDelta(candDir, hconf)
-    val entries = graft.io.Manifest.read(candDir, hconf).get
-    val segs = entries.map(_.name.takeWhile(_ != '/')).distinct
-    if (segs.length <= maxBatches) return (segs.length, false)
-    // compact segments share the batch= prefix (one partition column for
-    // the discovery under basePath); the c-prefix keeps them disjoint
-    // from any real batch id for any stream lifetime
-    val nextCompact = segs.filter(_.startsWith("batch=c"))
-      .map(_.stripPrefix("batch=c").toLong).maxOption.getOrElse(-1L) + 1
-    val seg = s"batch=c$nextCompact"
-    // a crash between the segment write and the manifest swap leaves an
-    // orphan under this same name (the manifest — and therefore
-    // nextCompact — did not advance); clear it or the re-run's write
-    // throws path-already-exists and compaction wedges permanently
-    graft.io.HadoopIO.delete(s"$candDir/$seg", hconf)
-    val cands = hhReadManifested(spark, candDir)
-      .select(col(idCol), col(weightCol), col("__skey"))
-    // same stable-weight contract as the maintained read — folding away a
-    // conflicting id here would destroy the evidence the read checks for
+    val log = wsLog(spark, indexDir)
+    log.compactIfOver("cand", maxBatches) { seg =>
+      val cands = log.read("cand").get.select(col(idCol), col(weightCol), col("__skey"))
+      // same stable-weight contract as the maintained read — folding away a
+      // conflicting id here would destroy the evidence the read checks for
+      requireStableWeights(cands, idCol, weightCol, s"$indexDir/cand",
+        "refusing to compact a nondeterministic sample away")
+      cands
+        .dropDuplicates(idCol)
+        .orderBy(col("__skey").desc, col(idCol))
+        .limit(k)
+        .coalesce(1).write.parquet(seg)
+    }
+  }
+
+  private def requireStableWeights(
+      cands: DataFrame, idCol: String, weightCol: String, dir: String, why: String): Unit = {
     val conflicting = cands.groupBy(idCol)
       .agg(countDistinct(weightCol).as("__nw")).filter(col("__nw") > 1).limit(1).count()
     require(conflicting == 0,
-      s"weighted-sample log at $candDir carries an id with two different weights — " +
-        "refusing to compact a nondeterministic sample away")
-    cands
-      .dropDuplicates(idCol)
-      .orderBy(col("__skey").desc, col(idCol))
-      .limit(k)
-      .coalesce(1).write.parquet(s"$candDir/$seg")
-    val folded = listDelta(candDir, hconf, Some(seg))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
-    // the manifest rewrite IS the swap
-    graft.io.Manifest.write(candDir, folded, hconf)
-    // sweep from the FILESYSTEM, not the manifest: a crash in an earlier
-    // compaction's post-swap window leaves superseded segment dirs the
-    // manifest no longer references, and a manifest-derived `segs` would
-    // never see them again — delete every on-disk batch=* dir the fresh
-    // manifest doesn't reference (only `seg`), old and orphaned alike
-    graft.io.HadoopIO.globDirNames(candDir, "batch=*", hconf)
-      .filterNot(_ == seg)
-      .foreach(s => graft.io.HadoopIO.delete(s"$candDir/$s", hconf))
-    (segs.length, true)
+      s"weighted-sample log at $dir carries an id with two different weights — $why")
   }
 }
