@@ -506,21 +506,38 @@ object Queries {
       finally spark.conf.set("spark.sql.shuffle.partitions", old)
     }
 
-  /** Run a streaming DataFrame to completion (AvailableNow trigger, memory
-    * sink) and return the converged result. Only the result table lands on
-    * the driver; all operator state is distributed.
+  /** Run `stream` into the sink `to` configures (a `foreachBatch` sink, or
+    * the memory sink of [[runStream]]) to completion: AvailableNow trigger,
+    * at the streaming partition count ([[withStreamParts]]), blocking until
+    * every available batch is committed. The checkpoint is a fresh temp dir
+    * named after `prefix` unless `ckpt` names one — a second run on the
+    * same checkpoint resumes after the last committed offset.
+    */
+  private def runToCompletion[T](
+      spark: SparkSession,
+      stream: org.apache.spark.sql.Dataset[T],
+      prefix: String,
+      mode: String = "append",
+      ckpt: Option[String] = None)(
+      to: org.apache.spark.sql.streaming.DataStreamWriter[T] =>
+        org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit = {
+    val dir = ckpt.getOrElse(java.nio.file.Files.createTempDirectory(s"${prefix}ckpt").toString)
+    withStreamParts(spark) {
+      to(stream.writeStream.outputMode(mode))
+        .option("checkpointLocation", dir)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+  }
+
+  /** Run a streaming DataFrame to completion into a memory sink and return
+    * the converged result. Only the result table lands on the driver; all
+    * operator state is distributed.
     */
   private def runStream(spark: SparkSession, df: DataFrame, mode: String, prefix: String): DataFrame = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory(s"${prefix}ckpt").toString
-    withStreamParts(spark) {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runToCompletion(spark, df, prefix, mode)(_.format("memory").queryName(name))
     spark.table(name)
   }
 
@@ -1974,25 +1991,17 @@ object Queries {
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(lit("near duplicate copy "), col("text")).as("text"))
       val sinkDir = java.nio.file.Files.createTempDirectory("stream_nds_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_nds_ckpt").toString
       val sink = graft.streaming.StreamingOps.nearDupSink(spark, sinkDir, threshold = 0.8)
       val copiesStream = streamTable(spark, dir, "documents")
         .filter(col("doc_id") < 40)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(lit("near duplicate copy "), col("text")).as("text"))
-      withStreamParts(spark) {
-        // originals land as a direct batch (the sink is foreachBatch-shaped
-        // either way); the copies replay through a real file stream so the
-        // accumulated disk tables must carry the earlier members
-        sink(docs.toDF(), 0L)
-        val q = copiesStream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id + 1L))
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      // originals land as a direct batch (the sink is foreachBatch-shaped
+      // either way); the copies replay through a real file stream so the
+      // accumulated disk tables must carry the earlier members
+      withStreamParts(spark)(sink(docs.toDF(), 0L))
+      runToCompletion(spark, copiesStream, "stream_nds_")(
+        _.foreachBatch((b: DataFrame, id: Long) => sink(b, id + 1L)))
       graft.streaming.StreamingOps.nearDupSinkPairs(spark, sinkDir)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("doc_a", "doc_b")
@@ -2008,20 +2017,12 @@ object Queries {
     "stream_heavy_hitters" -> ((spark, dir) => {
       val docs = t(spark, dir, "documents").select("doc_id", "text")
       val sinkDir = java.nio.file.Files.createTempDirectory("stream_hh_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_hh_ckpt").toString
       val sink = graft.streaming.StreamingOps.heavyHittersSink(spark, sinkDir, n = 3, m = 16384)
       val tail = streamTable(spark, dir, "documents")
         .filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-      withStreamParts(spark) {
-        sink(docs.filter(col("doc_id") % 2 === 0), 0L)
-        val q = tail.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id + 1L))
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      withStreamParts(spark)(sink(docs.filter(col("doc_id") % 2 === 0), 0L))
+      runToCompletion(spark, tail, "stream_hh_")(
+        _.foreachBatch((b: DataFrame, id: Long) => sink(b, id + 1L)))
       graft.streaming.StreamingOps.heavyHittersTopK(spark, sinkDir, k = 10)
         .select(col("gram"), col("n_count"), col("rank").cast("long").as("rank"))
         .orderBy("rank")
@@ -2035,21 +2036,13 @@ object Queries {
     "stream_heavy_hitters_grouped" -> ((spark, dir) => {
       val docs = t(spark, dir, "documents").select("doc_id", "source", "text")
       val sinkDir = java.nio.file.Files.createTempDirectory("stream_hhg_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_hhg_ckpt").toString
       val sink = graft.streaming.StreamingOps.heavyHittersSinkByGroup(
         spark, sinkDir, n = 3, m = 16384, groupCol = "source")
       val tail = streamTable(spark, dir, "documents")
         .filter(col("doc_id") % 2 === 1).select("doc_id", "source", "text")
-      withStreamParts(spark) {
-        sink(docs.filter(col("doc_id") % 2 === 0), 0L)
-        val q = tail.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id + 1L))
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      withStreamParts(spark)(sink(docs.filter(col("doc_id") % 2 === 0), 0L))
+      runToCompletion(spark, tail, "stream_hhg_")(
+        _.foreachBatch((b: DataFrame, id: Long) => sink(b, id + 1L)))
       graft.streaming.StreamingOps.heavyHittersTopKByGroup(spark, sinkDir, k = 5)
         .select(col("grp").as("source"), col("gram"), col("n_count"),
           col("rank").cast("long").as("rank"))
@@ -2081,7 +2074,6 @@ object Queries {
       val pairs = Dedup.minhashLshPairs(docs.unionByName(copies), threshold = 0.8)
         .select("doc_a", "doc_b").persist()
       val sinkDir = java.nio.file.Files.createTempDirectory("stream_dg_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_dg_ckpt").toString
       val sink = graft.streaming.StreamingOps.dedupGroupsSink(spark, sinkDir)
       // the direct batch also runs at the stream partition count — the
       // sink's per-batch shuffles are frontier-sized, not corpus-sized
@@ -2093,15 +2085,8 @@ object Queries {
       val bridges = Seq((0L, 1L), (2L, 3L)).toDF("doc_a", "doc_b")
       bridges.coalesce(1).write.mode("overwrite").parquet(bridgeDir)
       val bridgeStream = spark.readStream.schema(bridges.schema).parquet(bridgeDir)
-      withStreamParts(spark) {
-        val q = bridgeStream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id + 1L))
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, bridgeStream, "stream_dg_")(
+        _.foreachBatch((b: DataFrame, id: Long) => sink(b, id + 1L)))
       graft.streaming.StreamingOps.dedupGroupsSinkGroups(spark, sinkDir)
         .select(col("id").as("doc_id"), col("group_id"))
         .orderBy("doc_id")
@@ -2438,24 +2423,17 @@ object Queries {
       import spark.implicits._
       val fixture = imagePhashFixture(spark, dir).persist()
       val sinkDir = java.nio.file.Files.createTempDirectory("stream_ip_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_ip_ckpt").toString
       val payloadDir = java.nio.file.Files.createTempDirectory("stream_ip_src").toString
       val sink = graft.streaming.StreamingOps.mediaPhashSink(spark, sinkDir,
         maxDist = 3, bands = 4)
       val copies = fixture.filter(col("id") >= 10000)
       copies.coalesce(1).write.mode("overwrite").parquet(payloadDir)
-      withStreamParts(spark) {
-        sink(graft.dedup.ImageDedup.dHashes(spark, fixture.filter(col("id") < 10000)), 0L)
-        val copyStream = spark.readStream.schema(copies.schema).parquet(payloadDir)
-        val q = copyStream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-            sink(graft.dedup.ImageDedup.dHashes(spark, b), id + 1L))
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      withStreamParts(spark)(
+        sink(graft.dedup.ImageDedup.dHashes(spark, fixture.filter(col("id") < 10000)), 0L))
+      runToCompletion(spark, spark.readStream.schema(copies.schema).parquet(payloadDir),
+          "stream_ip_")(
+        _.foreachBatch((b: DataFrame, id: Long) =>
+          sink(graft.dedup.ImageDedup.dHashes(spark, b), id + 1L)))
       fixture.unpersist()
       graft.streaming.StreamingOps.mediaPhashSinkPairs(spark, sinkDir)
         .orderBy("id_a", "id_b")
@@ -3146,7 +3124,6 @@ object Queries {
     "stream_bm25_maintenance" -> ((spark, dir) => {
       import spark.implicits._
       val idxDir = java.nio.file.Files.createTempDirectory("stream_bm25_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_bm25_ckpt").toString
       val sink = graft.streaming.StreamingOps.bm25MaintenanceSink(spark, idxDir, nBuckets = 16)
       val up1 = struct(col("doc_id").as("id"), lit("upsert").as("op"),
         col("text").as("text"), lit(1L).as("version"))
@@ -3161,14 +3138,7 @@ object Queries {
             .when(col("doc_id") % 7 === 0, array(up1, drift2))
             .otherwise(array(up1))).as("o"))
         .select("o.*").as[graft.streaming.StreamingOps.DocOp]
-      withStreamParts(spark) {
-        val q = ops.writeStream.foreachBatch(sink)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, ops, "stream_bm25_")(_.foreachBatch(sink))
       graft.streaming.StreamingOps
         .searchBm25Maintained(spark, idxDir, bm25Queries, 10)
         .orderBy("qid", "rank")
@@ -4539,20 +4509,14 @@ object Queries {
         graft.sources.WarcFormat.buildRecord(rtype, s"<urn:uuid:$id>",
           s"http://example.com/p/$id", "2024-01-01T00:00:00Z", "text/plain", pl)
       val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-      def runOnce(): Unit = withStreamParts(spark) {
-        val q = spark.readStream.format("warc").load(wdir)
+      def runOnce(): Unit = runToCompletion(spark, spark.readStream.format("warc").load(wdir)
           .filter(col("record_type") === "response")
           .select(regexp_extract(col("target_uri"), "p/([0-9]+)$", 1).cast("long").as("doc_id"),
-            col("content_length").as("n_bytes"), md5(col("payload")).as("payload_md5"))
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            rows.synchronized { rows ++= b.as[(Long, Long, String)].collect() }; ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("content_length").as("n_bytes"), md5(col("payload")).as("payload_md5")),
+          "warc_stream_", ckpt = Some(ckpt))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          rows.synchronized { rows ++= b.as[(Long, Long, String)].collect() }; ()
+        })
       java.nio.file.Files.write(java.nio.file.Paths.get(wdir, "wave0.warc"),
         docs.filter(_._1 % 2 == 0).flatMap { case (id, tx) => rec(id, "response", payload(tx)) })
       runOnce()
@@ -4585,20 +4549,12 @@ object Queries {
           s"http://example.com/p/$id", "2024-01-01T00:00:00Z", "text/plain",
           tx.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val sink = graft.streaming.StreamingOps.dedupExactSink(spark, idxDir)
-      def runOnce(): Unit = withStreamParts(spark) {
-        val q = spark.readStream.format("warc").load(wdir)
+      def runOnce(): Unit = runToCompletion(spark, spark.readStream.format("warc").load(wdir)
           .filter(col("record_type") === "conversion")
           .select(regexp_extract(col("target_uri"), "p/([0-9]+)$", 1).cast("long").as("doc_id"),
-            col("payload").cast("string").as("text"))
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            sink(b.toDF(), bid); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("payload").cast("string").as("text")),
+          "warc_sid_", ckpt = Some(ckpt))(
+        _.foreachBatch((b: DataFrame, bid: Long) => sink(b, bid)))
       java.nio.file.Files.write(java.nio.file.Paths.get(wdir, "wave0.warc"),
         docs.filter(_._1 < 15).flatMap { case (id, tx) => rec(id + 100000, tx) })
       runOnce()
@@ -4925,17 +4881,9 @@ object Queries {
     "stream_hnsw_maintenance" -> ((spark, dir) => {
       val ops = graft.streaming.StreamingOps.versionedOps(spark, mutationOps(spark, dir))
       val idxDir = java.nio.file.Files.createTempDirectory("stream_hm_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_hm_ckpt").toString
       val sink = graft.streaming.StreamingOps.hnswDeltaMaintenanceSink(
         spark, idxDir, 4, config = HnswConfig(ef = 100))
-      withStreamParts(spark) {
-        val q = ops.writeStream.foreachBatch(sink)
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, ops, "stream_hm_", "update")(_.foreachBatch(sink))
       graft.streaming.StreamingOps.compactHnswMaintained(spark, idxDir)
       val (data, queriesDf) = knnInputs(spark, dir, 5)
       val queries = queriesDf.collect()
@@ -4960,20 +4908,12 @@ object Queries {
         .sortBy(_._1)
       val centroids = Ivf.train(spark, data, c = 16, iterations = 1)
       val idxDir = java.nio.file.Files.createTempDirectory("stream_im_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_im_ckpt").toString
       val sink = graft.streaming.StreamingOps.ivfMaintenanceSink(spark, idxDir, centroids)
       // the raw sink (no versionedOps stage): the delta log is itself
       // versioned, so ivfMaintainedState's latest-wins view absorbs
       // within-stream reordering — the cross-batch version-store
       // composition is proven by the HNSW row and StreamingIndexSpec
-      withStreamParts(spark) {
-        val q = mutationOps(spark, dir).writeStream.foreachBatch(sink)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, mutationOps(spark, dir), "stream_im_")(_.foreachBatch(sink))
       val maintained = graft.streaming.StreamingOps
         .searchIvfMaintained(spark, idxDir, queries, k = 10, nprobe = 4)
       val surviving = data.filter(col("id") % 7 =!= 0)
@@ -5003,16 +4943,8 @@ object Queries {
         .sortBy(_._1)
       val centroids = Ivf.train(spark, data, c = 16, iterations = 1)
       val idxDir = java.nio.file.Files.createTempDirectory("stream_asof_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_asof_ckpt").toString
       val sink = graft.streaming.StreamingOps.ivfMaintenanceSink(spark, idxDir, centroids)
-      withStreamParts(spark) {
-        val q = mutationOps(spark, dir).writeStream.foreachBatch(sink)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, mutationOps(spark, dir), "stream_asof_")(_.foreachBatch(sink))
       val asOf = graft.streaming.StreamingOps
         .searchIvfMaintained(spark, idxDir, queries, k = 10, nprobe = 4, asOf = Some(1L))
       val batchFull = Ivf.search(spark, Ivf.assign(spark, data, centroids), centroids,
@@ -5069,9 +5001,7 @@ object Queries {
       // to run and re-baseline, not a converged quantizer
       val (r1, ran1) = so.retrainIfQuantDrifted(spark, idxDir, maxErrRatio = 2.0,
         iterations = 1, sampleFraction = 0.5)
-      val newCentroids = spark.read.parquet(s"$idxDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
+      val (_, newCentroids) = Ivf.loadQuantizer(spark, idxDir)
       val queries = shifted.filter(col("id") < 5)
         .as[(Long, Array[Float])].collect().sortBy(_._1)
       // the equality arms also run (and MATERIALIZE, via the persist +
@@ -5115,17 +5045,10 @@ object Queries {
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1)
       val idxDir = java.nio.file.Files.createTempDirectory("stream_hasof_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_hasof_ckpt").toString
       val sink = graft.streaming.StreamingOps.hnswDeltaMaintenanceSink(
         spark, idxDir, 4, config = HnswConfig(ef = 100))
-      withStreamParts(spark) {
-        val q = mutationOps(spark, dir).writeStream.foreachBatch(sink)
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, mutationOps(spark, dir), "stream_hasof_", "update")(
+        _.foreachBatch(sink))
       val asOf = graft.streaming.StreamingOps
         .searchHnswMaintained(spark, idxDir, queries, 10, asOf = Some(1L))
       val exactFull = Knn.bruteForce(data, queriesDf, 10, "euclidean")
@@ -5159,17 +5082,9 @@ object Queries {
       val cb = graft.knn.Pq.trainResidual(spark, assigned, centroids, m = 8, ksub = 16,
         iterations = 1, sampleCap = 2000, seeding = "first")
       val idxDir = java.nio.file.Files.createTempDirectory("stream_ipm_idx").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("stream_ipm_ckpt").toString
       val sink = graft.streaming.StreamingOps.ivfPqMaintenanceSink(spark, idxDir, centroids, cb,
         residual = true, storeVectors = true)
-      withStreamParts(spark) {
-        val q = mutationOps(spark, dir).writeStream.foreachBatch(sink)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      runToCompletion(spark, mutationOps(spark, dir), "stream_ipm_")(_.foreachBatch(sink))
       val maintained = graft.streaming.StreamingOps
         .searchIvfPqMaintained(spark, idxDir, queries, k = 10, nprobe = 4)
       val surviving = data.filter(col("id") % 7 =!= 0)

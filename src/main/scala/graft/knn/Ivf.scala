@@ -371,15 +371,15 @@ object Ivf {
   case class IvfMeta(metric: String, spill: Int, c: Int, dim: Int, rows: Long = -1L)
 
   /** Persist an IVF index: cell-partitioned assignment parquet (searches
-    * prune to probed cells via partition pruning) + centroid parquet + a
-    * self-describing meta sidecar ([[IvfMeta]]).
+    * prune to probed cells via partition pruning) + the quantizer sidecar
+    * ([[saveQuantizer]]).
     *
     * `metric` is REQUIRED (it cannot be derived from the data, and a
     * defaulted wrong value would make [[searchSaved]] rank probes with
     * the wrong metric — silently). The spill level IS derived from the
     * data (max assignment rows per id, one save-time job), so the sidecar
     * cannot record a wrong value either way. Legacy signature without a
-    * metric writes no sidecar ([[searchSaved]] then uses the documented
+    * metric writes no meta row ([[searchSaved]] then uses the documented
     * pre-meta defaults).
     */
   def save(
@@ -388,39 +388,53 @@ object Ivf {
       centroids: Array[Array[Float]],
       dir: String,
       metric: String): Unit = {
-    import spark.implicits._
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
     val st = assigned.groupBy("id").count().agg(max("count"), sum("count")).head()
-    val spill = st.getLong(0).toInt
-    val rows = st.getLong(1)
-    Seq((metric, spill, centroids.length, centroids.headOption.map(_.length).getOrElse(0), rows))
-      .toDF("metric", "spill", "c", "dim", "rows").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    saveQuantizer(spark, dir, centroids, Some(IvfMeta(metric, st.getLong(0).toInt,
+      centroids.length, centroids.headOption.map(_.length).getOrElse(0), st.getLong(1))))
   }
 
   /** Sidecar-less save (back-compat): persists assignment + centroids
     * only; loaders fall back to (euclidean, unspilled).
     */
   def save(spark: SparkSession, assigned: DataFrame, centroids: Array[Array[Float]], dir: String): Unit = {
-    import spark.implicits._
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
+    saveQuantizer(spark, dir, centroids, None)
+  }
+
+  /** The one writer of the quantizer sidecar shared by saved and
+    * maintained IVF directories: the `centroids` parquet (cell, centroid),
+    * then the [[IvfMeta]] row LAST — a reader that finds the meta row
+    * finds the centroids it describes. Maintained directories record
+    * `rows = -1` (their assignment lives in a delta log, not a counted
+    * save).
+    */
+  private[graft] def saveQuantizer(
+      spark: SparkSession,
+      dir: String,
+      centroids: Array[Array[Float]],
+      meta: Option[IvfMeta]): Unit = {
+    import spark.implicits._
     centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF("cell", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
+    meta.foreach { m =>
+      Seq((m.metric, m.spill, m.c, m.dim, m.rows))
+        .toDF("metric", "spill", "c", "dim", "rows").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/meta")
+    }
+  }
+
+  private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Float]] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/centroids")
+      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
+      .sortBy(_._1).map(_._2.toArray)
   }
 
   /** Load a persisted IVF index: (assigned, centroids). */
-  def load(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]]) = {
-    import spark.implicits._
-    val assigned = spark.read.parquet(s"$dir/assigned")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
-    (assigned, centroids)
-  }
+  def load(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]]) =
+    (spark.read.parquet(s"$dir/assigned"), loadCentroids(spark, dir))
 
   /** Meta sidecar of a saved index; None ONLY when the sidecar is absent
     * (pre-meta save). A present-but-unreadable sidecar (corruption, schema
@@ -440,20 +454,60 @@ object Ivf {
     }
   }
 
-  /** [[load]] + [[loadMeta]] with the documented pre-meta fallback and
-    * torn-save guards: sidecar centroid count must match what loaded, and
-    * the assignment row count must match what the save-time job wrote —
-    * a cell partition lost to a partial copy fails HERE instead of
-    * silently vanishing from every search (parquet globs don't miss
-    * missing directories). The count is footer-metadata-only (no row
-    * scan), one cheap job per load.
+  /** The one reader of the quantizer sidecar: the meta row and the
+    * centroids it describes, or None when the directory has no meta row.
+    * A centroid count that disagrees with the meta row is a torn write and
+    * is refused — serving it would rank probes over the wrong cells and
+    * return wrong neighbours with no error. `kind` names the directory in
+    * that message ("saved" or "maintained").
+    */
+  private[graft] def loadQuantizerIfAny(
+      spark: SparkSession,
+      dir: String,
+      kind: String = "maintained"): Option[(IvfMeta, Array[Array[Float]])] =
+    loadMeta(spark, dir).map { meta =>
+      val centroids = loadCentroids(spark, dir)
+      require(meta.c == centroids.length,
+        s"$kind index at $dir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
+      (meta, centroids)
+    }
+
+  /** [[loadQuantizerIfAny]] for a maintained directory, which always has
+    * a meta row.
+    */
+  private[graft] def loadQuantizer(spark: SparkSession, dir: String): (IvfMeta, Array[Array[Float]]) =
+    loadQuantizerIfAny(spark, dir).getOrElse(throw new IllegalStateException(
+      s"no meta sidecar under $dir — not a maintained IVF dir"))
+
+  /** Array queries must match the index dimension. */
+  private[graft] def requireQueryDim(queries: Array[(Long, Array[Float])], dim: Int): Unit =
+    queries.foreach { case (qid, qv) =>
+      require(qv.length == dim, s"query $qid dimension ${qv.length} != index dimension $dim")
+    }
+
+  /** (qid, qvec) with the dimension check run distributed via raise_error. */
+  private[graft] def checkQueryDim(queries: DataFrame, dim: Int): DataFrame =
+    queries.select(col("qid").cast("long"),
+      when(size(col("qvec")) === dim, col("qvec"))
+        .otherwise(raise_error(concat(
+          lit(s"query dimension != index dimension $dim, got "),
+          size(col("qvec")).cast("string"))))
+        .as("qvec"))
+
+  /** [[load]] + the quantizer sidecar with the documented pre-meta
+    * fallback and torn-save guards: sidecar centroid count must match what
+    * loaded ([[loadQuantizerIfAny]]), and the assignment row count must
+    * match what the save-time job wrote — a cell partition lost to a
+    * partial copy fails HERE instead of silently vanishing from every
+    * search (parquet globs don't miss missing directories). The count is
+    * footer-metadata-only (no row scan), one cheap job per load.
     */
   private[knn] def loadWithMeta(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]], IvfMeta) = {
-    val (assigned, centroids) = load(spark, dir)
-    val meta = loadMeta(spark, dir).getOrElse(IvfMeta("euclidean", 1, centroids.length,
-      centroids.headOption.map(_.length).getOrElse(0)))
-    require(meta.c == centroids.length,
-      s"saved index at $dir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
+    val assigned = spark.read.parquet(s"$dir/assigned")
+    val (meta, centroids) = loadQuantizerIfAny(spark, dir, "saved").getOrElse {
+      val cs = loadCentroids(spark, dir)
+      (IvfMeta("euclidean", 1, cs.length, cs.headOption.map(_.length).getOrElse(0)), cs)
+    }
     if (meta.rows >= 0) {
       val actual = assigned.count()
       require(actual == meta.rows,
@@ -476,10 +530,7 @@ object Ivf {
       k: Int,
       nprobe: Int): DataFrame = {
     val (assigned, centroids, meta) = loadWithMeta(spark, dir)
-    queries.foreach { case (qid, qv) =>
-      require(qv.length == meta.dim,
-        s"query $qid dimension ${qv.length} != index dimension ${meta.dim}")
-    }
+    requireQueryDim(queries, meta.dim)
     search(spark, assigned, centroids, queries, k, nprobe, meta.metric, dedup = meta.spill > 1)
   }
 
@@ -493,12 +544,7 @@ object Ivf {
       k: Int,
       nprobe: Int): DataFrame = {
     val (assigned, centroids, meta) = loadWithMeta(spark, dir)
-    val checked = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val checked = checkQueryDim(queries, meta.dim)
     searchDF(assigned, centroids, checked, k, nprobe, meta.metric, dedup = meta.spill > 1)
   }
 
@@ -524,10 +570,7 @@ object Ivf {
       nprobe: Int,
       predicate: Column): DataFrame = {
     val (assigned, centroids, meta) = loadWithMeta(spark, dir)
-    queries.foreach { case (qid, qv) =>
-      require(qv.length == meta.dim,
-        s"query $qid dimension ${qv.length} != index dimension ${meta.dim}")
-    }
+    requireQueryDim(queries, meta.dim)
     search(spark, assigned.filter(predicate), centroids, queries, k, nprobe,
       meta.metric, dedup = meta.spill > 1)
   }
@@ -545,12 +588,7 @@ object Ivf {
       nprobe: Int,
       predicate: Column): DataFrame = {
     val (assigned, centroids, meta) = loadWithMeta(spark, dir)
-    val checked = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val checked = checkQueryDim(queries, meta.dim)
     searchDF(assigned.filter(predicate), centroids, checked, k, nprobe,
       meta.metric, dedup = meta.spill > 1)
   }

@@ -496,9 +496,7 @@ object Pq {
     val cb = loadCodebooks(spark, dir)
     require(cb.m * cb.dsub == meta.dim,
       s"index at $dir is torn: codebooks cover ${cb.m * cb.dsub} dims, sidecar says ${meta.dim}")
-    queries.foreach { case (qid, qv) =>
-      require(qv.length == meta.dim, s"query $qid dimension ${qv.length} != index dimension ${meta.dim}")
-    }
+    Ivf.requireQueryDim(queries, meta.dim)
     // the sidecar knows whether the assignment was spilled — a spilled id
     // in several probed cells must not rank twice; the codebook table
     // knows whether codes are raw or residual and dispatches the scan
@@ -671,12 +669,7 @@ object Pq {
     val cb = loadCodebooks(spark, dir)
     require(cb.m * cb.dsub == meta.dim,
       s"index at $dir is torn: codebooks cover ${cb.m * cb.dsub} dims, sidecar says ${meta.dim}")
-    val checked = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val checked = Ivf.checkQueryDim(queries, meta.dim)
     searchIvfPqDF(assigned, centroids, cb, checked, k, nprobe, overscan,
       residual = savedResidual(spark, dir))
   }

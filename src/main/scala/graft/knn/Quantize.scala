@@ -274,12 +274,7 @@ object Quantize {
     val missing = Seq("codes", "q_scale", "q_offset").filterNot(assigned.columns.contains)
     require(missing.isEmpty,
       s"saved assignment at $dir lacks SQ8 columns ${missing.mkString(", ")} — save sq8(assign(...)) to use this path")
-    val checked = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val checked = Ivf.checkQueryDim(queries, meta.dim)
     searchIvfSq8DF(assigned, centroids, checked, k, nprobe, overscan)
   }
 

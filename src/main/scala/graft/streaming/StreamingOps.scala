@@ -857,10 +857,9 @@ object StreamingOps {
       centroids: Array[Array[Float]],
       metric: String,
       spill: Int): BatchLog = {
-    import spark.implicits._
     val dim = centroids.headOption.map(_.length).getOrElse(0)
     val log = ivfLog(spark, indexDir)
-    log.open(graft.knn.Ivf.loadMeta(spark, indexDir)) { existing =>
+    log.open(graft.knn.Ivf.loadQuantizerIfAny(spark, indexDir)) { case (existing, stored) =>
       require(existing.metric == metric && existing.spill == spill &&
         existing.c == centroids.length && existing.dim == dim,
         s"index at $indexDir is already maintained under (metric=${existing.metric}, " +
@@ -868,20 +867,12 @@ object StreamingOps {
           s"sink with (metric=$metric, spill=$spill, c=${centroids.length}, dim=$dim) would " +
           "rewrite the quantizer under delta rows assigned with the old one — delete the " +
           "directory (or retrain and compact explicitly) instead")
-      val stored = spark.read.parquet(s"$indexDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
-      require(stored.length == centroids.length &&
-        stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
+      require(stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
         s"index at $indexDir is already maintained with DIFFERENT centroid values — old " +
           "delta rows carry cell ids from the stored quantizer; refusing to overwrite it")
     } {
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/centroids")
-      Seq((metric, spill, centroids.length, dim))
-        .toDF("metric", "spill", "c", "dim").coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/meta")
+      graft.knn.Ivf.saveQuantizer(spark, indexDir, centroids,
+        Some(graft.knn.Ivf.IvfMeta(metric, spill, centroids.length, dim)))
     }
     log
   }
@@ -1078,27 +1069,48 @@ object StreamingOps {
     * default spill = 1 the view holds one row per live id and the pass is
     * fully narrow. Returns 0.0 for an empty view.
     */
-  def ivfMaintainedDrift(spark: SparkSession, indexDir: String): Double = {
-    val (drifted, _, n) = ivfMaintainedQuantStats(spark, indexDir, "drift-measured")
-    if (n == 0) 0.0 else drifted.toDouble / n
+  def ivfMaintainedDrift(spark: SparkSession, indexDir: String): Double =
+    ivfMaintainedQuantStats(spark, indexDir, "drift-measured").drift
+
+  /** What one pass over a maintained view measured against the quantizer
+    * it loaded (`meta`): ids whose nearest cell is not stored, summed
+    * nearest-centroid distance, live ids.
+    */
+  private case class QuantStats(meta: graft.knn.Ivf.IvfMeta, drifted: Long, sumDist: Double, n: Long) {
+    def drift: Double = if (n == 0) 0.0 else drifted.toDouble / n
+    def meanErr: Double = if (n == 0) 0.0 else sumDist / n
+  }
+
+  /** Nearest centroid of `v` as (cell, distance), ties → lowest cell: the
+    * kernel and tie-break [[graft.knn.Ivf.assign]] uses (the exact double
+    * kernel can flip near-boundary argmins relative to the SIMD kernel,
+    * giving the gauges a spurious nonzero floor).
+    */
+  private def nearestCentroid(m: Int, v: Array[Float], cs: Array[Array[Float]]): (Int, Double) = {
+    val kernel = graft.core.DistKernel.best
+    var best = 0
+    var bestDist = Double.MaxValue
+    var i = 0
+    while (i < cs.length) {
+      val d = m match {
+        case graft.core.Distances.Euclidean => kernel.euclidean(v, cs(i))
+        case graft.core.Distances.Manhattan => kernel.manhattan(v, cs(i))
+        case _ => kernel.cosine(v, cs(i))
+      }
+      if (d < bestDist) { bestDist = d; best = i }
+      i += 1
+    }
+    (best, bestDist)
   }
 
   /** One distributed pass over the maintained view: per live id the
-    * nearest centroid (same kernel and tie-break [[graft.knn.Ivf.assign]]
-    * uses — the exact double kernel can flip near-boundary argmins
-    * relative to the SIMD kernel, giving the metrics a spurious nonzero
-    * floor), aggregated to (ids whose nearest cell is not stored, summed
-    * nearest-centroid distance, live ids).
+    * nearest centroid ([[nearestCentroid]]), aggregated to [[QuantStats]].
     */
   private def ivfMaintainedQuantStats(
       spark: SparkSession, indexDir: String, what: String,
-      winnersOpt: Option[DataFrame] = None): (Long, Double, Long) = {
+      winnersOpt: Option[DataFrame] = None): QuantStats = {
     import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     requireFullPrecisionView(spark, indexDir, what)
     val m = graft.core.Distances.metricId(meta.metric)
     val bc = spark.sparkContext.broadcast(centroids)
@@ -1123,47 +1135,22 @@ object StreamingOps {
     val perId = if (meta.spill == 1) {
       typed.mapPartitions { rows =>
         val cs = bc.value
-        val kernel = graft.core.DistKernel.best
         rows.map { case (_, cell, v) =>
-          var best = 0
-          var bestDist = Double.MaxValue
-          var i = 0
-          while (i < cs.length) {
-            val d = m match {
-              case graft.core.Distances.Euclidean => kernel.euclidean(v, cs(i))
-              case graft.core.Distances.Manhattan => kernel.manhattan(v, cs(i))
-              case _ => kernel.cosine(v, cs(i))
-            }
-            if (d < bestDist) { bestDist = d; best = i }
-            i += 1
-          }
-          (if (cell == best) 0L else 1L, bestDist)
+          val (best, dist) = nearestCentroid(m, v, cs)
+          (if (cell == best) 0L else 1L, dist)
         }
       }
     } else typed
       .groupByKey(_._1)
       .mapGroups { (_, rows) =>
         val rs = rows.toArray // spill replicas: one row per stored cell
-        val cs = bc.value
-        val kernel = graft.core.DistKernel.best
-        var best = 0
-        var bestDist = Double.MaxValue
-        var i = 0
-        while (i < cs.length) {
-          val d = m match {
-            case graft.core.Distances.Euclidean => kernel.euclidean(rs.head._3, cs(i))
-            case graft.core.Distances.Manhattan => kernel.manhattan(rs.head._3, cs(i))
-            case _ => kernel.cosine(rs.head._3, cs(i))
-          }
-          if (d < bestDist) { bestDist = d; best = i }
-          i += 1
-        }
-        (if (rs.exists(_._2 == best)) 0L else 1L, bestDist)
+        val (best, dist) = nearestCentroid(m, rs.head._3, bc.value)
+        (if (rs.exists(_._2 == best)) 0L else 1L, dist)
       }
     val agg = perId.toDF("drifted", "dist").agg(
       coalesce(sum("drifted"), lit(0L)),
       coalesce(sum("dist"), lit(0.0)), count(lit(1))).head()
-    (agg.getLong(0), agg.getDouble(1), agg.getLong(2))
+    QuantStats(meta, agg.getLong(0), agg.getDouble(1), agg.getLong(2))
   }
 
   /** Mean nearest-centroid distance over the maintained view's live ids —
@@ -1176,10 +1163,8 @@ object StreamingOps {
     * ([[markIvfQuantReference]]) — [[retrainIfQuantDrifted]] is the
     * composed gate. 0.0 for an empty view.
     */
-  def ivfMaintainedQuantError(spark: SparkSession, indexDir: String): Double = {
-    val (_, sumDist, n) = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured")
-    if (n == 0) 0.0 else sumDist / n
-  }
+  def ivfMaintainedQuantError(spark: SparkSession, indexDir: String): Double =
+    ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured").meanErr
 
   /** Record the CURRENT mean quantization error as the reference a later
     * [[retrainIfQuantDrifted]] compares against — call once after the
@@ -1212,8 +1197,8 @@ object StreamingOps {
     * column) against `centroids` — the same kernel and value
     * [[ivfMaintainedQuantError]] measures from a maintained directory,
     * computed as one NARROW broadcast pass over an already-resolved view.
-    * The retrain paths use it to refresh quant_ref from the `liveOne`
-    * relation they are already holding persisted: one fewer full
+    * The retrain uses it to refresh quant_ref from the `liveOne`
+    * relation it is already holding persisted: one fewer full
     * delta-log read + latest-wins window + id-keyed shuffle per retrain,
     * which at corpus scale is a full extra pass over the index.
     */
@@ -1229,21 +1214,7 @@ object StreamingOps {
       .as[Array[Float]]
       .mapPartitions { it =>
         val cs = bc.value
-        val kernel = graft.core.DistKernel.best
-        it.map { v =>
-          var bestDist = Double.MaxValue
-          var i = 0
-          while (i < cs.length) {
-            val d = m match {
-              case graft.core.Distances.Euclidean => kernel.euclidean(v, cs(i))
-              case graft.core.Distances.Manhattan => kernel.manhattan(v, cs(i))
-              case _ => kernel.cosine(v, cs(i))
-            }
-            if (d < bestDist) bestDist = d
-            i += 1
-          }
-          bestDist
-        }
+        it.map(v => nearestCentroid(m, v, cs)._2)
       }
       .toDF("d").agg(coalesce(sum("d"), lit(0.0)), count(lit(1))).head()
     if (agg.getLong(1) == 0) 0.0 else agg.getDouble(0) / agg.getLong(1)
@@ -1289,23 +1260,15 @@ object StreamingOps {
     // fired gate
     val winners = latestDeltaRows(spark, indexDir).persist()
     try {
-      val (_, sumDist, n) = ivfMaintainedQuantStats(spark, indexDir,
-        "quant-error-measured", Some(winners))
-      val cur = if (n == 0) 0.0 else sumDist / n
+      val stats = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", Some(winners))
+      val cur = stats.meanErr
       val ratio = if (ref == 0.0) { if (cur == 0.0) 0.0 else Double.PositiveInfinity }
         else cur / ref
       if (ratio > maxErrRatio) {
-        if (loadIvfPqFlags(spark, indexDir).isDefined)
-          retrainIvfPqMaintainedImpl(spark, indexDir, c, iterations, seed, refitRotation,
-            sampleFraction, Some(winners))
-        else {
-          require(!refitRotation,
-            s"refitRotation: $indexDir is not PQ-maintained — no rotation sidecar to re-fit")
-          retrainIvfMaintainedImpl(spark, indexDir, c, iterations, seed, sampleFraction,
-            Some(winners))
-        }
-        // the retrain itself re-baselined quant_ref (the sidecar existed —
-        // we just loaded it — so the swap's carry-over re-marked it)
+        // the retrain re-baselines quant_ref (the sidecar existed — we
+        // just loaded it — so the rebuilt directory carries a new one)
+        retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation,
+          pq = None, knownMeta = Some(stats.meta), knownWinners = Some(winners))
         (ratio, true)
       } else (ratio, false)
     } finally winners.unpersist()
@@ -1313,25 +1276,13 @@ object StreamingOps {
 
   /** Close the drift loop [[ivfMaintainedDrift]] measures: re-train the
     * quantizer FROM the maintained view, re-assign every live vector to the
-    * new centroids distributedly, and atomically swap the index directory —
-    * the operator form of the "centroids no longer fit the mutated corpus"
-    * runbook (previously a manual pipeline the caller had to compose,
-    * including the tombstone subtleties compaction already solved).
-    * Mirrors the reference's split between online mutation routing and
-    * explicit re-partitioning (`/root/reference/storage/dataset.go:238-348`).
-    * Run while the maintenance stream is STOPPED (like
-    * [[compactIvfMaintained]]); restart the stream afterwards with the
-    * RETURNED centroids — the sidecar guard will refuse the old ones.
-    *
-    * The retrained index is built COMPLETE under `<indexDir>.retrain`
-    * (compacted delta + manifest, centroids, meta sidecar LAST as the
-    * completeness marker), then swapped in with one delete+rename of the
-    * top-level directory — never a window where new centroids sit over old
-    * cell assignments (the silent-recall hole the sidecar guard closes) or
-    * vice versa. A crash between delete and rename leaves no index
-    * directory: loads fail loudly, and re-running retrain resumes the
-    * finished swap. Tombstone winners carry over with their versions, so a
-    * stale post-retrain upsert still cannot resurrect a removed vector.
+    * new centroids distributedly, and atomically swap the index directory
+    * ([[retrain]] states the protocol) — the operator form of the
+    * "centroids no longer fit the mutated corpus" runbook. Run while the
+    * maintenance stream is STOPPED (like [[compactIvfMaintained]]); restart
+    * the stream afterwards with the RETURNED centroids — the sidecar guard
+    * will refuse the old ones. A PQ-maintained directory is refused: it
+    * retrains through [[retrainIvfPqMaintained]].
     *
     * `c` = 0 keeps the current centroid count. `sampleFraction < 1` runs
     * every training pass over [[graft.knn.Ivf.train]]'s deterministic
@@ -1345,105 +1296,189 @@ object StreamingOps {
       iterations: Int = 2,
       seed: Long = 42L,
       sampleFraction: Double = 1.0): Array[Array[Float]] =
-    retrainIvfMaintainedImpl(spark, indexDir, c, iterations, seed, sampleFraction, None)
+    retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation = false,
+      pq = Some(false))
 
-  /** [[retrainIvfMaintained]] with an optional pre-resolved (and
-    * caller-persisted) latest-wins view, so a gate that just measured
-    * drift does not pay a second delta-log scan (the caller owns the
-    * persist lifecycle).
+  /** The one retrain of a maintained IVF directory, raw or PQ — the
+    * directory decides: the PQ steps run only when it holds a
+    * `pq_maintained` sidecar. Mirrors the reference's split between online
+    * mutation routing and explicit re-partitioning (anndb
+    * `storage/dataset.go:238-348`).
+    *
+    * Complete-then-swap protocol:
+    *  1. Resume: when `indexDir` is gone but `<indexDir>.retrain` holds its
+    *     meta marker, an earlier retrain died between delete and rename —
+    *     finish the rename and return the swapped-in centroids. Otherwise
+    *     a leftover `<indexDir>.retrain` is a stale partial build: drop it.
+    *  1. Resolve the live view ONCE (one row per live id, persisted) and
+    *     refuse an empty one.
+    *  1. Train the centroids on it (PQ: after the codebook and rotation
+    *     steps below), assign every live vector, and keep each tombstone
+    *     winner with its version, so a stale post-retrain upsert still
+    *     cannot resurrect a removed vector.
+    *  1. Build the new index COMPLETE under `<indexDir>.retrain`: the
+    *     delta log as one whole batch ([[BatchLog.writeWhole]]), the PQ
+    *     sidecars, the re-baselined quant_ref (only when the index had
+    *     one — a quant-monitored index stays monitored), then
+    *     [[graft.knn.Ivf.saveQuantizer]]: centroids, meta row LAST as the
+    *     completeness marker.
+    *  1. Swap with one delete + rename of the top-level directory — never
+    *     a window where new centroids sit over old cell assignments (the
+    *     silent-recall hole the sidecar guard closes) or vice versa. A
+    *     crash between delete and rename leaves no index directory: loads
+    *     fail loudly, and the next retrain call resumes (step 1).
+    *
+    * PQ steps: a codes-only directory is refused (codes cannot re-derive
+    * vector geometry); with `refitRotation` the OPQ rotation is re-fit on
+    * the live view and composed onto the frozen one, and the codebooks are
+    * re-trained in the refit coordinates — otherwise codebooks and any
+    * rotation carry over; every live vector is re-encoded against the new
+    * centroids (residual codes depend on them).
+    *
+    * `pq` = Some(kind) is a public entry point that serves only that kind
+    * of directory; None lets the directory decide. A drift gate passes the
+    * quantizer meta it already loaded (`knownMeta`) and, when it holds one,
+    * its persisted latest-wins view (`knownWinners`; the caller owns that
+    * persist).
     */
-  private def retrainIvfMaintainedImpl(
+  private def retrain(
       spark: SparkSession,
       indexDir: String,
       c: Int,
       iterations: Int,
       seed: Long,
       sampleFraction: Double,
-      preResolved: Option[DataFrame]): Array[Array[Float]] = {
-    import spark.implicits._
+      refitRotation: Boolean,
+      pq: Option[Boolean],
+      knownMeta: Option[graft.knn.Ivf.IvfMeta] = None,
+      knownWinners: Option[DataFrame] = None): Array[Array[Float]] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val tmpDir = s"$indexDir.retrain"
 
-    // resume a swap that crashed between delete and rename: the tmp dir is
-    // only ever renamed after its meta marker (written last) landed
     if (!graft.io.HadoopIO.exists(indexDir, hconf)) {
       require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
         graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
         s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
           "IVF directory (or an unrecoverable state)")
       graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      return spark.read.parquet(s"$indexDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
+      return graft.knn.Ivf.loadQuantizer(spark, indexDir)._2
     }
-    graft.io.HadoopIO.delete(tmpDir, hconf) // stale tmp from an interrupted build
+    graft.io.HadoopIO.delete(tmpDir, hconf)
 
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    require(loadIvfPqFlags(spark, indexDir).isEmpty,
-      s"index at $indexDir is PQ-maintained — retrain it with retrainIvfPqMaintained (this " +
-        "path would silently drop the codes and PQ sidecars from the rebuilt directory)")
-    val winners = preResolved.getOrElse(latestDeltaRows(spark, indexDir).persist())
+    val meta = knownMeta.getOrElse(graft.knn.Ivf.loadQuantizer(spark, indexDir)._1)
+    val flags = loadIvfPqFlags(spark, indexDir)
+    flags match {
+      case None =>
+        if (pq.contains(true)) throw new IllegalStateException(
+          s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir")
+        require(!refitRotation,
+          s"refitRotation: $indexDir is not PQ-maintained — no rotation sidecar to re-fit")
+      case Some(f) =>
+        require(!pq.contains(false),
+          s"index at $indexDir is PQ-maintained — retrain it with retrainIvfPqMaintained (this " +
+            "path would silently drop the codes and PQ sidecars from the rebuilt directory)")
+        require(f.storeVectors,
+          s"index at $indexDir is maintained codes-only (storeVectors=false): PQ codes cannot " +
+            "re-derive vector geometry, so the quantizer cannot be re-trained from the maintained " +
+            "view — re-build from the source-of-truth corpus instead (this is the documented " +
+            "trade of the m-byte tier)")
+    }
+    val stored = flags.map(f => (f, graft.knn.Pq.loadCodebooks(spark, indexDir)))
+    val winners = knownWinners.getOrElse(latestDeltaRows(spark, indexDir).persist())
     // one row per live id (spill replicas share the vector and version)
     val liveOne = winners.filter(col("op") === "upsert").dropDuplicates("id")
       .select(col("id").cast("long"), col("vector").cast("array<float>"), col("version"))
       .persist()
+    var refitPersisted: Option[DataFrame] = None
     try {
       require(liveOne.limit(1).count() > 0,
         s"maintained view at $indexDir is empty — nothing to re-train the quantizer on")
-      val newC = if (c > 0) c else meta.c
-      val centroids = graft.knn.Ivf.train(spark, liveOne.select("id", "vector"), newC,
-        meta.metric, iterations, seed = seed, sampleFraction = sampleFraction)
 
+      // incremental OPQ (Ge et al. 2013 fit, composed): the stored vectors
+      // are in the FROZEN rotation's coordinates, so a fresh rotation
+      // fitted on the maintained view composes onto it (Opq.compose) —
+      // consumers still hold ONE opq_rot sidecar and the re-encode below
+      // runs in the refit coordinates, with codebooks RE-TRAINED there
+      // (a refit exists to re-balance the subspaces; carrying the stale
+      // codebooks would re-encode against geometry the fit just moved)
+      val refit = if (refitRotation) {
+        require(graft.knn.Opq.savedRotation(spark, indexDir),
+          s"refitRotation: no OPQ rotation sidecar under $indexDir — nothing to re-fit " +
+            "(train one with Opq.train and rebuild, or retrain without the flag)")
+        val frozen = graft.knn.Opq.loadModel(spark, indexDir)
+        val fresh = graft.knn.Opq.train(liveOne.select("id", "vector"), frozen.m)
+        val r = graft.knn.Opq.rotate(liveOne, fresh).persist()
+        refitPersisted = Some(r)
+        Some((r, graft.knn.Opq.compose(fresh, frozen)))
+      } else None
+      val live = refit.map(_._1).getOrElse(liveOne)
+      val pqUsed = stored.map { case (f, cb) => (f, if (refit.isEmpty) cb
+        else graft.knn.Pq.train(spark, live.select("id", "vector"), cb.m, cb.ksub,
+          iterations, seed = seed)) }
+
+      val newC = if (c > 0) c else meta.c
+      val centroids = graft.knn.Ivf.train(spark, live.select("id", "vector"), newC,
+        meta.metric, iterations, seed = seed, sampleFraction = sampleFraction)
       val assigned = graft.knn.Ivf
-        .assign(spark, liveOne.select("id", "vector"), centroids, meta.metric, meta.spill)
-        .join(liveOne.select(col("id"), col("version")), Seq("id"))
-        .select(col("id"), col("cell"), col("vector"), col("version"), lit("upsert").as("op"))
+        .assign(spark, live.select("id", "vector"), centroids, meta.metric, meta.spill)
+      val (rows, codes) = pqUsed match {
+        case Some((f, cb)) => (if (f.residual) graft.knn.Pq.encodeResidual(assigned, centroids, cb)
+          else graft.knn.Pq.encode(assigned, cb), Seq("pq_codes"))
+        case None => (assigned, Nil)
+      }
+      val upserts = rows.join(live.select(col("id"), col("version")), Seq("id"))
+        .select(Seq(col("id"), col("cell"), col("vector")) ++ codes.map(col) ++
+          Seq(col("version"), lit("upsert").as("op")): _*)
       val tombstones = winners.filter(col("op") === "remove")
-        .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
-          col("version"), col("op"))
+        .select(Seq(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector")) ++
+          codes.map(lit(null).cast("binary").as(_)) ++ Seq(col("version"), col("op")): _*)
       BatchLog.writeWhole(s"$tmpDir/delta", "retrained", hconf)(seg =>
-        assigned.unionByName(tombstones)
+        upserts.unionByName(tombstones)
           .repartition(col("cell")) // files ≈ cells, not tasks × cells
           .write.partitionBy("cell").parquet(seg))
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmpDir/centroids")
-      // meta last: its presence marks the tmp index complete
-      Seq((meta.metric, meta.spill, centroids.length, meta.dim))
-        .toDF("metric", "spill", "c", "dim").coalesce(1)
-        .write.parquet(s"$tmpDir/meta")
+      pqUsed.foreach { case (f, cb) =>
+        graft.knn.Pq.saveCodebooks(spark, cb, tmpDir, f.residual)
+        writeIvfPqFlags(spark, tmpDir, f)
+        // an OPQ-rotated index without refitRotation: the stored vectors
+        // (and the centroids just trained from them) are in ROTATED
+        // coordinates, so the frozen rotation rides along unchanged; with
+        // refitRotation the COMPOSED model (fresh ∘ frozen) is the new
+        // original-space contract
+        refit match {
+          case Some((_, composed)) => graft.knn.Opq.saveModel(spark, composed, tmpDir)
+          case None =>
+            if (graft.knn.Opq.savedRotation(spark, indexDir))
+              graft.knn.Opq.saveModel(spark, graft.knn.Opq.loadModel(spark, indexDir), tmpDir)
+        }
+      }
+      // re-baseline from the already-persisted live view (rotated when the
+      // rotation was refit — exactly what the rebuilt index stores), not a
+      // re-read of the log just written
+      if (graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
+          graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf))
+        writeQuantRef(spark, tmpDir,
+          meanQuantErrorOver(spark, live.select("id", "vector"), centroids, meta.metric))
+      graft.knn.Ivf.saveQuantizer(spark, tmpDir, centroids,
+        Some(meta.copy(c = centroids.length, rows = -1L)))
 
-      val hadQuantRef = graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
-        graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf)
-      // the swap drops the old quant_ref with the old directory; an index
-      // that was quant-monitored stays monitored — re-baseline on the
-      // rebuilt geometry (retrainIfQuantDrifted relies on this). Computed
-      // from the STILL-PERSISTED liveOne (same rows, same kernel as a
-      // post-swap ivfMaintainedQuantError) so the retrain does not re-read
-      // the log it just wrote.
-      val newRef = if (hadQuantRef)
-        Some(meanQuantErrorOver(spark, liveOne.select("id", "vector"),
-          centroids, meta.metric))
-      else None
       graft.io.HadoopIO.delete(indexDir, hconf)
       graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      newRef.foreach(writeQuantRef(spark, indexDir, _))
       centroids
     } finally {
+      refitPersisted.foreach(_.unpersist())
       liveOne.unpersist()
-      if (preResolved.isEmpty) winners.unpersist()
+      if (knownWinners.isEmpty) winners.unpersist()
     }
   }
 
   /** The closed drift loop in one call: measure [[ivfMaintainedDrift]]
     * and, when it exceeds `threshold`, re-train + atomically swap via
-    * [[retrainIvfMaintained]]. Returns (measured drift, whether a retrain
-    * ran) — the maintenance-job form, so the measure→decide→retrain
-    * pipeline (with its tombstone and crash-recovery subtleties) never
-    * has to be hand-composed. Run it after each compaction window; a
-    * restarted sink must then be constructed with the NEW centroids
-    * (the sidecar guard refuses the stale ones).
+    * [[retrain]] (raw or PQ, as the directory holds). Returns (measured
+    * drift, whether a retrain ran) — the maintenance-job form, so the
+    * measure→decide→retrain pipeline (with its tombstone and
+    * crash-recovery subtleties) never has to be hand-composed. Run it after
+    * each compaction window; a restarted sink must then be constructed
+    * with the NEW centroids (the sidecar guard refuses the stale ones).
     */
   def retrainIfDrifted(
       spark: SparkSession,
@@ -1455,20 +1490,12 @@ object StreamingOps {
       refitRotation: Boolean = false,
       sampleFraction: Double = 1.0): (Double, Boolean) = {
     require(threshold >= 0, s"threshold must be non-negative, got $threshold")
-    val drift = ivfMaintainedDrift(spark, indexDir)
-    if (drift > threshold) {
-      // a PQ-maintained dir retrains through the code-aware path (re-encode
-      // against the new geometry); drift itself already refused codes-only
-      if (loadIvfPqFlags(spark, indexDir).isDefined)
-        retrainIvfPqMaintained(spark, indexDir, c, iterations, seed, refitRotation,
-          sampleFraction)
-      else {
-        require(!refitRotation,
-          s"refitRotation: $indexDir is not PQ-maintained — no rotation sidecar to re-fit")
-        retrainIvfMaintained(spark, indexDir, c, iterations, seed, sampleFraction)
-      }
-      (drift, true)
-    } else (drift, false)
+    val stats = ivfMaintainedQuantStats(spark, indexDir, "drift-measured")
+    if (stats.drift > threshold) {
+      retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation,
+        pq = None, knownMeta = Some(stats.meta))
+      (stats.drift, true)
+    } else (stats.drift, false)
   }
 
   /** Search an [[ivfMaintenanceSink]] directory, self-configured from its
@@ -1487,18 +1514,8 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
-    require(centroids.length == meta.c,
-      s"maintained index at $indexDir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
-    queries.foreach { case (qid, qv) =>
-      require(qv.length == meta.dim,
-        s"query $qid dimension ${qv.length} != index dimension ${meta.dim}")
-    }
+    val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
+    graft.knn.Ivf.requireQueryDim(queries, meta.dim)
     requireFullPrecisionView(spark, indexDir, "searched at full precision")
     val view = asOf.map(ivfMaintainedStateAsOf(spark, indexDir, _))
       .getOrElse(ivfMaintainedState(spark, indexDir))
@@ -1531,20 +1548,8 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
-    require(centroids.length == meta.c,
-      s"maintained index at $indexDir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
-    val checked = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
+    val checked = graft.knn.Ivf.checkQueryDim(queries, meta.dim)
     val view = asOf.map(ivfMaintainedStateAsOf(spark, indexDir, _))
       .getOrElse(ivfMaintainedState(spark, indexDir))
     graft.knn.Ivf.searchDF(view, centroids,
@@ -1568,6 +1573,12 @@ object StreamingOps {
         .select("residual", "store_vectors").head()
       Some(IvfPqMaintainedFlags(r.getBoolean(0), r.getBoolean(1)))
     }
+
+  private def writeIvfPqFlags(spark: SparkSession, dir: String, flags: IvfPqMaintainedFlags): Unit = {
+    import spark.implicits._
+    Seq((flags.residual, flags.storeVectors)).toDF("residual", "store_vectors")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_maintained")
+  }
 
   /** [[ivfMaintenanceSink]] with PRODUCT-QUANTIZED delta rows: each
     * micro-batch's upserts are assigned to their cells against the FROZEN
@@ -1645,8 +1656,7 @@ object StreamingOps {
             "rows carry codes from the stored books; refusing to overwrite them")
       case None =>
         graft.knn.Pq.saveCodebooks(spark, cb, indexDir, residual)
-        Seq((residual, storeVectors)).toDF("residual", "store_vectors")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/pq_maintained")
+        writeIvfPqFlags(spark, indexDir, IvfPqMaintainedFlags(residual, storeVectors))
     }
 
     (batch: Dataset[VectorOp], batchId: Long) => {
@@ -1710,21 +1720,13 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       overscan: Int = 8): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir (use " +
           "searchIvfMaintained for a raw-vector maintained index)"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
     val cb = graft.knn.Pq.loadCodebooks(spark, indexDir)
-    queries.foreach { case (qid, qv) =>
-      require(qv.length == meta.dim,
-        s"query $qid dimension ${qv.length} != index dimension ${meta.dim}")
-    }
+    graft.knn.Ivf.requireQueryDim(queries, meta.dim)
     // an OPQ-maintained index stores rotated coordinates: rotate the
     // queries through the sidecar model (isometry — reported distances
     // stay original-space)
@@ -1758,23 +1760,13 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       overscan: Int = 8): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir (use " +
           "searchIvfMaintainedDF for a raw-vector maintained index)"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
     val cb = graft.knn.Pq.loadCodebooks(spark, indexDir)
-    val checked0 = queries.select(col("qid").cast("long"),
-      when(size(col("qvec")) === meta.dim, col("qvec"))
-        .otherwise(raise_error(concat(
-          lit(s"query dimension != index dimension ${meta.dim}, got "),
-          size(col("qvec")).cast("string"))))
-        .as("qvec"))
+    val checked0 = graft.knn.Ivf.checkQueryDim(queries, meta.dim)
     // OPQ-maintained: rotate the query column through the sidecar model
     // (the same codegen kernel the sink rotated the corpus with)
     val checked =
@@ -1786,18 +1778,17 @@ object StreamingOps {
       checked, k, nprobe, overscan, residual = flags.residual, rescore = flags.storeVectors)
   }
 
-  /** [[retrainIvfMaintained]] for a PQ-maintained directory: re-train the
-    * coarse quantizer from the maintained view, re-assign, and RE-ENCODE
-    * every live vector against the new geometry (residual codes quantize
-    * vector − centroid, so new centroids invalidate old codes — raw codes
-    * are centroid-independent but are re-derived anyway for one uniform
-    * path). Codebooks stay FROZEN by default: they are the contract the
-    * ADC scan and any downstream consumers share; re-learning them is
-    * building a new index, not maintaining this one. Requires
-    * `storeVectors = true` — codes alone cannot re-derive the geometry
-    * (fails loudly; this is the documented price of the m-byte tier).
-    * Same complete-then-swap protocol and tombstone preservation as
-    * [[retrainIvfMaintained]].
+  /** [[retrainIvfMaintained]] for a PQ-maintained directory ([[retrain]]
+    * states the protocol): re-train the coarse quantizer from the
+    * maintained view, re-assign, and RE-ENCODE every live vector against
+    * the new geometry (residual codes quantize vector − centroid, so new
+    * centroids invalidate old codes — raw codes are centroid-independent
+    * but are re-derived anyway for one uniform path). Codebooks stay
+    * FROZEN by default: they are the contract the ADC scan and any
+    * downstream consumers share; re-learning them is building a new index,
+    * not maintaining this one. Requires `storeVectors = true` — codes alone
+    * cannot re-derive the geometry (fails loudly; this is the documented
+    * price of the m-byte tier).
     *
     * `refitRotation = true` (incremental OPQ, requires an `opq_rot`
     * sidecar): additionally re-FIT the rotation on the maintained view —
@@ -1807,11 +1798,9 @@ object StreamingOps {
     * (what the stored vectors are in) and folded onto it via
     * [[graft.knn.Opq.compose]], so the swapped index still carries ONE
     * original-space model; centroids AND codebooks are then re-trained in
-    * the refit coordinates (a refit exists to re-balance subspaces —
-    * stale codebooks would encode against geometry the fit just moved).
-    * Consumers self-configure from the composed sidecar as before; a sink
-    * restart must pass the COMPOSED model (the guard refuses the stale
-    * one).
+    * the refit coordinates. Consumers self-configure from the composed
+    * sidecar as before; a sink restart must pass the COMPOSED model (the
+    * guard refuses the stale one).
     */
   def retrainIvfPqMaintained(
       spark: SparkSession,
@@ -1821,146 +1810,7 @@ object StreamingOps {
       seed: Long = 42L,
       refitRotation: Boolean = false,
       sampleFraction: Double = 1.0): Array[Array[Float]] =
-    retrainIvfPqMaintainedImpl(spark, indexDir, c, iterations, seed, refitRotation,
-      sampleFraction, None)
-
-  /** [[retrainIvfPqMaintained]] with an optional pre-resolved latest-wins
-    * view — same single-scan contract as [[retrainIvfMaintainedImpl]].
-    */
-  private def retrainIvfPqMaintainedImpl(
-      spark: SparkSession,
-      indexDir: String,
-      c: Int,
-      iterations: Int,
-      seed: Long,
-      refitRotation: Boolean,
-      sampleFraction: Double,
-      preResolved: Option[DataFrame]): Array[Array[Float]] = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmpDir = s"$indexDir.retrain"
-
-    if (!graft.io.HadoopIO.exists(indexDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
-        s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
-          "IVF directory (or an unrecoverable state)")
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      return spark.read.parquet(s"$indexDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf)
-
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir"))
-    require(flags.storeVectors,
-      s"index at $indexDir is maintained codes-only (storeVectors=false): PQ codes cannot " +
-        "re-derive vector geometry, so the quantizer cannot be re-trained from the maintained " +
-        "view — re-build from the source-of-truth corpus instead (this is the documented " +
-        "trade of the m-byte tier)")
-    val cb = graft.knn.Pq.loadCodebooks(spark, indexDir)
-    val winners = preResolved.getOrElse(latestDeltaRows(spark, indexDir).persist())
-    val liveOne = winners.filter(col("op") === "upsert").dropDuplicates("id")
-      .select(col("id").cast("long"), col("vector").cast("array<float>"), col("version"))
-      .persist()
-    var refitPersisted: Option[DataFrame] = None
-    try {
-      require(liveOne.limit(1).count() > 0,
-        s"maintained view at $indexDir is empty — nothing to re-train the quantizer on")
-
-      // incremental OPQ (Ge et al. 2013 fit, composed): the stored vectors
-      // are in the FROZEN rotation's coordinates, so a fresh rotation
-      // fitted on the maintained view composes onto it (Opq.compose) —
-      // consumers still hold ONE opq_rot sidecar and the re-encode below
-      // runs in the refit coordinates, with codebooks RE-TRAINED there
-      // (a refit exists to re-balance the subspaces; carrying the stale
-      // codebooks would re-encode against geometry the fit just moved)
-      val refit = if (refitRotation) {
-        require(graft.knn.Opq.savedRotation(spark, indexDir),
-          s"refitRotation: no OPQ rotation sidecar under $indexDir — nothing to re-fit " +
-            "(train one with Opq.train and rebuild, or retrain without the flag)")
-        val frozen = graft.knn.Opq.loadModel(spark, indexDir)
-        val fresh = graft.knn.Opq.train(liveOne.select("id", "vector"), frozen.m)
-        Some((fresh, graft.knn.Opq.compose(fresh, frozen)))
-      } else None
-      val live = refit match {
-        case Some((fresh, _)) =>
-          val r = graft.knn.Opq.rotate(liveOne, fresh).persist()
-          refitPersisted = Some(r)
-          r
-        case None => liveOne
-      }
-      val cbUsed = refit match {
-        case Some(_) =>
-          graft.knn.Pq.train(spark, live.select("id", "vector"), cb.m, cb.ksub,
-            iterations, seed = seed)
-        case None => cb
-      }
-
-      val newC = if (c > 0) c else meta.c
-      val centroids = graft.knn.Ivf.train(spark, live.select("id", "vector"), newC,
-        meta.metric, iterations, seed = seed, sampleFraction = sampleFraction)
-
-      val assigned = graft.knn.Ivf
-        .assign(spark, live.select("id", "vector"), centroids, meta.metric, meta.spill)
-      val encoded =
-        (if (flags.residual) graft.knn.Pq.encodeResidual(assigned, centroids, cbUsed)
-         else graft.knn.Pq.encode(assigned, cbUsed))
-          .join(live.select(col("id"), col("version")), Seq("id"))
-          .select(col("id"), col("cell"), col("vector"), col("pq_codes"),
-            col("version"), lit("upsert").as("op"))
-      val tombstones = winners.filter(col("op") === "remove")
-        .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
-          lit(null).cast("binary").as("pq_codes"), col("version"), col("op"))
-      BatchLog.writeWhole(s"$tmpDir/delta", "retrained", hconf)(seg =>
-        encoded.unionByName(tombstones)
-          .repartition(col("cell")) // files ≈ cells, not tasks × cells
-          .write.partitionBy("cell").parquet(seg))
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmpDir/centroids")
-      graft.knn.Pq.saveCodebooks(spark, cbUsed, tmpDir, flags.residual)
-      Seq((flags.residual, flags.storeVectors)).toDF("residual", "store_vectors")
-        .coalesce(1).write.parquet(s"$tmpDir/pq_maintained")
-      // an OPQ-rotated index without refitRotation: the stored vectors
-      // (and the centroids just trained from them) are in ROTATED
-      // coordinates, so the frozen rotation rides along unchanged; with
-      // refitRotation the COMPOSED model (fresh ∘ frozen) is the new
-      // original-space contract
-      refit match {
-        case Some((_, composed)) =>
-          graft.knn.Opq.saveModel(spark, composed, tmpDir)
-        case None =>
-          if (graft.knn.Opq.savedRotation(spark, indexDir))
-            graft.knn.Opq.saveModel(spark, graft.knn.Opq.loadModel(spark, indexDir), tmpDir)
-      }
-      // meta last: its presence marks the tmp index complete
-      Seq((meta.metric, meta.spill, centroids.length, meta.dim))
-        .toDF("metric", "spill", "c", "dim").coalesce(1)
-        .write.parquet(s"$tmpDir/meta")
-
-      val hadQuantRef = graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
-        graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf)
-      // re-baseline from the already-persisted live view (rotated when the
-      // rotation was refit — exactly what the swapped index stores), not a
-      // re-read of the log the retrain just wrote
-      val newRef = if (hadQuantRef)
-        Some(meanQuantErrorOver(spark, live.select("id", "vector"),
-          centroids, meta.metric))
-      else None
-      graft.io.HadoopIO.delete(indexDir, hconf)
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      newRef.foreach(writeQuantRef(spark, indexDir, _))
-      centroids
-    } finally {
-      refitPersisted.foreach(_.unpersist())
-      liveOne.unpersist()
-      if (preResolved.isEmpty) winners.unpersist()
-    }
-  }
+    retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation, pq = Some(true))
 
   // ------------------------------------------------- HNSW delta maintenance
 

@@ -69,4 +69,110 @@ class SinkRegressionSpec extends SparkTestBase {
     StreamingOps.compactBm25Maintained(spark, dir)
     assert(hits() === Seq(500L), "compaction swapped a stale tmp over the live log")
   }
+
+  /** 60 deterministic 8-d vectors in three well-separated groups. */
+  private val vecs8 = (0L until 60L).map { i =>
+    val base = (i % 3).toFloat * 10f
+    (i, Array.tabulate(8)(d => base + ((i * 7 + d * 3) % 5) * 0.1f))
+  }
+
+  private def load(sink: (org.apache.spark.sql.Dataset[VectorOp], Long) => Unit): Unit =
+    sink(vecs8.map { case (i, v) => VectorOp(i, "upsert", v, 1) }.toDS(), 0L)
+
+  /** A PQ sink over `vecs8` (3 cells, m = 4), optionally OPQ-rotated;
+    * vectors are stored so drift, quant error and retrain all apply.
+    */
+  private def pqSink(dir: String, rotate: Boolean) = {
+    val raw = vecs8.toDF("id", "vector")
+    val model = if (rotate) Some(graft.knn.Opq.train(raw, m = 4)) else None
+    val df = model.fold(raw)(graft.knn.Opq.rotate(raw, _))
+    val cs = graft.knn.Ivf.train(spark, df, c = 3, iterations = 2)
+    val cb = graft.knn.Pq.trainResidual(spark, graft.knn.Ivf.assign(spark, df, cs), cs,
+      m = 4, ksub = 8, iterations = 1, sampleCap = 1000, seeding = "first")
+    StreamingOps.ivfPqMaintenanceSink(spark, dir, cs, cb, storeVectors = true, opq = model)
+  }
+
+  /** Rewrite the `centroids` parquet with its first 2 of 3 rows. */
+  private def tearCentroids(dir: String): Unit = {
+    val kept = spark.read.parquet(s"$dir/centroids").orderBy("cell").limit(2).collect()
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*),
+        spark.read.parquet(s"$dir/centroids").schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+  }
+
+  private def assertTorn(what: String)(call: => Any): Unit = withClue(s"$what: ") {
+    val e = intercept[Exception](call)
+    assert(e.getMessage.contains("is torn"), e.getMessage)
+  }
+
+  private val query = Array((0L, vecs8(2)._2))
+
+  test("a torn centroids sidecar is refused on every raw maintained-IVF path") {
+    val dir = Files.createTempDirectory("ivf_torn_sidecar").toString
+    val cs = graft.knn.Ivf.train(spark, vecs8.toDF("id", "vector"), c = 3, iterations = 2)
+    load(StreamingOps.ivfMaintenanceSink(spark, dir, cs))
+    tearCentroids(dir)
+    assertTorn("searchIvfMaintained")(
+      StreamingOps.searchIvfMaintained(spark, dir, query, k = 3, nprobe = 3).collect())
+    assertTorn("searchIvfMaintainedDF")(StreamingOps.searchIvfMaintainedDF(spark, dir,
+      query.toSeq.toDF("qid", "qvec"), k = 3, nprobe = 3).collect())
+    assertTorn("markIvfQuantReference")(StreamingOps.markIvfQuantReference(spark, dir))
+    assertTorn("ivfMaintainedDrift")(StreamingOps.ivfMaintainedDrift(spark, dir))
+    assertTorn("retrainIvfMaintained")(StreamingOps.retrainIvfMaintained(spark, dir))
+    assertTorn("sink restart")(StreamingOps.ivfMaintenanceSink(spark, dir, cs))
+  }
+
+  test("a torn centroids sidecar is refused on every PQ maintained-IVF path") {
+    val dir = Files.createTempDirectory("ivfpq_torn_sidecar").toString
+    load(pqSink(dir, rotate = false))
+    tearCentroids(dir)
+    assertTorn("searchIvfPqMaintained")(
+      StreamingOps.searchIvfPqMaintained(spark, dir, query, k = 3, nprobe = 3).collect())
+    assertTorn("searchIvfPqMaintainedDF")(StreamingOps.searchIvfPqMaintainedDF(spark, dir,
+      query.toSeq.toDF("qid", "qvec"), k = 3, nprobe = 3).collect())
+    assertTorn("markIvfQuantReference")(StreamingOps.markIvfQuantReference(spark, dir))
+    assertTorn("ivfMaintainedDrift")(StreamingOps.ivfMaintainedDrift(spark, dir))
+    assertTorn("retrainIvfPqMaintained")(StreamingOps.retrainIvfPqMaintained(spark, dir))
+  }
+
+  /** Retrain a quant-monitored directory, then fake a crash between the
+    * swap's delete and rename (`<dir>` → `<dir>.retrain`). The next
+    * retrain call must resume: same centroids and search answers, the
+    * listed sidecars present, and the drift gate still has its reference.
+    */
+  private def retrainResume(dir: String, sidecars: Seq[String])(
+      retrain: () => Array[Array[Float]])(
+      search: () => Seq[(Long, Long, Int)]): Unit = {
+    StreamingOps.markIvfQuantReference(spark, dir)
+    val cs = retrain()
+    val before = search()
+    assert(before.nonEmpty)
+    Files.move(Paths.get(dir), Paths.get(s"$dir.retrain"))
+    val resumed = retrain()
+    assert(resumed.map(_.toSeq).toSeq === cs.map(_.toSeq).toSeq)
+    assert(!Files.exists(Paths.get(s"$dir.retrain")))
+    assert(search() === before)
+    for (s <- "quant_ref" +: sidecars) assert(Files.exists(Paths.get(s"$dir/$s")), s)
+    StreamingOps.retrainIfQuantDrifted(spark, dir)
+  }
+
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int)] =
+    df.select("qid", "id", "rank").as[(Long, Long, Int)].collect().toSeq.sortBy(r => (r._1, r._3))
+
+  test("a raw retrain interrupted between delete and rename resumes with its quant reference") {
+    val dir = Files.createTempDirectory("ivf_retrain_resume").toString + "/idx"
+    val cs = graft.knn.Ivf.train(spark, vecs8.toDF("id", "vector"), c = 3, iterations = 2)
+    load(StreamingOps.ivfMaintenanceSink(spark, dir, cs))
+    retrainResume(dir, Seq("centroids", "meta"))(
+      () => StreamingOps.retrainIvfMaintained(spark, dir, iterations = 1))(
+      () => ranked(StreamingOps.searchIvfMaintained(spark, dir, query, k = 5, nprobe = 2)))
+  }
+
+  test("a PQ+OPQ retrain interrupted between delete and rename resumes with every sidecar") {
+    val dir = Files.createTempDirectory("ivfpq_retrain_resume").toString + "/idx"
+    load(pqSink(dir, rotate = true))
+    retrainResume(dir, Seq("centroids", "meta", "pq_books", "pq_maintained", "opq_rot"))(
+      () => StreamingOps.retrainIvfPqMaintained(spark, dir, iterations = 1))(
+      () => ranked(StreamingOps.searchIvfPqMaintained(spark, dir, query, k = 5, nprobe = 2)))
+  }
 }
