@@ -8,10 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression;
  * Minimal bridge to Spark's Scala-package-private helpers.
  *
  * <p>Scala's {@code private[sql]} is erased at the bytecode level, so javac can
- * link against these members directly. We use only two: wrapping a Catalyst
- * {@link Expression} into a public {@link Column} (and back), and reaching the
- * session's {@code FunctionRegistry} so graft's native expressions are callable
- * from SQL text on any session (including sessions the driver builds without
+ * link against these members directly: wrapping a Catalyst {@link Expression}
+ * into a public {@link Column} (and back), plan/Dataset conversion, the
+ * session's SQL configuration and the nullable form of a schema (what a
+ * job-free parquet read needs to match a file-source scan), and the
+ * session's {@code FunctionRegistry} so graft's native expressions are
+ * callable from SQL text on any session (including sessions built without
  * our {@code SparkSessionExtensions}).
  */
 public final class SqlBridge {
@@ -39,6 +41,17 @@ public final class SqlBridge {
     public static org.apache.spark.sql.catalyst.plans.logical.LogicalPlan logicalPlan(
             org.apache.spark.sql.Dataset<org.apache.spark.sql.Row> df) {
         return ((org.apache.spark.sql.classic.Dataset<org.apache.spark.sql.Row>) df).logicalPlan();
+    }
+
+    /** The schema with every field nullable, as file-source reads report it. */
+    public static org.apache.spark.sql.types.StructType asNullable(
+            org.apache.spark.sql.types.StructType schema) {
+        return schema.asNullable();
+    }
+
+    /** The session's SQL configuration. */
+    public static org.apache.spark.sql.internal.SQLConf sqlConf(SparkSession session) {
+        return ((org.apache.spark.sql.classic.SparkSession) session).sessionState().conf();
     }
 
     /** Register a temp function builder on the session's FunctionRegistry. */

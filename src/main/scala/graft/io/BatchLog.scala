@@ -40,7 +40,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    wrong length fails loudly — a silently dropped mutation is never
   *    served), then read only the listed batch directories; a log before
   *    the marker only those the marker commits (or its compacted
-  *    segment).
+  *    segment). The schema comes from the footer of the path-first listed
+  *    file read, the file Spark's own inference would pick, so the read
+  *    starts no schema-inference job.
   *  - **gauges** (batch count, fresh vs compacted bytes) come from the
   *    manifest alone: no data scan, no Spark job.
   *  - **compact**: one swap. The caller's writer runs while the live log
@@ -172,7 +174,8 @@ final class BatchLog(
     * column discovery identical to a whole-directory read.
     */
   def read(log: String): Option[DataFrame] = {
-    val listed = segments(validated(log))
+    val es = validated(log)
+    val listed = segments(es)
     val segs =
       if (log == marker) listed
       else {
@@ -182,7 +185,12 @@ final class BatchLog(
         listed.filter(s => s == "batch=compacted" || inMarker(s) || foldedSegs(s))
       }
     if (segs.isEmpty) None
-    else Some(spark.read.option("basePath", dir(log)).parquet(segs.map(s => s"${dir(log)}/$s"): _*))
+    else {
+      // the schema Spark's inference would take from the path-first file
+      val first = es.map(_.name).filter(n => segs.contains(n.takeWhile(_ != '/'))).min
+      Some(spark.read.schema(LocalParquet.schema(spark, s"${dir(log)}/$first"))
+        .option("basePath", dir(log)).parquet(segs.map(s => s"${dir(log)}/$s"): _*))
+    }
   }
 
   /** Finish an interrupted compaction swap: true when the live log was

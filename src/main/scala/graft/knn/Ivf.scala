@@ -308,57 +308,96 @@ object Ivf {
       metric: String = "euclidean",
       spill: Int = 1): DataFrame = {
     import spark.implicits._
+    val cells = cellsOf(spark, centroids, metric, spill)
+    data.select(col("id").cast("long"), col("vector").cast("array<float>"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (id, v) => cells(v).iterator.map(ci => (id, ci, v)) }
+      .toDF("id", "cell", "vector")
+  }
+
+  /** [[assign]] of (id, vector, version) rows, carrying each row's
+    * `version` onto its cell rows: (id, cell, vector, version). The
+    * maintained-index writers assign every op as it arrived — distinct
+    * versions of one id, NaN components and `-0.0` keep their own rows,
+    * with no join back on (id, vector) or id.
+    */
+  private[graft] def assignVersioned(
+      spark: SparkSession,
+      data: DataFrame,
+      centroids: Array[Array[Float]],
+      metric: String,
+      spill: Int): DataFrame = {
+    import spark.implicits._
+    val cells = cellsOf(spark, centroids, metric, spill)
+    data.select(col("id").cast("long"), col("vector").cast("array<float>"), col("version").cast("long"))
+      .as[(Long, Array[Float], Long)]
+      .flatMap { case (id, v, ver) => cells(v).iterator.map(ci => (id, ci, v, ver)) }
+      .toDF("id", "cell", "vector", "version")
+  }
+
+  /** The cell selection of [[assign]] as a task-side function, centroids
+    * broadcast once.
+    */
+  private def cellsOf(
+      spark: SparkSession,
+      centroids: Array[Array[Float]],
+      metric: String,
+      spill: Int): Array[Float] => Array[Int] = {
     val m = Distances.metricId(metric)
     val bc = spark.sparkContext.broadcast(centroids)
     val s = math.max(1, spill)
-    data.select(col("id").cast("long"), col("vector").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { iter =>
-        val cs = bc.value
-        val nSpill = math.min(s, cs.length)
-        // cell assignment only picks argmins — SIMD kernel is safe here
-        // (nprobe=C exactness is unaffected by which cell a vector lands in)
-        val kernel = graft.core.DistKernel.best
-        iter.flatMap { case (id, v) =>
-          val dists = new Array[Double](cs.length)
-          var i = 0
-          while (i < cs.length) {
-            dists(i) = m match {
-              case Distances.Euclidean => kernel.euclidean(v, cs(i))
-              case Distances.Manhattan => kernel.manhattan(v, cs(i))
-              case _ => kernel.cosine(v, cs(i))
-            }
-            i += 1
-          }
-          // nSpill smallest by (dist, cell id) — selection over the small
-          // centroid array, no sort of anything data-sized. A row whose
-          // distances are all NaN/Infinity (NaN component, zero vector
-          // under cosine, float overflow) still lands in the first untaken
-          // cell rather than crashing the job — matching the old argmin's
-          // cell-0 fallback.
-          val chosen = new Array[Int](nSpill)
-          val taken = new Array[Boolean](cs.length)
-          var r = 0
-          while (r < nSpill) {
-            var best = -1
-            var bestDist = Double.MaxValue
-            i = 0
-            while (i < cs.length) {
-              if (!taken(i) && dists(i) < bestDist) { bestDist = dists(i); best = i }
-              i += 1
-            }
-            if (best == -1) {
-              i = 0
-              while (best == -1 && i < cs.length) { if (!taken(i)) best = i; i += 1 }
-            }
-            taken(best) = true
-            chosen(r) = best
-            r += 1
-          }
-          chosen.iterator.map(ci => (id, ci, v))
-        }
+    v => {
+      val cs = bc.value
+      nearestCells(centroidDistances(m, v, cs), math.min(s, cs.length))
+    }
+  }
+
+  /** Distance from `v` to every centroid under metric id `m`. Cell
+    * assignment only picks argmins, so the SIMD kernel is safe here
+    * (nprobe = C exactness is unaffected by which cell a vector lands in).
+    */
+  private[graft] def centroidDistances(m: Int, v: Array[Float], cs: Array[Array[Float]]): Array[Double] = {
+    val kernel = graft.core.DistKernel.best
+    val dists = new Array[Double](cs.length)
+    var i = 0
+    while (i < cs.length) {
+      dists(i) = m match {
+        case Distances.Euclidean => kernel.euclidean(v, cs(i))
+        case Distances.Manhattan => kernel.manhattan(v, cs(i))
+        case _ => kernel.cosine(v, cs(i))
       }
-      .toDF("id", "cell", "vector")
+      i += 1
+    }
+    dists
+  }
+
+  /** The `n` smallest of `dists` by (distance, cell id) — selection over
+    * the small centroid array, no sort of anything data-sized. A row whose
+    * distances are all NaN/Infinity (NaN component, zero vector under
+    * cosine, float overflow) still lands in the first untaken cell rather
+    * than crashing the job — matching the old argmin's cell-0 fallback.
+    */
+  private[graft] def nearestCells(dists: Array[Double], n: Int): Array[Int] = {
+    val chosen = new Array[Int](n)
+    val taken = new Array[Boolean](dists.length)
+    var r = 0
+    while (r < n) {
+      var best = -1
+      var bestDist = Double.MaxValue
+      var i = 0
+      while (i < dists.length) {
+        if (!taken(i) && dists(i) < bestDist) { bestDist = dists(i); best = i }
+        i += 1
+      }
+      if (best == -1) {
+        i = 0
+        while (best == -1 && i < dists.length) { if (!taken(i)) best = i; i += 1 }
+      }
+      taken(best) = true
+      chosen(r) = best
+      r += 1
+    }
+    chosen
   }
 
   /** Search-relevant facts a saved index carries about itself: a loader
@@ -425,12 +464,10 @@ object Ivf {
     }
   }
 
-  private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Float]] = {
-    import spark.implicits._
-    spark.read.parquet(s"$dir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
-  }
+  private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
+    graft.io.LocalParquet.read(spark, s"$dir/centroids")
+      .map(r => (r.getInt(r.fieldIndex("cell")), r.getSeq[Float](r.fieldIndex("centroid")).toArray))
+      .sortBy(_._1).map(_._2)
 
   /** Load a persisted IVF index: (assigned, centroids). */
   def load(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]]) =
@@ -441,18 +478,14 @@ object Ivf {
     * drift) PROPAGATES — falling back to defaults there would silently
     * search a cosine/spilled index as euclidean/unspilled.
     */
-  def loadMeta(spark: SparkSession, dir: String): Option[IvfMeta] = {
-    import spark.implicits._
+  def loadMeta(spark: SparkSession, dir: String): Option[IvfMeta] =
     if (!graft.io.HadoopIO.exists(s"$dir/meta", spark.sparkContext.hadoopConfiguration)) None
-    else {
-      val raw = spark.read.parquet(s"$dir/meta")
-      val withRows = // pre-rows sidecars lack the column: count unknown
-        if (raw.columns.contains("rows")) raw else raw.withColumn("rows", lit(-1L))
-      withRows.select("metric", "spill", "c", "dim", "rows")
-        .as[(String, Int, Int, Int, Long)].collect().headOption
-        .map { case (m, s, c, d, r) => IvfMeta(m, s, c, d, r) }
+    else graft.io.LocalParquet.read(spark, s"$dir/meta").headOption.map { r =>
+      def int(c: String) = r.getInt(r.fieldIndex(c))
+      IvfMeta(r.getString(r.fieldIndex("metric")), int("spill"), int("c"), int("dim"),
+        // pre-rows sidecars lack the column: count unknown
+        if (r.schema.fieldNames.contains("rows")) r.getLong(r.fieldIndex("rows")) else -1L)
     }
-  }
 
   /** The one reader of the quantizer sidecar: the meta row and the
     * centroids it describes, or None when the directory has no meta row.

@@ -813,35 +813,6 @@ object StreamingOps {
     } finally ops.unpersist()
   }
 
-  /** `foreachBatch` sink that maintains a persisted IVF index from a
-    * stream of [[VectorOp]] mutations against FIXED centroids (the trained
-    * quantizer): upserts are assigned to their nearest cell(s)
-    * ([[graft.knn.Ivf.assign]], centroids broadcast) and APPENDED as
-    * versioned delta rows partitioned by cell; removes append cell-less
-    * tombstone rows. Nothing data-sized is rewritten per micro-batch and
-    * nothing lands on the driver — the write cost of a batch is the batch,
-    * which is what keeps this alive at 100 TB index size (the HNSW sink
-    * rewrites touched graph artifacts; parquet cells would mean rewriting
-    * whole cell partitions per batch). The current assignment is
-    * reconstructed latest-version-wins by [[ivfMaintainedState]];
-    * re-training (centroid drift) and delta compaction are the caller's
-    * trigger, mirroring the reference's explicit partition lifecycle
-    * (`storage/dataset.go:238-348`: online mutations route to fixed
-    * partitions; re-partitioning is a separate operation).
-    *
-    * Writes the centroids + meta sidecar once at sink CONSTRUCTION (same
-    * layout as [[graft.knn.Ivf.save]] minus the batch assignment), so the
-    * index directory is self-describing from the first micro-batch. A
-    * RESTART against an existing maintained directory must pass the SAME
-    * quantizer: the sidecars are the contract old delta rows were assigned
-    * under, so an existing sidecar is verified against the passed
-    * (centroids, metric, spill, dim) and a mismatch throws — silently
-    * overwriting it would leave old delta rows carrying cell ids from the
-    * old quantizer while searches probe with the new one (a silent recall
-    * hole). Pair with [[versionedOps]] upstream for cross-batch
-    * stale-version safety; within a batch, [[ivfMaintainedState]]'s
-    * version order decides.
-    */
   /** Open the delta log of [[ivfMaintenanceSink]] and
     * [[ivfPqMaintenanceSink]] with its quantizer sidecars (centroids +
     * meta) as the fingerprint: write them if the directory is fresh,
@@ -881,6 +852,40 @@ object StreamingOps {
     new BatchLog(spark, indexDir, Seq("delta"), "maintained IVF", Some("compactIvfMaintained"),
       exactlyOnce = false)
 
+  /** `foreachBatch` sink that maintains a persisted IVF index from a
+    * stream of [[VectorOp]] mutations against FIXED centroids (the trained
+    * quantizer). Each batch keeps one op per (id, version) — an
+    * at-least-once redelivery collapses, while distinct versions of an id
+    * all persist, so the delta log stays a full version history (the
+    * [[ivfMaintainedStateAsOf]] contract). Every upsert is assigned to its
+    * nearest cell(s) with its version carried through the same pass
+    * ([[graft.knn.Ivf.assign]]'s cell selection, centroids broadcast) and
+    * APPENDED as versioned delta rows partitioned by cell; removes append
+    * cell-less tombstone rows. Nothing data-sized is rewritten per
+    * micro-batch and nothing lands on the driver — the write cost of a
+    * batch is the batch, which is what keeps this alive at 100 TB index
+    * size (the HNSW sink rewrites touched graph artifacts; parquet cells
+    * would mean rewriting whole cell partitions per batch). The current
+    * assignment is reconstructed latest-version-wins by
+    * [[ivfMaintainedState]]; re-training (centroid drift) and delta
+    * compaction are the caller's trigger, mirroring the reference's
+    * explicit partition lifecycle (`storage/dataset.go:238-348`: online
+    * mutations route to fixed partitions; re-partitioning is a separate
+    * operation).
+    *
+    * Writes the centroids + meta sidecar once at sink CONSTRUCTION (same
+    * layout as [[graft.knn.Ivf.save]] minus the batch assignment), so the
+    * index directory is self-describing from the first micro-batch. A
+    * RESTART against an existing maintained directory must pass the SAME
+    * quantizer: the sidecars are the contract old delta rows were assigned
+    * under, so an existing sidecar is verified against the passed
+    * (centroids, metric, spill, dim) and a mismatch throws — silently
+    * overwriting it would leave old delta rows carrying cell ids from the
+    * old quantizer while searches probe with the new one (a silent recall
+    * hole). Pair with [[versionedOps]] upstream for cross-batch
+    * stale-version safety; within a batch, [[ivfMaintainedState]]'s
+    * version order decides.
+    */
   def ivfMaintenanceSink(
       spark: SparkSession,
       indexDir: String,
@@ -891,15 +896,8 @@ object StreamingOps {
 
     (batch: Dataset[VectorOp], batchId: Long) => {
       val sess = batch.sparkSession
-      // exact-replay dedupe only: one row per (id, version) — an
-      // at-least-once redelivery collapses, while DISTINCT versions of an
-      // id all persist, keeping the delta log a FULL version history (the
-      // [[ivfMaintainedStateAsOf]] time-travel contract; collapsing to the
-      // batch winner would silently erase any state both written and
-      // overwritten inside one micro-batch). Serving is unchanged: the
-      // view's rank window resolves winners across however many versions a
-      // batch wrote. On an exact (id, version) tie the remove sorts first
-      // — the same conservative read the view applies.
+      // one row per (id, version): on an exact (id, version) tie the
+      // remove sorts first — the same conservative read the view applies
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id", "version")
         .orderBy(col("op"), xxhash64(col("vector")))
@@ -907,20 +905,9 @@ object StreamingOps {
         .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
         .persist()
       try {
-        val upserts = ops.filter(col("op") === "upsert")
-        // assignment is a pure function of (id, vector): assign each
-        // distinct pair once, then re-attach every version by joining on
-        // BOTH columns (Spark normalizes NaN/-0.0 in join keys, so the
-        // id-only join's cross-product of same-batch re-upserts cannot
-        // recur, and no row is lost to NaN inequality). The trailing
-        // dropDuplicates guards the sign-of-zero corner where two
-        // key-normalized-equal vectors fan out onto each other's versions.
         val assigned = graft.knn.Ivf
-          .assign(sess, upserts.select("id", "vector").dropDuplicates("id", "vector"),
-            centroids, metric, spill)
-          .join(upserts.select(col("id"), col("vector"), col("version")), Seq("id", "vector"))
-          .select(col("id"), col("cell"), col("vector"), col("version"), lit("upsert").as("op"))
-          .dropDuplicates("id", "version", "cell")
+          .assignVersioned(sess, ops.filter(col("op") === "upsert"), centroids, metric, spill)
+          .withColumn("op", lit("upsert"))
         val tombstones = ops.filter(col("op") === "remove")
           .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
             col("version"), lit("remove").as("op"))
@@ -1081,26 +1068,17 @@ object StreamingOps {
     def meanErr: Double = if (n == 0) 0.0 else sumDist / n
   }
 
-  /** Nearest centroid of `v` as (cell, distance), ties → lowest cell: the
-    * kernel and tie-break [[graft.knn.Ivf.assign]] uses (the exact double
+  /** Nearest centroid of `v` as (cell, distance), ties → lowest cell:
+    * [[graft.knn.Ivf.assign]]'s own cell selection (the exact double
     * kernel can flip near-boundary argmins relative to the SIMD kernel,
     * giving the gauges a spurious nonzero floor).
     */
   private def nearestCentroid(m: Int, v: Array[Float], cs: Array[Array[Float]]): (Int, Double) = {
-    val kernel = graft.core.DistKernel.best
-    var best = 0
-    var bestDist = Double.MaxValue
-    var i = 0
-    while (i < cs.length) {
-      val d = m match {
-        case graft.core.Distances.Euclidean => kernel.euclidean(v, cs(i))
-        case graft.core.Distances.Manhattan => kernel.manhattan(v, cs(i))
-        case _ => kernel.cosine(v, cs(i))
-      }
-      if (d < bestDist) { bestDist = d; best = i }
-      i += 1
-    }
-    (best, bestDist)
+    val dists = graft.knn.Ivf.centroidDistances(m, v, cs)
+    val best = graft.knn.Ivf.nearestCells(dists, 1)(0)
+    // no distance below Double.MaxValue (NaN component, overflow): the
+    // fallback cell reports Double.MaxValue
+    (best, if (dists(best) < Double.MaxValue) dists(best) else Double.MaxValue)
   }
 
   /** One distributed pass over the maintained view: per live id the
@@ -1220,14 +1198,14 @@ object StreamingOps {
     if (agg.getLong(1) == 0) 0.0 else agg.getDouble(0) / agg.getLong(1)
   }
 
-  private def loadIvfQuantReference(spark: SparkSession, indexDir: String): Option[Double] = {
+  private[graft] def loadIvfQuantReference(spark: SparkSession, indexDir: String): Option[Double] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     // a surviving tmp with no live sidecar is a torn swap — finish it
     if (!graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) &&
         graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf))
       graft.io.HadoopIO.rename(s"$indexDir/quant_ref.tmp", s"$indexDir/quant_ref", hconf)
     if (!graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf)) None
-    else Some(spark.read.parquet(s"$indexDir/quant_ref").head().getDouble(0))
+    else Some(graft.io.LocalParquet.read(spark, s"$indexDir/quant_ref").head.getDouble(0))
   }
 
   /** The ORGANIC drift loop: retrain when the maintained view's mean
@@ -1420,13 +1398,13 @@ object StreamingOps {
       val centroids = graft.knn.Ivf.train(spark, live.select("id", "vector"), newC,
         meta.metric, iterations, seed = seed, sampleFraction = sampleFraction)
       val assigned = graft.knn.Ivf
-        .assign(spark, live.select("id", "vector"), centroids, meta.metric, meta.spill)
+        .assignVersioned(spark, live, centroids, meta.metric, meta.spill)
       val (rows, codes) = pqUsed match {
         case Some((f, cb)) => (if (f.residual) graft.knn.Pq.encodeResidual(assigned, centroids, cb)
           else graft.knn.Pq.encode(assigned, cb), Seq("pq_codes"))
         case None => (assigned, Nil)
       }
-      val upserts = rows.join(live.select(col("id"), col("version")), Seq("id"))
+      val upserts = rows
         .select(Seq(col("id"), col("cell"), col("vector")) ++ codes.map(col) ++
           Seq(col("version"), lit("upsert").as("op")): _*)
       val tombstones = winners.filter(col("op") === "remove")
@@ -1550,6 +1528,7 @@ object StreamingOps {
       asOf: Option[Long] = None): DataFrame = {
     val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     val checked = graft.knn.Ivf.checkQueryDim(queries, meta.dim)
+    requireFullPrecisionView(spark, indexDir, "searched at full precision")
     val view = asOf.map(ivfMaintainedStateAsOf(spark, indexDir, _))
       .getOrElse(ivfMaintainedState(spark, indexDir))
     graft.knn.Ivf.searchDF(view, centroids,
@@ -1569,9 +1548,9 @@ object StreamingOps {
     if (!graft.io.HadoopIO.exists(s"$indexDir/pq_maintained",
         spark.sparkContext.hadoopConfiguration)) None
     else {
-      val r = spark.read.parquet(s"$indexDir/pq_maintained")
-        .select("residual", "store_vectors").head()
-      Some(IvfPqMaintainedFlags(r.getBoolean(0), r.getBoolean(1)))
+      val r = graft.io.LocalParquet.read(spark, s"$indexDir/pq_maintained").head
+      Some(IvfPqMaintainedFlags(r.getBoolean(r.fieldIndex("residual")),
+        r.getBoolean(r.fieldIndex("store_vectors"))))
     }
 
   private def writeIvfPqFlags(spark: SparkSession, dir: String, flags: IvfPqMaintainedFlags): Unit = {
@@ -1676,12 +1655,10 @@ object StreamingOps {
             graft.knn.Opq.rotateCol(model, col("vector")))
           case None => upserts0
         }
-        val assigned = graft.knn.Ivf
-          .assign(sess, upserts.select("id", "vector"), centroids, "euclidean", spill)
+        val assigned = graft.knn.Ivf.assignVersioned(sess, upserts, centroids, "euclidean", spill)
         val encoded =
           (if (residual) graft.knn.Pq.encodeResidual(assigned, centroids, cb)
            else graft.knn.Pq.encode(assigned, cb))
-            .join(upserts.select(col("id"), col("version")), Seq("id"))
             .select(col("id"), col("cell"),
               (if (storeVectors) col("vector") else lit(null).cast("array<float>")).as("vector"),
               col("pq_codes"), col("version"), lit("upsert").as("op"))
@@ -1839,13 +1816,13 @@ object StreamingOps {
   def loadHnswMaintainedMeta(spark: SparkSession, indexDir: String): Option[HnswMaintainedMeta] = {
     if (!graft.io.HadoopIO.exists(s"$indexDir/meta", spark.sparkContext.hadoopConfiguration)) None
     else {
-      val r = spark.read.parquet(s"$indexDir/meta")
-        .select("num_partitions", "metric", "m", "mmax", "mmax0", "ef", "ef_construction",
-          "level_multiplier", "heuristic", "extend_candidates", "keep_pruned")
-        .head()
-      Some(HnswMaintainedMeta(r.getInt(0), r.getString(1),
-        graft.hnsw.HnswConfig(r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
-          r.getDouble(7), r.getBoolean(8), r.getBoolean(9), r.getBoolean(10))))
+      val r = graft.io.LocalParquet.read(spark, s"$indexDir/meta").head
+      def int(c: String) = r.getInt(r.fieldIndex(c))
+      def bool(c: String) = r.getBoolean(r.fieldIndex(c))
+      Some(HnswMaintainedMeta(int("num_partitions"), r.getString(r.fieldIndex("metric")),
+        graft.hnsw.HnswConfig(int("m"), int("mmax"), int("mmax0"), int("ef"), int("ef_construction"),
+          r.getDouble(r.fieldIndex("level_multiplier")), bool("heuristic"),
+          bool("extend_candidates"), bool("keep_pruned"))))
     }
   }
 

@@ -175,4 +175,19 @@ class SinkRegressionSpec extends SparkTestBase {
       () => StreamingOps.retrainIvfPqMaintained(spark, dir, iterations = 1))(
       () => ranked(StreamingOps.searchIvfPqMaintained(spark, dir, query, k = 5, nprobe = 2)))
   }
+
+  test("searchIvfMaintainedDF refuses a codes-only PQ directory like the array form") {
+    val dir = Files.createTempDirectory("ivfpq_codes_only").toString
+    val df = vecs8.toDF("id", "vector")
+    val cs = graft.knn.Ivf.train(spark, df, c = 3, iterations = 2)
+    val cb = graft.knn.Pq.trainResidual(spark, graft.knn.Ivf.assign(spark, df, cs), cs,
+      m = 4, ksub = 8, iterations = 1, sampleCap = 1000, seeding = "first")
+    load(StreamingOps.ivfPqMaintenanceSink(spark, dir, cs, cb))
+    val array = intercept[IllegalArgumentException](
+      StreamingOps.searchIvfMaintained(spark, dir, query, k = 3, nprobe = 3).collect())
+    val frame = intercept[IllegalArgumentException](StreamingOps.searchIvfMaintainedDF(spark, dir,
+      query.toSeq.toDF("qid", "qvec"), k = 3, nprobe = 3).collect())
+    assert(frame.getMessage === array.getMessage)
+    assert(frame.getMessage.contains("codes-only"), frame.getMessage)
+  }
 }
