@@ -21,11 +21,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    its delete and its rename — refuse, naming the sink's compaction
   *    call as the resume (re-seeding would bless orphaned half-written
   *    batch files, or serve an empty log over a compacted one parked in
-  *    `<log>.compact`). Then the sink's fingerprint check runs against the
-  *    stored meta. No meta means a fresh (or crashed) init: seed a
+  *    `<log>.compact`). Then the stored meta is checked against the
+  *    passed one. No meta means a fresh (or crashed) init: seed a
   *    manifest where none exists (an adopted, already-manifested log is
-  *    kept), then the sink writes its meta LAST — a crash before it
-  *    leaves no meta and init re-runs whole.
+  *    kept), run the sink's init, then write the meta LAST — a crash
+  *    before it leaves no meta and init re-runs whole. A sink whose
+  *    restart contract is its parameters opens with them: the sidecar
+  *    `<root>/<meta>` is one file written atomically (temp then rename)
+  *    holding the tag `graft.params/1`, a key count, then each key and
+  *    value as a length-prefixed UTF-8 string, so any value round-trips.
+  *    A restart passing different values is refused with every differing
+  *    key's stored and passed value; a sidecar in any other form (a
+  *    parquet directory, a single-string file) is refused naming its path,
+  *    never re-initialised.
   *  - **commit** of batch N, log by log, the marker last. Drop leftovers
   *    under `batch=N`: files the manifest does not list (a crashed
   *    attempt) — and everything under it while this log lists none of
@@ -59,13 +67,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    Several logs compact marker last, so a crash between their swaps
   *    leaves every committed batch visible.
   *
-  * Manifest and marker checks are filesystem calls; the log adds no Spark
-  * job beyond the sink's own writes and the folded-id sidecar.
+  * Manifest, marker, meta and folded-id checks are filesystem or
+  * in-process footer reads; the log adds no Spark job beyond the sink's
+  * own writes and the folded-id sidecar's write.
   *
   * @param what        the sink's name in error messages
   * @param resume      the compaction call that resumes an interrupted swap
   * @param exactlyOnce the sink skips committed batches (its batches are
   *                    not idempotent); compaction then records folded ids
+  * @param meta        the parameter sidecar's name under `root`
   */
 final class BatchLog(
     spark: SparkSession,
@@ -73,7 +83,8 @@ final class BatchLog(
     logs: Seq[String],
     what: String,
     resume: Option[String],
-    exactlyOnce: Boolean) {
+    exactlyOnce: Boolean,
+    meta: String = "meta") {
 
   private val conf = spark.sparkContext.hadoopConfiguration
   private val marker = logs.last
@@ -83,14 +94,14 @@ final class BatchLog(
 
   /** Open the sink directory: `stored` is its loaded meta sidecar. */
   def open[M](stored: Option[M])(check: M => Unit)(init: => Unit): Unit = stored match {
-    case Some(meta) =>
+    case Some(m) =>
       val missing = logs.filter(l => Manifest.read(dir(l), conf).isEmpty)
       require(missing.isEmpty,
         s"$what dir $root has committed meta but no manifest under [${missing.mkString(", ")}] " +
           "— either lost/foreign state" +
           resume.fold("")(r => s", or a compaction swap died mid-flight (run $r to resume it)") +
           "; refusing to extend unverifiable state")
-      check(meta)
+      check(m)
     case None =>
       logs.foreach { l =>
         HadoopIO.mkdirs(dir(l), conf)
@@ -98,6 +109,58 @@ final class BatchLog(
       }
       init
   }
+
+  /** Open the sink directory under a parameter sidecar: a restart must
+    * pass the stored values, else it is refused with each differing key's
+    * stored and passed value and `why`, the sink's consequence clause
+    * ("would …"). `init` runs before the sidecar is written.
+    */
+  def open(params: Seq[(String, String)], why: String)(init: => Unit): Unit =
+    open(storedParams()) { stored =>
+      val (was, now) = (stored.toMap, params.toMap)
+      val diffs = (stored ++ params).map(_._1).distinct.filter(k => was.get(k) != now.get(k))
+        .map(k => s"$k: stored ${show(was.get(k))}, passed ${show(now.get(k))}")
+      require(diffs.isEmpty,
+        s"$what state at $root was maintained with different parameters " +
+          s"(${diffs.mkString("; ")}); restarting $why — delete the directory or pass " +
+          "matching parameters")
+    } {
+      init
+      HadoopIO.write(metaPath, conf) { out =>
+        out.writeUTF(BatchLog.ParamsTag)
+        out.writeInt(params.size)
+        params.foreach { case (k, v) => BatchLog.writeString(out, k); BatchLog.writeString(out, v) }
+      }
+    }
+
+  /** The parameters the sidecar stores; refuses a directory without one. */
+  def params(): Map[String, String] =
+    storedParams().getOrElse(throw new IllegalArgumentException(
+      s"no $meta sidecar under $root — not ${BatchLog.article(what)} $what dir")).toMap
+
+  private def metaPath = s"$root/$meta"
+
+  private def show(v: Option[String]) = v.fold("<absent>")(x => s"'$x'")
+
+  /** The stored parameters in written order, None before a committed open.
+    * Anything else at the path — a parquet directory (opening it fails), a
+    * single-string file, a foreign file — is refused.
+    */
+  private def storedParams(): Option[Seq[(String, String)]] =
+    if (!HadoopIO.exists(metaPath, conf)) None
+    else {
+      val kvs = scala.util.Try(HadoopIO.read(metaPath, conf) { in =>
+        require(in.readUTF() == BatchLog.ParamsTag)
+        val kvs = Seq.fill(in.readInt())((BatchLog.readString(in), BatchLog.readString(in)))
+        require(in.read() == -1)
+        kvs
+      })
+      require(kvs.isSuccess,
+        s"$what sidecar $metaPath is not in the `${BatchLog.ParamsTag}` parameter format (a " +
+          "sidecar written by an earlier release, or foreign state); refusing to re-initialise " +
+          "or misread it — delete the directory to start over")
+      kvs.toOption
+    }
 
   /** The log's manifest entries, unvalidated (the gauges' input). */
   def entries(log: String): Seq[ManifestEntry] =
@@ -248,12 +311,28 @@ final class BatchLog(
   private def foldedIds(): Set[Long] = {
     def ids(d: String): Set[Long] =
       if (!HadoopIO.exists(d, conf)) Set.empty
-      else spark.read.parquet(d).select("batch_id").collect().map(_.getLong(0)).toSet
+      else LocalParquet.read(spark, d).map(_.getAs[Long]("batch_id")).toSet
     ids(folded) ++ scala.util.Try(ids(s"$folded.tmp")).getOrElse(Set.empty[Long])
   }
 }
 
 object BatchLog {
+
+  private val ParamsTag = "graft.params/1"
+
+  private def writeString(out: java.io.DataOutputStream, s: String): Unit = {
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    out.writeInt(b.length)
+    out.write(b)
+  }
+
+  private def readString(in: java.io.DataInputStream): String = {
+    val b = new Array[Byte](in.readInt())
+    in.readFully(b)
+    new String(b, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  private def article(word: String) = if ("aeiouAEIOU".contains(word.head)) "an" else "a"
 
   /** Write a whole log at `dir` as the single segment `batch=<segment>`,
     * then its manifest — the build step of compaction and retrain swaps.

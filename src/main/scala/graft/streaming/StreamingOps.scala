@@ -293,8 +293,10 @@ object StreamingOps {
       maxBucketSize: Int = 4096): (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rowsPerBand = numHashes / bands
-    val log = new BatchLog(spark, dir, Seq("docs", "bands"), "near-dup", None, exactlyOnce = false)
-    openFingerprinted(spark, log, s"$dir/nd_meta", s"numHashes=$numHashes,bands=$bands")
+    val log = new BatchLog(spark, dir, Seq("docs", "bands"), "near-dup", None, exactlyOnce = false,
+      meta = "nd_meta")
+    log.open(Seq("numHashes" -> numHashes.toString, "bands" -> bands.toString),
+      JoinsIncompatible)(())
 
     (batch: DataFrame, batchId: Long) => {
       import graft.internal.SqlBridge.{column => gc, expression => ge}
@@ -410,8 +412,8 @@ object StreamingOps {
     val bandW = 64 / bands
     val mask = if (bandW == 64) -1L else (1L << bandW) - 1L
     val log = new BatchLog(spark, dir, Seq("hashes", "bands"), "media-phash", None,
-      exactlyOnce = false)
-    openFingerprinted(spark, log, s"$dir/mp_meta", s"bands=$bands")
+      exactlyOnce = false, meta = "mp_meta")
+    log.open(Seq("bands" -> bands.toString), JoinsIncompatible)(())
 
     (batch: DataFrame, batchId: Long) => {
       val oldHashes = log.read("hashes").map(_.select("id", "dhash"))
@@ -530,7 +532,7 @@ object StreamingOps {
       maxResolveRounds: Int = 1000,
       maxDriverEdges: Int = 100000): (DataFrame, Long) => Unit = {
     val log = dedupGroupsLog(spark, dir)
-    openFingerprinted(spark, log, s"$dir/dg_meta", s"aCol=$aCol,bCol=$bCol")
+    log.open(Seq("aCol" -> aCol, "bCol" -> bCol), JoinsIncompatible)(())
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       val oldLabels = log.read("labels").map(_.select("id", "parent"))
@@ -716,27 +718,14 @@ object StreamingOps {
   }
 
   private def dedupGroupsLog(spark: SparkSession, dir: String) =
-    new BatchLog(spark, dir, Seq("labels"), "dedup-groups", None, exactlyOnce = false)
+    new BatchLog(spark, dir, Seq("labels"), "dedup-groups", None, exactlyOnce = false,
+      meta = "dg_meta")
 
-  /** Open `log` under a one-string fingerprint sidecar at `metaPath` —
-    * the meta of the sinks whose restart contract is a few parameters
-    * ([[nearDupSink]]'s band layout, [[mediaPhashSink]]'s band width,
-    * [[dedupGroupsSink]]'s pair columns). A restart with a different
-    * fingerprint would join new state against incompatible old state.
+  /** The restart refusal of the sinks whose parameters fix how new state
+    * joins old ([[nearDupSink]]'s band layout, [[mediaPhashSink]]'s band
+    * width, [[dedupGroupsSink]]'s pair columns).
     */
-  private def openFingerprinted(
-      spark: SparkSession, log: BatchLog, metaPath: String, fingerprint: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stored =
-      if (!graft.io.HadoopIO.exists(metaPath, hconf)) None
-      else Some(graft.io.HadoopIO.read(metaPath, hconf)(_.readUTF()))
-    log.open(stored) { s =>
-      require(s == fingerprint,
-        s"sink state at $metaPath was maintained with ($s); restarting with ($fingerprint) " +
-          "would join new state against incompatible old state — delete the directory or " +
-          "pass matching parameters")
-    }(graft.io.HadoopIO.write(metaPath, hconf)(_.writeUTF(fingerprint)))
-  }
+  private val JoinsIncompatible = "would join new state against incompatible old state"
 
   /** Streaming benchmark decontamination: flag arriving documents that
     * share at least `minShared` distinct token n-gram shingles with any
@@ -2163,21 +2152,12 @@ object StreamingOps {
   /** Document mutation for the lexical-index maintenance sink. */
   case class DocOp(id: Long, op: String, text: String, version: Long)
 
-  private def bm25MetaPath(indexDir: String) = s"$indexDir/bm25_meta"
-
-  /** (nBuckets, withPositions). Pre-positional meta files (no `positions`
-    * column) read as positions = false.
+  /** (nBuckets, withPositions) a [[bm25MaintenanceSink]] directory was
+    * opened with.
     */
-  def loadBm25MaintainedMeta(spark: SparkSession, indexDir: String): Option[(Int, Boolean)] = {
-    if (!graft.io.HadoopIO.exists(bm25MetaPath(indexDir),
-        spark.sparkContext.hadoopConfiguration)) None
-    else {
-      val df = spark.read.parquet(bm25MetaPath(indexDir))
-      val r = df.select("n_buckets").head()
-      val pos = if (df.columns.contains("positions"))
-        df.select("positions").head().getBoolean(0) else false
-      Some((r.getInt(0), pos))
-    }
+  private def bm25Params(spark: SparkSession, indexDir: String): (Int, Boolean) = {
+    val p = bm25Log(spark, indexDir).params()
+    (p("nBuckets").toInt, p("withPositions").toBoolean)
   }
 
   /** `foreachBatch` sink maintaining a BM25 inverted index through an
@@ -2211,36 +2191,20 @@ object StreamingOps {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     import spark.implicits._
     val log = bm25Log(spark, indexDir)
-    log.open(loadBm25MaintainedMeta(spark, indexDir)) { case (existingB, existingP) =>
-      require(existingB == nBuckets,
-        s"index at $indexDir is maintained with nBuckets=$existingB; restarting with " +
-          s"$nBuckets would route tokens to different buckets than old delta rows — " +
-          "pass the stored value or delete the directory")
-      require(existingP == withPositions,
-        s"index at $indexDir is maintained with withPositions=$existingP; restarting with " +
-          s"$withPositions would mix positional and tf-only posting rows — " +
-          "pass the stored value or delete the directory")
-    } {
-      graft.io.HadoopIO.exists(s"$indexDir/base/stats",
-        spark.sparkContext.hadoopConfiguration) match {
-        case true =>
-          val baseStats = spark.read.parquet(s"$indexDir/base/stats")
-          val baseB = baseStats.select("n_buckets").head().getInt(0)
-          require(baseB == nBuckets,
-            s"adopted base index at $indexDir/base was built with nBuckets=$baseB, " +
-              s"sink constructed with $nBuckets — bucket routing must match")
-          if (withPositions) {
-            val baseP = baseStats.columns.contains("positions") &&
-              baseStats.select("positions").head().getBoolean(0)
-            require(baseP,
-              s"adopted base index at $indexDir/base was built WITHOUT positions but the " +
-                "sink is positional — phrase reads over base documents would be impossible; " +
-                "rebuild the base with buildIndex(withPositions = true)")
-          }
-        case false => ()
+    log.open(Seq("nBuckets" -> nBuckets.toString, "withPositions" -> withPositions.toString),
+      "would route tokens to different buckets than old delta rows, or mix positional and " +
+        "tf-only posting rows") {
+      if (graft.io.HadoopIO.exists(s"$indexDir/base/stats",
+          spark.sparkContext.hadoopConfiguration)) {
+        val (_, _, baseB, baseP) = graft.text.Bm25.loadStats(spark, s"$indexDir/base")
+        require(baseB == nBuckets,
+          s"adopted base index at $indexDir/base was built with nBuckets=$baseB, " +
+            s"sink constructed with $nBuckets — bucket routing must match")
+        require(baseP || !withPositions,
+          s"adopted base index at $indexDir/base was built WITHOUT positions but the " +
+            "sink is positional — phrase reads over base documents would be impossible; " +
+            "rebuild the base with buildIndex(withPositions = true)")
       }
-      Seq((nBuckets, withPositions)).toDF("n_buckets", "positions").coalesce(1)
-        .write.mode("overwrite").parquet(bm25MetaPath(indexDir))
     }
 
     (batch: Dataset[DocOp], batchId: Long) => {
@@ -2294,7 +2258,7 @@ object StreamingOps {
 
   private def bm25Log(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("delta_post", "delta_docs"), "maintained BM25",
-      Some("compactBm25Maintained"), exactlyOnce = false)
+      Some("compactBm25Maintained"), exactlyOnce = false, meta = "bm25_meta")
 
   /** Each document's winning delta rows (tombstones KEPT — serving filters
     * them, compaction must persist them): one shuffle on doc_id over the
@@ -2338,9 +2302,7 @@ object StreamingOps {
     import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
     val hconf = spark.sparkContext.hadoopConfiguration
-    val (nBuckets, _) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no bm25_meta sidecar under $indexDir — not a maintained BM25 dir"))
+    val (nBuckets, _) = bm25Params(spark, indexDir)
 
     val qTerms = queries.flatMap { case (qid, text) =>
       graft.text.Bm25.queryTerms(text).map(qid -> _)
@@ -2424,9 +2386,7 @@ object StreamingOps {
     import spark.implicits._
     require(phrases.nonEmpty, "empty phrase batch")
     val hconf = spark.sparkContext.hadoopConfiguration
-    val (nBuckets, withPositions) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no bm25_meta sidecar under $indexDir — not a maintained BM25 dir"))
+    val (nBuckets, withPositions) = bm25Params(spark, indexDir)
     require(withPositions,
       s"index at $indexDir is maintained WITHOUT positions " +
         "(bm25MaintenanceSink(withPositions = true)) — phrase adjacency cannot be " +
@@ -2443,13 +2403,10 @@ object StreamingOps {
       val winnerDocs = winners.select("doc_id")
       val upsertWinners = winners.filter(col("op") === "upsert")
       val hasBase = graft.io.HadoopIO.exists(s"$indexDir/base/stats", hconf)
-      if (hasBase) {
-        val baseStats = spark.read.parquet(s"$indexDir/base/stats")
-        require(baseStats.columns.contains("positions") &&
-            baseStats.select("positions").head().getBoolean(0),
+      if (hasBase)
+        require(graft.text.Bm25.loadStats(spark, s"$indexDir/base")._4,
           s"adopted base index at $indexDir/base has no positions — phrase reads over " +
             "base documents are impossible")
-      }
       val deltaPost = bm25Log(spark, indexDir).read("delta_post")
 
       // one bucket-pruned + token-pushed (doc_id, positions) read per term
@@ -2508,9 +2465,7 @@ object StreamingOps {
     val log = bm25Log(spark, indexDir)
     log.resumeSwap("delta_docs")
     log.resumeSwap("delta_post")
-    val (nBuckets, withPositions) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no bm25_meta sidecar under $indexDir — not a maintained BM25 dir"))
+    val (nBuckets, withPositions) = bm25Params(spark, indexDir)
 
     val winners = bm25DeltaWinners(spark, indexDir).persist()
     try {
@@ -2530,19 +2485,13 @@ object StreamingOps {
 
   // ------------------------------------------- heavy-hitter maintenance
 
-  private def hhMetaPath(indexDir: String) = s"$indexDir/hh_meta"
-
-  /** (n, m, group column) — `group` is None for a global
-    * [[heavyHittersSink]] directory, Some(col) for a grouped one.
+  /** (n, m, group column) a heavy-hitter directory was opened with —
+    * `group` is None for a global [[heavyHittersSink]] directory, Some(col)
+    * for a grouped one.
     */
-  def loadHeavyHittersMeta(spark: SparkSession,
-      indexDir: String): Option[(Int, Int, Option[String])] = {
-    if (!graft.io.HadoopIO.exists(hhMetaPath(indexDir),
-        spark.sparkContext.hadoopConfiguration)) None
-    else {
-      val r = spark.read.parquet(hhMetaPath(indexDir)).select("n", "m", "group").head()
-      Some((r.getInt(0), r.getInt(1), Option(r.getString(2))))
-    }
+  private def hhParams(spark: SparkSession, indexDir: String): (Int, Int, Option[String]) = {
+    val p = hhLog(spark, indexDir).params()
+    (p("n").toInt, p("m").toInt, p.get("group"))
   }
 
   /** `foreachBatch` sink maintaining PROVABLY-EXACT top-k n-gram heavy
@@ -2581,20 +2530,12 @@ object StreamingOps {
       n: Int,
       m: Int,
       groupCol: Option[String]): (DataFrame, Long) => Unit = {
-    import spark.implicits._
     val log = hhLog(spark, indexDir)
-    log.open(loadHeavyHittersMeta(spark, indexDir)) { case (en, em, eg) =>
-      require(en == n && em == m && eg == groupCol,
-        s"heavy-hitter state at $indexDir was maintained with (n=$en, m=$em, group=$eg); " +
-          s"restarting with (n=$n, m=$m, group=$groupCol) would merge incompatible " +
-          "sketches — delete the directory or pass matching parameters")
-      // refuse to append array-format batches into a pre-upgrade
-      // row-per-gram sketch log — a mixed-format dir would be unreadable
-      log.read("sketch").foreach(requireArraySketchFormat(_, s"$indexDir/sketch"))
-    } {
-      Seq((n, m, groupCol)).toDF("n", "m", "group").coalesce(1)
-        .write.mode("overwrite").parquet(hhMetaPath(indexDir))
-    }
+    log.open(Seq("n" -> n.toString, "m" -> m.toString) ++ groupCol.map("group" -> _),
+      "would merge incompatible sketches")(())
+    // refuse to append array-format batches into a pre-upgrade
+    // row-per-gram sketch log — a mixed-format dir would be unreadable
+    log.read("sketch").foreach(requireArraySketchFormat(_, s"$indexDir/sketch"))
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
@@ -2647,7 +2588,7 @@ object StreamingOps {
 
   private def hhLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("docs", "sketch"), "heavy-hitter",
-      Some("compactHeavyHitters"), exactlyOnce = true)
+      Some("compactHeavyHitters"), exactlyOnce = true, meta = "hh_meta")
 
   def heavyHittersSink(
       spark: SparkSession,
@@ -2730,9 +2671,7 @@ object StreamingOps {
 
   def heavyHittersTopK(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
+    val (n, m, group) = hhParams(spark, indexDir)
     require(group.isEmpty,
       s"$indexDir is maintained GROUPED (by '${group.get}') — read it with heavyHittersTopKByGroup")
     require(m > k, s"sketch size m ($m) must exceed k ($k)")
@@ -2758,9 +2697,7 @@ object StreamingOps {
     */
   def heavyHittersTopKByGroup(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
+    val (n, m, group) = hhParams(spark, indexDir)
     require(group.isDefined,
       s"$indexDir is maintained GLOBAL — read it with heavyHittersTopK")
     require(m > k, s"sketch size m ($m) must exceed k ($k)")
@@ -2866,9 +2803,7 @@ object StreamingOps {
   private def hhFold(spark: SparkSession, indexDir: String): String => Unit = {
     import spark.implicits._
     seg => {
-      val (_, m, _) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
-        throw new IllegalStateException(
-          s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
+      val (_, m, _) = hhParams(spark, indexDir)
       val folded = hhFoldSketches(spark, indexDir, m)
       // an all-empty fold still writes one empty summary row so the
       // compacted batch file is never schema-less
@@ -2907,19 +2842,6 @@ object StreamingOps {
     hhLog(spark, indexDir).compactIfOver("sketch", maxBatches)(hhFold(spark, indexDir))
 
   // ------------------------------------------- token-budget admission sink
-
-  private def tokenBudgetMetaPath(indexDir: String) = s"$indexDir/tb_meta"
-
-  private def loadTokenBudgetMeta(
-      spark: SparkSession, indexDir: String): Option[(Map[String, Long], String)] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(tokenBudgetMetaPath(indexDir), hconf)) None
-    else {
-      val rows = spark.read.parquet(tokenBudgetMetaPath(indexDir))
-        .select("source", "budget", "seed").collect()
-      Some((rows.map(r => r.getString(0) -> r.getLong(1)).toMap, rows.head.getString(2)))
-    }
-  }
 
   /** INGESTION-TIME token-budget admission — the streaming twin of
     * [[graft.ops.Sampling.sampleTokenBudget]]: admit arriving documents
@@ -2963,8 +2885,8 @@ object StreamingOps {
     * budgets table broadcast-joins onto each batch (no driver-built CASE
     * chain), prior totals join the same way, so nothing scales with
     * source cardinality except the (tiny) broadcast itself. The budgets
-    * land in the meta sidecar as rows; a restart is validated against
-    * them value-for-value.
+    * land in the parameter sidecar, one `budget:<source>` key each; a
+    * restart is validated against them value-for-value.
     */
   def tokenBudgetSinkDF(
       spark: SparkSession,
@@ -2982,16 +2904,8 @@ object StreamingOps {
       "budgets must carry one row per source")
     require(budgetRows.forall(_._2 >= 0), s"budgets must be >= 0: ${budgetRows.toSeq}")
     val log = tbLog(spark, indexDir)
-    log.open(loadTokenBudgetMeta(spark, indexDir)) { case (eb, es) =>
-      require(eb == budgetRows.toMap && es == seed,
-        s"token-budget state at $indexDir was maintained with (budgets=$eb, seed=$es); " +
-          s"restarting with (budgets=${budgetRows.toMap}, seed=$seed) would change who was " +
-          "admitted retroactively — delete the directory or pass matching parameters")
-    } {
-      budgetRows.toSeq.map { case (g, b) => (g, b, seed) }
-        .toDF("source", "budget", "seed").coalesce(1)
-        .write.mode("overwrite").parquet(tokenBudgetMetaPath(indexDir))
-    }
+    log.open(budgetRows.toSeq.map { case (g, b) => s"budget:$g" -> b.toString } :+ ("seed" -> seed),
+      "would change who was admitted retroactively")(())
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
@@ -3034,7 +2948,7 @@ object StreamingOps {
 
   private def tbLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("admitted", "totals"), "token-budget",
-      Some("compactTokenBudget"), exactlyOnce = true)
+      Some("compactTokenBudget"), exactlyOnce = true, meta = "tb_meta")
 
   /** The admitted set a [[tokenBudgetSink]] directory has committed:
     * (doc_id, source, n_tok), restricted to batches the totals log (the
@@ -3046,9 +2960,9 @@ object StreamingOps {
     */
   def tokenBudgetAdmitted(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
-    require(loadTokenBudgetMeta(spark, indexDir).isDefined,
-      s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    tbLog(spark, indexDir).read("admitted")
+    val log = tbLog(spark, indexDir)
+    log.params()
+    log.read("admitted")
       .fold(Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok"))(
         _.select("doc_id", "source", "n_tok"))
   }
@@ -3068,9 +2982,9 @@ object StreamingOps {
     * totals already count.
     */
   def compactTokenBudget(spark: SparkSession, indexDir: String): Unit = {
-    require(loadTokenBudgetMeta(spark, indexDir).isDefined,
-      s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    tbLog(spark, indexDir).compact("totals")(tbFold(spark, indexDir))
+    val log = tbLog(spark, indexDir)
+    log.params()
+    log.compact("totals")(tbFold(spark, indexDir))
   }
 
   /** The compacted totals writer: per-source sums only — sources × 1 rows,
@@ -3116,8 +3030,8 @@ object StreamingOps {
   private def dcrBenchDir(indexDir: String) = s"$indexDir/bench"
   private def dcrDocsDir(indexDir: String) = s"$indexDir/bench_docs"
   private def dcrLog(spark: SparkSession, indexDir: String) =
-    new BatchLog(spark, indexDir, Seq("matched"), "contamination-rate", None, exactlyOnce = true)
-  private def dcrMetaPath(indexDir: String) = s"$indexDir/dcr_meta"
+    new BatchLog(spark, indexDir, Seq("matched"), "contamination-rate", None, exactlyOnce = true,
+      meta = "dcr_meta")
 
   /** INGESTION-TIME contamination-rate audit — the streaming twin of
     * [[graft.dedup.Dedup.contaminationRate]]: as training documents
@@ -3131,8 +3045,9 @@ object StreamingOps {
     * rates drift as the corpus grows).
     *
     * Setup persists the benchmark's shingle table (bench_id, h) and doc
-    * list once; a restart is validated against a deterministic digest of
-    * them (a different benchmark would silently change every rate). Per
+    * list once; every open digests the benchmark (one aggregation) and a
+    * restart is validated against the stored digest (a different
+    * benchmark would silently change every rate). Per
     * batch: the batch's distinct shingle hashes stream through a
     * broadcast of the benchmark's (bounded) hash set, already-matched
     * hashes are anti-joined away, and only the NEWLY matched hashes land
@@ -3152,9 +3067,7 @@ object StreamingOps {
       benchTextCol: String = "text",
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, Long) => Unit = {
-    import spark.implicits._
     require(n >= 1, s"n must be >= 1, got $n")
-    val hconf = spark.sparkContext.hadoopConfiguration
     val benchDir = dcrBenchDir(indexDir)
     val docsDir = dcrDocsDir(indexDir)
 
@@ -3167,30 +3080,15 @@ object StreamingOps {
     val benchSh = shingles(benchmark, benchIdCol, benchTextCol, "bench_id")
     // deterministic digest: order-free xor of (bench_id * prime ^ h) plus
     // counts — enough to catch a different benchmark or n on restart
-    def digestOf(sh: DataFrame): (Long, Long) = {
-      val r = sh.agg(count(lit(1)).as("c"),
-        coalesce(expr("bit_xor(bench_id * 1000003 + h)"), lit(0L)).as("d")).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    val digest = benchSh.agg(count(lit(1)).as("c"),
+      coalesce(expr("bit_xor(bench_id * 1000003 + h)"), lit(0L)).as("d")).head()
     val log = dcrLog(spark, indexDir)
-    val stored =
-      if (!graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf)) None
-      else Some(spark.read.parquet(dcrMetaPath(indexDir))
-        .select("n", "bench_shingles", "bench_digest").head())
-    log.open(stored) { meta =>
-      val (c, d) = digestOf(benchSh)
-      require(meta.getInt(0) == n && meta.getLong(1) == c && meta.getLong(2) == d,
-        s"contamination-rate state at $indexDir was maintained with a different " +
-          s"(benchmark, n=${meta.getInt(0)}); restarting with n=$n and a benchmark " +
-          s"digesting ($c, $d) vs recorded (${meta.getLong(1)}, ${meta.getLong(2)}) " +
-          "would silently change every rate — delete the directory or pass the same benchmark")
-    } {
+    log.open(Seq("n" -> n.toString, "bench_shingles" -> digest.getLong(0).toString,
+        "bench_digest" -> digest.getLong(1).toString),
+      "with a different benchmark or n would silently change every rate") {
       benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
       benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(docsDir)
-      val (c, d) = digestOf(spark.read.parquet(benchDir))
-      Seq((n, c, d)).toDF("n", "bench_shingles", "bench_digest")
-        .coalesce(1).write.mode("overwrite").parquet(dcrMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
@@ -3225,11 +3123,10 @@ object StreamingOps {
     * has streamed through they equal the batch audit row-for-row.
     */
   def decontaminateRateMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf),
-      s"no dcr_meta sidecar under $indexDir — not a contamination-rate audit dir")
+    val log = dcrLog(spark, indexDir)
+    log.params()
     val benchSh = spark.read.parquet(dcrBenchDir(indexDir))
-    val matched = dcrLog(spark, indexDir).read("matched").fold {
+    val matched = log.read("matched").fold {
       import spark.implicits._
       Seq.empty[Long].toDF("h")
     }(_.filter(col("real")).select("h").distinct())
@@ -3248,8 +3145,6 @@ object StreamingOps {
   }
 
   // ------------------------------------------- corpus-profile monitoring sink
-
-  private def cpMetaPath(indexDir: String) = s"$indexDir/cp_meta"
 
   /** INGESTION-TIME corpus profiling — the monitoring twin of the batch
     * `corpus_profile` diagnostic: per-(source, lang) MERGEABLE integer
@@ -3276,25 +3171,9 @@ object StreamingOps {
       langCol: String = "lang",
       textCol: String = "text",
       charsCol: String = "n_chars"): (DataFrame, Long) => Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     val log = cpLog(spark, indexDir)
-    val stored =
-      if (!graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf)) None
-      else Some(spark.read.parquet(cpMetaPath(indexDir))
-        .select("source_col", "lang_col", "text_col", "chars_col").head())
-    log.open(stored) { r =>
-      require(r.getString(0) == sourceCol && r.getString(1) == langCol &&
-          r.getString(2) == textCol && r.getString(3) == charsCol,
-        s"corpus-profile state at $indexDir was maintained over columns " +
-          s"(${r.getString(0)}, ${r.getString(1)}, ${r.getString(2)}, ${r.getString(3)}); " +
-          s"restarting with ($sourceCol, $langCol, $textCol, $charsCol) would mix " +
-          "incomparable totals — delete the directory or pass matching columns")
-    } {
-      Seq((sourceCol, langCol, textCol, charsCol))
-        .toDF("source_col", "lang_col", "text_col", "chars_col")
-        .coalesce(1).write.mode("overwrite").parquet(cpMetaPath(indexDir))
-    }
+    log.open(Seq("sourceCol" -> sourceCol, "langCol" -> langCol, "textCol" -> textCol,
+      "charsCol" -> charsCol), "would mix incomparable totals")(())
 
     (batch: DataFrame, batchId: Long) =>
       if (!log.committed(batchId)) log.commit(batchId)(p =>
@@ -3309,7 +3188,7 @@ object StreamingOps {
 
   private def cpLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("totals"), "corpus-profile",
-      Some("compactCorpusProfile"), exactlyOnce = true)
+      Some("compactCorpusProfile"), exactlyOnce = true, meta = "cp_meta")
 
   /** The converged per-source profile a [[corpusProfileSink]] directory
     * serves: (source, n_docs, n_langs, total_chars, total_tokens,
@@ -3318,10 +3197,9 @@ object StreamingOps {
     * ratios computed at read time from the exact sums.
     */
   def corpusProfileMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
-      s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
-    val totals = cpLog(spark, indexDir).read("totals").getOrElse {
+    val log = cpLog(spark, indexDir)
+    log.params()
+    val totals = log.read("totals").getOrElse {
       import spark.implicits._
       return Seq.empty[(String, Long, Long, Long, Long, Double)]
         .toDF("source", "n_docs", "n_langs", "total_chars", "total_tokens", "avg_chars")
@@ -3342,10 +3220,8 @@ object StreamingOps {
     * while the stream is stopped.
     */
   def compactCorpusProfile(spark: SparkSession, indexDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
-      s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
     val log = cpLog(spark, indexDir)
+    log.params()
     log.compact("totals") { seg =>
       import spark.implicits._
       log.read("totals").get
@@ -3362,8 +3238,6 @@ object StreamingOps {
   }
 
   // ------------------------------------------- unbounded exact-dedup sink
-
-  private def deMetaPath(indexDir: String) = s"$indexDir/de_meta"
 
   /** UNBOUNDED cross-batch exact dedup — the digest twin of
     * [[nearDupSink]], closing `stream_dedup`'s one semantic gap: Spark's
@@ -3396,21 +3270,8 @@ object StreamingOps {
       indexDir: String,
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, Long) => Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     val log = deLog(spark, indexDir)
-    val stored =
-      if (!graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf)) None
-      else Some(spark.read.parquet(deMetaPath(indexDir)).select("id_col", "text_col").head())
-    log.open(stored) { r =>
-      require(r.getString(0) == idCol && r.getString(1) == textCol,
-        s"exact-dedup state at $indexDir was maintained over (${r.getString(0)}, " +
-          s"${r.getString(1)}); restarting with ($idCol, $textCol) would mix " +
-          "incomparable digests — delete the directory or pass matching columns")
-    } {
-      Seq((idCol, textCol)).toDF("id_col", "text_col")
-        .coalesce(1).write.mode("overwrite").parquet(deMetaPath(indexDir))
-    }
+    log.open(Seq("idCol" -> idCol, "textCol" -> textCol), "would mix incomparable digests")(())
 
     (batch: DataFrame, batchId: Long) =>
       if (!log.committed(batchId)) log.commit(batchId)(p =>
@@ -3423,7 +3284,7 @@ object StreamingOps {
 
   private def deLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("dig"), "exact-dedup", Some("compactDedupExact"),
-      exactlyOnce = true)
+      exactlyOnce = true, meta = "de_meta")
 
   /** The converged exact-dedup groups a [[dedupExactSink]] directory
     * serves: (digest, keep_id, n_dups), equal row-for-row to batch
@@ -3433,10 +3294,9 @@ object StreamingOps {
     * reads digest rows (16 B + id + count per distinct doc), never text.
     */
   def dedupExactMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
-      s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
-    val dig = deLog(spark, indexDir).read("dig").getOrElse {
+    val log = deLog(spark, indexDir)
+    log.params()
+    val dig = log.read("dig").getOrElse {
       import spark.implicits._
       return Seq.empty[(String, Long, Long)].toDF("digest", "keep_id", "n_dups")
     }
@@ -3454,10 +3314,8 @@ object StreamingOps {
     * folds nothing is collected.
     */
   def compactDedupExact(spark: SparkSession, indexDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
-      s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
     val log = deLog(spark, indexDir)
+    log.params()
     log.compact("dig")(seg => log.read("dig").get
       .groupBy("digest")
       .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
@@ -3466,20 +3324,16 @@ object StreamingOps {
 
   // ------------------------------------------- weighted-sample reservoir sink
 
-  private def wsMetaPath(indexDir: String) = s"$indexDir/ws_meta"
   private def wsLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("cand"), "weighted-sample", Some("compactWeightedSample"),
-      exactlyOnce = false)
+      exactlyOnce = false, meta = "ws_meta")
 
-  private def loadWeightedSampleMeta(
-      spark: SparkSession, indexDir: String): Option[(Int, String, String, String)] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(wsMetaPath(indexDir), hconf)) None
-    else {
-      val r = spark.read.parquet(wsMetaPath(indexDir))
-        .select("k", "seed", "id_col", "weight_col").head()
-      Some((r.getInt(0), r.getString(1), r.getString(2), r.getString(3)))
-    }
+  /** (k, id column, weight column) a [[weightedSampleSink]] directory was
+    * opened with.
+    */
+  private def wsParams(spark: SparkSession, indexDir: String): (Int, String, String) = {
+    val p = wsLog(spark, indexDir).params()
+    (p("k").toInt, p("idCol"), p("weightCol"))
   }
 
   /** INGESTION-TIME weighted sampling — the streaming twin of
@@ -3519,16 +3373,8 @@ object StreamingOps {
     import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
     val log = wsLog(spark, indexDir)
-    log.open(loadWeightedSampleMeta(spark, indexDir)) { case (ek, es, eid, ew) =>
-      require(ek == k && es == seed && eid == idCol && ew == weightCol,
-        s"weighted-sample state at $indexDir was maintained with (k=$ek, seed=$es, " +
-          s"id=$eid, weight=$ew); restarting with (k=$k, seed=$seed, id=$idCol, " +
-          s"weight=$weightCol) would change the sample retroactively — delete the " +
-          "directory or pass matching parameters")
-    } {
-      Seq((k, seed, idCol, weightCol)).toDF("k", "seed", "id_col", "weight_col")
-        .coalesce(1).write.mode("overwrite").parquet(wsMetaPath(indexDir))
-    }
+    log.open(Seq("k" -> k.toString, "seed" -> seed, "idCol" -> idCol, "weightCol" -> weightCol),
+      "would change the sample retroactively")(())
 
     (batch: DataFrame, batchId: Long) =>
       // batch-local top-k: only rows that could ever enter the global
@@ -3552,9 +3398,7 @@ object StreamingOps {
     * not serve a different schema than the first committed batch.
     */
   def weightedSampleMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val (k, _, idCol, weightCol) = loadWeightedSampleMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
+    val (k, idCol, weightCol) = wsParams(spark, indexDir)
     val cands = wsLog(spark, indexDir).read("cand").getOrElse(
       return spark.emptyDataFrame
         .withColumn(idCol, lit(null).cast("long"))
@@ -3588,9 +3432,7 @@ object StreamingOps {
       spark: SparkSession,
       indexDir: String,
       maxBatches: Int = 64): (Int, Boolean) = {
-    val (k, _, idCol, weightCol) = loadWeightedSampleMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
+    val (k, idCol, weightCol) = wsParams(spark, indexDir)
     val log = wsLog(spark, indexDir)
     log.compactIfOver("cand", maxBatches) { seg =>
       val cands = log.read("cand").get.select(col(idCol), col(weightCol), col("__skey"))

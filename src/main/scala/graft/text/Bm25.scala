@@ -230,12 +230,8 @@ object Bm25 {
       dir: String,
       phrases: Seq[(Long, String)]): DataFrame = {
     require(phrases.nonEmpty, "empty phrase batch")
-    require(graft.io.HadoopIO.exists(s"$dir/stats", spark.sparkContext.hadoopConfiguration),
-      s"no stats under $dir — not a (complete) bm25 index directory")
-    val statsRow = spark.read.parquet(s"$dir/stats")
-      .select("n_buckets", "positions").head()
-    val nBuckets = statsRow.getInt(0)
-    require(statsRow.getBoolean(1),
+    val (_, _, nBuckets, positional) = loadStats(spark, dir)
+    require(positional,
       s"index at $dir was built WITHOUT positions (buildIndex(withPositions = true)) — " +
         "phrase adjacency cannot be evaluated from tf-only postings")
 
@@ -284,13 +280,7 @@ object Bm25 {
       b: Double = 0.75): DataFrame = {
     import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
-    require(graft.io.HadoopIO.exists(s"$dir/stats", spark.sparkContext.hadoopConfiguration),
-      s"no stats under $dir — not a (complete) bm25 index directory (stats is written last; " +
-        "a missing one means the build was torn)")
-    val statsRow = spark.read.parquet(s"$dir/stats").select("n", "avgdl", "n_buckets").head()
-    val n = statsRow.getLong(0).toDouble
-    val avgdl = statsRow.getDouble(1)
-    val nBuckets = statsRow.getInt(2)
+    val (n, avgdl, nBuckets, _) = loadStats(spark, dir)
 
     val qTerms = queries.flatMap { case (qid, text) => queryTerms(text).map(qid -> _) }
     require(qTerms.nonEmpty, "no query terms after tokenization")
@@ -301,7 +291,20 @@ object Bm25 {
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
     val dfTable = spark.read.parquet(s"$dir/df").filter(col("token").isin(terms: _*))
     val qTable = qTerms.toDF("qid", "token")
-    scoreTopK(post.join(broadcast(dfTable), Seq("token")), qTable, n, avgdl, k, k1, b)
+    scoreTopK(post.join(broadcast(dfTable), Seq("token")), qTable, n.toDouble, avgdl, k, k1, b)
+  }
+
+  /** (n, avgdl, nBuckets, positions) of a [[buildIndex]] directory, read
+    * in-process from its `stats` marker (no Spark job); a marker written
+    * before positional indexes has no `positions` column and reads false.
+    */
+  def loadStats(spark: SparkSession, dir: String): (Long, Double, Int, Boolean) = {
+    require(graft.io.HadoopIO.exists(s"$dir/stats", spark.sparkContext.hadoopConfiguration),
+      s"no stats under $dir — not a (complete) bm25 index directory (stats is written last; " +
+        "a missing one means the build was torn)")
+    val r = graft.io.LocalParquet.read(spark, s"$dir/stats").head
+    (r.getAs[Long]("n"), r.getAs[Double]("avgdl"), r.getAs[Int]("n_buckets"),
+      r.schema.fieldNames.contains("positions") && r.getAs[Boolean]("positions"))
   }
 
   /** BM25 top-`k` documents per query. `queries` = (qid, query text,
