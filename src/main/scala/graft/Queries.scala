@@ -4861,23 +4861,16 @@ object Queries {
         .select(col("digest")).distinct().orderBy("digest")
     }),
 
-    // §2.21 continuous index maintenance end-to-end: the synthesized
-    // mutation stream (upsert@v1 all ids, remove@v2 for ids ≡ 0 mod 7)
-    // drives hnswMaintenanceSink via foreachBatch — composed through the
-    // versionedOps cross-batch version store, so a stale version in a
-    // later micro-batch can never resurrect an older vector (the
-    // production shape; negative control in StreamingIndexSpec) — graphs
-    // are created/updated/tombstoned on disk, then the SAVED graphs are
-    // searched and recall-scored against the exact kNN over the surviving
-    // ids. Closed-form oracle.
-    // §2.21 continuous HNSW maintenance through the DELTA-LOG sink: each
-    // micro-batch appends O(batch) versioned rows (no graph rewrite — the
-    // in-place hnswMaintenanceSink form rewrites every touched partition
-    // graph per batch, O(index) write amplification); an explicit
+    // §2.21 continuous HNSW maintenance through the DELTA-LOG sink: the
+    // synthesized mutation stream (upsert@v1 all ids, remove@v2 for ids ≡ 0
+    // mod 7), composed through the versionedOps cross-batch version store,
+    // drives hnswDeltaMaintenanceSink via foreachBatch. Each micro-batch
+    // appends O(batch) versioned rows (no graph rewrite); an explicit
     // compaction folds the log into the per-partition base graphs with a
     // crash-recoverable double swap, leaving payload-less guard/tombstone
     // version memory. The post-compaction search serves from the base
-    // graphs and is recall-gated against the exact oracle.
+    // graphs and is recall-gated against the exact kNN over the surviving
+    // ids. Closed-form oracle.
     "stream_hnsw_maintenance" -> ((spark, dir) => {
       val ops = graft.streaming.StreamingOps.versionedOps(spark, mutationOps(spark, dir))
       val idxDir = java.nio.file.Files.createTempDirectory("stream_hm_idx").toString

@@ -79,10 +79,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class BatchLog(
     spark: SparkSession,
-    root: String,
+    val root: String,
     logs: Seq[String],
     what: String,
-    resume: Option[String],
+    val resume: Option[String],
     exactlyOnce: Boolean,
     meta: String = "meta") {
 

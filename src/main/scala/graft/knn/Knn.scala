@@ -37,8 +37,7 @@ object Knn {
   def bruteForce(data: DataFrame, queries: DataFrame, k: Int, metric: String = "euclidean"): DataFrame = {
     val d = data.crossJoin(broadcast(queries))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    d.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(d, k)
   }
 
   /** Exact RADIUS search: every data vector within distance `r` of each
@@ -75,8 +74,7 @@ object Knn {
     val d = data.crossJoin(broadcast(queries))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
       .filter(col("dist") > minDist)
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    d.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(d, k)
   }
 
   /** Matryoshka (prefix-dimension) retrieval, Kusupati et al. 2022: a
@@ -114,8 +112,7 @@ object Knn {
     val rescored = data.join(broadcast(cand), Seq("id"))
       .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(rescored, k)
   }
 
   /** [[matryoshka]] composed with IVF cell pruning — the 100 TB serving
@@ -170,8 +167,7 @@ object Knn {
       .join(broadcast(queriesDf), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
     val rescored = if (dedup) rescoredRaw.dropDuplicates("qid", "id") else rescoredRaw
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(rescored, k)
   }
 
   /** [[matryoshkaIvf]] with a DataFrame query side — the corpus-vs-corpus
@@ -208,16 +204,9 @@ object Knn {
       .as[(Int, Long, Array[Float])]
       .groupByKey(_._1)
     val coarseCands = dataByCell.cogroup(probes.groupByKey(_._1)) { case (_, dIter, qIter) =>
-      val qs = qIter.toArray
+      val qs = qIter.map { case (_, qid, qv) => (qid, qv) }.toArray
       if (qs.isEmpty) Iterator.empty
-      else {
-        val heaps = Array.fill(qs.length)(new TopK(coarseK))
-        val kernel = Distances.distance(m) _
-        TopK.scanBlocked(dIter.map { case (_, id, v) => (id, v) }, qs.map(_._3), heaps, kernel)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (cdist, id) => (qs(qi)._2, id, cdist) }
-        }
-      }
+      else scanHeaps(qs, dIter.map { case (_, id, v) => (id, v) }, coarseK, Distances.distance(m) _)
     }.toDF("qid", "id", "cdist")
     val cdeduped = if (dedup) coarseCands.dropDuplicates("qid", "id") else coarseCands
     val w1 = Window.partitionBy("qid").orderBy(col("cdist"), col("id"))
@@ -229,8 +218,7 @@ object Knn {
       .join(queries.select(col("qid").cast("long"), col("qvec")), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
     val rescored = if (dedup) rescoredRaw.dropDuplicates("qid", "id") else rescoredRaw
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(rescored, k)
   }
 
   /** [[matryoshka]] with a DataFrame query side — the standalone
@@ -262,14 +250,13 @@ object Knn {
       .join(cand, Seq("id"))
       .join(queries.select(col("qid").cast("long"), col("qvec")), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(rescored, k)
   }
 
   /** Exact kNN via per-partition bounded heaps: ONE pass over the data
-    * computes all query heaps per partition (`mapPartitions`), emitting only
-    * k candidates per (partition, query). The global merge ranks the k·P·Q
-    * candidate rows — equivalent to `storage/dataset.go:349`'s
+    * computes all query heaps per partition ([[scanner]]), emitting only
+    * k candidates per (partition, query). The global merge ([[topK]]) ranks
+    * the k·P·Q candidate rows — equivalent to `storage/dataset.go:349`'s
     * sort-and-truncate over per-partition results. Hash-matches
     * [[bruteForce]] by construction (same distance kernel, same tie-break).
     */
@@ -280,26 +267,44 @@ object Knn {
       k: Int,
       metric: String = "euclidean"): DataFrame = {
     import spark.implicits._
-    val m = Distances.metricId(metric)
-    val bc = spark.sparkContext.broadcast(queries)
-
     val candidates = data
       .select(col("id").cast("long"), col("vector").cast("array<float>"))
       .as[(Long, Array[Float])]
-      .mapPartitions { iter =>
-        val qs = bc.value
-        val heaps = Array.fill(qs.length)(new TopK(k))
-        // exact double element-ordered kernel (hash-matches the oracle
-        // formulation); blocked scan keeps the query set out of the
-        // per-row cache path (TopK.scanBlocked) without touching results
-        val kernel = Distances.distance(m) _
-        TopK.scanBlocked(iter, qs.map(_._2), heaps, kernel)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (dist, id) => (qs(qi)._1, id, dist) }
-        }
-      }
+      .mapPartitions(scanner(spark, queries, k, metric))
       .toDF("qid", "id", "dist")
+    topK(candidates, k)
+  }
 
+  /** The scan [[partitioned]] runs on each partition: one bounded heap per
+    * broadcast query over the partition's (id, vector) rows, emitted as
+    * (qid, id, dist). Exact double element-ordered kernel (hash-matches the
+    * oracle formulation); the blocked scan keeps the query set out of the
+    * per-row cache path (TopK.scanBlocked) without touching results.
+    */
+  private[graft] def scanner(
+      spark: SparkSession,
+      queries: Array[(Long, Array[Float])],
+      k: Int,
+      metric: String): Iterator[(Long, Array[Float])] => Iterator[(Long, Long, Double)] = {
+    val m = Distances.metricId(metric)
+    val bc = spark.sparkContext.broadcast(queries)
+    rows => scanHeaps(bc.value, rows, k, Distances.distance(m) _)
+  }
+
+  /** One bounded heap per query over `rows`, emitted as (qid, id, dist). */
+  private def scanHeaps(qs: Array[(Long, Array[Float])], rows: Iterator[(Long, Array[Float])],
+      k: Int, kernel: (Array[Float], Array[Float]) => Double): Iterator[(Long, Long, Double)] = {
+    val heaps = Array.fill(qs.length)(new TopK(k))
+    TopK.scanBlocked(rows, qs.map(_._2), heaps, kernel)
+    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+      h.sorted.iterator.map { case (dist, id) => (qs(qi)._1, id, dist) }
+    }
+  }
+
+  /** The global merge of (qid, id, dist) candidates: per query the k
+    * nearest, ties broken by id, numbered 1..k in `rank`.
+    */
+  private[graft] def topK(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
     candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
@@ -331,6 +336,18 @@ object Knn {
       queries: DataFrame,
       k: Int,
       metric: String = "euclidean",
+      queryBlock: Int = 1 << 16): DataFrame =
+    topK(candidatesDF(data, queries, k, metric, queryBlock), k)
+
+  /** The per-partition half of [[partitionedDF]]: (qid, id, dist) rows, at
+    * most k per (partition, query) — a complete candidate set for any
+    * k-merge with other candidate sources.
+    */
+  private[graft] def candidatesDF(
+      data: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      metric: String,
       queryBlock: Int = 1 << 16): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
@@ -349,16 +366,8 @@ object Knn {
       .partitionBy(new org.apache.spark.HashPartitioner(p))
       .values
 
-    val candidates = dataRdd.zipPartitions(qRep) { (dIter, qIter) =>
+    dataRdd.zipPartitions(qRep) { (dIter, qIter) =>
       val kernel = Distances.distance(m) _
-      def scanBlock(qs: Array[(Long, Array[Float])],
-          rows: Iterator[(Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-        val heaps = Array.fill(qs.length)(new TopK(k))
-        TopK.scanBlocked(rows, qs.map(_._2), heaps, kernel)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (dist, id) => (qs(qi)._1, id, dist) }
-        }
-      }
       // one grouped() pass owns qIter end to end — Iterator.take's contract
       // says the source must be discarded after use, so peeking the first
       // block via take-then-reuse is unspecified behavior
@@ -367,15 +376,12 @@ object Knn {
       else {
         val first = blocks.next()
         // hasNext buffers at most one more query block — same memory bound
-        if (!blocks.hasNext) scanBlock(first, dIter) // single block: stream the data
+        if (!blocks.hasNext) scanHeaps(first, dIter, k, kernel) // single block: stream the data
         else {
           val items = dIter.toArray // multi-block: one partition-sized buffer, re-scanned per block
-          (Iterator.single(first) ++ blocks).flatMap(qs => scanBlock(qs, items.iterator))
+          (Iterator.single(first) ++ blocks).flatMap(qs => scanHeaps(qs, items.iterator, k, kernel))
         }
       }
     }.toDF("qid", "id", "dist")
-
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 }

@@ -115,16 +115,17 @@ object StreamingOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(applyOps)
   }
 
-  /** Cross-batch version store for maintenance sinks: folds the op stream
-    * through [[latestVectorState]] and re-emits every touched id's CURRENT
-    * state as an effective op. A stale version arriving in a LATER
-    * micro-batch re-emits the stored newer state instead of the stale
-    * vector, so downstream index maintenance ([[hnswMaintenanceSink]])
-    * is idempotent against out-of-order delivery across batches — the
-    * sink's own latest-wins window only covers reordering INSIDE one
-    * batch. Compose as
-    * `versionedOps(spark, ops).writeStream.outputMode("update")
-    *   .foreachBatch(hnswMaintenanceSink(...))`.
+  /** Cross-batch version store: folds the op stream through
+    * [[latestVectorState]] and re-emits every touched id's CURRENT state
+    * as an effective op. A stale version arriving in a LATER micro-batch
+    * re-emits the stored newer state instead of the stale vector, so a
+    * consumer that applies ops in arrival order only ever sees current
+    * state. The maintained-index sinks ([[ivfMaintenanceSink]],
+    * [[hnswDeltaMaintenanceSink]], …) keep a versioned delta log, and
+    * their views' latest-wins rule lets a stale version lose across
+    * batches with or without this stage (the re-emitted rows dedupe).
+    * Compose as `versionedOps(spark, ops).writeStream.outputMode("update")
+    *   .foreachBatch(sink)`.
     */
   def versionedOps(spark: SparkSession, ops: Dataset[VectorOp]): Dataset[VectorOp] = {
     import spark.implicits._
@@ -764,44 +765,6 @@ object StreamingOps {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** `foreachBatch` sink that maintains persisted per-partition HNSW
-    * graphs from a stream of [[VectorOp]] mutations: upserts are appended
-    * (existing ids are removed first — HNSW insert is add-only), removes
-    * tombstone. The continuous version of the reference's online
-    * BatchInsert/BatchRemove into partition indexes.
-    */
-  def hnswMaintenanceSink(
-      indexDir: String,
-      numPartitions: Int,
-      config: graft.hnsw.HnswConfig = graft.hnsw.HnswConfig()): (Dataset[VectorOp], Long) => Unit = { (batch, _) =>
-    val spark = batch.sparkSession
-    // fully distributed routing — the batch never lands on the driver, so a
-    // burst micro-batch is bounded by executor memory, not driver memory
-    val ops = batch.toDF().persist()
-    try {
-      // every touched id is removed first: HNSW insert is add-only, so a
-      // re-upsert must tombstone the old vertex before the new one lands
-      graft.hnsw.HnswSpark.removeAndSave(
-        spark, ops.select("id").distinct(), indexDir, numPartitions)
-      // latest version per id wins WITHIN the micro-batch. Cross-batch
-      // ordering is the source's responsibility (the reference's
-      // BatchInsert likewise applies batches in arrival order without a
-      // version store); pair with [[latestVectorState]] upstream when the
-      // stream can deliver stale versions across batches.
-      // secondary keys make equal-version ties deterministic across runs
-      // (op, then a stable hash of the payload)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id")
-        .orderBy(col("version").desc, col("op"), xxhash64(col("vector")))
-      val upserts = ops
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("op") === "upsert")
-        .select("id", "vector")
-      graft.hnsw.HnswSpark.appendAndSave(spark, upserts, indexDir, numPartitions,
-        config = config)
-    } finally ops.unpersist()
-  }
-
   /** Open the delta log of [[ivfMaintenanceSink]] and
     * [[ivfPqMaintenanceSink]] with its quantizer sidecars (centroids +
     * meta) as the fingerprint: write them if the directory is fresh,
@@ -911,63 +874,160 @@ object StreamingOps {
     }
   }
 
-  /** Reconstruct the CURRENT assignment view of an [[ivfMaintenanceSink]]
-    * directory: per id keep only the highest-version delta rows (a spilled
-    * upsert keeps all its same-version cell rows), drop any id whose
-    * winning version carries a tombstone (remove beats upsert on an exact
-    * version tie — the conservative read of a malformed stream; a
-    * [[versionedOps]]-fed sink never produces one), and dedupe re-emitted
-    * rows (the version store re-emits current state whenever an id is
-    * touched). Output (id, cell, vector) — feed it straight to
-    * [[graft.knn.Ivf.search]]/[[graft.knn.Ivf.searchDF]] with the
-    * directory's centroids.
+  // ------------------------------------------- maintained vector index views
+
+  /** One resolution of a maintained vector index's delta log (IVF, IVF-PQ
+    * and HNSW): each id's winning rows under [[MaintainedView.latestWins]].
+    * Every reader, gauge, compaction and retrain takes one, resolved once
+    * per call; a call that uses the winners twice runs on it [[cached]],
+    * and the cache never outlives the call. `rows` keeps tombstones
+    * (compaction must persist them, or a post-compaction stale upsert
+    * would resurrect the removed vector) and HNSW compaction guards.
     */
-  /** Each id's winning delta rows: one shuffle on id — rank() (not
-    * row_number: a spilled upsert's same-version cell rows must ALL
-    * survive) over (version desc, op asc) puts the winning version first
-    * with 'remove' beating 'upsert' on an exact version tie; re-emitted
-    * identical rows dedupe by (id, cell, op). Tombstone winners are KEPT
-    * here — [[ivfMaintainedState]] filters them, [[compactIvfMaintained]]
-    * must persist them (dropping a tombstone would let a post-compaction
-    * stale upsert resurrect the removed vector).
-    */
-  private def latestDeltaRows(spark: SparkSession, indexDir: String,
-      asOfVersion: Option[Long] = None): DataFrame = {
-    val delta = ivfLog(spark, indexDir).read("delta").getOrElse(throw new IllegalStateException(
-      s"maintained IVF delta log at $indexDir/delta has no committed batch — nothing to serve"))
-    val scoped = asOfVersion match {
-      case None => delta
-      case Some(v) =>
-        // Compaction collapses history to each id's winning rows: any id
-        // mutated after `v` has lost its at-`v` state once those winners
-        // fold into `batch=compacted`. The newest compacted version is
-        // therefore the time-travel horizon — at or above it every
-        // compacted winner already satisfies version <= v (exact read);
-        // below it the read would silently miss overwritten or removed
-        // state, so it must fail loudly instead. (The partition column is
-        // int-inferred while no compacted batch exists — the string cast
-        // makes the filter well-typed in both layouts.)
-        val floor = delta.filter(col("batch").cast("string") === "compacted")
-          .agg(max(col("version"))).head().get(0)
-        if (floor != null) require(v >= floor.asInstanceOf[Long],
-          s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
-            "below the newest compacted version was collapsed by compactIvfMaintained and " +
-            "cannot be replayed; keep the delta log un-compacted as far back as reads need")
-        delta.filter(col("version") <= v)
+  private[streaming] final class MaintainedView private (val rows: DataFrame) {
+    private def has(c: String) = rows.columns.contains(c)
+
+    /** The winners the delta serves itself: all but compaction guards. */
+    def overriding: DataFrame = if (has("guard")) rows.filter(!col("guard")) else rows
+
+    def live: DataFrame = overriding.filter(col("op") === "upsert")
+
+    /** The live rows as (id, cell, vector) — the input
+      * [[graft.knn.Ivf.search]] takes with the directory's centroids.
+      */
+    def state: DataFrame = live.select(col("id"), col("cell").cast("int"), col("vector"))
+
+    /** [[state]] plus `pq_codes` — the input [[graft.knn.Pq.search]] takes;
+      * a log without codes fails analysis.
+      */
+    def pqState: DataFrame =
+      live.select(col("id"), col("cell").cast("int"), col("vector"), col("pq_codes"))
+
+    /** (id, op) of every overriding winner, on the driver: bounded by the
+      * ids mutated since the last compaction, not by the index.
+      */
+    def overrides: Array[(Long, String)] = {
+      val spark = rows.sparkSession
+      import spark.implicits._
+      overriding.select(col("id").cast("long"), col("op")).as[(Long, String)].collect()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("version").desc, col("op").asc)
-    scoped
-      .withColumn("__rk", rank().over(w))
-      .filter(col("__rk") === 1)
-      .drop("__rk")
-      .dropDuplicates("id", "cell", "op")
+
+    /** [[overrides]] together with the (qid, id, dist) candidates `scan`
+      * finds among the live rows, in ONE pass over the view: each task
+      * streams its partition's live rows through `scan` and records only
+      * the (id, op) of every winner it passes, so the delta resolves once
+      * without a cache and task memory holds ids, not vectors.
+      */
+    def overridesWith(scan: Iterator[(Long, Array[Float])] => Iterator[(Long, Long, Double)])
+        : (Array[(Long, String)], Array[(Long, Long, Double)]) = {
+      val spark = rows.sparkSession
+      import spark.implicits._
+      val parts = overriding
+        .select(col("id").cast("long"), col("op"), col("vector").cast("array<float>"))
+        .as[(Long, String, Array[Float])]
+        .mapPartitions { it =>
+          val ids = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+          val live = it.flatMap { case (id, op, v) =>
+            ids += ((id, op))
+            if (op == "upsert") Iterator.single((id, v)) else Iterator.empty
+          }
+          val found = scan(live).toArray
+          live.foreach(_ => ()) // a scan that stops early still records every winner
+          Iterator.single((ids.toArray, found))
+        }
+        .collect()
+      (parts.flatMap(_._1), parts.flatMap(_._2))
+    }
+
+    /** `f` over this view cached, released when `f` returns. */
+    def cached[T](f: MaintainedView => T): T = {
+      val c = new MaintainedView(rows.persist())
+      try f(c) finally c.rows.unpersist()
+    }
   }
 
+  private[streaming] object MaintainedView {
+
+    /** Resolve `log`'s `delta` as of mutation version `asOf` (inclusive;
+      * None = the current view); None while no batch is committed.
+      *
+      * Compaction collapses history to each id's winning rows: any id
+      * mutated after `v` has lost its at-`v` state once those winners fold
+      * into `batch=compacted`. The newest compacted version is therefore
+      * the time-travel horizon — at or above it every compacted winner
+      * already satisfies version <= v (an exact read); below it the read
+      * would silently miss overwritten or removed state, so it is refused,
+      * naming the log's compaction call. (The partition column is
+      * int-inferred while no compacted batch exists — the string cast
+      * makes the filter well-typed in both layouts.)
+      */
+    def open(log: BatchLog, asOf: Option[Long] = None): Option[MaintainedView] =
+      log.read("delta").map { delta =>
+        val scoped = asOf.fold(delta) { v =>
+          val floor = delta.filter(col("batch").cast("string") === "compacted")
+            .agg(max(col("version"))).head().get(0)
+          if (floor != null) require(v >= floor.asInstanceOf[Long],
+            s"as-of version $v predates the compaction horizon $floor of ${log.root} — history " +
+              s"below the newest compacted version was collapsed by ${log.resume.mkString} and " +
+              "cannot be replayed; keep the delta log un-compacted as far back as reads need")
+          delta.filter(col("version") <= v)
+        }
+        new MaintainedView(latestWins(scoped, "id"))
+      }
+
+    /** The one latest-wins rule of every versioned delta log (IVF, IVF-PQ,
+      * HNSW and BM25): per `key`, rank over (version desc, op asc, guard
+      * desc, payload hash asc, batch asc), keep rank 1, then drop
+      * re-emitted duplicates per (key, cell).
+      *  - 'remove' beats 'upsert' on an exact version tie: the conservative
+      *    read of a malformed stream (a [[versionedOps]]-fed sink never
+      *    produces one).
+      *  - A compaction guard beats a replayed row of its version: both are
+      *    correct (the guard serves the id from base, the replay from the
+      *    delta with the identical vector), and the guard keeps replays
+      *    after a compaction from growing the override set.
+      *  - Equal-version upserts with different payloads (the same
+      *    (id, version) delivered twice with different vectors or texts)
+      *    resolve to the lowest payload hash, in every index alike, so an
+      *    id never serves two payloads. Where the payload is null (a
+      *    codes-only PQ log stores no vector) the earliest delivering batch
+      *    wins.
+      *
+      * The payload is whichever of `vector`, `text_hash` the log holds —
+      * never `pq_codes`: residual codes encode vector − centroid, so they
+      * differ per cell. Every tie-break column is one a spilled delivery's
+      * replicas share, so all its cell rows survive (rank, not
+      * row_number). A log without `guard` reads it as false, one without
+      * `cell` as one cell, one without `batch` as one batch.
+      */
+    def latestWins(log: DataFrame, key: String): DataFrame = {
+      def has(c: String) = log.columns.contains(c)
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(key).orderBy(
+        Seq(col("version").desc, col("op").asc,
+          (if (has("guard")) col("guard") else lit(false)).desc,
+          xxhash64(Seq("vector", "text_hash").filter(has).map(col): _*).asc) ++
+          Seq("batch").filter(has).map(col(_).cast("string").asc): _*)
+      log.withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
+        .dropDuplicates(key +: Seq("cell").filter(has))
+    }
+  }
+
+  /** The view of an [[ivfMaintenanceSink]] or [[ivfPqMaintenanceSink]]
+    * directory; a log with no committed batch is refused.
+    */
+  private def ivfView(spark: SparkSession, indexDir: String, asOf: Option[Long] = None): MaintainedView =
+    MaintainedView.open(ivfLog(spark, indexDir), asOf).getOrElse(throw new IllegalStateException(
+      s"maintained IVF delta log at $indexDir/delta has no committed batch — nothing to serve"))
+
+  /** The CURRENT assignment of an [[ivfMaintenanceSink]] directory: each
+    * live id's winning rows (a spilled upsert keeps all its cell rows) as
+    * (id, cell, vector) — plus `pq_codes` in an [[ivfPqMaintenanceSink]]
+    * directory. An id whose winning version carries a tombstone is dropped.
+    * Feed it straight to [[graft.knn.Ivf.search]]/[[graft.knn.Ivf.searchDF]]
+    * with the directory's centroids.
+    */
   def ivfMaintainedState(spark: SparkSession, indexDir: String): DataFrame =
-    latestDeltaRows(spark, indexDir)
-      .filter(col("op") === "upsert")
-      .select(col("id"), col("cell").cast("int"), col("vector"))
+    ivfView(spark, indexDir).state
 
   /** TIME-TRAVEL view of a maintained IVF index: the assignment as of
     * mutation version `asOfVersion` (inclusive) — the delta log is an
@@ -975,24 +1035,22 @@ object StreamingOps {
     * compaction horizon reconstructs exactly: filter the log to
     * version <= asOfVersion, then the same latest-wins resolution the
     * current view uses. Reads BELOW the horizon fail loudly (compaction
-    * collapsed that history; see [[latestDeltaRows]]). Reproducible
+    * collapsed that history; see [[MaintainedView.open]]). Reproducible
     * evaluation is the point: "which vectors did the index serve when
     * run X queried it" stays answerable after the corpus moves on.
     */
   def ivfMaintainedStateAsOf(spark: SparkSession, indexDir: String, asOfVersion: Long): DataFrame =
-    latestDeltaRows(spark, indexDir, Some(asOfVersion))
-      .filter(col("op") === "upsert")
-      .select(col("id"), col("cell").cast("int"), col("vector"))
+    ivfView(spark, indexDir, Some(asOfVersion)).state
 
   /** Compact an [[ivfMaintenanceSink]] delta log to each id's winning rows
-    * (upserts AND tombstones — see [[latestDeltaRows]]): read cost of the
-    * maintained view stops growing with mutation history. Run while the
-    * maintenance stream is STOPPED (the [[BatchLog]] swap and a concurrent
-    * micro-batch append race); re-running it resumes an interrupted swap.
+    * (upserts AND tombstones): read cost of the maintained view stops
+    * growing with mutation history. Run while the maintenance stream is
+    * STOPPED (the [[BatchLog]] swap and a concurrent micro-batch append
+    * race); re-running it resumes an interrupted swap.
     */
   def compactIvfMaintained(spark: SparkSession, indexDir: String): Unit =
     ivfLog(spark, indexDir).compact("delta") { seg =>
-      latestDeltaRows(spark, indexDir)
+      ivfView(spark, indexDir).rows
         .drop("batch") // discovered partition column; compacted history is one pseudo-batch
         .repartition(col("cell")) // one writer per cell: files ≈ cells, not tasks × cells
         .write.partitionBy("cell").parquet(seg)
@@ -1046,13 +1104,13 @@ object StreamingOps {
     * fully narrow. Returns 0.0 for an empty view.
     */
   def ivfMaintainedDrift(spark: SparkSession, indexDir: String): Double =
-    ivfMaintainedQuantStats(spark, indexDir, "drift-measured").drift
+    ivfMaintainedQuantStats(spark, indexDir, "drift-measured", ivfView(spark, indexDir)).drift
 
-  /** What one pass over a maintained view measured against the quantizer
-    * it loaded (`meta`): ids whose nearest cell is not stored, summed
+  /** What one pass over a maintained view measured against the directory's
+    * quantizer: ids whose nearest cell is not stored, summed
     * nearest-centroid distance, live ids.
     */
-  private case class QuantStats(meta: graft.knn.Ivf.IvfMeta, drifted: Long, sumDist: Double, n: Long) {
+  private case class QuantStats(drifted: Long, sumDist: Double, n: Long) {
     def drift: Double = if (n == 0) 0.0 else drifted.toDouble / n
     def meanErr: Double = if (n == 0) 0.0 else sumDist / n
   }
@@ -1074,28 +1132,19 @@ object StreamingOps {
     * nearest centroid ([[nearestCentroid]]), aggregated to [[QuantStats]].
     */
   private def ivfMaintainedQuantStats(
-      spark: SparkSession, indexDir: String, what: String,
-      winnersOpt: Option[DataFrame] = None): QuantStats = {
+      spark: SparkSession, indexDir: String, what: String, view: MaintainedView): QuantStats = {
     import spark.implicits._
     val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     requireFullPrecisionView(spark, indexDir, what)
     val m = graft.core.Distances.metricId(meta.metric)
     val bc = spark.sparkContext.broadcast(centroids)
-    // a caller holding the latest-wins rows already (retrainIfQuantDrifted
-    // shares one persisted scan between this gauge and the retrain it may
-    // fire) passes them in; otherwise resolve from the log
-    val state = winnersOpt
-      .map(_.filter(col("op") === "upsert")
-        .select(col("id"), col("cell").cast("int"), col("vector")))
-      .getOrElse(ivfMaintainedState(spark, indexDir))
-    val typed = state
+    val typed = view.state
       .select(col("id").cast("long"), col("cell").cast("int"), col("vector").cast("array<float>"))
       .as[(Long, Int, Array[Float])]
     // spill == 1 ⇒ the latest-wins view holds EXACTLY one stored cell row
-    // per live id (the sink's per-batch (id, version) dedupe assigns one
-    // vector, and the view dedupes re-emitted rows), so the per-id argmin
-    // needs no id-keyed regroup — one NARROW pass, the id shuffle the typed
-    // groupByKey below pays (its lambda key is opaque to the planner, so
+    // per live id (it keeps one payload per id and dedupes re-emitted rows
+    // per (id, cell)), so the per-id argmin needs no id-keyed regroup —
+    // one NARROW pass, the id shuffle the typed groupByKey below pays (its lambda key is opaque to the planner, so
     // the view's window partitioning is never reused) disappears. At corpus
     // scale that is a full pass over the index saved per drift gauge.
     // spill > 1 keeps the grouped path: replicas must reconcile per id.
@@ -1117,7 +1166,7 @@ object StreamingOps {
     val agg = perId.toDF("drifted", "dist").agg(
       coalesce(sum("drifted"), lit(0L)),
       coalesce(sum("dist"), lit(0.0)), count(lit(1))).head()
-    QuantStats(meta, agg.getLong(0), agg.getDouble(1), agg.getLong(2))
+    QuantStats(agg.getLong(0), agg.getDouble(1), agg.getLong(2))
   }
 
   /** Mean nearest-centroid distance over the maintained view's live ids —
@@ -1131,7 +1180,7 @@ object StreamingOps {
     * composed gate. 0.0 for an empty view.
     */
   def ivfMaintainedQuantError(spark: SparkSession, indexDir: String): Double =
-    ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured").meanErr
+    ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", ivfView(spark, indexDir)).meanErr
 
   /** Record the CURRENT mean quantization error as the reference a later
     * [[retrainIfQuantDrifted]] compares against — call once after the
@@ -1221,24 +1270,19 @@ object StreamingOps {
       throw new IllegalStateException(
         s"no quant_ref sidecar under $indexDir — record one with markIvfQuantReference " +
           "after the initial load (comparing against nothing would silently never retrain)"))
-    // resolve the latest-wins view ONCE: the gauge and (when the gate
-    // fires) the retrain share this persisted scan instead of each
-    // re-reading the delta log — at corpus scale one full pass saved per
-    // fired gate
-    val winners = latestDeltaRows(spark, indexDir).persist()
-    try {
-      val stats = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", Some(winners))
-      val cur = stats.meanErr
+    // the gauge and (when the gate fires) the retrain share one cached
+    // view instead of each re-reading the delta log — at corpus scale one
+    // full pass saved per fired gate
+    ivfView(spark, indexDir).cached { view =>
+      val cur = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", view).meanErr
       val ratio = if (ref == 0.0) { if (cur == 0.0) 0.0 else Double.PositiveInfinity }
         else cur / ref
-      if (ratio > maxErrRatio) {
-        // the retrain re-baselines quant_ref (the sidecar existed — we
-        // just loaded it — so the rebuilt directory carries a new one)
-        retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation,
-          pq = None, knownMeta = Some(stats.meta), knownWinners = Some(winners))
-        (ratio, true)
-      } else (ratio, false)
-    } finally winners.unpersist()
+      // the retrain re-baselines quant_ref (the sidecar existed — we just
+      // loaded it — so the rebuilt directory carries a new one)
+      if (ratio > maxErrRatio)
+        retrain(spark, indexDir, view, c, iterations, seed, sampleFraction, refitRotation, pq = None)
+      (ratio, ratio > maxErrRatio)
+    }
   }
 
   /** Close the drift loop [[ivfMaintainedDrift]] measures: re-train the
@@ -1263,8 +1307,30 @@ object StreamingOps {
       iterations: Int = 2,
       seed: Long = 42L,
       sampleFraction: Double = 1.0): Array[Array[Float]] =
-    retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation = false,
-      pq = Some(false))
+    retrainOrResume(spark, indexDir)(
+      retrain(spark, indexDir, _, c, iterations, seed, sampleFraction, refitRotation = false,
+        pq = Some(false)))
+
+  /** A public retrain's first step: when `indexDir` is gone but
+    * `<indexDir>.retrain` holds its meta marker, an earlier retrain died
+    * between delete and rename — finish the rename and return the
+    * swapped-in centroids. Otherwise run `retrain` over the directory's
+    * cached view.
+    */
+  private def retrainOrResume(spark: SparkSession, indexDir: String)(
+      retrain: MaintainedView => Array[Array[Float]]): Array[Array[Float]] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val tmpDir = s"$indexDir.retrain"
+    if (graft.io.HadoopIO.exists(indexDir, hconf)) ivfView(spark, indexDir).cached(retrain)
+    else {
+      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
+        graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
+        s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
+          "IVF directory (or an unrecoverable state)")
+      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
+      graft.knn.Ivf.loadQuantizer(spark, indexDir)._2
+    }
+  }
 
   /** The one retrain of a maintained IVF directory, raw or PQ — the
     * directory decides: the PQ steps run only when it holds a
@@ -1273,12 +1339,11 @@ object StreamingOps {
     * `storage/dataset.go:238-348`).
     *
     * Complete-then-swap protocol:
-    *  1. Resume: when `indexDir` is gone but `<indexDir>.retrain` holds its
-    *     meta marker, an earlier retrain died between delete and rename —
-    *     finish the rename and return the swapped-in centroids. Otherwise
-    *     a leftover `<indexDir>.retrain` is a stale partial build: drop it.
-    *  1. Resolve the live view ONCE (one row per live id, persisted) and
-    *     refuse an empty one.
+    *  1. Resume: a public retrain first finishes an interrupted swap
+    *     ([[retrainOrResume]]). A leftover `<indexDir>.retrain` is a stale
+    *     partial build: drop it.
+    *  1. Take the live rows of the caller's (cached) view, one row per
+    *     live id, persisted; refuse an empty view.
     *  1. Train the centroids on it (PQ: after the codebook and rotation
     *     steps below), assign every live vector, and keep each tombstone
     *     winner with its version, so a stale post-retrain upsert still
@@ -1303,36 +1368,24 @@ object StreamingOps {
     * centroids (residual codes depend on them).
     *
     * `pq` = Some(kind) is a public entry point that serves only that kind
-    * of directory; None lets the directory decide. A drift gate passes the
-    * quantizer meta it already loaded (`knownMeta`) and, when it holds one,
-    * its persisted latest-wins view (`knownWinners`; the caller owns that
-    * persist).
+    * of directory; None lets the directory decide (the drift gates;
+    * [[retrainIfQuantDrifted]] passes the view its gauge measured).
     */
   private def retrain(
       spark: SparkSession,
       indexDir: String,
+      view: MaintainedView,
       c: Int,
       iterations: Int,
       seed: Long,
       sampleFraction: Double,
       refitRotation: Boolean,
-      pq: Option[Boolean],
-      knownMeta: Option[graft.knn.Ivf.IvfMeta] = None,
-      knownWinners: Option[DataFrame] = None): Array[Array[Float]] = {
+      pq: Option[Boolean]): Array[Array[Float]] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val tmpDir = s"$indexDir.retrain"
-
-    if (!graft.io.HadoopIO.exists(indexDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
-        s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
-          "IVF directory (or an unrecoverable state)")
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      return graft.knn.Ivf.loadQuantizer(spark, indexDir)._2
-    }
     graft.io.HadoopIO.delete(tmpDir, hconf)
 
-    val meta = knownMeta.getOrElse(graft.knn.Ivf.loadQuantizer(spark, indexDir)._1)
+    val meta = graft.knn.Ivf.loadQuantizer(spark, indexDir)._1
     val flags = loadIvfPqFlags(spark, indexDir)
     flags match {
       case None =>
@@ -1351,9 +1404,8 @@ object StreamingOps {
             "trade of the m-byte tier)")
     }
     val stored = flags.map(f => (f, graft.knn.Pq.loadCodebooks(spark, indexDir)))
-    val winners = knownWinners.getOrElse(latestDeltaRows(spark, indexDir).persist())
     // one row per live id (spill replicas share the vector and version)
-    val liveOne = winners.filter(col("op") === "upsert").dropDuplicates("id")
+    val liveOne = view.live.dropDuplicates("id")
       .select(col("id").cast("long"), col("vector").cast("array<float>"), col("version"))
       .persist()
     var refitPersisted: Option[DataFrame] = None
@@ -1396,7 +1448,7 @@ object StreamingOps {
       val upserts = rows
         .select(Seq(col("id"), col("cell"), col("vector")) ++ codes.map(col) ++
           Seq(col("version"), lit("upsert").as("op")): _*)
-      val tombstones = winners.filter(col("op") === "remove")
+      val tombstones = view.rows.filter(col("op") === "remove")
         .select(Seq(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector")) ++
           codes.map(lit(null).cast("binary").as(_)) ++ Seq(col("version"), col("op")): _*)
       BatchLog.writeWhole(s"$tmpDir/delta", "retrained", hconf)(seg =>
@@ -1434,7 +1486,6 @@ object StreamingOps {
     } finally {
       refitPersisted.foreach(_.unpersist())
       liveOne.unpersist()
-      if (knownWinners.isEmpty) winners.unpersist()
     }
   }
 
@@ -1457,12 +1508,12 @@ object StreamingOps {
       refitRotation: Boolean = false,
       sampleFraction: Double = 1.0): (Double, Boolean) = {
     require(threshold >= 0, s"threshold must be non-negative, got $threshold")
-    val stats = ivfMaintainedQuantStats(spark, indexDir, "drift-measured")
-    if (stats.drift > threshold) {
-      retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation,
-        pq = None, knownMeta = Some(stats.meta))
-      (stats.drift, true)
-    } else (stats.drift, false)
+    // the quiet path (the common one) measures on an uncached view; only a
+    // firing gate resolves the view again, cached, for the retrain
+    val drift = ivfMaintainedQuantStats(spark, indexDir, "drift-measured", ivfView(spark, indexDir)).drift
+    if (drift > threshold) ivfView(spark, indexDir).cached(
+      retrain(spark, indexDir, _, c, iterations, seed, sampleFraction, refitRotation, pq = None))
+    (drift, drift > threshold)
   }
 
   /** Search an [[ivfMaintenanceSink]] directory, self-configured from its
@@ -1484,9 +1535,7 @@ object StreamingOps {
     val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     graft.knn.Ivf.requireQueryDim(queries, meta.dim)
     requireFullPrecisionView(spark, indexDir, "searched at full precision")
-    val view = asOf.map(ivfMaintainedStateAsOf(spark, indexDir, _))
-      .getOrElse(ivfMaintainedState(spark, indexDir))
-    graft.knn.Ivf.search(spark, view, centroids,
+    graft.knn.Ivf.search(spark, ivfView(spark, indexDir, asOf).state, centroids,
       queries, k, nprobe, meta.metric, dedup = meta.spill > 1)
   }
 
@@ -1518,9 +1567,7 @@ object StreamingOps {
     val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     val checked = graft.knn.Ivf.checkQueryDim(queries, meta.dim)
     requireFullPrecisionView(spark, indexDir, "searched at full precision")
-    val view = asOf.map(ivfMaintainedStateAsOf(spark, indexDir, _))
-      .getOrElse(ivfMaintainedState(spark, indexDir))
-    graft.knn.Ivf.searchDF(view, centroids,
+    graft.knn.Ivf.searchDF(ivfView(spark, indexDir, asOf).state, centroids,
       checked, k, nprobe, meta.metric, dedup = meta.spill > 1)
   }
 
@@ -1664,12 +1711,10 @@ object StreamingOps {
   /** Current view of an [[ivfPqMaintenanceSink]] directory:
     * (id, cell, vector, pq_codes) — `vector` is null throughout when the
     * sink ran codes-only. Same latest-wins / tombstone semantics as
-    * [[ivfMaintainedState]].
+    * [[ivfMaintainedState]]; a directory without codes is refused.
     */
   def ivfPqMaintainedState(spark: SparkSession, indexDir: String): DataFrame =
-    latestDeltaRows(spark, indexDir)
-      .filter(col("op") === "upsert")
-      .select(col("id"), col("cell").cast("int"), col("vector"), col("pq_codes"))
+    ivfView(spark, indexDir).pqState
 
   /** ADC search over a PQ-maintained directory, self-configured from its
     * sidecars (centroids, codebooks, residual flag, spill ⇒ dedupe,
@@ -1700,7 +1745,7 @@ object StreamingOps {
       if (graft.knn.Opq.savedRotation(spark, indexDir))
         graft.knn.Opq.rotateQueries(graft.knn.Opq.loadModel(spark, indexDir), queries)
       else queries
-    val state = ivfPqMaintainedState(spark, indexDir)
+    val state = ivfView(spark, indexDir).pqState
     val metric = graft.core.Distances.Euclidean
     val probed: Map[Long, Array[Int]] = rotQueries.map { case (qid, qv) =>
       qid -> centroids.zipWithIndex
@@ -1740,7 +1785,7 @@ object StreamingOps {
         val model = graft.knn.Opq.loadModel(spark, indexDir)
         checked0.select(col("qid"), graft.knn.Opq.rotateCol(model, col("qvec")).as("qvec"))
       } else checked0
-    graft.knn.Pq.searchIvfPqDF(ivfPqMaintainedState(spark, indexDir), centroids, cb,
+    graft.knn.Pq.searchIvfPqDF(ivfView(spark, indexDir).pqState, centroids, cb,
       checked, k, nprobe, overscan, residual = flags.residual, rescore = flags.storeVectors)
   }
 
@@ -1776,7 +1821,8 @@ object StreamingOps {
       seed: Long = 42L,
       refitRotation: Boolean = false,
       sampleFraction: Double = 1.0): Array[Array[Float]] =
-    retrain(spark, indexDir, c, iterations, seed, sampleFraction, refitRotation, pq = Some(true))
+    retrainOrResume(spark, indexDir)(
+      retrain(spark, indexDir, _, c, iterations, seed, sampleFraction, refitRotation, pq = Some(true)))
 
   // ------------------------------------------------- HNSW delta maintenance
 
@@ -1817,11 +1863,10 @@ object StreamingOps {
 
   /** `foreachBatch` sink that maintains a persisted HNSW index through an
     * append-only DELTA LOG — the write cost of a micro-batch is the batch,
-    * not the index. [[hnswMaintenanceSink]] (kept as the simple in-place
-    * form) loads and rewrites every touched partition graph per batch:
-    * per-batch I/O is O(index), which dies at 100 TB index size. This sink
-    * mirrors [[ivfMaintenanceSink]]'s shape instead: each batch appends its
-    * latest-wins rows (upserts with vectors, removes as cell-less
+    * not the index. Rewriting every touched partition graph per batch
+    * would cost O(index) I/O per batch, which dies at 100 TB index size;
+    * this sink mirrors [[ivfMaintenanceSink]]'s shape instead: each batch
+    * appends its latest-wins rows (upserts with vectors, removes as cell-less
     * tombstones) under `delta/batch=<id>` and folds the new files into the
     * delta manifest — O(batch) listing, O(batch) bytes. Graph work is
     * deferred to [[compactHnswMaintained]], which folds the delta into the
@@ -1834,9 +1879,10 @@ object StreamingOps {
     * against the passed parameters on restart, mismatch throws), `base/`
     * (per-partition `part-&#42;.hnsw` graphs + manifest; empty until the first
     * compaction), `delta/` (the versioned log + manifest, seeded at batch
-    * 0). Query with [[searchHnswMaintained]]; pair with [[versionedOps]]
-    * upstream for cross-batch stale-version safety (the delta log itself
-    * absorbs within-batch and replay reordering).
+    * 0). Query with [[searchHnswMaintained]]. The versioned log absorbs
+    * within-batch, cross-batch and replay reordering: a stale version
+    * loses to the newer one whichever batch delivered it, with or without
+    * [[versionedOps]] upstream.
     */
   def hnswDeltaMaintenanceSink(
       spark: SparkSession,
@@ -1902,62 +1948,28 @@ object StreamingOps {
     new BatchLog(spark, indexDir, Seq("delta"), "maintained HNSW", Some("compactHnswMaintained"),
       exactlyOnce = false)
 
-  /** Each id's winning HNSW delta row, latest-version-wins: 'remove' beats
-    * 'upsert' on an exact version tie (conservative read of a malformed
-    * stream) and a compaction GUARD row beats a replayed real row of the
-    * same version (both are correct — the guard serves the id from base,
-    * the replay from the delta with the identical vector — the guard is
-    * preferred so replays after compaction don't grow the override set).
-    */
-  private def hnswLatestDeltaRows(spark: SparkSession, indexDir: String,
-      asOfVersion: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    hnswLog(spark, indexDir).read("delta") match {
-      case None =>
-        Seq.empty[(Long, Array[Float], Long, String, Boolean)]
-          .toDF("id", "vector", "version", "op", "guard")
-      case Some(delta) =>
-        val scoped = asOfVersion match {
-          case None => delta
-          case Some(v) =>
-            // Same horizon rule as [[latestDeltaRows]]: compaction collapses
-            // each id's history to its winning row (a guard or tombstone in
-            // `batch=compacted`), so the newest compacted version is the
-            // time-travel floor — at or above it every compacted winner
-            // already satisfies version <= v and base serves the exact at-v
-            // state; below it overwritten/removed history is gone and the
-            // read must fail loudly. (The partition column is int-inferred
-            // while no compacted batch exists — the string cast keeps the
-            // filter well-typed in both layouts.)
-            val floor = delta.filter(col("batch").cast("string") === "compacted")
-              .agg(max(col("version"))).head().get(0)
-            if (floor != null) require(v >= floor.asInstanceOf[Long],
-              s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
-                "below the newest compacted version was collapsed by compactHnswMaintained and " +
-                "cannot be replayed; keep the delta log un-compacted as far back as reads need")
-            delta.filter(col("version") <= v)
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("id")
-          .orderBy(col("version").desc, col("op").asc, col("guard").desc, xxhash64(col("vector")))
-        scoped
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-          .select("id", "vector", "version", "op", "guard")
-    }
-  }
+  private def hnswMeta(spark: SparkSession, indexDir: String): HnswMaintainedMeta =
+    loadHnswMaintainedMeta(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
 
   /** Search a delta-maintained HNSW directory: base graphs serve every id
     * the delta does not override (compaction guards mark those), the delta's
-    * live vectors are scanned EXACTLY (bounded per-query heaps, one pass),
-    * and the two candidate sets k-merge. The exact delta side means a
+    * live vectors are scanned EXACTLY (bounded per-query heaps, one pass,
+    * [[graft.knn.Knn.scanner]]), and the two candidate sets k-merge
+    * ([[graft.knn.Knn.topK]]). The exact delta side means a
     * freshly-mutated vector is always found at full precision — recall can
     * only degrade toward the base graphs' HNSW recall as the delta empties
     * into base via compaction.
     *
-    * The override-id set is collected to the driver and broadcast: it is
-    * bounded by mutations since the last compaction (compaction cadence is
-    * the knob), NOT by index size — the same contract as the IVF delta
-    * view's read cost.
+    * The view resolves once per call: one query collects its override set
+    * as (id, op) together with the delta's candidates (at most k per query
+    * per partition). The override ids are broadcast to the base search:
+    * the set is bounded by the ids mutated since the last compaction
+    * (compaction cadence is the knob), NOT by index size — the same
+    * contract as the IVF delta view's read cost. The answer (at most k rows
+    * per query; the queries are already on the driver) is materialised, so
+    * the returned DataFrame is a local relation that starts no Spark job
+    * and holds nothing cached.
     *
     * With `asOf = Some(v)` the search serves the index's exact state at
     * mutation version v (inclusive) — the delta log is a full version
@@ -1976,44 +1988,27 @@ object StreamingOps {
       efOverride: Int = 0,
       asOf: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val meta = loadHnswMaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
-    val winners = hnswLatestDeltaRows(spark, indexDir, asOf)
-    val overriding = winners.filter(!col("guard"))
-    val touched = overriding.select(col("id").cast("long")).as[Long].collect()
-    val live = overriding.filter(col("op") === "upsert")
-      .select(col("id").cast("long"), col("vector").cast("array<float>"))
-
-    val baseCandidates = graft.hnsw.HnswSpark.searchSavedExcluding(
-      spark, s"$indexDir/base", queries, k, touched.toSet, efOverride)
-
-    val m = graft.core.Distances.metricId(meta.metric)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val deltaCandidates = live.as[(Long, Array[Float])]
-      .mapPartitions { iter =>
-        val qs = bcQ.value
-        val heaps = Array.fill(qs.length)(new graft.knn.TopK(k))
-        val kernel = graft.core.Distances.distance(m) _
-        graft.knn.TopK.scanBlocked(iter, qs.map(_._2), heaps, kernel)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
-      }
-      .toDF("qid", "id", "dist")
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("dist"), col("id"))
-    baseCandidates.unionByName(deltaCandidates)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val meta = hnswMeta(spark, indexDir)
+    val (overrides, delta) = MaintainedView.open(hnswLog(spark, indexDir), asOf)
+      .fold((Array.empty[(Long, String)], Array.empty[(Long, Long, Double)]))(
+        _.overridesWith(graft.knn.Knn.scanner(spark, queries, k, meta.metric)))
+    val top = graft.knn.Knn.topK(graft.hnsw.HnswSpark.searchSavedExcluding(spark,
+        s"$indexDir/base", queries, k, overrides.map(_._1).toSet, efOverride)
+      .unionByName(spark.sparkContext.parallelize(delta.toSeq, 1).toDF("qid", "id", "dist")), k)
+    spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
   }
 
   /** [[searchHnswMaintained]] with a DataFrame query side — nothing
-    * driver-resident but the (compaction-bounded) override-id set: base
-    * candidates come from query replication against the graph artifacts
-    * ([[graft.hnsw.HnswSpark.searchSavedExcludingDF]]), delta candidates
-    * from the blocked exact scan ([[graft.knn.Knn.partitionedDF]] — its
-    * per-query top-k is already a complete candidate set), k-merged on one
-    * qid window.
+    * driver-resident but the (compaction-bounded) override set, collected
+    * once as (id, op): base candidates come from query replication against
+    * the graph artifacts ([[graft.hnsw.HnswSpark.searchSavedExcludingDF]]),
+    * delta candidates — only when an override is a live upsert — from the
+    * blocked exact scan ([[graft.knn.Knn.candidatesDF]]), k-merged on one
+    * qid window. Unlike the array form this resolves the delta twice when
+    * an override is a live upsert: once for the (id, op) collect, once more
+    * when the lazy result runs. The queries are not on the driver, so the
+    * scan cannot ride the collect, and a cache could not outlive the call
+    * the lazy result leaves.
     */
   def searchHnswMaintainedDF(
       spark: SparkSession,
@@ -2022,25 +2017,13 @@ object StreamingOps {
       k: Int,
       efOverride: Int = 0,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val meta = loadHnswMaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
-    val winners = hnswLatestDeltaRows(spark, indexDir, asOf)
-    val overriding = winners.filter(!col("guard"))
-    val touched = overriding.select(col("id").cast("long")).as[Long].collect()
-    val live = overriding.filter(col("op") === "upsert")
-      .select(col("id").cast("long"), col("vector").cast("array<float>"))
-
-    val baseCandidates = graft.hnsw.HnswSpark.searchSavedExcludingDF(
-      spark, s"$indexDir/base", queries, k, touched.toSet, efOverride)
-    val deltaCandidates =
-      if (live.isEmpty) baseCandidates.limit(0)
-      else graft.knn.Knn.partitionedDF(live, queries, k, meta.metric).select("qid", "id", "dist")
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("dist"), col("id"))
-    baseCandidates.unionByName(deltaCandidates)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val meta = hnswMeta(spark, indexDir)
+    val view = MaintainedView.open(hnswLog(spark, indexDir), asOf)
+    val overrides = view.fold(Array.empty[(Long, String)])(_.overrides)
+    val base = graft.hnsw.HnswSpark.searchSavedExcludingDF(spark, s"$indexDir/base", queries, k,
+      overrides.map(_._1).toSet, efOverride)
+    graft.knn.Knn.topK(view.filter(_ => overrides.exists(_._2 == "upsert")).fold(base)(v =>
+      base.unionByName(graft.knn.Knn.candidatesDF(v.live, queries, k, meta.metric))), k)
   }
 
   /** Fold the delta log into the per-partition base graphs — the one
@@ -2059,14 +2042,14 @@ object StreamingOps {
     * invariant [[compactIvfMaintained]] keeps). Base swaps first; the
     * overlap state (new base + old delta) is idempotent because the fold
     * removes-then-inserts. Re-running it resumes either interrupted swap.
+    * A log with no committed batch has nothing to fold.
     */
   def compactHnswMaintained(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val baseDir = s"$indexDir/base"
     val baseTmp = s"$indexDir/base.compact"
     val log = hnswLog(spark, indexDir)
-    val meta = loadHnswMaintainedMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
+    val meta = hnswMeta(spark, indexDir)
 
     // resume half-done swaps: a missing live dir means the crash fell
     // between its delete and rename, and the tmp was validated complete
@@ -2084,27 +2067,24 @@ object StreamingOps {
     if (log.resumeSwap("delta")) return
     graft.io.HadoopIO.delete(baseTmp, hconf) // stale tmp from an interrupted attempt
 
-    val winners = hnswLatestDeltaRows(spark, indexDir).persist()
-    try {
-      val overriding = winners.filter(!col("guard"))
+    MaintainedView.open(log).foreach(_.cached { view =>
       graft.hnsw.HnswSpark.copyIndexDir(spark, baseDir, baseTmp)
       // remove-then-insert: idempotent, so re-running a crashed compaction
       // over an already-folded base re-lands the identical state
-      graft.hnsw.HnswSpark.removeAndSave(spark, overriding.select("id"), baseTmp,
+      graft.hnsw.HnswSpark.removeAndSave(spark, view.overriding.select("id"), baseTmp,
         meta.numPartitions)
-      graft.hnsw.HnswSpark.appendAndSave(spark,
-        overriding.filter(col("op") === "upsert").select("id", "vector"),
+      graft.hnsw.HnswSpark.appendAndSave(spark, view.live.select("id", "vector"),
         baseTmp, meta.numPartitions, meta.metric, meta.config)
       graft.io.Manifest.validate(baseTmp,
         graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
       graft.io.HadoopIO.delete(baseDir, hconf)
       graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
 
-      log.compact("delta")(seg => winners
+      log.compact("delta")(seg => view.rows
         .select(col("id"), lit(null).cast("array<float>").as("vector"), col("version"),
           col("op"), (col("op") === "upsert").as("guard"))
         .write.parquet(seg))
-    } finally winners.unpersist()
+    })
   }
 
   /** [[ivfMaintainedDeltaRatio]]'s HNSW twin: un-compacted delta bytes
@@ -2260,26 +2240,21 @@ object StreamingOps {
     new BatchLog(spark, indexDir, Seq("delta_post", "delta_docs"), "maintained BM25",
       Some("compactBm25Maintained"), exactlyOnce = false, meta = "bm25_meta")
 
-  /** Each document's winning delta rows (tombstones KEPT — serving filters
+  /** Each document's winning delta rows under the vector views' rule
+    * ([[MaintainedView.latestWins]]; tombstones KEPT — serving filters
     * them, compaction must persist them): one shuffle on doc_id over the
     * manifest-validated delta_docs log; nothing ingested yet is an empty
     * view, not an error.
     */
-  private def bm25DeltaWinners(spark: SparkSession, indexDir: String): DataFrame = {
-    val docs = bm25Log(spark, indexDir).read("delta_docs").getOrElse(
-      return spark.emptyDataset[(Long, Long, String, Long, Long)](
+  private def bm25DeltaWinners(spark: SparkSession, indexDir: String): DataFrame =
+    bm25Log(spark, indexDir).read("delta_docs").fold(
+      spark.emptyDataset[(Long, Long, String, Long, Long)](
         org.apache.spark.sql.Encoders.product[(Long, Long, String, Long, Long)])
-        .toDF("doc_id", "version", "op", "dl", "text_hash"))
-    // text_hash in the order: conflicting same-version upserts from
-    // DIFFERENT batches (a malformed stream) resolve deterministically,
-    // and serving joins the winner's OWN posting rows by the same hash
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id")
-      .orderBy(col("version").desc, col("op").asc, col("text_hash").asc)
-    docs.select("doc_id", "version", "op", "dl", "text_hash")
-      .withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
-      .dropDuplicates("doc_id", "op")
-  }
+        .toDF("doc_id", "version", "op", "dl", "text_hash"))(docs =>
+      // text_hash is the payload: conflicting same-version upserts from
+      // DIFFERENT batches (a malformed stream) resolve deterministically,
+      // and serving joins the winner's OWN posting rows by the same hash
+      MaintainedView.latestWins(docs.select("doc_id", "version", "op", "dl", "text_hash"), "doc_id"))
 
   /** Search a [[bm25MaintenanceSink]] directory: the latest-wins view —
     * base postings for documents no delta winner touched, plus the delta

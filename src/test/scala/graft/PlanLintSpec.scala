@@ -45,6 +45,41 @@ class PlanLintSpec extends SparkTestBase {
     }
   }
 
+  /** Code lines (comment lines dropped) of every main source, keyed by
+    * path under `src/main/scala`.
+    */
+  private def mainSources: Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no ${root.toAbsolutePath}")
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    files.map { f =>
+      root.relativize(f).toString -> java.nio.file.Files.readAllLines(f).asScala.toSeq
+        .filterNot(l => Seq("//", "*", "/*").exists(l.trim.startsWith))
+    }.toMap
+  }
+
+  test("one exact heap-scan core and one maintained delta-log read (source check)") {
+    def scansOutsideKnn(srcs: Map[String, Seq[String]]): Seq[String] =
+      srcs.toSeq.filter { case (path, lines) =>
+        !path.startsWith("graft/knn/") && lines.exists(_.contains("TopK.scanBlocked("))
+      }.map(_._1)
+    def deltaReads(srcs: Map[String, Seq[String]]): Int =
+      srcs("graft/streaming/StreamingOps.scala").map("""\.read\("delta"\)""".r.findAllIn(_).size).sum
+    val srcs = mainSources
+    assert(scansOutsideKnn(srcs) === Nil,
+      "TopK.scanBlocked called outside graft.knn: take candidates from graft.knn.Knn instead")
+    assert(deltaReads(srcs) === 1,
+      "StreamingOps must read a maintained vector delta log in one place (MaintainedView.open)")
+    // the checks see a copy coming back
+    val ops = srcs("graft/streaming/StreamingOps.scala")
+    assert(scansOutsideKnn(srcs + ("graft/streaming/StreamingOps.scala" ->
+      (ops :+ "TopK.scanBlocked(iter, qs, heaps, kernel)"))).nonEmpty)
+    assert(deltaReads(srcs + ("graft/streaming/StreamingOps.scala" ->
+      (ops :+ "hnswLog(spark, dir).read(\"delta\")"))) === 2)
+  }
+
   test("aggregations are partial before the exchange (map-side combine)") {
     Seq("q1_agg", "dedup_exact", "events_window").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString

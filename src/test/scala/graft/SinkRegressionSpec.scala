@@ -7,7 +7,9 @@ import java.nio.file.{Files, Paths}
 
 /** Crash windows of the maintained-index compactions that used to lose
   * committed data silently: a sink restarted onto a torn IVF swap, and a
-  * BM25 compaction that swapped a stale tmp over a newer live log.
+  * BM25 compaction that swapped a stale tmp over a newer live log. Also
+  * the maintained views' shared rules: one payload per id when an
+  * (id, version) upsert arrives twice, and the time-travel horizon.
   */
 class SinkRegressionSpec extends SparkTestBase {
   import spark.implicits._
@@ -174,6 +176,97 @@ class SinkRegressionSpec extends SparkTestBase {
     retrainResume(dir, Seq("centroids", "meta", "pq_books", "pq_maintained", "opq_rot"))(
       () => StreamingOps.retrainIvfPqMaintained(spark, dir, iterations = 1))(
       () => ranked(StreamingOps.searchIvfPqMaintained(spark, dir, query, k = 5, nprobe = 2)))
+  }
+
+  test("one (id, version) upsert arriving twice with different vectors serves one vector, " +
+    "the HNSW view's, and a spilled winner keeps every replica") {
+    // `a` is nearest cell 0, `b` cell 1; batch 0 delivers a, batch 1 b
+    val twice = Seq(VectorOp(7L, "upsert", Array(0.9f, 0.1f), 3),
+      VectorOp(7L, "upsert", Array(0.1f, 0.9f), 3))
+    def feed(sink: (org.apache.spark.sql.Dataset[VectorOp], Long) => Unit): Unit =
+      twice.zipWithIndex.foreach { case (op, b) => sink(Seq(op).toDS(), b.toLong) }
+    val q = Array(1f, 0f)
+    val hnswDir = Files.createTempDirectory("hnsw_twice").toString
+    feed(StreamingOps.hnswDeltaMaintenanceSink(spark, hnswDir, numPartitions = 2))
+    val hnswDist = StreamingOps.searchHnswMaintained(spark, hnswDir, Array((0L, q)), k = 2)
+      .collect().filter(_.getLong(1) == 7L).map(_.getDouble(2))
+    assert(hnswDist.length === 1)
+    for (spill <- Seq(1, 2)) withClue(s"spill $spill: ") {
+      val dir = Files.createTempDirectory("ivf_twice").toString
+      feed(StreamingOps.ivfMaintenanceSink(spark, dir, centroids, spill = spill))
+      val rows = StreamingOps.ivfMaintainedState(spark, dir).filter($"id" === 7L)
+        .select("cell", "vector").as[(Int, Seq[Float])].collect()
+      assert(rows.map(_._1).distinct.length === spill, rows.toSeq)
+      assert(rows.length === spill, rows.toSeq)
+      val vector = rows.map(_._2).distinct
+      assert(vector.length === 1, rows.toSeq)
+      val dist = math.sqrt(vector.head.zip(q).map { case (a, b) => (a.toDouble - b) * (a.toDouble - b) }.sum)
+      assert(math.abs(dist - hnswDist.head) < 1e-6, s"IVF keeps ${vector.head}, HNSW another vector")
+    }
+  }
+
+  test("a spilled residual-PQ winner delivered twice keeps every replica, before and after " +
+    "compaction, with and without stored vectors") {
+    // residual codes encode vector − centroid, so each cell replica of one
+    // delivery carries different codes; `a` and `b` are two deliveries of
+    // one (id, version) in two batches
+    val cb = graft.knn.Pq.PqCodebooks(2, 1, Array.fill(2)(Array(Array(0f), Array(1f))))
+    val twice = Seq(VectorOp(7L, "upsert", Array(0.9f, 0.1f), 3),
+      VectorOp(7L, "upsert", Array(0.1f, 0.9f), 3))
+    for (storeVectors <- Seq(true, false)) withClue(s"storeVectors $storeVectors: ") {
+      val dir = Files.createTempDirectory("ivfpq_twice").toString
+      val sink = StreamingOps.ivfPqMaintenanceSink(spark, dir, centroids, cb, residual = true,
+        storeVectors = storeVectors, spill = 2)
+      twice.zipWithIndex.foreach { case (op, b) => sink(Seq(op).toDS(), b.toLong) }
+      val delivered = spark.read.parquet(s"$dir/delta").filter($"id" === 7L)
+        .select($"batch".cast("string"), $"cell".cast("int"), $"pq_codes").as[(String, Int, Array[Byte])]
+        .collect().groupBy(_._1).values.map(_.map(r => (r._2, r._3.toSeq)).toSet).toSet
+      assert(delivered.size === 2 && delivered.forall(_.size === 2), delivered)
+      def winner(): Set[(Int, Seq[Byte])] = {
+        val rows = StreamingOps.ivfPqMaintainedState(spark, dir).filter($"id" === 7L)
+          .select("cell", "vector", "pq_codes").as[(Int, Option[Seq[Float]], Array[Byte])].collect()
+        assert(rows.map(_._2).distinct.length === 1, rows.toSeq)
+        rows.map(r => (r._1, r._3.toSeq)).toSet
+      }
+      val before = winner()
+      assert(before.size === 2 && delivered.contains(before), before)
+      StreamingOps.compactIvfMaintained(spark, dir)
+      assert(winner() === before)
+    }
+  }
+
+  /** A maintained vector index for the time-travel horizon: its sink, its
+    * compaction call and the ids an as-of read serves.
+    */
+  private case class AsOfIndex(name: String, compaction: String,
+      sink: String => (org.apache.spark.sql.Dataset[VectorOp], Long) => Unit,
+      compact: String => Unit, idsAsOf: (String, Long) => Set[Long])
+
+  Seq(
+    AsOfIndex("IVF", "compactIvfMaintained",
+      StreamingOps.ivfMaintenanceSink(spark, _, centroids),
+      StreamingOps.compactIvfMaintained(spark, _),
+      (dir, v) => StreamingOps.ivfMaintainedStateAsOf(spark, dir, v)
+        .select("id").as[Long].collect().toSet),
+    AsOfIndex("HNSW", "compactHnswMaintained",
+      StreamingOps.hnswDeltaMaintenanceSink(spark, _, numPartitions = 2),
+      StreamingOps.compactHnswMaintained(spark, _),
+      (dir, v) => StreamingOps.searchHnswMaintained(spark, dir, Array((0L, Array(1f, 0f))),
+        k = 10, asOf = Some(v)).select("id").as[Long].collect().toSet)
+  ).foreach { ix =>
+    test(s"${ix.name} as-of read below the compaction horizon is refused naming " +
+      s"${ix.compaction}; a read at the horizon answers") {
+      val dir = Files.createTempDirectory("asof_horizon").toString
+      val sink = ix.sink(dir)
+      sink(Seq(VectorOp(1L, "upsert", Array(1f, 0f), 1), VectorOp(2L, "upsert", Array(0f, 1f), 1)).toDS(), 0L)
+      sink(Seq(VectorOp(2L, "remove", Array.empty[Float], 2)).toDS(), 1L)
+      assert(ix.idsAsOf(dir, 1L) === Set(1L, 2L))
+      ix.compact(dir)
+      val e = intercept[IllegalArgumentException](ix.idsAsOf(dir, 1L))
+      assert(e.getMessage.contains("compaction horizon 2") && e.getMessage.contains(ix.compaction),
+        e.getMessage)
+      assert(ix.idsAsOf(dir, 2L) === Set(1L))
+    }
   }
 
   test("searchIvfMaintainedDF refuses a codes-only PQ directory like the array form") {

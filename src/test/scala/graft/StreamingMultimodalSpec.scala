@@ -554,7 +554,7 @@ class StreamingIndexSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_stream").toString
     val input = MemoryStream[StreamingOps.VectorOp]
     val q = input.toDS().writeStream
-      .foreachBatch(StreamingOps.hnswMaintenanceSink(dir, numPartitions = 2))
+      .foreachBatch(StreamingOps.hnswDeltaMaintenanceSink(spark, dir, numPartitions = 2))
       .outputMode("append").start()
     try {
       input.addData(
@@ -567,13 +567,18 @@ class StreamingIndexSpec extends SparkTestBase {
         StreamingOps.VectorOp(3L, "remove", Array.empty, 2))
       q.processAllAvailable()
 
-      val res = graft.hnsw.HnswSpark.searchSaved(
-        spark, dir, Array((0L, Array(1f, 1f))), k = 3).collect()
-      val ids = res.map(_.getLong(1)).toSet
-      assert(!ids.contains(3L), "removed id returned")
-      assert(ids === Set(1L, 2L))
-      // id 2's vector was replaced: nearest to (1,1) is now 2
-      assert(res.minBy(_.getDouble(2)).getLong(1) === 2L)
+      // served from the delta log, then from the persisted per-partition
+      // graphs the compaction folds it into
+      for (stage <- Seq("delta", "compacted base")) withClue(s"$stage: ") {
+        if (stage != "delta") StreamingOps.compactHnswMaintained(spark, dir)
+        val res = StreamingOps.searchHnswMaintained(
+          spark, dir, Array((0L, Array(1f, 1f))), k = 3).collect()
+        val ids = res.map(_.getLong(1)).toSet
+        assert(!ids.contains(3L), "removed id returned")
+        assert(ids === Set(1L, 2L))
+        // id 2's vector was replaced: nearest to (1,1) is now 2
+        assert(res.minBy(_.getDouble(2)).getLong(1) === 2L)
+      }
     } finally q.stop()
   }
 
@@ -1250,7 +1255,7 @@ class StreamingIndexSpec extends SparkTestBase {
       val input = MemoryStream[StreamingOps.VectorOp]
       val src = if (versionStore) StreamingOps.versionedOps(spark, input.toDS()) else input.toDS()
       val q = src.writeStream
-        .foreachBatch(StreamingOps.hnswMaintenanceSink(dir, numPartitions = 2))
+        .foreachBatch(StreamingOps.hnswDeltaMaintenanceSink(spark, dir, numPartitions = 2))
         .outputMode(if (versionStore) "update" else "append").start()
       try {
         // batch 1 delivers id 7 @v2 at (0,1); batch 2 delivers a STALE @v1
@@ -1260,17 +1265,16 @@ class StreamingIndexSpec extends SparkTestBase {
         q.processAllAvailable()
         input.addData(StreamingOps.VectorOp(7L, "upsert", Array(1f, 0f), 1))
         q.processAllAvailable()
-        val res = graft.hnsw.HnswSpark.searchSaved(
+        val res = StreamingOps.searchHnswMaintained(
           spark, dir, Array((0L, Array(0f, 1f))), k = 2).collect()
         res.filter(_.getLong(1) == 7L).head.getDouble(2) // dist of id 7 to (0,1)
       } finally q.stop()
     }
     // with the version store, id 7 stays at its v2 position
     assert(runPipeline(versionStore = true) < 1e-6, "stale v1 resurrected id 7")
-    // negative control: the raw sink's within-batch window cannot see the
-    // newer version from the earlier batch, so the stale vector wins —
-    // which is exactly what versionedOps exists to prevent
-    assert(runPipeline(versionStore = false) > 0.5, "control: raw sink unexpectedly versioned")
+    // without it too: the delta log is versioned, so the stale v1 from the
+    // later batch loses to the v2 an earlier batch committed
+    assert(runPipeline(versionStore = false) < 1e-6, "stale v1 from a later batch won")
   }
 
   test("OPQ-maintained sink: rotated ingest + sidecar query rotation equal the batch " +
