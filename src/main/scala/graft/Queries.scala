@@ -1325,9 +1325,7 @@ object Queries {
         .join(data, Seq("id"))
         .join(broadcast(queriesDf), Seq("qid"))
         .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), "euclidean").as("dist"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("dist"), col("id"))
-      knnFinish(rescored.withColumn("rank", row_number().over(w)))
+      knnFinish(graft.knn.Knn.ranked(rescored))
     }),
 
     // §2.24+ 1-bit binary quantization: 32× compression, pop-count Hamming

@@ -2,8 +2,8 @@ package graft.hnsw
 
 import graft.core.Distances
 import graft.io.{HadoopIO, Manifest, ManifestEntry, SerializableHadoopConf}
+import graft.knn.Knn
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -86,8 +86,7 @@ object HnswSpark {
       }
       .toDF("qid", "id", "dist", "metadata")
 
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(candidates, k)
   }
 
   /** Approximate kNN with a DataFrame query side — no driver-resident query
@@ -116,17 +115,7 @@ object HnswSpark {
 
     val pre = data.select(col("id").cast("long"), col("vector").cast("array<float>"))
     val parts = if (numPartitions > 0) pre.repartition(numPartitions, col("id")) else pre
-    val dataRdd = parts.as[(Long, Array[Float])].rdd
-    val p = math.max(1, dataRdd.getNumPartitions)
-
-    val qRep = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .as[(Long, Array[Float])].rdd
-      .flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(p))
-      .values
-
-    val candidates = dataRdd.zipPartitions(qRep) { (dIter, qIter) =>
+    val candidates = Knn.fanOut(parts.as[(Long, Array[Float])].rdd, queries) { (dIter, qIter) =>
       val items = dIter.toArray.sortBy(_._1)
       if (items.isEmpty) Iterator.empty
       else {
@@ -138,8 +127,7 @@ object HnswSpark {
       }
     }.toDF("qid", "id", "dist")
 
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(candidates, k)
   }
 
   /** Filtered approximate kNN: per-partition HNSW search returning only ids
@@ -182,8 +170,7 @@ object HnswSpark {
       }
       .toDF("qid", "id", "dist")
 
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(candidates, k)
   }
 
   /** Build per-partition graphs and persist each as a binary artifact under
@@ -438,14 +425,7 @@ object HnswSpark {
     val bcEx = spark.sparkContext.broadcast(excluded)
     val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
     val filesRdd = spark.sparkContext.parallelize(files, files.size)
-    val p = files.size
-    val qRep = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .as[(Long, Array[Float])].rdd
-      .flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(p))
-      .values
-    filesRdd.zipPartitions(qRep) { (fIter, qIter) =>
+    Knn.fanOut(filesRdd, queries) { (fIter, qIter) =>
       fIter.flatMap { case (path, crc) =>
         val index = loadPartitionChecked(path, crc, bcConf.value.value)
         val ex = bcEx.value
@@ -507,8 +487,7 @@ object HnswSpark {
       }
       .toDF("qid", "id", "dist", "metadata")
 
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(candidates, k)
   }
 
   /** [[searchSaved]] with a DataFrame query side: one task per persisted
@@ -529,15 +508,7 @@ object HnswSpark {
     val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
 
     val filesRdd = spark.sparkContext.parallelize(files, files.size)
-    val p = files.size
-    val qRep = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .as[(Long, Array[Float])].rdd
-      .flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(p))
-      .values
-
-    val candidates = filesRdd.zipPartitions(qRep) { (fIter, qIter) =>
+    val candidates = Knn.fanOut(filesRdd, queries) { (fIter, qIter) =>
       fIter.flatMap { case (path, crc) =>
         val index = loadPartitionChecked(path, crc, bcConf.value.value)
         qIter.flatMap { case (qid, qv) =>
@@ -546,7 +517,6 @@ object HnswSpark {
       }
     }.toDF("qid", "id", "dist", "metadata")
 
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(candidates, k)
   }
 }

@@ -1,6 +1,7 @@
 package graft.knn
 
 import graft.core.Distances
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -640,17 +641,9 @@ object Ivf {
       metric: String = "euclidean",
       dedup: Boolean = false): DataFrame = {
     import spark.implicits._
-    val m = Distances.metricId(metric)
-
     // (qid, cell) probe pairs — tiny, computed on the driver like the
     // reference's query-time partition fan-out (storage/dataset.go:390).
-    val probes = queries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex
-        .map { case (cv, ci) => (Distances.distance(m)(qv, cv), ci) }
-        .sortBy(identity)
-        .take(nprobe)
-        .map { case (_, ci) => (qid, ci) }
-    }.toSeq.toDF("qid", "cell")
+    val probes = probePairs(spark, queries, centroids, nprobe, metric)
 
     val queriesDf = queries.toSeq.toDF("qid", "qvec")
 
@@ -664,29 +657,82 @@ object Ivf {
     // through several probed cells — dedupe BEFORE the top-k window so a
     // duplicate never consumes a rank slot (skip the extra shuffle for
     // spill = 1 assignments)
-    val candidates = if (dedup) raw.dropDuplicates("qid", "id") else raw
-
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(if (dedup) raw.dropDuplicates("qid", "id") else raw, k)
   }
 
-  /** IVF search with a DataFrame query side — the corpus-vs-corpus shape
-    * (e.g. dedup-by-ANN of one 100 TB table against another). Nothing is
-    * driver-resident and nothing is replicated: each query row computes its
-    * own nprobe probe cells (centroids broadcast — C·dim floats), both sides
-    * shuffle once on the small-cardinality cell id, and a per-cell cogroup
-    * streams the cell's vectors once past bounded per-query heaps, emitting
-    * k candidates per (query, probed cell). Task memory is the cell's probe
-    * set (≈ Q·nprobe/C queries), never the data.
-    *
-    * With nprobe = centroids.length every cell is probed and the result is
-    * exactly [[graft.knn.Knn.bruteForce]] (same kernel, same tie-break).
+  /** A query's cells in probe order: every centroid ranked by (distance
+    * to `qv`, cell id) under metric id `m`'s exact double kernel. Every
+    * IVF tier probes through this one ranking, so all tiers probe the
+    * same cells at the same nprobe (IVF×SQ8 equals IVF row for row). The
+    * SIMD [[centroidDistances]] is for assignment only: it may order
+    * near-ties differently.
     */
-  /** Per-query probe fan-out with a DataFrame query side: each query row
-    * ranks the (broadcast) centroids and emits its `nprobe` nearest as
-    * (cell, qid, qvec) — the shared front half of [[searchDF]] and
-    * [[Quantize.searchIvfSq8DF]].
+  private[graft] def probeOrder(qv: Array[Float], centroids: Array[Array[Float]], m: Int): Array[Int] =
+    centroids.zipWithIndex
+      .map { case (cv, ci) => (Distances.distance(m)(qv, cv), ci) }
+      .sortBy(identity)
+      .map(_._2)
+
+  /** Each query's first `nprobe` cells in euclidean [[probeOrder]], by
+    * qid: the `probeCells` map the (euclidean-only) SQ, binary and PQ
+    * scans restrict to.
     */
+  private[graft] def probeMap(
+      queries: Array[(Long, Array[Float])],
+      centroids: Array[Array[Float]],
+      nprobe: Int): Map[Long, Array[Int]] =
+    queries.map { case (qid, qv) =>
+      qid -> probeOrder(qv, centroids, Distances.Euclidean).take(nprobe)
+    }.toMap
+
+  /** [[probeMap]] as (qid, cell) rows in query order: the broadcast probe
+    * side of [[search]] and [[Knn.matryoshkaIvf]].
+    */
+  private[knn] def probePairs(
+      spark: SparkSession,
+      queries: Array[(Long, Array[Float])],
+      centroids: Array[Array[Float]],
+      nprobe: Int,
+      metric: String): DataFrame = {
+    import spark.implicits._
+    val m = Distances.metricId(metric)
+    queries.flatMap { case (qid, qv) =>
+      probeOrder(qv, centroids, m).take(nprobe).map(ci => (qid, ci))
+    }.toSeq.toDF("qid", "cell")
+  }
+
+  /** Per-query probed-cell masks aligned with `queries`, broadcast once:
+    * `mask(qi)(cell)` is set when query `qi` probes `cell`. A query absent
+    * from `probeCells` (every query, without a map) gets a null mask and
+    * scans unrestricted: an all-false mask would silently drop it from the
+    * output. Scans test a row with [[allowed]].
+    */
+  private[knn] def probeMasks(
+      spark: SparkSession,
+      queries: Array[(Long, Array[Float])],
+      probeCells: Option[Map[Long, Array[Int]]]): Broadcast[Array[Array[Boolean]]] = {
+    val nCells = probeCells.map(_.valuesIterator.flatten.foldLeft(0)(math.max) + 1).getOrElse(0)
+    spark.sparkContext.broadcast(queries.map { case (qid, _) =>
+      probeCells.flatMap(_.get(qid)).map { cells =>
+        val mask = new Array[Boolean](nCells)
+        cells.foreach(c => if (c < nCells) mask(c) = true)
+        mask
+      }.orNull
+    })
+  }
+
+  /** Whether query `qi` scans a row of `cell` under [[probeMasks]]. */
+  @inline private[knn] def allowed(masks: Array[Array[Boolean]], qi: Int, cell: Int): Boolean = {
+    val m = masks(qi)
+    m == null || (cell >= 0 && cell < m.length && m(cell))
+  }
+
+  /** The scanned rows' `cell` for [[allowed]]: -1 when no probe map
+    * restricts the scan (the assignment need not carry a cell then).
+    */
+  private[knn] def cellColumn(probeCells: Option[Map[Long, Array[Int]]]): Column =
+    if (probeCells.isDefined) col("cell").cast("int") else lit(-1).cast("int")
+
   /** Build an HNSW graph over the CENTROIDS — the published
     * IndexIVF+HNSW coarse-quantizer shape: at 100 TB-scale cell counts
     * (C ≥ 100k) per-query probe selection by linear centroid scan costs
@@ -720,6 +766,11 @@ object Ivf {
   private val coarseCache =
     new java.util.concurrent.ConcurrentHashMap[Long, graft.hnsw.HnswIndex]()
 
+  /** Per-query probe fan-out with a DataFrame query side: each query row
+    * ranks the (broadcast) centroids and emits its `nprobe` nearest as
+    * (cell, qid, qvec) — the shared front half of [[searchDF]] and
+    * [[Quantize.searchIvfSq8DF]].
+    */
   private[knn] def probeCells(
       queries: DataFrame, // (qid, qvec)
       centroids: Array[Array[Float]],
@@ -750,19 +801,24 @@ object Ivf {
             else idx.searchFiltered(qv, nprobe, _ => true, efOverride = ef)
               .iterator.map { case (ci, _) => (ci.toInt, qid, qv) }
           }
-        } else {
-          val kernel = Distances.distance(m) _
-          iter.flatMap { case (qid, qv) =>
-            cs.zipWithIndex
-              .map { case (cv, ci) => (kernel(qv, cv), ci) }
-              .sortBy(identity)
-              .take(nprobe)
-              .iterator.map { case (_, ci) => (ci, qid, qv) }
-          }
+        } else iter.flatMap { case (qid, qv) =>
+          probeOrder(qv, cs, m).take(nprobe).iterator.map(ci => (ci, qid, qv))
         }
       }
   }
 
+  /** IVF search with a DataFrame query side — the corpus-vs-corpus shape
+    * (e.g. dedup-by-ANN of one 100 TB table against another). Nothing is
+    * driver-resident and nothing is replicated: each query row computes its
+    * own nprobe probe cells (centroids broadcast — C·dim floats), both sides
+    * shuffle once on the small-cardinality cell id, and a per-cell cogroup
+    * streams the cell's vectors once past bounded per-query heaps, emitting
+    * k candidates per (query, probed cell). Task memory is the cell's probe
+    * set (≈ Q·nprobe/C queries), never the data.
+    *
+    * With nprobe = centroids.length every cell is probed and the result is
+    * exactly [[graft.knn.Knn.bruteForce]] (same kernel, same tie-break).
+    */
   def searchDF(
       assigned: DataFrame, // output of assign()
       centroids: Array[Array[Float]],
@@ -784,24 +840,14 @@ object Ivf {
       .groupByKey(_._1)
 
     val raw = dataByCell.cogroup(probes.groupByKey(_._1)) { case (_, dIter, qIter) =>
-      val qs = qIter.toArray
+      val qs = qIter.map { case (_, qid, qv) => (qid, qv) }.toArray
       if (qs.isEmpty) Iterator.empty
-      else {
-        val heaps = Array.fill(qs.length)(new TopK(k))
-        val kernel = Distances.distance(m) _
-        TopK.scanBlocked(dIter.map { case (_, id, v) => (id, v) }, qs.map(_._3), heaps, kernel)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (dist, id) => (qs(qi)._2, id, dist) }
-        }
-      }
+      else Knn.scanHeaps(qs, dIter.map { case (_, id, v) => (id, v) }, k, Distances.distance(m) _)
     }.toDF("qid", "id", "dist")
 
     // spilled assignments surface an id through several probed cells —
     // dedupe BEFORE the top-k window (see [[search]])
-    val candidates = if (dedup) raw.dropDuplicates("qid", "id") else raw
-
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(if (dedup) raw.dropDuplicates("qid", "id") else raw, k)
   }
 
   /** PROBE AUTOTUNING: per sample query, the smallest `nprobe` at which
@@ -845,10 +891,7 @@ object Ivf {
     // (qid, cell, probe_rank): the query's centroid ordering — Q·C rows,
     // computed driver-side like search's probe fan-out, then broadcast
     val probeRanks = sampleQueries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex
-        .map { case (cv, ci) => (Distances.distance(m)(qv, cv), ci) }
-        .sortBy(identity).zipWithIndex
-        .map { case ((_, ci), r) => (qid, ci, r + 1) }
+      probeOrder(qv, centroids, m).zipWithIndex.map { case (ci, r) => (qid, ci, r + 1) }
     }.toSeq.toDF("qid", "cell", "probe_rank")
 
     // each true neighbor's best probe rank (min over spill replicas)
@@ -859,9 +902,7 @@ object Ivf {
 
     // required nprobe = the ⌈targetRecall·n_exact⌉-th smallest best rank
     // (n_exact < k when the corpus is smaller than k)
-    val w = Window.partitionBy("qid").orderBy(col("best_rank"), col("id"))
-    hitRanks
-      .withColumn("__pos", row_number().over(w))
+    Knn.ranked(hitRanks, "best_rank", "__pos")
       .withColumn("__n", count(lit(1)).over(Window.partitionBy("qid")))
       .filter(col("__pos") <= ceil(col("__n") * targetRecall))
       .groupBy("qid")

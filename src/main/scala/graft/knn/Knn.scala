@@ -2,15 +2,25 @@ package graft.knn
 
 import graft.core.Distances
 import graft.functions.vec
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.reflect.ClassTag
 
 /** Batch k-nearest-neighbor search: the Spark-native analog of the
   * reference's partitioned dataset search
   * (`/root/reference/storage/dataset.go:349-433`): each partition computes a
   * local top-k per query, the tiny candidate union (≤ k·P·Q rows) is merged
   * into a global top-k. No global sort of the data, no N×Q shuffle.
+  *
+  * Also the top-k toolkit every ANN tier shares: the merge window
+  * ([[topK]]), the τ step of the two-pass exact scans ([[kthUpperBound]]),
+  * the query fan-out onto data partitions ([[fanOut]]) and the bounded-heap
+  * scan and emission ([[scanHeaps]], [[emitHeaps]]). The probe ranking and
+  * the probed-cell mask live in [[Ivf]].
   */
 object Knn {
 
@@ -106,9 +116,7 @@ object Knn {
     val coarse = data.select(col("id"), dPre.as("vp"))
       .crossJoin(broadcast(queries.select(col("qid"), qPre.as("qp"))))
       .select(col("qid"), col("id"), vec.dist(col("vp"), col("qp"), metric).as("cdist"))
-    val w1 = Window.partitionBy("qid").orderBy(col("cdist"), col("id"))
-    val cand = coarse.withColumn("r", row_number().over(w1)).filter(col("r") <= coarseK)
-      .select("qid", "id")
+    val cand = topK(coarse, coarseK, "cdist", "r").select("qid", "id")
     val rescored = data.join(broadcast(cand), Seq("id"))
       .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
@@ -142,14 +150,7 @@ object Knn {
       dedup: Boolean = false): DataFrame = {
     import spark.implicits._
     require(coarseK >= k, s"coarseK ($coarseK) must be >= k ($k)")
-    val m = Distances.metricId(metric)
-    val probes = queries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex
-        .map { case (cv, ci) => (Distances.distance(m)(qv, cv), ci) }
-        .sortBy(identity)
-        .take(nprobe)
-        .map { case (_, ci) => (qid, ci) }
-    }.toSeq.toDF("qid", "cell")
+    val probes = Ivf.probePairs(spark, queries, centroids, nprobe, metric)
     val queriesPre = queries.map { case (qid, qv) => (qid, qv.take(dPrefix)) }
       .toSeq.toDF("qid", "qp")
     val dPre = prefixCol.map(checkedCoarseCol(_, dPrefix, "prefix"))
@@ -159,9 +160,7 @@ object Knn {
       .join(broadcast(queriesPre), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(dPre, col("qp"), metric).as("cdist"))
     val coarse = if (dedup) coarseRaw.dropDuplicates("qid", "id") else coarseRaw
-    val w1 = Window.partitionBy("qid").orderBy(col("cdist"), col("id"))
-    val cand = coarse.withColumn("r", row_number().over(w1)).filter(col("r") <= coarseK)
-      .select("qid", "id")
+    val cand = topK(coarse, coarseK, "cdist", "r").select("qid", "id")
     val queriesDf = queries.toSeq.toDF("qid", "qvec")
     val rescoredRaw = assigned.join(broadcast(cand), Seq("id"))
       .join(broadcast(queriesDf), Seq("qid"))
@@ -209,9 +208,7 @@ object Knn {
       else scanHeaps(qs, dIter.map { case (_, id, v) => (id, v) }, coarseK, Distances.distance(m) _)
     }.toDF("qid", "id", "cdist")
     val cdeduped = if (dedup) coarseCands.dropDuplicates("qid", "id") else coarseCands
-    val w1 = Window.partitionBy("qid").orderBy(col("cdist"), col("id"))
-    val cand = cdeduped.withColumn("r", row_number().over(w1)).filter(col("r") <= coarseK)
-      .select("qid", "id")
+    val cand = topK(cdeduped, coarseK, "cdist", "r").select("qid", "id")
     val rescoredRaw = assigned
       .select(col("id").cast("long"), col("vector").cast("array<float>"))
       .join(cand, Seq("id"))
@@ -291,30 +288,86 @@ object Knn {
     rows => scanHeaps(bc.value, rows, k, Distances.distance(m) _)
   }
 
-  /** One bounded heap per query over `rows`, emitted as (qid, id, dist). */
-  private def scanHeaps(qs: Array[(Long, Array[Float])], rows: Iterator[(Long, Array[Float])],
+  /** The exact heap scan: one bounded heap per query `(qid, qvec)` over
+    * the `(id, vector)` rows, block-major ([[TopK.scanBlocked]]), emitted
+    * as (qid, id, dist). Scans whose rows are not float vectors (SQ
+    * τ-passes, Hamming, PQ ADC, PCA bounds) keep their own inner loop —
+    * a per-(row, query) closure there would box on the hot path — and
+    * share only [[emitHeaps]]; so does the `KnnCandidatesExec` operator,
+    * whose row-major loop over Catalyst rows measured faster than this
+    * block-major scan (200k 64-dim rows, 64 queries, 4 cores).
+    */
+  private[graft] def scanHeaps(qs: Array[(Long, Array[Float])], rows: Iterator[(Long, Array[Float])],
       k: Int, kernel: (Array[Float], Array[Float]) => Double): Iterator[(Long, Long, Double)] = {
     val heaps = Array.fill(qs.length)(new TopK(k))
     TopK.scanBlocked(rows, qs.map(_._2), heaps, kernel)
-    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-      h.sorted.iterator.map { case (dist, id) => (qs(qi)._1, id, dist) }
-    }
+    emitHeaps(heaps, qs(_)._1)
   }
 
-  /** The global merge of (qid, id, dist) candidates: per query the k
-    * nearest, ties broken by id, numbered 1..k in `rank`.
+  /** Every heap's contents in ascending (dist, id) order as
+    * (qid, id, dist), where `qid(qi)` names heap `qi`'s query.
     */
-  private[graft] def topK(candidates: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  private[graft] def emitHeaps(heaps: Array[TopK], qid: Int => Long): Iterator[(Long, Long, Double)] =
+    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+      h.sorted.iterator.map { case (dist, id) => (qid(qi), id, dist) }
+    }
+
+  /** The merge window every tier shares: per query the k candidates
+    * smallest by (`by`, id), numbered 1..k in the `rank` column. Final
+    * merges rank `dist` into `rank`; coarse stages pass their own distance
+    * and rank column names. The `row_number() <= k` shape is what
+    * [[graft.plans.KnnRewrite]] matches and what the planner bounds with a
+    * per-partition `WindowGroupLimit` before the qid exchange.
+    */
+  private[graft] def topK(candidates: DataFrame, k: Int, by: String = "dist",
+      rank: String = "rank"): DataFrame =
+    ranked(candidates, by, rank).filter(col(rank) <= k)
+
+  /** [[topK]]'s window without the cut: every candidate numbered per query
+    * in (`by`, id) order.
+    */
+  private[graft] def ranked(candidates: DataFrame, by: String = "dist",
+      rank: String = "rank"): DataFrame =
+    candidates.withColumn(rank, row_number().over(Window.partitionBy("qid").orderBy(col(by), col("id"))))
+
+  /** The τ step of the two-pass exact scans ([[Quantize.searchExact]],
+    * [[Pca.searchExact]]): per query, the k-th smallest of the (qid, ub)
+    * upper bounds that pass 1's per-partition heaps emitted. One row per
+    * query reaches the driver.
+    */
+  private[knn] def kthUpperBound(ub: DataFrame, k: Int): Map[Long, Double] = {
+    val w = Window.partitionBy("qid").orderBy("ub")
+    ub.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .groupBy("qid").agg(max("ub").as("tau"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  }
+
+  /** The query fan-out: every partition of `data` zipped with the whole
+    * query table, which is replicated once per data partition through one
+    * pid-keyed shuffle. The data side never moves. A data side with no
+    * partitions (an empty local table) yields an empty result.
+    */
+  private[graft] def fanOut[T: ClassTag, U: ClassTag](data: RDD[T], queries: DataFrame)(
+      f: (Iterator[T], Iterator[(Long, Array[Float])]) => Iterator[U]): RDD[U] = {
+    val p = data.getNumPartitions
+    if (p == 0) return data.sparkContext.emptyRDD[U]
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val qRep = queries
+      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
+      .as[(Long, Array[Float])].rdd
+      .flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))
+      .partitionBy(new HashPartitioner(p))
+      .values
+    data.zipPartitions(qRep)(f)
   }
 
   /** Exact kNN with a DataFrame query side — no driver-resident query array
     * anywhere. The query table (the small side) is replicated to every data
-    * partition through one shuffle (`zipPartitions` against a pid-keyed
-    * rebroadcast), the data (the big side) never moves, and each task emits
-    * only k candidates per query. At 100 TB this is the right BNL
-    * orientation: network cost is Q·P query rows, not data·chunks.
+    * partition through one shuffle ([[fanOut]]), the data (the big side)
+    * never moves, and each task emits only k candidates per query. At
+    * 100 TB this is the right BNL orientation: network cost is Q·P query
+    * rows, not data·chunks.
     *
     * The query batch is processed in fixed-size BLOCKS (`queryBlock` rows),
     * so task memory is bounded by max(one data partition, one query block
@@ -357,16 +410,8 @@ object Knn {
     val dataRdd = data
       .select(col("id").cast("long"), col("vector").cast("array<float>"))
       .as[(Long, Array[Float])].rdd
-    val p = math.max(1, dataRdd.getNumPartitions)
 
-    val qRep = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .as[(Long, Array[Float])].rdd
-      .flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))
-      .partitionBy(new org.apache.spark.HashPartitioner(p))
-      .values
-
-    dataRdd.zipPartitions(qRep) { (dIter, qIter) =>
+    fanOut(dataRdd, queries) { (dIter, qIter) =>
       val kernel = Distances.distance(m) _
       // one grouped() pass owns qIter end to end — Iterator.take's contract
       // says the source must be discarded after use, so peeking the first

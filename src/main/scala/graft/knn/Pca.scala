@@ -3,7 +3,6 @@ package graft.knn
 import graft.functions.{PcaProject, PcaReconstruct}
 import graft.internal.SqlBridge
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
@@ -237,16 +236,9 @@ object Pca {
           qi += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sorted.iterator.map { case (u, _) => (qs(qi)._1, u) }
-      }
+      Knn.emitHeaps(heaps, qs(_)._1).map { case (qid, _, u) => (qid, u) }
     }.toDF("qid", "ub")
-    val wUb = Window.partitionBy("qid").orderBy("ub")
-    val tau: Map[Long, Double] = ub
-      .withColumn("rn", row_number().over(wUb)).filter(col("rn") <= k)
-      .groupBy("qid").agg(max("ub").as("tau"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bcTau = spark.sparkContext.broadcast(tau)
+    val bcTau = spark.sparkContext.broadcast(Knn.kthUpperBound(ub, k))
 
     // Pass 2: lower-bound survivors — a provable superset of the top-k.
     val candidates = rows.mapPartitions { iter =>

@@ -1,6 +1,5 @@
 package graft.knn
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -251,23 +250,13 @@ object Pq {
     val bcCb = spark.sparkContext.broadcast(cb)
     val bcQ = spark.sparkContext.broadcast(queries)
     val bcRes = spark.sparkContext.broadcast(residualCentroids.orNull)
-    val nCells = probeCells.map(_.valuesIterator.flatten.foldLeft(0)(math.max) + 1).getOrElse(0)
-    val bcMask: org.apache.spark.broadcast.Broadcast[Array[Array[Boolean]]] =
-      spark.sparkContext.broadcast(queries.map { case (qid, _) =>
-        probeCells.flatMap(_.get(qid)).map { cells =>
-          val mask = new Array[Boolean](nCells)
-          cells.foreach(c => if (c < nCells) mask(c) = true)
-          mask
-        }.orNull
-      })
-    val cellCol =
-      if (probeCells.isDefined) col("cell").cast("int") else lit(-1).cast("int")
+    val bcMask = Ivf.probeMasks(spark, queries, probeCells)
     // ADC-only mode (rescore=false) keeps exactly k per query — overscan
     // only exists to feed the rescore a candidate superset
     val kk = if (rescore) k * overscan else k
 
     val coarse = encoded
-      .select(col("id").cast("long"), cellCol.as("cell"), col("pq_codes"))
+      .select(col("id").cast("long"), Ivf.cellColumn(probeCells).as("cell"), col("pq_codes"))
       .as[(Long, Int, Array[Byte])]
       .mapPartitions { iter =>
         val c = bcCb.value
@@ -282,11 +271,11 @@ object Pq {
           val qv = qs(qi)._2
           if (res == null) Array(buildLut(qv.map(_.toDouble), c))
           else {
-            val byCell = new Array[Array[Double]](nCells)
+            val byCell = new Array[Array[Double]](res.length)
             val qm = mask(qi)
             var cell = 0
-            while (cell < nCells) {
-              if (qm != null && qm(cell)) {
+            while (qm != null && cell < qm.length) {
+              if (qm(cell)) {
                 val cv = res(cell)
                 val rq = new Array[Double](qv.length)
                 var i = 0
@@ -302,8 +291,7 @@ object Pq {
         iter.foreach { case (id, cell, codes) =>
           var qi = 0
           while (qi < qs.length) {
-            val qm = mask(qi)
-            if (qm == null || (cell >= 0 && cell < qm.length && qm(cell))) {
+            if (Ivf.allowed(mask, qi, cell)) {
               val lut = if (res == null) luts(qi)(0) else luts(qi)(cell)
               var adc = 0.0
               var j = 0
@@ -316,9 +304,7 @@ object Pq {
             qi += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
+        Knn.emitHeaps(heaps, qs(_)._1)
       }
       .toDF("qid", "id", "approx")
 
@@ -327,7 +313,6 @@ object Pq {
     // same contract as Ivf.search's dedup / searchIvfSq8DF's pre-window
     // dropDuplicates. Off by default: the dedupe is an extra exchange the
     // unique-ids-by-contract case should not pay.
-    val wc = Window.partitionBy("qid").orderBy(col("approx"), col("id"))
     // spilled ids: under a rescore the surviving replica is immaterial
     // (exact distance recomputes), so dropDuplicates is enough — but the
     // ADC-only path REPORTS approx, and residual replicas carry different
@@ -336,8 +321,7 @@ object Pq {
       if (!dedup) coarse
       else if (rescore) coarse.dropDuplicates("qid", "id")
       else coarse.groupBy("qid", "id").agg(min(col("approx")).as("approx"))
-    val cand = deduped
-      .withColumn("crank", row_number().over(wc)).filter(col("crank") <= kk)
+    val cand = Knn.topK(deduped, kk, "approx", "crank")
     if (!rescore)
       // ADC ranking IS the result (the memory-bounded serving tier where
       // no full-precision vectors exist to rescore against — e.g. a
@@ -522,13 +506,8 @@ object Pq {
       nprobe: Int,
       overscan: Int = 8,
       dedup: Boolean = false): DataFrame = {
-    val metric = graft.core.Distances.Euclidean
-    val probed: Map[Long, Array[Int]] = queries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
-    search(spark, encoded, cb, queries, k, overscan, Some(probed), dedup)
+    search(spark, encoded, cb, queries, k, overscan, Some(Ivf.probeMap(queries, centroids, nprobe)),
+      dedup)
   }
 
   /** [[searchIvfPq]] over RESIDUAL codes ([[encodeResidual]] +
@@ -548,14 +527,8 @@ object Pq {
       nprobe: Int,
       overscan: Int = 8,
       dedup: Boolean = false): DataFrame = {
-    val metric = graft.core.Distances.Euclidean
-    val probed: Map[Long, Array[Int]] = queries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
-    search(spark, encoded, cb, queries, k, overscan, Some(probed), dedup,
-      residualCentroids = Some(centroids))
+    search(spark, encoded, cb, queries, k, overscan, Some(Ivf.probeMap(queries, centroids, nprobe)),
+      dedup, residualCentroids = Some(centroids))
   }
 
   /** IVF×PQ with a DataFrame QUERY side — the corpus-vs-corpus shape
@@ -621,23 +594,19 @@ object Pq {
             qi += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._2, id, d) }
-        }
+        Knn.emitHeaps(heaps, qs(_)._2)
       }
     }.toDF("qid", "id", "approx")
 
     // dedupe BEFORE the coarse window (spilled ids; equal approx values,
     // survivor immaterial) — same contract as searchIvfSq8DF
-    val wc = Window.partitionBy("qid").orderBy(col("approx"), col("id"))
     // spilled replicas: under a rescore the survivor is immaterial; the
     // ADC-only path REPORTS approx, so it keeps the deterministic MIN
     // per (qid, id) — same contract as the driver-array path
     val deduped =
       if (rescore) coarseScan.dropDuplicates("qid", "id")
       else coarseScan.groupBy("qid", "id").agg(min(col("approx")).as("approx"))
-    val cand = deduped
-      .withColumn("crank", row_number().over(wc)).filter(col("crank") <= kk)
+    val cand = Knn.topK(deduped, kk, "approx", "crank")
     if (!rescore)
       cand.select(col("qid"), col("id"), sqrt(col("approx")).as("dist"),
         col("crank").cast("int").as("rank"))

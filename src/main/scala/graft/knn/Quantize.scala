@@ -1,7 +1,6 @@
 package graft.knn
 
 import graft.functions.vec
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -91,12 +90,12 @@ object Quantize {
     transform(codes, c => ((c.cast("int") + 128).cast("float") * scale + offset).cast("float"))
 
   /** Exact full-precision rescore of a (qid, id) candidate set + final
-    * top-k — the shared tail of [[search]] and [[searchIvfSq8DF]]. With
-    * `dedupVectors` the vector side is deduped by id so a spilled
-    * assignment (same id in several cells) cannot fan the join out into
-    * duplicate rows that eat rank slots; leave it off when ids are unique
-    * by contract — the dedupe is a full extra exchange over the vector
-    * table at scale.
+    * top-k — the shared tail of every coarse-then-rescore search here and
+    * in [[Pq]] and [[Pca]]. With `dedupVectors` the vector side is deduped
+    * by id so a spilled assignment (same id in several cells) cannot fan
+    * the join out into duplicate rows that eat rank slots; leave it off
+    * when ids are unique by contract — the dedupe is a full extra exchange
+    * over the vector table at scale.
     */
   private[knn] def rescoreTopK(
       candidates: DataFrame, // (qid, id)
@@ -110,8 +109,7 @@ object Quantize {
       .join(if (dedupVectors) vside.dropDuplicates("id") else vside, Seq("id"))
       .join(queries.select(col("qid").cast("long"), col("qvec")), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(rescored, k)
   }
 
   /** Two-stage ANN: coarse top-(k·overscan) on dequantized vectors, exact
@@ -150,14 +148,8 @@ object Quantize {
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int): DataFrame = {
-    val metric = graft.core.Distances.Euclidean
     // same driver-side probe ranking as Ivf.search
-    val probed: Map[Long, Array[Int]] = queries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
-    searchExact(spark, quantized, queries, k, Some(probed))
+    searchExact(spark, quantized, queries, k, Some(Ivf.probeMap(queries, centroids, nprobe)))
   }
 
   /** IVF×SQ4: [[searchIvfSq8]]'s twin on the 4-bit tier — probe only each
@@ -176,13 +168,8 @@ object Quantize {
       queries: Array[(Long, Array[Float])],
       k: Int,
       nprobe: Int): DataFrame = {
-    val metric = graft.core.Distances.Euclidean
-    val probed: Map[Long, Array[Int]] = queries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
-    searchExact(spark, quantized, queries, k, Some(probed), codec = "sq4")
+    searchExact(spark, quantized, queries, k, Some(Ivf.probeMap(queries, centroids, nprobe)),
+      codec = "sq4")
   }
 
   /** IVF×SQ8 with a DataFrame query side — the corpus-vs-corpus shape at
@@ -220,32 +207,23 @@ object Quantize {
 
     val kk = k * overscan
     val coarseScan = dataByCell.cogroup(probes.groupByKey(_._1)) { case (_, dIter, qIter) =>
-      val qs = qIter.toArray
+      val qs = qIter.map { case (_, qid, qv) => (qid, qv) }.toArray
+      // coarse ranking only — the SIMD kernel's relaxed precision is
+      // absorbed by the exact full-precision rescore (same reasoning as
+      // Ivf.assign). The blocked heap scan keeps this kernel-bound instead
+      // of memory-bound on re-streaming the query set per row; rows decode
+      // once (lazy map).
       if (qs.isEmpty) Iterator.empty
-      else {
-        // coarse ranking only — the SIMD kernel's relaxed precision is
-        // absorbed by the exact full-precision rescore (same reasoning as
-        // Ivf.assign). The blocked scan (TopK.scanBlocked) keeps this
-        // kernel-bound instead of memory-bound on re-streaming the query
-        // set per row; rows decode once (lazy map).
-        val kernel = graft.core.DistKernel.best
-        val heaps = Array.fill(qs.length)(new TopK(kk))
-        TopK.scanBlocked(
-          dIter.map { case (_, id, codes, scale, offset) => (id, dequantizeArr(codes, scale, offset)) },
-          qs.map(_._3), heaps, kernel.euclidean)
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._2, id, d) }
-        }
-      }
+      else Knn.scanHeaps(qs,
+        dIter.map { case (_, id, codes, scale, offset) => (id, dequantizeArr(codes, scale, offset)) },
+        kk, graft.core.DistKernel.best.euclidean)
     }.toDF("qid", "id", "approx")
 
     // dedupe BEFORE the coarse window: a spilled id surfacing through
     // several probed cells must not consume multiple crank slots inside
     // the k·overscan budget (duplicate rows carry equal approx values,
     // so which copy survives is immaterial)
-    val wc = Window.partitionBy("qid").orderBy(col("approx"), col("id"))
-    val cand = coarseScan.dropDuplicates("qid", "id")
-      .withColumn("crank", row_number().over(wc)).filter(col("crank") <= kk)
+    val cand = Knn.topK(coarseScan.dropDuplicates("qid", "id"), kk, "approx", "crank")
       .select("qid", "id")
 
     // quantized may be a spilled assignment (duplicate ids across cells)
@@ -278,6 +256,75 @@ object Quantize {
     searchIvfSq8DF(assigned, centroids, checked, k, nprobe, overscan)
   }
 
+  /** GUARANTEED-exact COSINE top-k over SQ8 codes via the normalize-then-L2
+    * reduction: on unit vectors ‖a−b‖₂² = 2·(1 − a·b) = 2·cos_dist(a,b), a
+    * strictly increasing map, so the exact L2 top-k over the L2-normalized
+    * vectors IS the exact cosine top-k over the originals — which extends
+    * [[searchExact]]'s data-independent τ-proof (euclidean-only by itself:
+    * cosine lacks a triangle-inequality reconstruction bound) to cosine.
+    * Pipeline: normalize and [[sq8]]-encode (one fused narrow pass), run
+    * the τ-bound candidate passes on the normalized codes, then rank the
+    * candidates by the true cosine distance on the ORIGINAL vectors, ties
+    * by id. Scan cost is the same 1 byte/dim as the euclidean path.
+    *
+    * The normalized vectors are float-rounded, so two exact cosine ties
+    * land at reduced-L2 distances a rounding apart: a top-k cut in the
+    * reduced space would break a tie at the k-th place by that rounding
+    * instead of by id. Each row's error bound is therefore widened by
+    * [[cosineSlack]], which covers both normalizations' rounding (at most
+    * 2⁻²⁴ each in L2 norm), so the candidate set holds every row tied
+    * with the k-th, and the one top-k cut is the cosine rescore's.
+    *
+    * Zero vectors have no direction — their cosine distance is 0/0 — so
+    * they are EXCLUDED from the corpus here (passing them through would
+    * rank them at reduced-L2 distance 1.0, displacing true neighbors
+    * whose cosine distance exceeds 0.5, while the exact kernel ranks
+    * them NaN-last: a silent top-k divergence). A zero QUERY throws for
+    * the same reason: its normalized direction is undefined, so the
+    * reduced-L2 search would rank a meaningless direction and the rescore
+    * would emit NaN distances — a silent-NaN result in a fail-loud API.
+    */
+  def searchExactCosine(
+      spark: SparkSession,
+      data: DataFrame, // (id, vector)
+      queries: Array[(Long, Array[Float])],
+      k: Int): DataFrame = {
+    // normalize + encode in ONE fused kernel pass (Sq8Encode with
+    // normalize=true); zero-norm corpus vectors encode to NULL and are
+    // filtered (rationale in the scaladoc above)
+    val quantizedN = data
+      .select(col("id"), graft.functions.vec.sq8Encode(col("vector"), normalize = true).as("__enc"))
+      .filter(col("__enc").isNotNull)
+      .select(col("id"), col("__enc.codes").as("codes"),
+        col("__enc.q_scale").as("q_scale"), col("__enc.q_offset").as("q_offset"),
+        (col("__enc.q_err") + lit(cosineSlack)).as("q_err"))
+    def normalizeQ(qid: Long, v: Array[Float]): Array[Float] = {
+      var acc = 0.0
+      var i = 0
+      while (i < v.length) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
+      val n = math.sqrt(acc)
+      require(n > 0,
+        s"query $qid is a zero vector — cosine distance is undefined (0/0), mirroring the " +
+          "corpus-side exclusion above; drop or re-embed the query")
+      v.map(x => (x / n).toFloat)
+    }
+    val candidates = exactCandidates(spark, quantizedN,
+      queries.map { case (qid, qv) => (qid, normalizeQ(qid, qv)) }, k, None,
+      graft.core.Distances.Euclidean, "sq8")
+
+    // rank by the true cosine distance on the original vectors
+    import spark.implicits._
+    rescoreTopK(candidates, data, broadcast(queries.toSeq.toDF("qid", "qvec")), k, "cosine",
+      dedupVectors = false)
+  }
+
+  /** [[searchExactCosine]]'s widening of the reduced-L2 error bound: the
+    * float rounding of a normalized corpus vector and of a normalized
+    * query is at most 2⁻²⁴ each in L2 norm; 1e-6 covers their sum with
+    * room for the cosine kernel's double rounding near distance 0.
+    */
+  private val cosineSlack = 1e-6
+
   /** GUARANTEED-exact two-stage search over SQ8 codes, for any metric
     * whose distance obeys a triangle inequality against the
     * reconstruction: |d(q,v) − d(q,v̂)| ≤ d(v,v̂) = e_v — euclidean
@@ -296,74 +343,6 @@ object Quantize {
     * Cosine lacks such a reconstruction bound — [[searchExactCosine]]
     * reaches it through the normalize-then-L2 reduction instead.
     */
-  /** GUARANTEED-exact COSINE top-k over SQ8 codes via the normalize-then-L2
-    * reduction: on unit vectors ‖a−b‖₂² = 2·(1 − a·b) = 2·cos_dist(a,b), a
-    * strictly increasing map, so the exact L2 top-k over the L2-normalized
-    * vectors IS the exact cosine top-k over the originals — which extends
-    * [[searchExact]]'s data-independent τ-proof (euclidean-only by itself:
-    * cosine lacks a triangle-inequality reconstruction bound) to cosine.
-    * Pipeline: normalize (one narrow pass), [[sq8]] the NORMALIZED vectors
-    * (so the τ bound lives in the reduced space), run the provably-exact
-    * two-pass L2 search, then report the true cosine distance computed on
-    * the ORIGINAL vectors for the winning ids. Scan cost is the same
-    * 1 byte/dim as the euclidean path.
-    *
-    * Zero vectors have no direction — their cosine distance is 0/0 — so
-    * they are EXCLUDED from the corpus here (passing them through would
-    * rank them at reduced-L2 distance 1.0, displacing true neighbors
-    * whose cosine distance exceeds 0.5, while the exact kernel ranks
-    * them NaN-last: a silent top-k divergence). A zero QUERY throws for
-    * the same reason: its normalized direction is undefined, so the
-    * reduced-L2 search would rank a meaningless direction and the rescore
-    * would emit NaN distances — a silent-NaN result in a fail-loud API.
-    */
-  def searchExactCosine(
-      spark: SparkSession,
-      data: DataFrame, // (id, vector)
-      queries: Array[(Long, Array[Float])],
-      k: Int): DataFrame = {
-    // normalize + encode in ONE fused kernel pass (Sq8Encode with
-    // normalize=true); zero-norm corpus vectors encode to NULL and are
-    // filtered — the same exclusion the column formulation expressed as
-    // `norm > 0` (rationale in the scaladoc above)
-    // the normalized `vector` column is only touched by searchExact's
-    // candidate rescore (column pruning keeps it out of both 1-byte/dim
-    // τ scans), so the normalize transform runs once, not three times
-    val norm = sqrt(aggregate(col("vector").cast("array<double>"),
-      lit(0d), (acc, x) => acc + x * x))
-    val quantizedN = data
-      .select(col("id"), col("vector"),
-        graft.functions.vec.sq8Encode(col("vector"), normalize = true).as("__enc"))
-      .filter(col("__enc").isNotNull)
-      .select(col("id"),
-        transform(col("vector"), x => (x / norm).cast("float")).as("vector"),
-        col("__enc.codes").as("codes"),
-        col("__enc.q_scale").as("q_scale"), col("__enc.q_offset").as("q_offset"),
-        col("__enc.q_err").as("q_err"), col("__enc.q_err_l1").as("q_err_l1"))
-    def normalizeQ(qid: Long, v: Array[Float]): Array[Float] = {
-      var acc = 0.0
-      var i = 0
-      while (i < v.length) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
-      val n = math.sqrt(acc)
-      require(n > 0,
-        s"query $qid is a zero vector — cosine distance is undefined (0/0), mirroring the " +
-          "corpus-side exclusion above; drop or re-embed the query")
-      v.map(x => (x / n).toFloat)
-    }
-    val exactL2 = searchExact(spark, quantizedN,
-      queries.map { case (qid, qv) => (qid, normalizeQ(qid, qv)) }, k)
-
-    // the SET is exact; report/rank by the true cosine distance on the
-    // original vectors (identical order — the map above is monotone)
-    import spark.implicits._
-    val rescored = exactL2.select(col("qid"), col("id"))
-      .join(data.select(col("id"), col("vector")), Seq("id"))
-      .join(broadcast(queries.toSeq.toDF("qid", "qvec")), Seq("qid"))
-      .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), "cosine").as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   def searchExact(
       spark: SparkSession,
       quantized: DataFrame, // output of sq8/sq4 (id, vector, codes, q_scale, q_offset, q_err[, q_err_l1])
@@ -379,37 +358,35 @@ object Quantize {
     require(m == graft.core.Distances.Euclidean || m == graft.core.Distances.Manhattan,
       s"searchExact's τ-bound needs a triangle-inequality reconstruction error — " +
         s"'$metric' has none (use searchExactCosine for cosine)")
+    rescoreTopK(exactCandidates(spark, quantized, queries, k, probeCells, m, codec), quantized,
+      broadcast(queries.toSeq.toDF("qid", "qvec")), k, metric, dedupVectors = false)
+  }
+
+  /** [[searchExact]]'s two τ passes: the (qid, id) lower-bound survivors,
+    * a provable superset of every row within the k-th smallest distance.
+    */
+  private def exactCandidates(
+      spark: SparkSession,
+      quantized: DataFrame,
+      queries: Array[(Long, Array[Float])],
+      k: Int,
+      probeCells: Option[Map[Long, Array[Int]]],
+      m: Int,
+      codec: String): DataFrame = {
+    import spark.implicits._
     val errCol = if (m == graft.core.Distances.Manhattan) col("q_err_l1") else col("q_err")
     // q_dim drives the codec dispatch in decodeArr: -1 marks SQ8 byte
     // codes, >= 0 the SQ4 packed-nibble layout (and the true dimension)
     val dimCol = if (codec == "sq4") col("q_dim").cast("int") else lit(-1).cast("int")
     val kernel = graft.core.Distances.distance(m) _
     val bcQ = spark.sparkContext.broadcast(queries)
-    // per-query probed-cell mask (null = unrestricted full scan)
-    val nCells = probeCells.map(_.valuesIterator.flatten.foldLeft(0)(math.max) + 1).getOrElse(0)
-    // a query id absent from the probeCells map is UNRESTRICTED (null mask
-    // = full scan) — an all-false mask would silently drop the query from
-    // the output
-    val bcMask: org.apache.spark.broadcast.Broadcast[Array[Array[Boolean]]] =
-      spark.sparkContext.broadcast(queries.map { case (qid, _) =>
-        probeCells.flatMap(_.get(qid)).map { cells =>
-          val m = new Array[Boolean](nCells)
-          cells.foreach(c => if (c < nCells) m(c) = true)
-          m
-        }.orNull
-      })
-    val cellCol =
-      if (probeCells.isDefined) col("cell").cast("int") else lit(-1).cast("int")
+    val bcMask = Ivf.probeMasks(spark, queries, probeCells)
     val rows = quantized
-      .select(col("id").cast("long"), cellCol.as("cell"), col("codes").cast("array<smallint>"),
+      .select(col("id").cast("long"), Ivf.cellColumn(probeCells).as("cell"),
+        col("codes").cast("array<smallint>"),
         col("q_scale").cast("float"), col("q_offset").cast("float"), errCol.cast("double"),
         dimCol.as("qdim"))
       .as[(Long, Int, Array[Short], Float, Float, Double, Int)]
-
-    @inline def allowed(mask: Array[Array[Boolean]], qi: Int, cell: Int): Boolean = {
-      val m = mask(qi)
-      m == null || (cell >= 0 && cell < m.length && m(cell))
-    }
 
     // Pass 1: per-query kth-smallest upper bound over per-partition heaps.
     val ubCandidates = rows.mapPartitions { iter =>
@@ -420,19 +397,13 @@ object Quantize {
         val vhat = decodeArr(codes, qdim, scale, offset)
         var qi = 0
         while (qi < qs.length) {
-          if (allowed(mask, qi, cell)) heaps(qi).push(kernel(vhat, qs(qi)._2) + err, id)
+          if (Ivf.allowed(mask, qi, cell)) heaps(qi).push(kernel(vhat, qs(qi)._2) + err, id)
           qi += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sorted.iterator.map { case (ub, _) => (qs(qi)._1, ub) }
-      }
+      Knn.emitHeaps(heaps, qs(_)._1).map { case (qid, _, ub) => (qid, ub) }
     }.toDF("qid", "ub")
-    val wUb = Window.partitionBy("qid").orderBy("ub")
-    val tau: Map[Long, Double] = ubCandidates
-      .withColumn("rn", row_number().over(wUb)).filter(col("rn") <= k)
-      .groupBy("qid").agg(max("ub").as("tau"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val tau = Knn.kthUpperBound(ubCandidates, k)
 
     // Pass 2: lower-bound filter — a provable superset of the true top-k.
     // The q_err slack absorbs reconstruction-error rounding, but the
@@ -442,7 +413,7 @@ object Quantize {
     // boundary near-tie within kernel rounding can never evict a true
     // top-k member.
     val bcTau = spark.sparkContext.broadcast(tau)
-    val candidates = rows.mapPartitions { iter =>
+    rows.mapPartitions { iter =>
       val qs = bcQ.value
       val mask = bcMask.value
       val taus = qs.map { q =>
@@ -452,19 +423,10 @@ object Quantize {
       iter.flatMap { case (id, cell, codes, scale, offset, err, qdim) =>
         val vhat = decodeArr(codes, qdim, scale, offset)
         qs.indices.iterator
-          .filter(qi => allowed(mask, qi, cell) && kernel(vhat, qs(qi)._2) - err <= taus(qi))
+          .filter(qi => Ivf.allowed(mask, qi, cell) && kernel(vhat, qs(qi)._2) - err <= taus(qi))
           .map(qi => (qs(qi)._1, id))
       }
     }.toDF("qid", "id")
-
-    // Exact rescore of candidates only.
-    val queriesDf = queries.toSeq.toDF("qid", "qvec")
-    val rescored = candidates
-      .join(quantized.select(col("id"), col("vector")), Seq("id"))
-      .join(broadcast(queriesDf), Seq("qid"))
-      .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   // ---------------------------------------------------------------- binary
@@ -541,50 +503,30 @@ object Quantize {
     val bcQ = spark.sparkContext.broadcast(packedQ)
     val kc = k * overscan
 
-    // per-query probed-cell mask (IVF×binary composition — null mask =
-    // unrestricted; same convention as searchExact's)
-    val nCells = probeCells.map(_.valuesIterator.flatten.foldLeft(0)(math.max) + 1).getOrElse(0)
-    val bcMask: org.apache.spark.broadcast.Broadcast[Array[Array[Boolean]]] =
-      spark.sparkContext.broadcast(queries.map { case (qid, _) =>
-        probeCells.flatMap(_.get(qid)).map { cells =>
-          val m = new Array[Boolean](nCells)
-          cells.foreach(c => if (c < nCells) m(c) = true)
-          m
-        }.orNull
-      })
-    val cellCol =
-      if (probeCells.isDefined) col("cell").cast("int") else lit(-1).cast("int")
+    // per-query probed-cell mask (IVF×binary composition)
+    val bcMask = Ivf.probeMasks(spark, queries, probeCells)
 
     val coarse = binarize(
-        data.select(col("id").cast("long"), cellCol.as("cell"),
+        data.select(col("id").cast("long"), Ivf.cellColumn(probeCells).as("cell"),
           col("vector").cast("array<float>")), thresholds)
       .select(col("id"), col("cell"), col("sig"))
       .as[(Long, Int, Array[Long])]
       .mapPartitions { iter =>
         val qs = bcQ.value
         val mask = bcMask.value
-        @inline def allowed(qi: Int, cell: Int): Boolean = {
-          val m = mask(qi)
-          m == null || (cell >= 0 && cell < m.length && m(cell))
-        }
         val heaps = Array.fill(qs.length)(new TopK(kc))
         iter.foreach { case (id, cell, sig) =>
           var qi = 0
           while (qi < qs.length) {
-            if (allowed(qi, cell))
+            if (Ivf.allowed(mask, qi, cell))
               heaps(qi).push(graft.functions.BinaryKernels.hamming(sig, qs(qi)._2).toDouble, id)
             qi += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.iterator.map { case (d, id) => (qs(qi)._1, id, d) }
-        }
+        Knn.emitHeaps(heaps, qs(_)._1)
       }
       .toDF("qid", "id", "hd")
-    val wc = Window.partitionBy("qid").orderBy(col("hd"), col("id"))
-    val candidates = coarse
-      .withColumn("rn", row_number().over(wc)).filter(col("rn") <= kc)
-      .select("qid", "id")
+    val candidates = Knn.topK(coarse, kc, "hd", "rn").select("qid", "id")
 
     rescoreTopK(candidates, data.select(col("id").cast("long"), col("vector")),
       broadcast(queries.toSeq.toDF("qid", "qvec")), k, metric, dedupVectors = false)
@@ -606,12 +548,7 @@ object Quantize {
       k: Int,
       nprobe: Int,
       overscan: Int = 8): DataFrame = {
-    val metric = graft.core.Distances.Euclidean
-    val probed: Map[Long, Array[Int]] = queries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
-    searchBinary(spark, assigned, thresholds, queries, k, overscan, "euclidean", Some(probed))
+    searchBinary(spark, assigned, thresholds, queries, k, overscan, "euclidean",
+      Some(Ivf.probeMap(queries, centroids, nprobe)))
   }
 }

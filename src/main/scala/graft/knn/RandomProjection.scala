@@ -3,7 +3,6 @@ package graft.knn
 import graft.functions.{vec, PcaProject}
 import graft.internal.SqlBridge
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Johnson–Lindenstrauss random-projection retrieval tier: a coarse
@@ -75,14 +74,11 @@ object RandomProjection {
     val qP = queries.select(col("qid"), projectCol(dProj, d, col("qvec")).as("qp"))
     val coarse = dataP.crossJoin(broadcast(qP))
       .select(col("qid"), col("id"), vec.dist(col("vp"), col("qp"), metric).as("cdist"))
-    val w1 = Window.partitionBy("qid").orderBy(col("cdist"), col("id"))
-    val cand = coarse.withColumn("r", row_number().over(w1)).filter(col("r") <= coarseK)
-      .select("qid", "id")
+    val cand = Knn.topK(coarse, coarseK, "cdist", "r").select("qid", "id")
     val rescored = data.join(broadcast(cand), Seq("id"))
       .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(rescored, k)
   }
 
   /** [[search]] with a DataFrame query side — the JL tier at
@@ -113,7 +109,6 @@ object RandomProjection {
       .join(cand, Seq("id"))
       .join(queries.select(col("qid").cast("long"), col("qvec")), Seq("qid"))
       .select(col("qid"), col("id"), vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(rescored, k)
   }
 }

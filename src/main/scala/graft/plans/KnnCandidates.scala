@@ -2,13 +2,12 @@ package graft.plans
 
 import graft.core.Distances
 import graft.internal.SqlBridge
-import graft.knn.TopK
+import graft.knn.{Knn, TopK}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,10 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Whole-operator Catalyst extension for kNN candidate generation — the
   * (c)-level custom-operator path: a logical node, a planner strategy, and a
   * physical operator, registered per session. Semantically identical to
-  * `Knn.partitioned`'s `mapPartitions` formulation, but planner-visible:
-  * Catalyst can push column pruning beneath it, `explain` shows the
-  * operator, and the planner composes it with the downstream k-merge
-  * window like any built-in node.
+  * `Knn.partitioned`'s `mapPartitions` scan (its own row-major loop over
+  * the same bounded heaps, the shared heap emission `Knn.emitHeaps`), but
+  * planner-visible: Catalyst can push column pruning beneath it, `explain`
+  * shows the operator, and the planner composes it with the downstream
+  * k-merge window (`Knn.topK`) like any built-in node.
   */
 case class KnnCandidatesNode(
     queries: Array[(Long, Array[Float])],
@@ -68,6 +68,9 @@ case class KnnCandidatesExec(
       val qs = bc.value
       val heaps = Array.fill(qs.length)(new TopK(kk))
       val kernel = Distances.distance(m) _
+      // row-major: each row is decoded once and meets every query while it
+      // is cache-resident (measured faster here than the block-major
+      // Knn.scanHeaps: 200k 64-dim rows, 64 queries, 4 cores)
       iter.foreach { row =>
         val id = row.getLong(0)
         val vec = row.getArray(1).toFloatArray()
@@ -79,13 +82,11 @@ case class KnnCandidatesExec(
       }
       val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](LongType, LongType, DoubleType))
       val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(3)
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sorted.iterator.map { case (dist, id) =>
-          out.update(0, qs(qi)._1)
-          out.update(1, id)
-          out.update(2, dist)
-          proj(out)
-        }
+      Knn.emitHeaps(heaps, qs(_)._1).map { case (qid, id, dist) =>
+        out.update(0, qid)
+        out.update(1, id)
+        out.update(2, dist)
+        proj(out)
       }
     }
   }
@@ -127,8 +128,6 @@ object KnnCandidates {
     install(spark)
     val pre = data.select(col("id").cast("long"), col("vector").cast(ArrayType(FloatType)))
     val node = KnnCandidatesNode.create(queries, k, Distances.metricId(metric), SqlBridge.logicalPlan(pre))
-    val candidates = SqlBridge.ofRows(spark, node)
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Knn.topK(SqlBridge.ofRows(spark, node), k)
   }
 }

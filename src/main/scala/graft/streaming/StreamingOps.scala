@@ -1746,12 +1746,7 @@ object StreamingOps {
         graft.knn.Opq.rotateQueries(graft.knn.Opq.loadModel(spark, indexDir), queries)
       else queries
     val state = ivfView(spark, indexDir).pqState
-    val metric = graft.core.Distances.Euclidean
-    val probed: Map[Long, Array[Int]] = rotQueries.map { case (qid, qv) =>
-      qid -> centroids.zipWithIndex
-        .map { case (cv, ci) => (graft.core.Distances.distance(metric)(qv, cv), ci) }
-        .sortBy(identity).take(nprobe).map(_._2)
-    }.toMap
+    val probed = graft.knn.Ivf.probeMap(rotQueries, centroids, nprobe)
     graft.knn.Pq.search(spark, state, cb, rotQueries, k, overscan, Some(probed),
       dedup = meta.spill > 1,
       residualCentroids = if (flags.residual) Some(centroids) else None,

@@ -60,22 +60,68 @@ class PlanLintSpec extends SparkTestBase {
     }.toMap
   }
 
+  /** A top-k policy's code pattern and the one file allowed to hold it. A
+    * copy counts anywhere under `src/main/scala`, except for the rank
+    * window (`annOnly`): it counts only in the ANN tiers' sources and in
+    * ascending order, since relevance rankers (BM25, fusion, rank metrics,
+    * MaxSim) keep their own descending score windows.
+    */
+  private final case class Policy(
+      what: String, re: scala.util.matching.Regex, home: String, annOnly: Boolean = false) {
+    def copiedIn(path: String, lines: Seq[String]): Boolean =
+      path != home && (!annOnly || annTier(path)) &&
+        lines.exists(l => re.findFirstIn(l).isDefined && !(annOnly && l.contains(".desc")))
+  }
+
+  private val topKHomes: Seq[Policy] = Seq(
+    Policy("(distance, id) rank window", """\.partitionBy\("qid"\)\.orderBy\(""".r, "graft/knn/Knn.scala",
+      annOnly = true),
+    Policy("probe ranking", """sortBy\(identity\)""".r, "graft/knn/Ivf.scala"),
+    Policy("probed-cell mask", """new Array\[Boolean\]\(nCells\)""".r, "graft/knn/Ivf.scala"),
+    Policy("query fan-out", """Iterator\.range\(0, p\)\.map\(pid""".r, "graft/knn/Knn.scala"),
+    Policy("heap emission", """h\.sorted\.iterator\.map""".r, "graft/knn/Knn.scala"),
+    Policy("heap scan", """TopK\.scanBlocked\(""".r, "graft/knn/Knn.scala"))
+
+  private def annTier(path: String): Boolean =
+    Seq("graft/knn/", "graft/hnsw/", "graft/plans/", "graft/streaming/", "graft/Queries.scala")
+      .exists(path.startsWith)
+
+  /** "<policy>: <path>" for every copy of a policy outside its home. */
+  private def strayCopies(srcs: Map[String, Seq[String]]): Seq[String] =
+    for {
+      p <- topKHomes
+      (path, lines) <- srcs.toSeq.sortBy(_._1)
+      if p.copiedIn(path, lines)
+    } yield s"${p.what}: $path"
+
   test("one exact heap-scan core and one maintained delta-log read (source check)") {
-    def scansOutsideKnn(srcs: Map[String, Seq[String]]): Seq[String] =
-      srcs.toSeq.filter { case (path, lines) =>
-        !path.startsWith("graft/knn/") && lines.exists(_.contains("TopK.scanBlocked("))
-      }.map(_._1)
     def deltaReads(srcs: Map[String, Seq[String]]): Int =
       srcs("graft/streaming/StreamingOps.scala").map("""\.read\("delta"\)""".r.findAllIn(_).size).sum
     val srcs = mainSources
-    assert(scansOutsideKnn(srcs) === Nil,
-      "TopK.scanBlocked called outside graft.knn: take candidates from graft.knn.Knn instead")
+    assert(strayCopies(srcs) === Nil, "take each top-k policy from its home in graft.knn")
+    topKHomes.foreach { p =>
+      assert(srcs(p.home).exists(p.re.findFirstIn(_).isDefined), s"${p.home} no longer holds the ${p.what}")
+    }
     assert(deltaReads(srcs) === 1,
       "StreamingOps must read a maintained vector delta log in one place (MaintainedView.open)")
     // the checks see a copy coming back
+    val injected = Seq(
+      "graft/hnsw/HnswSpark.scala" -> """val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))""",
+      "graft/Queries.scala" -> """        .partitionBy("qid").orderBy(col("dist"), col("id"))""",
+      "graft/knn/Pq.scala" -> """.sortBy(identity).take(nprobe).map(_._2)""",
+      "graft/knn/Quantize.scala" -> """val m = new Array[Boolean](nCells)""",
+      "graft/hnsw/HnswSpark.scala" -> """.flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))""",
+      "graft/knn/Pca.scala" -> """h.sorted.iterator.map { case (u, _) => (qs(qi)._1, u) }""",
+      "graft/streaming/StreamingOps.scala" -> "TopK.scanBlocked(iter, qs, heaps, kernel)",
+      "graft/knn/Ivf.scala" -> """TopK.scanBlocked(rows, qvecs, heaps, kernel)""",
+      // outside the ANN tiers every policy but the rank window still counts
+      "graft/ops/Mmr.scala" -> """TopK.scanBlocked(rows, qvecs, heaps, kernel)""",
+      "graft/text/Bm25.scala" -> """.sortBy(identity).take(nprobe).map(_._2)""",
+      "graft/BenchHnsw.scala" -> """.flatMap(q => Iterator.range(0, p).map(pid => (pid, q)))""")
+    injected.foreach { case (path, line) =>
+      assert(strayCopies(srcs + (path -> (srcs(path) :+ line))).nonEmpty, s"$line in $path")
+    }
     val ops = srcs("graft/streaming/StreamingOps.scala")
-    assert(scansOutsideKnn(srcs + ("graft/streaming/StreamingOps.scala" ->
-      (ops :+ "TopK.scanBlocked(iter, qs, heaps, kernel)"))).nonEmpty)
     assert(deltaReads(srcs + ("graft/streaming/StreamingOps.scala" ->
       (ops :+ "hnswLog(spark, dir).read(\"delta\")"))) === 2)
   }
