@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.functions.{HashedShingleSet, MinHashBandHashes, ShingleBandHashes, ShingleHashSet, SortedIntersectCount}
+import graft.functions.{HashedShingleSet, MinHashBandHashes, ShingleHashSet, SortedIntersectCount}
 import graft.internal.SqlBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -113,52 +113,10 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.8,
       maxBucketSize: Int = 4096): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-
-    // per-doc precompute, one kernel pass each: hashed shingle set + band
-    // hashes straight from text (cheap enough that optimizer-duplicated
-    // evaluation is harmless)
-    val prepared = docs
-      .select(col(idCol).as("id"),
-        SqlBridge.column(ShingleHashSet(SqlBridge.expression(col(textCol)), 3)).as("hs"),
-        SqlBridge.column(ShingleBandHashes(
-          SqlBridge.expression(col(textCol)), 3, bands, rowsPerBand)).as("bhs"))
-      .filter(size(col("hs")) > 0)
-
-    val allBands = prepared
-      .select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-
-    val candidates = (if (maxBucketSize <= 0) {
-      allBands.alias("l")
-        .join(allBands.alias("r"), Seq("band", "bh"))
-        .filter(col("l.id") < col("r.id"))
-        .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
-    } else {
-      // one window pass (shuffles on the same (band, bh) key the join
-      // needs anyway) tags every bucket with its size + representative
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-      val sized = allBands
-        .withColumn("__n", count(lit(1)).over(w))
-        .withColumn("__min_id", min("id").over(w))
-      val small = sized.filter(col("__n") <= maxBucketSize).select("id", "band", "bh")
-      val smallPairs = small.alias("l")
-        .join(small.alias("r"), Seq("band", "bh"))
-        .filter(col("l.id") < col("r.id"))
-        .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
-      val starPairs = sized
-        .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-        .select(col("__min_id").as("doc_a"), col("id").as("doc_b"))
-      smallPairs.unionByName(starPairs)
-    }).dropDuplicates("doc_a", "doc_b")
-
-    val hs = prepared.select(col("id"), col("hs"))
-    candidates
-      .join(hs.select(col("id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
-      .join(hs.select(col("id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
-      .withColumn("jaccard", hashedJaccard(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val rows = Lsh.textRows(docs, col(idCol), col(textCol), bands,
+      Lsh.rowsPerBand(numHashes, bands))
+    Lsh.verifyJaccard(Lsh.candidates(Lsh.textBands(rows), maxBucketSize, "doc_a", "doc_b"),
+      "doc_a", "doc_b", rows, rows, threshold)
   }
 
   /** INCREMENTAL near-dup: MinHash-LSH pairs BETWEEN a new batch and an
@@ -190,48 +148,12 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.8,
       maxBucketSize: Int = 4096): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-
-    def prepare(docs: DataFrame) = docs
-      .select(col(idCol).as("id"),
-        SqlBridge.column(ShingleHashSet(SqlBridge.expression(col(textCol)), 3)).as("hs"),
-        SqlBridge.column(ShingleBandHashes(
-          SqlBridge.expression(col(textCol)), 3, bands, rowsPerBand)).as("bhs"))
-      .filter(size(col("hs")) > 0)
-
-    val newPrep = prepare(newDocs)
-    val corpusPrep = prepare(corpus)
-    val newBands = newPrep.select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-    val corpusBands = corpusPrep.select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-
-    val candidates = (if (maxBucketSize <= 0) {
-      newBands.alias("l").join(corpusBands.alias("r"), Seq("band", "bh"))
-        .select(col("l.id").as("new_id"), col("r.id").as("corpus_id"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-      val sized = corpusBands
-        .withColumn("__n", count(lit(1)).over(w))
-        .withColumn("__min_id", min("id").over(w))
-      val small = sized.filter(col("__n") <= maxBucketSize).select("id", "band", "bh")
-      val smallPairs = newBands.alias("l").join(small.alias("r"), Seq("band", "bh"))
-        .select(col("l.id").as("new_id"), col("r.id").as("corpus_id"))
-      // oversized corpus buckets: one representative row per bucket,
-      // paired against every new-side member of that bucket
-      val reps = sized.filter(col("__n") > maxBucketSize)
-        .select(col("band"), col("bh"), col("__min_id")).distinct()
-      val starPairs = newBands.alias("l").join(reps, Seq("band", "bh"))
-        .select(col("l.id").as("new_id"), col("__min_id").as("corpus_id"))
-      smallPairs.unionByName(starPairs)
-    }).filter(col("new_id") =!= col("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id")
-
-    candidates
-      .join(newPrep.select(col("id").as("new_id"), col("hs").as("hs_a")), Seq("new_id"))
-      .join(corpusPrep.select(col("id").as("corpus_id"), col("hs").as("hs_b")), Seq("corpus_id"))
-      .withColumn("jaccard", hashedJaccard(col("hs_a"), col("hs_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("jaccard"))
+    val rowsPerBand = Lsh.rowsPerBand(numHashes, bands)
+    val newRows = Lsh.textRows(newDocs, col(idCol), col(textCol), bands, rowsPerBand)
+    val corpusRows = Lsh.textRows(corpus, col(idCol), col(textCol), bands, rowsPerBand)
+    val candidates = Lsh.bipartite(Lsh.textBands(newRows), Lsh.textBands(corpusRows),
+      maxBucketSize, "new_id", "corpus_id")
+    Lsh.verifyJaccard(candidates, "new_id", "corpus_id", newRows, corpusRows, threshold)
   }
 
   /** Edit-distance-verified near-duplicate pairs — the two-stage fuzzy
@@ -571,9 +493,7 @@ object Dedup {
       benchTextCol: String = "text",
       n: Int = 3): DataFrame = {
     def exploded(df: DataFrame, id: String, text: String, outId: String) =
-      df.select(col(id).as(outId),
-          SqlBridge.column(ShingleHashSet(SqlBridge.expression(col(text)), n)).as("hs"))
-        .select(col(outId), explode(col("hs")).as("h"))
+      Lsh.shingleHashRows(df, col(id), col(text), n, outId)
     exploded(docs, idCol, textCol, "doc_id")
       .join(broadcast(exploded(benchmark, benchIdCol, benchTextCol, "bench_id")), Seq("h"))
       .groupBy("doc_id", "bench_id")
@@ -615,9 +535,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     val spark = docs.sparkSession
     def exploded(df: DataFrame, id: String, text: String, outId: String) =
-      df.select(col(id).as(outId),
-          SqlBridge.column(ShingleHashSet(SqlBridge.expression(col(text)), n)).as("hs"))
-        .select(col(outId), explode(col("hs")).as("h"))
+      Lsh.shingleHashRows(df, col(id), col(text), n, outId)
     // benchmark shingles feed two consumers (bloom build + exact verify);
     // benchmark-suite-sized, so caching is cheap and saves a re-shingle
     val bench = exploded(benchmark, benchIdCol, benchTextCol, "bench_id").cache()
@@ -661,9 +579,7 @@ object Dedup {
       benchIdCol: String = "bench_id",
       benchTextCol: String = "text"): DataFrame = {
     def exploded(df: DataFrame, id: String, text: String, outId: String) =
-      df.select(col(id).as(outId),
-          SqlBridge.column(ShingleHashSet(SqlBridge.expression(col(text)), n)).as("hs"))
-        .select(col(outId), explode(col("hs")).as("h"))
+      Lsh.shingleHashRows(df, col(id), col(text), n, outId)
     val benchSh = exploded(benchmark, benchIdCol, benchTextCol, "bench_id")
     // hashes of bench shingles that occur anywhere in the corpus —
     // distinct'd (partial agg kills per-occurrence rows map-side), so the

@@ -1,11 +1,14 @@
 package graft.dedup
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Banded-LSH candidate generation + exact verify over ANY 64-bit
-  * perceptual hash column — the shared core of the image
-  * ([[ImageDedup]]) and audio ([[AudioDedup]]) near-dup tiers.
+  * perceptual hash column — the public Hamming entry of the image
+  * ([[ImageDedup]]), audio ([[AudioDedup]]) and video ([[VideoDedup]])
+  * near-dup tiers. The streaming media sink
+  * (`StreamingOps.mediaPhashSink`) runs the same steps per micro-batch;
+  * both take the slicing, the skew-guarded candidates and the verify from
+  * the banded-LSH core, `Lsh`.
   *
   * Completeness: the hash splits into `bands` equal slices; two hashes
   * within Hamming distance `maxDist < bands` agree on at least one full
@@ -41,43 +44,8 @@ object HammingLsh {
       maxDist: Int = 3,
       bands: Int = 4,
       maxBucketSize: Int = 4096): DataFrame = {
-    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxDist < bands,
-      s"pigeonhole completeness needs maxDist < bands, got maxDist=$maxDist bands=$bands")
-    val bandW = 64 / bands
-    val mask = if (bandW == 64) -1L else (1L << bandW) - 1L
-
-    val bandRows = hashed.select(
-      col("id"),
-      posexplode(array((0 until bands).map { b =>
-        shiftrightunsigned(col(hashCol), b * bandW).bitwiseAND(lit(mask))
-      }: _*)).as(Seq("band", "bh")))
-
-    val candidates = (if (maxBucketSize <= 0) {
-      bandRows.alias("l").join(bandRows.alias("r"), Seq("band", "bh"))
-        .filter(col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-      val sized = bandRows
-        .withColumn("__n", count(lit(1)).over(w))
-        .withColumn("__min_id", min("id").over(w))
-      val small = sized.filter(col("__n") <= maxBucketSize).select("id", "band", "bh")
-      val smallPairs = small.alias("l").join(small.alias("r"), Seq("band", "bh"))
-        .filter(col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      val starPairs = sized
-        .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-        .select(col("__min_id").as("id_a"), col("id").as("id_b"))
-      smallPairs.unionByName(starPairs)
-    }).dropDuplicates("id_a", "id_b")
-
-    val side = hashed.select(col("id"), col(hashCol))
-    candidates
-      .join(side.select(col("id").as("id_a"), col(hashCol).as("__h_a")), Seq("id_a"))
-      .join(side.select(col("id").as("id_b"), col(hashCol).as("__h_b")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+    val hb = Lsh.HammingBands(bands, maxDist)
+    hb.verify(Lsh.candidates(hb.rows(hashed, hashCol), maxBucketSize, "id_a", "id_b"),
+      "id_a", "id_b", hashed, hashCol)
   }
 }

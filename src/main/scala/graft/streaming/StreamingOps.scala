@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.dedup.Lsh
 import graft.io.BatchLog
 
 /** Structured Streaming counterparts of the reference's online mutation and
@@ -171,7 +172,10 @@ object StreamingOps {
     * star pairs instead of C(n,2) — still Jaccard-verified (no false
     * pairs, possible misses, the same trade the batch guard makes; which
     * docs a capped bucket retains depends on arrival/batch order, where
-    * batch retains by global bucket membership). At-least-once replays
+    * batch retains by global bucket membership). `maxBucketSize <= 0`
+    * disables the guard, as in the batch operator: every bucket keeps
+    * accumulating and verifies every arrival against all its members.
+    * At-least-once replays
     * are absorbed: a redelivered RETAINED member neither re-pairs nor
     * re-enters state, and a redelivered arrival to a full bucket re-emits
     * only its identical star pair, which the distinct absorbs. State
@@ -193,17 +197,11 @@ object StreamingOps {
       bands: Int = 16,
       threshold: Double = 0.8,
       maxBucketSize: Int = 4096): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val rowsPerBand = Lsh.rowsPerBand(numHashes, bands)
     val spark = docs.sparkSession
     import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    import graft.internal.SqlBridge.{column => gc, expression => ge}
-    docs
-      .select(col("doc_id").cast("long").as("id"),
-        gc(graft.functions.ShingleHashSet(ge(col("text")), 3)).as("hs"),
-        gc(graft.functions.ShingleBandHashes(ge(col("text")), 3, bands, rowsPerBand)).as("bhs"))
-      .filter(size(col("hs")) > 0)
-      .select(col("id"), col("hs"), posexplode(col("bhs")).as(Seq("band", "bh")))
+    Lsh.textBands(Lsh.textRows(docs, col("doc_id").cast("long"), col("text"), bands, rowsPerBand),
+        "hs")
       .as[(Long, Array[Long], Int, Long)]
       .groupByKey { case (_, _, band, bh) => (band, bh) }
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -237,18 +235,19 @@ object StreamingOps {
       rows: Iterator[(Long, Array[Long], Int, Long)],
       state: GroupState[Seq[(Long, Array[Long])]]): Iterator[(Long, Long, Int, Double)] = {
     val band = key._1
+    val cap = if (maxBucketSize <= 0) Int.MaxValue else maxBucketSize
     var members = state.getOption.getOrElse(Seq.empty)
     val out = Seq.newBuilder[(Long, Long, Int, Double)]
     var changed = false
     rows.toArray.sortBy(_._1).foreach { case (id, hs, _, _) =>
       if (!members.exists(_._1 == id)) { // replay guard
-        val compareTo = if (members.size >= maxBucketSize) members.take(1) else members
+        val compareTo = if (members.size >= cap) members.take(1) else members
         compareTo.foreach { case (mid, mhs) =>
           val jac = jaccardSorted(hs, mhs)
           if (jac >= threshold)
             out += ((math.min(id, mid), math.max(id, mid), band, jac))
         }
-        if (members.size < maxBucketSize) {
+        if (members.size < cap) {
           members = members :+ ((id, hs))
           changed = true
         }
@@ -280,10 +279,14 @@ object StreamingOps {
     *
     * Pair semantics converge to [[graft.dedup.Dedup.minhashLshPairs]] on
     * buckets within `maxBucketSize` regardless of batch boundaries
-    * (proven in StreamingSpec); oversized buckets degrade to
-    * Jaccard-verified star pairs against the bucket's current min-id
-    * representative — arrival-order dependent, like the state-store form.
-    * Read converged pairs with [[nearDupSinkPairs]].
+    * (proven in StreamingSpec and LshConvergenceProps); oversized buckets
+    * degrade to Jaccard-verified star pairs against the bucket's current
+    * min-id representative — arrival-order dependent, like the
+    * state-store form. `maxBucketSize <= 0` disables the guard, as in the
+    * batch operator: every bucket pairs all its members. Banding, the
+    * guard and the verify are the batch operator's own, from the
+    * banded-LSH core `graft.dedup.Lsh`. Read converged pairs with
+    * [[nearDupSinkPairs]].
     */
   def nearDupSink(
       spark: SparkSession,
@@ -292,23 +295,18 @@ object StreamingOps {
       bands: Int = 16,
       threshold: Double = 0.8,
       maxBucketSize: Int = 4096): (DataFrame, Long) => Unit = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
+    val rowsPerBand = Lsh.rowsPerBand(numHashes, bands)
     val log = new BatchLog(spark, dir, Seq("docs", "bands"), "near-dup", None, exactlyOnce = false,
       meta = "nd_meta")
     log.open(Seq("numHashes" -> numHashes.toString, "bands" -> bands.toString),
       JoinsIncompatible)(())
 
     (batch: DataFrame, batchId: Long) => {
-      import graft.internal.SqlBridge.{column => gc, expression => ge}
       val oldDocs = log.read("docs").map(_.select("id", "hs"))
-      val oldBandsAll = log.read("bands").map(_.select("id", "band", "bh"))
+      val oldBands = log.read("bands").map(_.select("id", "band", "bh"))
 
-      val preparedAll = batch
-        .select(col("doc_id").cast("long").as("id"),
-          gc(graft.functions.ShingleHashSet(ge(col("text")), 3)).as("hs"),
-          gc(graft.functions.ShingleBandHashes(ge(col("text")), 3, bands, rowsPerBand)).as("bhs"))
-        .filter(size(col("hs")) > 0)
+      val preparedAll = Lsh.textRows(batch, col("doc_id").cast("long"), col("text"), bands,
+          rowsPerBand)
         .dropDuplicates("id")
       // replay guard: ids already accumulated (a redelivered micro-batch)
       // must not pair with themselves or re-append
@@ -316,47 +314,14 @@ object StreamingOps {
         preparedAll.join(d.select("id"), Seq("id"), "left_anti"))
         .persist()
       try {
-        val newBands = prepared
-          .select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-        val oldBands = oldBandsAll.fold(newBands.filter(lit(false)))(
-          _.join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi"))
-        val allBands = newBands.unionByName(oldBands)
-
-        // bucket sizes on the join's own key; oversized buckets emit
-        // star pairs against the current min-id representative — the
-        // same degradation as the batch operator's skew guard
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-        val sized = allBands
-          .withColumn("__n", count(lit(1)).over(w))
-          .withColumn("__min_id", min("id").over(w))
-        val newInBucket = sized.join(newBands.select(col("id"), col("band"), col("bh")),
-          Seq("id", "band", "bh"), "left_semi")
-        val small = sized.filter(col("__n") <= maxBucketSize)
-        // a pair needs at least one NEW member; old×old pairs were emitted
-        // when their younger member arrived
-        val newSmall = small.join(newBands, Seq("id", "band", "bh"), "left_semi")
-        val smallPairs = newSmall.alias("l")
-          .join(small.alias("r"), Seq("band", "bh"))
-          .filter(col("l.id") =!= col("r.id"))
-          .select(least(col("l.id"), col("r.id")).as("doc_a"),
-            greatest(col("l.id"), col("r.id")).as("doc_b"))
-        val starPairs = newInBucket
-          .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-          .select(col("__min_id").as("doc_a"), col("id").as("doc_b"))
-        val candidates = smallPairs.unionByName(starPairs)
-          .dropDuplicates("doc_a", "doc_b")
-
+        val newBands = Lsh.textBands(prepared)
+        val candidates = Lsh.candidates(Lsh.bucketMates(newBands, oldBands), maxBucketSize,
+          "doc_a", "doc_b", fresh = Some(newBands))
         // verify with each side's set: new ids resolve from the batch,
-        // old ids from the accumulated docs table (semi-filtered by the
-        // candidate ids before the join fans out)
+        // old ids from the accumulated docs table
         val setsNew = prepared.select(col("id"), col("hs"))
         val sets = oldDocs.fold(setsNew)(setsNew.unionByName(_))
-        val verified = candidates
-          .join(sets.select(col("id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
-          .join(sets.select(col("id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
-          .withColumn("jaccard", graft.dedup.Dedup.hashedJaccard(col("hs_a"), col("hs_b")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("doc_a"), col("doc_b"), col("jaccard"))
+        val verified = Lsh.verifyJaccard(candidates, "doc_a", "doc_b", sets, sets, threshold)
 
         // pairs first (their replay dedupes at read), then the state tables
         verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
@@ -396,8 +361,11 @@ object StreamingOps {
     * (old×old pairs were emitted when their younger member arrived);
     * oversized buckets degrade to Hamming-verified star pairs against
     * the bucket's current min-id representative, arrival-order dependent
-    * like the text form. Read with [[mediaPhashSinkPairs]]; feed the
-    * pairs into [[dedupGroupsSink]] for online cluster resolution.
+    * like the text form. `maxBucketSize <= 0` disables the guard, as in
+    * the batch operator: every bucket pairs all its members. Slicing, the
+    * guard and the verify come from the banded-LSH core `graft.dedup.Lsh`.
+    * Read with [[mediaPhashSinkPairs]]; feed the pairs into
+    * [[dedupGroupsSink]] for online cluster resolution.
     */
   def mediaPhashSink(
       spark: SparkSession,
@@ -407,18 +375,14 @@ object StreamingOps {
       maxDist: Int = 3,
       bands: Int = 4,
       maxBucketSize: Int = 4096): (DataFrame, Long) => Unit = {
-    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxDist < bands,
-      s"pigeonhole completeness needs maxDist < bands, got maxDist=$maxDist bands=$bands")
-    val bandW = 64 / bands
-    val mask = if (bandW == 64) -1L else (1L << bandW) - 1L
+    val hb = Lsh.HammingBands(bands, maxDist)
     val log = new BatchLog(spark, dir, Seq("hashes", "bands"), "media-phash", None,
       exactlyOnce = false, meta = "mp_meta")
     log.open(Seq("bands" -> bands.toString), JoinsIncompatible)(())
 
     (batch: DataFrame, batchId: Long) => {
       val oldHashes = log.read("hashes").map(_.select("id", "dhash"))
-      val oldBandsAll = log.read("bands").map(_.select("id", "band", "bh"))
+      val oldBands = log.read("bands").map(_.select("id", "band", "bh"))
 
       val preparedAll = batch
         .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("dhash"))
@@ -428,48 +392,14 @@ object StreamingOps {
         preparedAll.join(h.select("id"), Seq("id"), "left_anti"))
         .persist()
       try {
-        val newBands = prepared.select(
-          col("id"),
-          posexplode(array((0 until bands).map { b =>
-            shiftrightunsigned(col("dhash"), b * bandW).bitwiseAND(lit(mask))
-          }: _*)).as(Seq("band", "bh")))
-        val oldBands = oldBandsAll.fold(newBands.filter(lit(false)))(
-          _.join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi"))
-        val allBands = newBands.unionByName(oldBands)
-
-        // bucket sizes on the join key across old + new; oversized
-        // buckets emit star pairs against the current min-id member
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-        val sized = allBands
-          .withColumn("__n", count(lit(1)).over(w))
-          .withColumn("__min_id", min("id").over(w))
-        val newInBucket = sized.join(newBands.select(col("id"), col("band"), col("bh")),
-          Seq("id", "band", "bh"), "left_semi")
-        val small = sized.filter(col("__n") <= maxBucketSize)
-        // a pair needs at least one NEW member; old×old pairs were
-        // emitted when their younger member arrived
-        val newSmall = small.join(newBands, Seq("id", "band", "bh"), "left_semi")
-        val smallPairs = newSmall.alias("l")
-          .join(small.alias("r"), Seq("band", "bh"))
-          .filter(col("l.id") =!= col("r.id"))
-          .select(least(col("l.id"), col("r.id")).as("id_a"),
-            greatest(col("l.id"), col("r.id")).as("id_b"))
-        val starPairs = newInBucket
-          .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-          .select(col("__min_id").as("id_a"), col("id").as("id_b"))
-        val candidates = smallPairs.unionByName(starPairs)
-          .dropDuplicates("id_a", "id_b")
-
+        val newBands = hb.rows(prepared, "dhash")
+        val candidates = Lsh.candidates(Lsh.bucketMates(newBands, oldBands), maxBucketSize,
+          "id_a", "id_b", fresh = Some(newBands))
         // exact Hamming verify: new ids resolve from the batch, old ids
-        // from the accumulated table (candidate-semi-filtered first)
+        // from the accumulated table
         val hashesNew = prepared.select(col("id"), col("dhash"))
-        val sides = oldHashes.fold(hashesNew)(hashesNew.unionByName(_))
-        val verified = candidates
-          .join(sides.select(col("id").as("id_a"), col("dhash").as("__h_a")), Seq("id_a"))
-          .join(sides.select(col("id").as("id_b"), col("dhash").as("__h_b")), Seq("id_b"))
-          .withColumn("hamming", bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long"))
-          .filter(col("hamming") <= maxDist)
-          .select(col("id_a"), col("id_b"), col("hamming"))
+        val verified = hb.verify(candidates, "id_a", "id_b",
+          oldHashes.fold(hashesNew)(hashesNew.unionByName(_)), "dhash")
 
         // pairs first (replays dedupe at read), then the state tables
         verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
@@ -3042,10 +2972,7 @@ object StreamingOps {
     val docsDir = dcrDocsDir(indexDir)
 
     def shingles(df: DataFrame, id: String, text: String, outId: String) =
-      df.select(col(id).cast("long").as(outId),
-          graft.internal.SqlBridge.column(graft.functions.ShingleHashSet(
-            graft.internal.SqlBridge.expression(col(text)), n)).as("__hs"))
-        .select(col(outId), explode(col("__hs")).as("h"))
+      Lsh.shingleHashRows(df, col(id).cast("long"), col(text), n, outId)
 
     val benchSh = shingles(benchmark, benchIdCol, benchTextCol, "bench_id")
     // deterministic digest: order-free xor of (bench_id * prime ^ h) plus

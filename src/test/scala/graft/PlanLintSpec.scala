@@ -60,16 +60,18 @@ class PlanLintSpec extends SparkTestBase {
     }.toMap
   }
 
-  /** A top-k policy's code pattern and the one file allowed to hold it. A
-    * copy counts anywhere under `src/main/scala`, except for the rank
-    * window (`annOnly`): it counts only in the ANN tiers' sources and in
+  /** A policy's code pattern and the one file allowed to hold it. A copy
+    * counts anywhere under `src/main/scala` but under `definedIn` (where
+    * the pattern's own expression is defined), except for the rank window
+    * (`annOnly`): it counts only in the ANN tiers' sources and in
     * ascending order, since relevance rankers (BM25, fusion, rank metrics,
     * MaxSim) keep their own descending score windows.
     */
   private final case class Policy(
-      what: String, re: scala.util.matching.Regex, home: String, annOnly: Boolean = false) {
+      what: String, re: scala.util.matching.Regex, home: String, annOnly: Boolean = false,
+      definedIn: Option[String] = None) {
     def copiedIn(path: String, lines: Seq[String]): Boolean =
-      path != home && (!annOnly || annTier(path)) &&
+      path != home && !definedIn.exists(path.startsWith) && (!annOnly || annTier(path)) &&
         lines.exists(l => re.findFirstIn(l).isDefined && !(annOnly && l.contains(".desc")))
   }
 
@@ -86,10 +88,19 @@ class PlanLintSpec extends SparkTestBase {
     Seq("graft/knn/", "graft/hnsw/", "graft/plans/", "graft/streaming/", "graft/Queries.scala")
       .exists(path.startsWith)
 
+  /** The banded-LSH policies, all at home in the one LSH core. */
+  private val lshHomes: Seq[Policy] = Seq(
+    Policy("bucket-sizing window", "\"__min_id\"".r, "graft/dedup/Lsh.scala"),
+    Policy("text band rows", """ShingleBandHashes\(""".r, "graft/dedup/Lsh.scala",
+      definedIn = Some("graft/functions/")),
+    Policy("Hamming slice", """shiftrightunsigned\(""".r, "graft/dedup/Lsh.scala"),
+    Policy("Hamming verify", """bit_count\(col\("__h_a"\)""".r, "graft/dedup/Lsh.scala"))
+
   /** "<policy>: <path>" for every copy of a policy outside its home. */
-  private def strayCopies(srcs: Map[String, Seq[String]]): Seq[String] =
+  private def strayCopies(
+      srcs: Map[String, Seq[String]], policies: Seq[Policy] = topKHomes): Seq[String] =
     for {
-      p <- topKHomes
+      p <- policies
       (path, lines) <- srcs.toSeq.sortBy(_._1)
       if p.copiedIn(path, lines)
     } yield s"${p.what}: $path"
@@ -124,6 +135,26 @@ class PlanLintSpec extends SparkTestBase {
     val ops = srcs("graft/streaming/StreamingOps.scala")
     assert(deltaReads(srcs + ("graft/streaming/StreamingOps.scala" ->
       (ops :+ "hnswLog(spark, dir).read(\"delta\")"))) === 2)
+  }
+
+  test("one banded-LSH core in graft.dedup (source check)") {
+    val srcs = mainSources
+    assert(strayCopies(srcs, lshHomes) === Nil, "take each banded-LSH step from graft.dedup.Lsh")
+    lshHomes.foreach { p =>
+      assert(srcs(p.home).exists(p.re.findFirstIn(_).isDefined), s"${p.home} no longer holds the ${p.what}")
+    }
+    // each check sees a copy coming back in each file that held one
+    val copies = Seq(
+      """      .withColumn("__min_id", min("id").over(w))""",
+      """        gc(graft.functions.ShingleBandHashes(ge(col("text")), 3, bands, rowsPerBand)).as("bhs"))""",
+      """          shiftrightunsigned(col(hashCol), b * bandW).bitwiseAND(lit(mask))""",
+      """      .withColumn("hamming", bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long"))""")
+    for {
+      (line, p) <- copies.zip(lshHomes)
+      path <- Seq("graft/dedup/Dedup.scala", "graft/dedup/HammingLsh.scala",
+        "graft/streaming/StreamingOps.scala")
+    } assert(strayCopies(srcs + (path -> (srcs(path) :+ line)), Seq(p)) === Seq(s"${p.what}: $path"),
+      s"$line in $path")
   }
 
   test("aggregations are partial before the exchange (map-side combine)") {
