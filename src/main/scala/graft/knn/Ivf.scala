@@ -472,7 +472,7 @@ object Ivf {
 
   /** Load a persisted IVF index: (assigned, centroids). */
   def load(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]]) =
-    (spark.read.parquet(s"$dir/assigned"), loadCentroids(spark, dir))
+    (graft.io.IndexTable.read(spark, dir, "assigned"), loadCentroids(spark, dir))
 
   /** Meta sidecar of a saved index; None ONLY when the sidecar is absent
     * (pre-meta save). A present-but-unreadable sidecar (corruption, schema
@@ -533,11 +533,14 @@ object Ivf {
     * loaded ([[loadQuantizerIfAny]]), and the assignment row count must
     * match what the save-time job wrote — a cell partition lost to a
     * partial copy fails HERE instead of silently vanishing from every
-    * search (parquet globs don't miss missing directories). The count is
-    * footer-metadata-only (no row scan), one cheap job per load.
+    * search (parquet globs don't miss missing directories). The count
+    * reads no column. Under adaptive execution it is two jobs per load,
+    * its map stage and its result stage (counted with a job listener over
+    * a saved 3-cell index); `assigned` takes its schema from a footer, so
+    * no inference job precedes them.
     */
   private[knn] def loadWithMeta(spark: SparkSession, dir: String): (DataFrame, Array[Array[Float]], IvfMeta) = {
-    val assigned = spark.read.parquet(s"$dir/assigned")
+    val assigned = graft.io.IndexTable.read(spark, dir, "assigned")
     val (meta, centroids) = loadQuantizerIfAny(spark, dir, "saved").getOrElse {
       val cs = loadCentroids(spark, dir)
       (IvfMeta("euclidean", 1, cs.length, cs.headOption.map(_.length).getOrElse(0)), cs)

@@ -231,7 +231,7 @@ object Opq {
     */
   def loadModel(spark: SparkSession, dir: String): OpqModel = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$dir/opq_rot")
+    val rows = graft.io.IndexTable.read(spark, dir, "opq_rot")
       .select("i", "mean", "row", "eigenvalue", "m")
       .as[(Int, Double, Seq[Double], Double, Int)].collect().sortBy(_._1)
     require(rows.nonEmpty, s"no OPQ rotation under $dir/opq_rot")

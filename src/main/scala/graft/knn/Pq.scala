@@ -423,18 +423,33 @@ object Pq {
   /** Whether a [[save]]d index carries residual (IVFADC) codes; pre-flag
     * saves (no `residual` column) were raw-vector encoded.
     */
-  def savedResidual(spark: SparkSession, dir: String): Boolean = {
-    val df = spark.read.parquet(s"$dir/pq_books")
-    df.columns.contains("residual") &&
-      df.select("residual").head().getBoolean(0)
-  }
+  def savedResidual(spark: SparkSession, dir: String): Boolean =
+    residualOf(booksTable(spark, dir))
 
   /** Load the codebooks of a [[save]]d index; fails loudly on a ragged or
     * absent table.
     */
-  def loadCodebooks(spark: SparkSession, dir: String): PqCodebooks = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$dir/pq_books")
+  def loadCodebooks(spark: SparkSession, dir: String): PqCodebooks =
+    codebooksOf(booksTable(spark, dir), dir)
+
+  /** [[loadCodebooks]] and [[savedResidual]] from one read of the table. */
+  private def loadSaved(spark: SparkSession, dir: String): (PqCodebooks, Boolean) = {
+    val books = booksTable(spark, dir)
+    (codebooksOf(books, dir), residualOf(books))
+  }
+
+  /** The `pq_books` table as a local relation: reading and collecting it
+    * starts no Spark job.
+    */
+  private def booksTable(spark: SparkSession, dir: String): DataFrame =
+    graft.io.IndexTable.read(spark, dir, "pq_books")
+
+  private def residualOf(books: DataFrame): Boolean =
+    books.columns.contains("residual") && books.select("residual").head().getBoolean(0)
+
+  private def codebooksOf(table: DataFrame, dir: String): PqCodebooks = {
+    import table.sparkSession.implicits._
+    val rows = table
       .select("subspace", "code", "codeword")
       .as[(Int, Int, Seq[Float])].collect()
     require(rows.nonEmpty, s"no codebooks under $dir/pq_books")
@@ -477,14 +492,14 @@ object Pq {
     require(rotatedQueries || !Opq.savedRotation(spark, dir),
       s"index at $dir carries an OPQ rotation sidecar — search it via Opq.searchSaved " +
         "(raw-coordinate queries against rotated codes rank garbage)")
-    val cb = loadCodebooks(spark, dir)
+    val (cb, residual) = loadSaved(spark, dir)
     require(cb.m * cb.dsub == meta.dim,
       s"index at $dir is torn: codebooks cover ${cb.m * cb.dsub} dims, sidecar says ${meta.dim}")
     Ivf.requireQueryDim(queries, meta.dim)
     // the sidecar knows whether the assignment was spilled — a spilled id
     // in several probed cells must not rank twice; the codebook table
     // knows whether codes are raw or residual and dispatches the scan
-    if (savedResidual(spark, dir))
+    if (residual)
       searchIvfPqResidual(spark, assigned, centroids, cb, queries, k, nprobe, overscan,
         dedup = meta.spill > 1)
     else
@@ -635,11 +650,10 @@ object Pq {
     require(rotatedQueries || !Opq.savedRotation(spark, dir),
       s"index at $dir carries an OPQ rotation sidecar — search it via Opq.searchSavedDF " +
         "(raw-coordinate queries against rotated codes rank garbage)")
-    val cb = loadCodebooks(spark, dir)
+    val (cb, residual) = loadSaved(spark, dir)
     require(cb.m * cb.dsub == meta.dim,
       s"index at $dir is torn: codebooks cover ${cb.m * cb.dsub} dims, sidecar says ${meta.dim}")
     val checked = Ivf.checkQueryDim(queries, meta.dim)
-    searchIvfPqDF(assigned, centroids, cb, checked, k, nprobe, overscan,
-      residual = savedResidual(spark, dir))
+    searchIvfPqDF(assigned, centroids, cb, checked, k, nprobe, overscan, residual = residual)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import graft.dedup.Lsh
-import graft.io.BatchLog
+import graft.io.{BatchLog, IndexTable}
 
 /** Structured Streaming counterparts of the reference's online mutation and
   * query paths (`/root/reference/storage/dataset.go:238-348`): the batch
@@ -336,7 +336,7 @@ object StreamingOps {
     * (at-least-once replays dedupe here).
     */
   def nearDupSinkPairs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/pairs").select("doc_a", "doc_b", "jaccard")
+    IndexTable.read(spark, dir, "pairs").select("doc_a", "doc_b", "jaccard")
       .dropDuplicates("doc_a", "doc_b")
 
   /** STREAMING perceptual-hash near-dedup — [[nearDupSink]]'s shape for
@@ -414,7 +414,7 @@ object StreamingOps {
     * (at-least-once replays dedupe here).
     */
   def mediaPhashSinkPairs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/pairs").select("id_a", "id_b", "hamming")
+    IndexTable.read(spark, dir, "pairs").select("id_a", "id_b", "hamming")
       .dropDuplicates("id_a", "id_b")
 
   /** STREAMING cluster resolution: incremental connected components over
@@ -2228,7 +2228,7 @@ object StreamingOps {
           spark.emptyDataset[(Long, Long, String, Long)](
             org.apache.spark.sql.Encoders.product[(Long, Long, String, Long)])
             .toDF("doc_id", "dl", "token", "tf")
-        else spark.read.parquet(s"$indexDir/base/postings")
+        else IndexTable.read(spark, s"$indexDir/base", "postings")
           .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
           .select("doc_id", "dl", "token", "tf")
           .join(winnerDocs, Seq("doc_id"), "left_anti")
@@ -2246,7 +2246,7 @@ object StreamingOps {
       val (baseN, baseSum) =
         if (!hasBase) (0L, 0L)
         else {
-          val r = spark.read.parquet(s"$indexDir/base/doclen")
+          val r = IndexTable.read(spark, s"$indexDir/base", "doclen")
             .join(winnerDocs, Seq("doc_id"), "left_anti")
             .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
           (r.getLong(0), r.getLong(1))
@@ -2316,7 +2316,7 @@ object StreamingOps {
         val base =
           if (!hasBase)
             Seq.empty[(Long, Seq[Long])].toDF("doc_id", "positions")
-          else spark.read.parquet(s"$indexDir/base/postings")
+          else IndexTable.read(spark, s"$indexDir/base", "postings")
             .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
             .select(col("doc_id"), col("positions"))
             .join(winnerDocs, Seq("doc_id"), "left_anti")
@@ -2653,7 +2653,8 @@ object StreamingOps {
     * `compute` before anything is cached.
     *
     * The returned DataFrame is a LOCAL relation — the ≤ (groups × k)
-    * cached rows collected eagerly — never a lazy scan over
+    * cached rows read eagerly on the driver ([[IndexTable]], no Spark
+    * job) — never a lazy scan over
     * `$cacheDir/rows`: a later recompute deletes + renames that directory
     * underneath, so a returned-but-not-yet-consumed lazy handle could
     * read torn state. Collecting is O(groups × k), the same bound the
@@ -2664,15 +2665,11 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     val cacheDir = s"$indexDir/cache"
     val keyPath = s"$cacheDir/_key"
-    def localized(df: DataFrame): DataFrame = {
-      val rows = df.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    }
     val stored =
       if (graft.io.HadoopIO.exists(keyPath, hconf))
         scala.util.Try(graft.io.HadoopIO.read(keyPath, hconf)(_.readUTF())).toOption
       else None
-    if (stored.contains(key)) localized(spark.read.parquet(s"$cacheDir/rows"))
+    if (stored.contains(key)) IndexTable.read(spark, cacheDir, "rows")
     else {
       val result = compute
       val tmp = s"$indexDir/cache.tmp"
@@ -2681,7 +2678,7 @@ object StreamingOps {
       graft.io.HadoopIO.write(s"$tmp/_key", hconf)(_.writeUTF(key))
       graft.io.HadoopIO.delete(cacheDir, hconf)
       graft.io.HadoopIO.rename(tmp, cacheDir, hconf)
-      localized(spark.read.parquet(s"$cacheDir/rows"))
+      IndexTable.read(spark, cacheDir, "rows")
     }
   }
 
@@ -2927,8 +2924,9 @@ object StreamingOps {
 
   // ------------------------------------ streaming contamination-rate audit
 
-  private def dcrBenchDir(indexDir: String) = s"$indexDir/bench"
-  private def dcrDocsDir(indexDir: String) = s"$indexDir/bench_docs"
+  // the benchmark's shingle and id tables beside the matched log
+  private val DcrBench = "bench"
+  private val DcrDocs = "bench_docs"
   private def dcrLog(spark: SparkSession, indexDir: String) =
     new BatchLog(spark, indexDir, Seq("matched"), "contamination-rate", None, exactlyOnce = true,
       meta = "dcr_meta")
@@ -2968,8 +2966,6 @@ object StreamingOps {
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, Long) => Unit = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val benchDir = dcrBenchDir(indexDir)
-    val docsDir = dcrDocsDir(indexDir)
 
     def shingles(df: DataFrame, id: String, text: String, outId: String) =
       Lsh.shingleHashRows(df, col(id).cast("long"), col(text), n, outId)
@@ -2983,16 +2979,16 @@ object StreamingOps {
     log.open(Seq("n" -> n.toString, "bench_shingles" -> digest.getLong(0).toString,
         "bench_digest" -> digest.getLong(1).toString),
       "with a different benchmark or n would silently change every rate") {
-      benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
+      benchSh.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$DcrBench")
       benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(docsDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$DcrDocs")
     }
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
       if (!log.committed(batchId)) {
-        val benchH = sess.read.parquet(benchDir).select("h").distinct()
+        val benchH = IndexTable.read(sess, indexDir, DcrBench).select("h").distinct()
         val prior = log.read("matched").fold(Seq.empty[Long].toDF("h"))(
           _.filter(col("real")).select("h").distinct())
         // the corpus batch streams ONCE through the broadcast bench gate;
@@ -3022,7 +3018,7 @@ object StreamingOps {
   def decontaminateRateMaintained(spark: SparkSession, indexDir: String): DataFrame = {
     val log = dcrLog(spark, indexDir)
     log.params()
-    val benchSh = spark.read.parquet(dcrBenchDir(indexDir))
+    val benchSh = IndexTable.read(spark, indexDir, DcrBench)
     val matched = log.read("matched").fold {
       import spark.implicits._
       Seq.empty[Long].toDF("h")
@@ -3032,7 +3028,7 @@ object StreamingOps {
       .groupBy("bench_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(coalesce(col("__m"), lit(0L))).as("n_matched"))
-    spark.read.parquet(dcrDocsDir(indexDir))
+    IndexTable.read(spark, indexDir, DcrDocs)
       .join(perDoc, Seq("bench_id"), "left")
       .select(col("bench_id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),

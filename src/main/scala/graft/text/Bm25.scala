@@ -183,15 +183,25 @@ object Bm25 {
       else grouped.agg(count(lit(1)).as("tf")))
       .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
     post.write.partitionBy("bucket").parquet(s"$dir/postings")
+    // a corpus without one non-null text writes no posting file, so the
+    // read-backs below would have no footer to take their schema from:
+    // refused here, its empty postings removed, so a rebuild into `dir`
+    // still works (an up-front check would scan the text column, which
+    // `count()` never reads)
+    if (graft.io.LocalParquet.dataFiles(spark, s"$dir/postings", nested = true).isEmpty) {
+      graft.io.HadoopIO.delete(s"$dir/postings", spark.sparkContext.hadoopConfiguration)
+      throw new IllegalArgumentException(s"empty corpus: no document with a non-null $textCol to index")
+    }
+    // the read-backs below take their schema from a footer the write
+    // just left (graft.io.IndexTable): none starts an inference job.
     // df from the just-written postings (one read of the compact layout,
     // not a second corpus tokenize)
-    spark.read.parquet(s"$dir/postings")
-      .groupBy("token").agg(count(lit(1)).as("df"))
+    val written = graft.io.IndexTable.read(spark, dir, "postings")
+    written.groupBy("token").agg(count(lit(1)).as("df"))
       .write.parquet(s"$dir/df")
     // per-document lengths (the maintained-serving path needs them to
     // re-derive (n, avgdl) under mutations) — from the compact layout
-    spark.read.parquet(s"$dir/postings")
-      .select("doc_id", "dl").dropDuplicates("doc_id")
+    written.select("doc_id", "dl").dropDuplicates("doc_id")
       .write.parquet(s"$dir/doclen")
     // avgdl from the just-written doclen table: every tokenized doc has
     // >= 1 posting row (split yields >= 1 token even for ""), null-text
@@ -204,7 +214,7 @@ object Bm25 {
     // contract (postings/doclen collapse them); their avgdl weighting
     // differs from the live search's row-weighted mean.
     val n = docs.count()
-    val avgdl = spark.read.parquet(s"$dir/doclen")
+    val avgdl = graft.io.IndexTable.read(spark, dir, "doclen")
       .agg(avg(col("dl")).as("avgdl")).head().getDouble(0)
     Seq((n, avgdl, nBuckets, withPositions))
       .toDF("n", "avgdl", "n_buckets", "positions")
@@ -243,7 +253,7 @@ object Bm25 {
     // each per-term branch is its own bucket-pruned + token-pushed read —
     // no persist (the reads are posting-list-sized), no driver
     // materialization (a common phrase can hit corpus-many documents)
-    def termPostings(t: String) = spark.read.parquet(s"$dir/postings")
+    def termPostings(t: String) = graft.io.IndexTable.read(spark, dir, "postings")
       .filter(col("bucket") === lit(tokenBucket(t, nBuckets)) && col("token") === lit(t))
       .select(col("doc_id"), col("positions"))
     val perPhrase = parsed.map { case (qid, terms) =>
@@ -287,9 +297,9 @@ object Bm25 {
     val terms = qTerms.map(_._2).distinct
     val buckets = terms.map(tokenBucket(_, nBuckets)).distinct
 
-    val post = spark.read.parquet(s"$dir/postings")
+    val post = graft.io.IndexTable.read(spark, dir, "postings")
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    val dfTable = spark.read.parquet(s"$dir/df").filter(col("token").isin(terms: _*))
+    val dfTable = graft.io.IndexTable.read(spark, dir, "df").filter(col("token").isin(terms: _*))
     val qTable = qTerms.toDF("qid", "token")
     scoreTopK(post.join(broadcast(dfTable), Seq("token")), qTable, n.toDouble, avgdl, k, k1, b)
   }

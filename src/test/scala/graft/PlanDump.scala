@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Prints the executed plan of every selected catalog row, normalised so
@@ -12,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * numbers are replaced by fixed tokens.
   *
   * {{{
-  * sbt "Test/runMain graft.PlanDump <sfDir> <outFile> [--executions] [namePrefix ...]"
+  * sbt "Test/runMain graft.PlanDump <sfDir> <outFile> [--executions] [--jobs] [namePrefix ...]"
   * diff parent.txt change.txt
   * }}}
   *
@@ -26,6 +28,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the row, a setup's collects. Those plans never reach the row's final
   * reader plan, so without this mode a change to a sink's per-batch work
   * is invisible to the dump.
+  *
+  * `--jobs` also runs each row (`collect`) and prints, under a `-- jobs`
+  * header, the Spark jobs the row started while built and run: per query
+  * execution in start order (its description, then each job's call site,
+  * stages and tasks), then the jobs started outside any query execution
+  * (schema inference, RDD collects). Call sites keep their line numbers,
+  * so this part is read, not diffed.
   */
 object PlanDump {
 
@@ -68,11 +77,62 @@ object PlanDump {
     }
   }
 
+  /** The Spark jobs started on a context, with the query execution (if
+    * any) each ran under and the tasks each ran.
+    */
+  private final class Jobs extends SparkListener {
+    private final case class Job(execution: Option[Long], site: String, stages: Int) {
+      var tasks = 0
+    }
+    private val executions = scala.collection.mutable.LinkedHashMap.empty[Long, String]
+    private val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
+    private val stageJob = scala.collection.mutable.Map.empty[Int, Job]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized { executions(s.executionId) = s.description }
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val execution = Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      // the result stage carries the job's call site; adaptive execution
+      // submits its stages from a pool thread, whose call site says nothing
+      val site = e.stageInfos.maxBy(_.stageId).name
+        .replaceAll(""".*withThreadLocalCaptured.*""", "adaptive query stage")
+      val job = Job(execution.map(_.toLong), site, e.stageIds.size)
+      jobs += job
+      e.stageIds.foreach(stageJob(_) = job)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageJob.get(e.stageId).foreach(_.tasks += 1)
+    }
+
+    /** The job list since the last call, one line per execution and job. */
+    def take(spark: SparkSession): Seq[String] = {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      synchronized {
+        def lines(js: Seq[Job]) = js.map(j => s"   job ${j.site}: ${j.stages} stages, ${j.tasks} tasks")
+        val byExecution = jobs.toSeq.groupBy(_.execution)
+        val out = s"-- jobs: ${jobs.size} jobs, ${jobs.map(_.tasks).sum} tasks" +:
+          ((executions.toSeq ++ byExecution.keys.flatten.filterNot(executions.contains).toSeq.sorted
+            .map(_ -> "(started before this row)")).flatMap { case (id, desc) =>
+            val js = byExecution.getOrElse(Some(id), Nil)
+            s"-- sql execution ${desc.linesIterator.nextOption().getOrElse("")}: ${js.size} jobs" +: lines(js)
+          } ++ {
+            val js = byExecution.getOrElse(None, Nil)
+            s"-- outside any sql execution: ${js.size} jobs" +: lines(js)
+          })
+        executions.clear(); jobs.clear(); stageJob.clear()
+        out
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
-      "usage: PlanDump <sfDir> <outFile> [--executions] [namePrefix ...]")
+      "usage: PlanDump <sfDir> <outFile> [--executions] [--jobs] [namePrefix ...]")
     val Array(dir, out) = args.take(2)
-    val (flags, named) = args.drop(2).toSeq.partition(_ == "--executions")
+    val (flags, named) = args.drop(2).toSeq.partition(_.startsWith("--"))
+    flags.foreach(f => require(Set("--executions", "--jobs")(f), s"unknown flag $f"))
     val prefixes =
       if (named.nonEmpty) named
       else Seq("knn_", "ann_", "hnsw_", "stream_ivf_", "stream_hnsw_")
@@ -83,15 +143,20 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val executions = if (flags.nonEmpty) Some(new Executions) else None
+    val executions = if (flags.contains("--executions")) Some(new Executions) else None
     executions.foreach(spark.listenerManager.register)
+    val jobs = if (flags.contains("--jobs")) Some(new Jobs) else None
+    jobs.foreach(spark.sparkContext.addSparkListener)
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => prefixes.exists(name.startsWith) }
     val w = new java.io.PrintWriter(out, "UTF-8")
     try rows.foreach { case (name, fn) =>
       w.println(s"== $name")
-      w.println(normalise(fn(spark, dir).queryExecution.executedPlan.toString))
+      val df = fn(spark, dir)
+      w.println(normalise(df.queryExecution.executedPlan.toString))
+      jobs.foreach(_ => df.collect())
       executions.foreach(_.take(spark).foreach(p => w.println(normalise(p))))
+      jobs.foreach(_.take(spark).foreach(w.println))
     } finally w.close()
     println(s"[plandump] ${rows.size} rows -> $out")
     spark.stop()

@@ -157,6 +157,33 @@ class PlanLintSpec extends SparkTestBase {
       s"$line in $path")
   }
 
+  /** The index layers, whose saved tables are read through
+    * `graft.io.IndexTable` only, and the read that would bypass it.
+    */
+  private val indexLayers = Seq("graft/text/", "graft/knn/", "graft/streaming/")
+  private val tableRead = """\.read\.(parquet|schema)\(""".r
+
+  /** Every index-layer source that reads a parquet table itself. */
+  private def strayTableReads(srcs: Map[String, Seq[String]]): Seq[String] =
+    srcs.toSeq.sortBy(_._1).collect {
+      case (path, lines) if indexLayers.exists(path.startsWith) &&
+          lines.exists(tableRead.findFirstIn(_).isDefined) => path
+    }
+
+  test("one index-table reader in graft.io (source check)") {
+    val srcs = mainSources
+    assert(strayTableReads(srcs) === Nil, "read a saved index table with graft.io.IndexTable.read")
+    assert(srcs("graft/io/IndexTable.scala").exists(tableRead.findFirstIn(_).isDefined),
+      "graft/io/IndexTable.scala no longer holds the footer-schema read")
+    // the check sees a read coming back in each file that held one
+    Seq(
+      "graft/text/Bm25.scala" -> """    val post = spark.read.parquet(s"$dir/postings")""",
+      "graft/streaming/StreamingOps.scala" -> """        val benchH = sess.read.parquet(benchDir).select("h").distinct()""",
+      "graft/knn/Pq.scala" -> """    val df = spark.read.parquet(s"$dir/pq_books")""").foreach { case (path, line) =>
+      assert(strayTableReads(srcs + (path -> (srcs(path) :+ line))) === Seq(path), s"$line in $path")
+    }
+  }
+
   test("aggregations are partial before the exchange (map-side combine)") {
     Seq("q1_agg", "dedup_exact", "events_window").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
