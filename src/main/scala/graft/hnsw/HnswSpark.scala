@@ -364,14 +364,16 @@ object HnswSpark {
   }
 
   /** Search saved graphs EXCLUDING a set of ids, WITHOUT the final top-k
-    * window — the base-graph half of a delta-maintained index
+    * merge — the base-graph half of a delta-maintained index
     * ([[graft.streaming.StreamingOps.searchHnswMaintained]]): ids touched
     * by the delta log are overridden there, so the base must not serve
-    * them. Unlike [[searchSaved]], a maintained base directory REQUIRES a
+    * them. Returns the (qid, id, dist) candidates collected on the
+    * driver: at most k per query per graph, one job. Unlike
+    * [[searchSaved]], a maintained base directory REQUIRES a
     * manifest (the sink seeds one at construction, compaction writes one
     * before its swap) — a manifest-less dir with artifacts is a torn swap,
     * not a legacy save. An empty base (cold start: no compaction yet)
-    * returns no candidates.
+    * returns no candidates and starts no job.
     */
   private[graft] def searchSavedExcluding(
       spark: SparkSession,
@@ -379,14 +381,13 @@ object HnswSpark {
       queries: Array[(Long, Array[Float])],
       k: Int,
       excluded: scala.collection.Set[Long],
-      efOverride: Int = 0): DataFrame = {
-    import spark.implicits._
+      efOverride: Int = 0): Array[(Long, Long, Double)] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(Manifest.read(indexDir, hconf).isDefined,
       s"maintained base at $indexDir has no manifest — foreign directory or torn base swap; " +
         "refusing to serve unverifiable graphs")
     val files = Manifest.validate(indexDir, HadoopIO.globWithLength(indexDir, "*.hnsw", hconf), hconf)
-    if (files.isEmpty) return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
+    if (files.isEmpty) return Array.empty
     val bc = spark.sparkContext.broadcast(queries)
     val bcEx = spark.sparkContext.broadcast(excluded)
     val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
@@ -400,7 +401,7 @@ object HnswSpark {
             .map { case (id, d) => (qid, id, d) }
         }
       }
-      .toDF("qid", "id", "dist")
+      .collect()
   }
 
   /** [[searchSavedExcluding]] with a DataFrame query side: queries are

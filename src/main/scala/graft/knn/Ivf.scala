@@ -630,9 +630,26 @@ object Ivf {
       meta.metric, dedup = meta.spill > 1)
   }
 
-  /** IVF search: per query, probe the `nprobe` nearest cells; brute-force
-    * only within those cells; global top-k via the candidate window.
-    * Returns (qid, id, dist, rank).
+  /** IVF search: per query, probe the `nprobe` nearest cells and keep the
+    * k nearest of their rows by the exact [[Distances.distance]] kernel,
+    * ties broken by id. Returns (qid, id, dist, rank), `id` typed as in
+    * `assigned` (an integral column).
+    *
+    * The reference's search shape (`storage/dataset.go:349-433`): each
+    * query's probe cells are ranked on the driver ([[probeOrder]] under
+    * `metric`) and broadcast as masks ([[probeMasks]]); ONE pass over
+    * `assigned` keeps a bounded heap per query over the rows of its
+    * probed cells ([[Knn.scanHeaps]]); the heaps are collected and
+    * k-merged on the driver ([[Knn.mergeLocal]]). So a search over a
+    * table with no shuffle behind it is one Spark job. At most k rows per
+    * query per partition of `assigned` reach the driver (k·Q·P).
+    *
+    * The search runs when called: the result is a local relation, and
+    * reading it starts no job. A spilled assignment (`dedup`) lets an id
+    * take one slot per query: a heap admits an id it does not hold yet,
+    * and the merge keeps an id once whichever partitions sent it.
+    *
+    * Refuses `k` or `nprobe` below 1 and a repeated qid.
     */
   def search(
       spark: SparkSession,
@@ -644,23 +661,29 @@ object Ivf {
       metric: String = "euclidean",
       dedup: Boolean = false): DataFrame = {
     import spark.implicits._
-    // (qid, cell) probe pairs — tiny, computed on the driver like the
-    // reference's query-time partition fan-out (storage/dataset.go:390).
-    val probes = probePairs(spark, queries, centroids, nprobe, metric)
+    requireSearchArgs(queries, k, nprobe)
+    val m = Distances.metricId(metric)
+    val id = assigned.schema("id")
+    val candidates = if (queries.isEmpty) Array.empty[(Long, Long, Double)] else {
+      val masks = probeMasks(spark, queries, Some(probeMap(queries, centroids, nprobe, m)))
+      val bc = spark.sparkContext.broadcast(queries)
+      assigned
+        .select(col("id").cast("long"), coalesce(col("cell").cast("int"), lit(-1)),
+          col("vector").cast("array<float>"))
+        .as[(Long, Int, Array[Float])]
+        .mapPartitions(rows => Knn.scanHeaps(bc.value, masks.value, rows, k, Distances.distance(m) _, dedup))
+        .collect()
+    }
+    Knn.mergeLocal(spark, candidates, k, dedup, id)
+  }
 
-    val queriesDf = queries.toSeq.toDF("qid", "qvec")
-
-    val raw = assigned
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(queriesDf), Seq("qid"))
-      .select(col("qid"), col("id"),
-        graft.functions.vec.dist(col("vector"), col("qvec"), metric).as("dist"))
-
-    // a spilled assignment (assign(spill > 1)) can surface the same id
-    // through several probed cells — dedupe BEFORE the top-k window so a
-    // duplicate never consumes a rank slot (skip the extra shuffle for
-    // spill = 1 assignments)
-    Knn.topK(if (dedup) raw.dropDuplicates("qid", "id") else raw, k)
+  /** [[search]]'s refusals, for callers that do work before it: `k` and
+    * `nprobe` of at least 1, and distinct qids.
+    */
+  private[graft] def requireSearchArgs(queries: Array[(Long, Array[Float])], k: Int, nprobe: Int): Unit = {
+    require(k > 0, s"k must be positive, got $k")
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    Knn.requireDistinctQids(queries)
   }
 
   /** A query's cells in probe order: every centroid ranked by (distance
@@ -676,20 +699,21 @@ object Ivf {
       .sortBy(identity)
       .map(_._2)
 
-  /** Each query's first `nprobe` cells in euclidean [[probeOrder]], by
-    * qid: the `probeCells` map the (euclidean-only) SQ, binary and PQ
-    * scans restrict to.
+  /** Each query's first `nprobe` cells in [[probeOrder]] under metric id
+    * `m`, by qid: the map [[search]] masks its scan with, and (euclidean)
+    * the `probeCells` map the SQ, binary and PQ scans restrict to.
     */
   private[graft] def probeMap(
       queries: Array[(Long, Array[Float])],
       centroids: Array[Array[Float]],
-      nprobe: Int): Map[Long, Array[Int]] =
+      nprobe: Int,
+      m: Int = Distances.Euclidean): Map[Long, Array[Int]] =
     queries.map { case (qid, qv) =>
-      qid -> probeOrder(qv, centroids, Distances.Euclidean).take(nprobe)
+      qid -> probeOrder(qv, centroids, m).take(nprobe)
     }.toMap
 
-  /** [[probeMap]] as (qid, cell) rows in query order: the broadcast probe
-    * side of [[search]] and [[Knn.matryoshkaIvf]].
+  /** Each query's first `nprobe` cells under `metric` as (qid, cell) rows
+    * in query order: the broadcast probe side of [[Knn.matryoshkaIvf]].
     */
   private[knn] def probePairs(
       spark: SparkSession,
@@ -849,7 +873,7 @@ object Ivf {
     }.toDF("qid", "id", "dist")
 
     // spilled assignments surface an id through several probed cells —
-    // dedupe BEFORE the top-k window (see [[search]])
+    // dedupe BEFORE the top-k window so a duplicate never consumes a rank slot
     Knn.topK(if (dedup) raw.dropDuplicates("qid", "id") else raw, k)
   }
 

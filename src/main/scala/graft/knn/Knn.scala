@@ -6,7 +6,8 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import scala.reflect.ClassTag
 
@@ -304,6 +305,18 @@ object Knn {
     emitHeaps(heaps, qs(_)._1)
   }
 
+  /** [[scanHeaps]] over IVF rows (id, cell, vector): query `qs(qi)` scans
+    * only the cells `masks(qi)` probes ([[Ivf.probeMasks]]); with
+    * `distinct` a spilled id takes one slot per heap.
+    */
+  private[graft] def scanHeaps(qs: Array[(Long, Array[Float])], masks: Array[Array[Boolean]],
+      rows: Iterator[(Long, Int, Array[Float])], k: Int,
+      kernel: (Array[Float], Array[Float]) => Double, distinct: Boolean): Iterator[(Long, Long, Double)] = {
+    val heaps = Array.fill(qs.length)(new TopK(k))
+    TopK.scanBlocked(rows, qs.map(_._2), heaps, kernel, masks, distinct)
+    emitHeaps(heaps, qs(_)._1)
+  }
+
   /** Every heap's contents in ascending (dist, id) order as
     * (qid, id, dist), where `qid(qi)` names heap `qi`'s query.
     */
@@ -322,6 +335,55 @@ object Knn {
   private[graft] def topK(candidates: DataFrame, k: Int, by: String = "dist",
       rank: String = "rank"): DataFrame =
     ranked(candidates, by, rank).filter(col(rank) <= k)
+
+  /** The driver k-merge: per query, the `k` candidates smallest by
+    * (dist, id), numbered 1..k in `rank` — [[topK]]'s cut, run on
+    * (qid, id, dist) rows already on the driver. This is the global half
+    * of the reference's local-then-global search: each partition keeps
+    * its local top-k, and their union is sorted and truncated
+    * (`storage/dataset.go:349-433`). With `distinct` a query keeps each id
+    * once, at its smallest distance, whichever partitions sent it.
+    *
+    * Returns a local relation with [[topK]]'s columns and types: qid,
+    * id (typed and nullable as `id`, an integral field), dist and rank,
+    * in qid then rank order. Reading it starts no Spark job.
+    */
+  private[graft] def mergeLocal(
+      spark: SparkSession,
+      candidates: Array[(Long, Long, Double)],
+      k: Int,
+      distinct: Boolean = false,
+      id: StructField = StructField("id", LongType, nullable = false)): DataFrame = {
+    val typed: Long => Any = id.dataType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case other => throw new IllegalArgumentException(s"kNN ids must be integral, got $other")
+    }
+    // Spark's double order: NaN last, -0.0 equal to 0.0
+    def before(a: (Long, Long, Double), b: (Long, Long, Double)): Boolean = {
+      val c = if (a._3 == b._3) 0 else java.lang.Double.compare(a._3, b._3)
+      c < 0 || (c == 0 && a._2 < b._2)
+    }
+    val rows = candidates.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qid, cs) =>
+      val ranked = cs.sortWith(before).iterator
+      (if (distinct) ranked.distinctBy(_._2) else ranked).take(k).zipWithIndex.map {
+        case ((_, i, d), r) => Row(qid, typed(i), d, r + 1)
+      }
+    }
+    val schema = StructType(Seq(StructField("qid", LongType, nullable = false), id.copy(name = "id"),
+      StructField("dist", DoubleType), StructField("rank", IntegerType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Array queries must carry distinct qids: a repeated qid would merge
+    * two queries' candidates under one answer.
+    */
+  private[graft] def requireDistinctQids(queries: Array[(Long, Array[Float])]): Unit = {
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    queries.foreach { case (qid, _) => require(seen.add(qid), s"duplicate query id $qid") }
+  }
 
   /** [[topK]]'s window without the cut: every candidate numbered per query
     * in (`by`, id) order.

@@ -48,6 +48,26 @@ final class TopK(k: Int) {
     val ti = ids(i); ids(i) = ids(j); ids(j) = ti
   }
 
+  /** Whether [[push]] would keep (dist, id) now. */
+  @inline private def admits(dist: Double, id: Long): Boolean =
+    count < k || (k > 0 && worse(dists(0), ids(0), dist, id))
+
+  private def holds(id: Long): Boolean = {
+    var i = 0
+    while (i < count) { if (ids(i) == id) return true; i += 1 }
+    false
+  }
+
+  /** [[push]] unless the heap already holds `id`: the push of a spilled
+    * IVF assignment, whose replicas of one id share one vector and so
+    * arrive with one distance. A replica that was kept and later
+    * displaced cannot be admitted again (everything kept is now strictly
+    * better), so each id takes at most one slot. Only an admitted
+    * candidate pays the O(k) membership scan.
+    */
+  def pushDistinct(dist: Double, id: Long): Unit =
+    if (admits(dist, id) && !holds(id)) push(dist, id)
+
   def push(dist: Double, id: Long): Unit = {
     if (count < k) {
       dists(count) = dist
@@ -95,26 +115,64 @@ object TopK {
       heaps: Array[TopK],
       dist: (Array[Float], Array[Float]) => Double,
       blockSize: Int = 256): Unit = {
-    val block = new Array[Array[Float]](blockSize)
-    val blockIds = new Array[Long](blockSize)
-    var fill = 0
+    val block = new Block(blockSize, qvecs, heaps, dist, null, distinct = false)
+    rows.foreach { case (id, v) => block.add(id, -1, v) }
+    block.flush()
+  }
+
+  /** [[scanBlocked]] over IVF rows (id, cell, vector): query `qi` scans
+    * only the rows of the cells `masks` probes for it ([[Ivf.allowed]]),
+    * and with `distinct` each heap takes an id once ([[TopK.pushDistinct]]).
+    */
+  def scanBlocked(
+      rows: Iterator[(Long, Int, Array[Float])],
+      qvecs: Array[Array[Float]],
+      heaps: Array[TopK],
+      dist: (Array[Float], Array[Float]) => Double,
+      masks: Array[Array[Boolean]],
+      distinct: Boolean): Unit = {
+    val block = new Block(256, qvecs, heaps, dist, masks, distinct)
+    rows.foreach { case (id, cell, v) => block.add(id, cell, v) }
+    block.flush()
+  }
+
+  /** The row buffer of both scans, flushed query-major into the heaps. */
+  private final class Block(
+      size: Int,
+      qvecs: Array[Array[Float]],
+      heaps: Array[TopK],
+      dist: (Array[Float], Array[Float]) => Double,
+      masks: Array[Array[Boolean]],
+      distinct: Boolean) {
+    private val vecs = new Array[Array[Float]](size)
+    private val ids = new Array[Long](size)
+    private val cells = new Array[Int](size)
+    private var fill = 0
+
+    def add(id: Long, cell: Int, v: Array[Float]): Unit = {
+      vecs(fill) = v
+      ids(fill) = id
+      cells(fill) = cell
+      fill += 1
+      if (fill == size) flush()
+    }
+
     def flush(): Unit = {
       var qi = 0
       while (qi < qvecs.length) {
         val qv = qvecs(qi)
         val h = heaps(qi)
         var bi = 0
-        while (bi < fill) { h.push(dist(block(bi), qv), blockIds(bi)); bi += 1 }
+        while (bi < fill) {
+          if (masks == null || Ivf.allowed(masks, qi, cells(bi))) {
+            val d = dist(vecs(bi), qv)
+            if (distinct) h.pushDistinct(d, ids(bi)) else h.push(d, ids(bi))
+          }
+          bi += 1
+        }
         qi += 1
       }
       fill = 0
     }
-    rows.foreach { case (id, v) =>
-      block(fill) = v
-      blockIds(fill) = id
-      fill += 1
-      if (fill == blockSize) flush()
-    }
-    flush()
   }
 }

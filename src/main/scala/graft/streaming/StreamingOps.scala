@@ -1204,13 +1204,16 @@ object StreamingOps {
     // view instead of each re-reading the delta log — at corpus scale one
     // full pass saved per fired gate
     ivfView(spark, indexDir).cached { view =>
-      val cur = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", view).meanErr
+      val stats = ivfMaintainedQuantStats(spark, indexDir, "quant-error-measured", view)
+      val cur = stats.meanErr
       val ratio = if (ref == 0.0) { if (cur == 0.0) 0.0 else Double.PositiveInfinity }
         else cur / ref
       // the retrain re-baselines quant_ref (the sidecar existed — we just
-      // loaded it — so the rebuilt directory carries a new one)
+      // loaded it — so the rebuilt directory carries a new one); the gauge
+      // counted the view's live ids, so the retrain skips its own check
       if (ratio > maxErrRatio)
-        retrain(spark, indexDir, view, c, iterations, seed, sampleFraction, refitRotation, pq = None)
+        retrain(spark, indexDir, view, c, iterations, seed, sampleFraction, refitRotation, pq = None,
+          liveIds = Some(stats.n))
       (ratio, ratio > maxErrRatio)
     }
   }
@@ -1299,7 +1302,9 @@ object StreamingOps {
     *
     * `pq` = Some(kind) is a public entry point that serves only that kind
     * of directory; None lets the directory decide (the drift gates;
-    * [[retrainIfQuantDrifted]] passes the view its gauge measured).
+    * [[retrainIfQuantDrifted]] passes the view its gauge measured, and as
+    * `liveIds` the live ids the gauge counted on it, so the empty-view
+    * refusal needs no job of its own; None counts them here).
     */
   private def retrain(
       spark: SparkSession,
@@ -1310,7 +1315,8 @@ object StreamingOps {
       seed: Long,
       sampleFraction: Double,
       refitRotation: Boolean,
-      pq: Option[Boolean]): Array[Array[Float]] = {
+      pq: Option[Boolean],
+      liveIds: Option[Long] = None): Array[Array[Float]] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val tmpDir = s"$indexDir.retrain"
     graft.io.HadoopIO.delete(tmpDir, hconf)
@@ -1340,7 +1346,7 @@ object StreamingOps {
       .persist()
     var refitPersisted: Option[DataFrame] = None
     try {
-      require(liveOne.limit(1).count() > 0,
+      require(liveIds.getOrElse(liveOne.limit(1).count()) > 0,
         s"maintained view at $indexDir is empty — nothing to re-train the quantizer on")
 
       // incremental OPQ (Ge et al. 2013 fit, composed): the stored vectors
@@ -1454,6 +1460,14 @@ object StreamingOps {
     * function of (vector, centroids). With `asOf = Some(v)` the search
     * runs over the [[ivfMaintainedStateAsOf]] time-travel view at
     * mutation version v instead of the latest maintained view.
+    *
+    * One pass over the resolved view keeps per-partition heaps, k-merged
+    * on the driver ([[graft.knn.Ivf.search]], the reference's
+    * `storage/dataset.go:349-433` shape): the view's shuffle and that pass
+    * are the call's two Spark jobs. At most k rows per query per view
+    * partition reach the driver. The search runs when called and returns
+    * a local relation. Refuses `k` or `nprobe` below 1 and a repeated qid
+    * before reading anything.
     */
   def searchIvfMaintained(
       spark: SparkSession,
@@ -1462,6 +1476,7 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       asOf: Option[Long] = None): DataFrame = {
+    graft.knn.Ivf.requireSearchArgs(queries, k, nprobe)
     val (meta, centroids) = graft.knn.Ivf.loadQuantizer(spark, indexDir)
     graft.knn.Ivf.requireQueryDim(queries, meta.dim)
     requireFullPrecisionView(spark, indexDir, "searched at full precision")
@@ -1880,21 +1895,24 @@ object StreamingOps {
   /** Search a delta-maintained HNSW directory: base graphs serve every id
     * the delta does not override (compaction guards mark those), the delta's
     * live vectors are scanned EXACTLY (bounded per-query heaps, one pass,
-    * [[graft.knn.Knn.scanner]]), and the two candidate sets k-merge
-    * ([[graft.knn.Knn.topK]]). The exact delta side means a
+    * [[graft.knn.Knn.scanner]]), and the two candidate sets k-merge. The exact delta side means a
     * freshly-mutated vector is always found at full precision — recall can
     * only degrade toward the base graphs' HNSW recall as the delta empties
     * into base via compaction.
     *
     * The view resolves once per call: one query collects its override set
     * as (id, op) together with the delta's candidates (at most k per query
-    * per partition). The override ids are broadcast to the base search:
-    * the set is bounded by the ids mutated since the last compaction
-    * (compaction cadence is the knob), NOT by index size — the same
-    * contract as the IVF delta view's read cost. The answer (at most k rows
-    * per query; the queries are already on the driver) is materialised, so
-    * the returned DataFrame is a local relation that starts no Spark job
-    * and holds nothing cached.
+    * per view partition). The override ids are broadcast to the base
+    * search: the set is bounded by the ids mutated since the last
+    * compaction (compaction cadence is the knob), NOT by index size — the
+    * same contract as the IVF delta view's read cost. The base graphs'
+    * candidates (at most k per query per graph) are collected too, and
+    * both sets k-merge on the driver ([[graft.knn.Knn.mergeLocal]], the
+    * reference's `storage/dataset.go:349-433` global step): three Spark
+    * jobs per call, two for the view and one for the graphs. The search
+    * runs when called; the returned DataFrame is a local relation that
+    * starts no Spark job and holds nothing cached. Refuses `k` below 1 and
+    * a repeated qid.
     *
     * With `asOf = Some(v)` the search serves the index's exact state at
     * mutation version v (inclusive) — the delta log is a full version
@@ -1912,15 +1930,15 @@ object StreamingOps {
       k: Int,
       efOverride: Int = 0,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
+    require(k > 0, s"k must be positive, got $k")
+    graft.knn.Knn.requireDistinctQids(queries)
     val meta = hnswMeta(spark, indexDir)
     val (overrides, delta) = MaintainedView.open(hnswLog(spark, indexDir), asOf)
       .fold((Array.empty[(Long, String)], Array.empty[(Long, Long, Double)]))(
         _.overridesWith(graft.knn.Knn.scanner(spark, queries, k, meta.metric)))
-    val top = graft.knn.Knn.topK(graft.hnsw.HnswSpark.searchSavedExcluding(spark,
-        s"$indexDir/base", queries, k, overrides.map(_._1).toSet, efOverride)
-      .unionByName(spark.sparkContext.parallelize(delta.toSeq, 1).toDF("qid", "id", "dist")), k)
-    spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+    val base = graft.hnsw.HnswSpark.searchSavedExcluding(spark,
+      s"$indexDir/base", queries, k, overrides.map(_._1).toSet, efOverride)
+    graft.knn.Knn.mergeLocal(spark, base ++ delta, k)
   }
 
   /** [[searchHnswMaintained]] with a DataFrame query side — nothing

@@ -4,12 +4,10 @@ import graft.io.IndexTable
 import graft.knn.{Ivf, Opq, Pq}
 import graft.streaming.StreamingOps
 import graft.text.Bm25
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.IntegerType
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** `IndexTable.read` returns what `spark.read.parquet` returns for every
   * kind of saved index table, partition-column types included, without
@@ -102,21 +100,6 @@ class IndexTableSpec extends SparkTestBase {
     assertSameAsSpark(dir, "pq_books")
     assert(!Pq.savedResidual(spark, dir))
     assert(Pq.loadCodebooks(spark, dir).m === 2)
-  }
-
-  /** Spark jobs started by `call`, counted by a listener. */
-  private def jobsOf(call: => Any): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      call
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("driver-sized tables are read and collected without a Spark job") {

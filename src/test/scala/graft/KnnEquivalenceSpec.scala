@@ -92,11 +92,46 @@ object KnnEquivalenceProps extends Properties("KnnEquivalence") {
   }
 
   /** Each named path's rows against the fold, labelled on mismatch. */
-  private def agree(c: Case, metric: String, paths: Seq[(String, () => DataFrame)]): Prop = {
-    val want = fold(c, metric)
+  private def agree(c: Case, metric: String, paths: Seq[(String, () => DataFrame)]): Prop =
+    agreeWith(fold(c, metric), metric, paths)
+
+  private def agreeWith(want: Seq[Row], metric: String, paths: Seq[(String, () => DataFrame)]): Prop =
     paths.map { case (name, run) =>
       val got = rowsOf(run())
       Prop(got == want) :| s"$name ($metric): got $got, want $want"
+    }.reduce(_ && _)
+
+  /** The IVF reference at partial probe: per query, one heap over the
+    * distinct ids of the `assigned` (id, cell) rows whose cell is among the
+    * first `nprobe` of [[Ivf.probeOrder]] under `metric`.
+    */
+  private def probedFold(c: Case, assigned: Seq[(Long, Int)], centroids: Array[Array[Float]],
+      nprobe: Int, metric: String): Seq[Row] = {
+    val m = Distances.metricId(metric)
+    val vector = c.rows.toMap
+    c.queries.flatMap { case (qid, qv) =>
+      val probed = Ivf.probeOrder(qv, centroids, m).take(nprobe).toSet
+      val h = new TopK(c.k)
+      assigned.collect { case (id, cell) if probed(cell) => id }.distinct
+        .foreach(id => h.push(Distances.distance(m)(vector(id), qv), id))
+      h.sorted.toSeq.zipWithIndex.map { case ((d, id), r) => (qid, id, d, r + 1) }
+    }.sorted
+  }
+
+  /** [[Ivf.search]] at `nprobe` < C over a spill-1 and a spill-2
+    * assignment against [[probedFold]]; C is up to 4 distinct row vectors.
+    */
+  private def ivfProbed(c: Case, metric: String, np: Int): Prop = {
+    val d = data(c)
+    val qs = c.queries.toArray
+    val centroids = c.rows.map(_._2).distinctBy(_.toSeq).take(4).toArray
+    val nprobe = math.max(1, math.min(np, centroids.length - 1))
+    Seq(1, 2).map { spill =>
+      val assigned = Ivf.assign(spark, d, centroids, metric, spill)
+      val cells = assigned.select(col("id"), col("cell")).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      agreeWith(probedFold(c, cells, centroids, nprobe, metric), metric, Seq(
+        s"Ivf.search spill $spill nprobe $nprobe of ${centroids.length}" -> (() =>
+          Ivf.search(spark, assigned, centroids, qs, c.k, nprobe, metric, dedup = spill > 1))))
     }.reduce(_ && _)
   }
 
@@ -161,6 +196,48 @@ object KnnEquivalenceProps extends Properties("KnnEquivalence") {
       "Quantize.searchExact sq4" -> (() =>
         Quantize.searchExact(spark, Quantize.sq4(d), qs, c.k, metric = "manhattan", codec = "sq4"))))
   }
+
+  property("IVF at partial probe equals the TopK fold over the probed cells' distinct ids") =
+    forAll(cases, cosineCases, Gen.choose(1, 3)) { (c, cc, np) =>
+      Seq("euclidean" -> c, "manhattan" -> c, "cosine" -> cc)
+        .map { case (metric, x) => ivfProbed(x, metric, np) }.reduce(_ && _)
+    }
+
+  /** Per query, up to k candidates from each of several graph partitions
+    * and delta partitions (a query may get none), on a coarse distance
+    * grid so ties are common; base and delta ids are disjoint, as the
+    * override set makes them.
+    */
+  private val mergeInputs: Gen[(Int, Seq[(Long, Long, Double)], Seq[(Long, Long, Double)])] = {
+    def part(k: Int, ids: Seq[Long]): Gen[Seq[(Long, Long, Double)]] =
+      Seq(3L, 10L, 17L).foldLeft(Gen.const(Seq.empty[(Long, Long, Double)])) { (acc, qid) =>
+        for {
+          rows <- acc
+          n <- Gen.choose(0, k)
+          picked <- Gen.pick(n, ids)
+          ds <- Gen.listOfN(n, Gen.choose(0, 4).map(_ * 0.5))
+        } yield rows ++ picked.toSeq.zip(ds).map { case (id, d) => (qid, id, d) }
+      }
+    for {
+      k <- Gen.choose(1, 5)
+      nb <- Gen.choose(0, 3)
+      nd <- Gen.choose(0, 3)
+      base <- Gen.listOfN(nb, part(k, (0L until 40L).toSeq))
+      delta <- Gen.listOfN(nd, part(k, (40L until 60L).toSeq))
+    } yield (k, base.flatten, delta.flatten)
+  }
+
+  property("the maintained-HNSW k-merge equals the TopK fold of base and delta candidates") =
+    forAll(mergeInputs) { case (k, base, delta) =>
+      val all = base ++ delta
+      val want = all.map(_._1).distinct.flatMap { qid =>
+        val h = new TopK(k)
+        all.filter(_._1 == qid).foreach { case (_, id, d) => h.push(d, id) }
+        h.sorted.toSeq.zipWithIndex.map { case ((d, id), r) => (qid, id, d, r + 1) }
+      }.sorted
+      val got = rowsOf(Knn.mergeLocal(spark, all.toArray, k))
+      Prop(got == want) :| s"got $got, want $want"
+    }
 
   // one search per case: eight cases per run, so a tie broken by rounding
   // rather than by id has many chances to show

@@ -3,10 +3,8 @@ package graft
 import graft.io.LocalParquet
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.VectorOp
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The in-process sidecar reader returns what `spark.read.parquet` does,
   * fails on a damaged file, and lets the maintained-index sidecar loaders
@@ -68,21 +66,6 @@ class LocalParquetSpec extends SparkTestBase {
     Files.write(part, java.util.Arrays.copyOf(bytes, bytes.length / 2))
     Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
     intercept[Exception](LocalParquet.read(spark, dir))
-  }
-
-  /** Spark jobs started by `call`, counted by a listener. */
-  private def jobsOf(call: => Any): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      call
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("the maintained-index sidecar loaders start no Spark job") {

@@ -3,11 +3,9 @@ package graft
 import graft.io.{BatchLog, HadoopIO}
 import graft.streaming.StreamingOps
 import graft.text.Bm25
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The parameter sidecar every parameter-fingerprinted sink opens through
   * ([[BatchLog.open]] / [[BatchLog.params]]), and the sidecar reads that
@@ -18,20 +16,6 @@ class SinkParamsSpec extends SparkTestBase {
   import spark.implicits._
 
   private def fresh(name: String): String = Files.createTempDirectory(name).toString
-
-  private def jobsOf(call: => Any): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      call
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def cpLog(dir: String) = new BatchLog(spark, dir, Seq("totals"), "corpus-profile",
     Some("compactCorpusProfile"), exactlyOnce = true, meta = "cp_meta")

@@ -1,10 +1,30 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.atomic.AtomicInteger
+
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Spark jobs started by `call`, counted by a listener that sees every
+    * event posted before and during the call.
+    */
+  def jobsOf(call: => Any): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      call
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {
