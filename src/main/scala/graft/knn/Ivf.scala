@@ -639,17 +639,20 @@ object Ivf {
     * query's probe cells are ranked on the driver ([[probeOrder]] under
     * `metric`) and broadcast as masks ([[probeMasks]]); ONE pass over
     * `assigned` keeps a bounded heap per query over the rows of its
-    * probed cells ([[Knn.scanHeaps]]); the heaps are collected and
-    * k-merged on the driver ([[Knn.mergeLocal]]). So a search over a
-    * table with no shuffle behind it is one Spark job. At most k rows per
-    * query per partition of `assigned` reach the driver (k·Q·P).
+    * probed cells ([[Knn.scanHeaps]]); the driver folds each partition's
+    * heaps into one per query as its task finishes ([[Knn.foldHeaps]]) and
+    * numbers the result ([[Knn.mergeLocal]]). So a search over a table
+    * with no shuffle behind it is one Spark job. Every partition of
+    * `assigned` sends at most k rows per query to the driver, which keeps
+    * k per query (k·Q) plus the partitions' results not yet folded.
     *
     * The search runs when called: the result is a local relation, and
     * reading it starts no job. A spilled assignment (`dedup`) lets an id
     * take one slot per query: a heap admits an id it does not hold yet,
     * and the merge keeps an id once whichever partitions sent it.
     *
-    * Refuses `k` or `nprobe` below 1 and a repeated qid.
+    * Refuses `k` or `nprobe` below 1, a repeated qid and a non-integral
+    * `id` column, before it scans.
     */
   def search(
       spark: SparkSession,
@@ -662,19 +665,20 @@ object Ivf {
       dedup: Boolean = false): DataFrame = {
     import spark.implicits._
     requireSearchArgs(queries, k, nprobe)
-    val m = Distances.metricId(metric)
     val id = assigned.schema("id")
-    val candidates = if (queries.isEmpty) Array.empty[(Long, Long, Double)] else {
+    Knn.idOf(id) // refuses a non-integral id before the scan
+    val m = Distances.metricId(metric)
+    val heaps = if (queries.isEmpty) Array.empty[TopK] else {
       val masks = probeMasks(spark, queries, Some(probeMap(queries, centroids, nprobe, m)))
-      val bc = spark.sparkContext.broadcast(queries)
-      assigned
+      val bc = spark.sparkContext.broadcast(queries.map(_._2))
+      val rows = assigned
         .select(col("id").cast("long"), coalesce(col("cell").cast("int"), lit(-1)),
           col("vector").cast("array<float>"))
-        .as[(Long, Int, Array[Float])]
-        .mapPartitions(rows => Knn.scanHeaps(bc.value, masks.value, rows, k, Distances.distance(m) _, dedup))
-        .collect()
+        .as[(Long, Int, Array[Float])].rdd
+      Knn.foldHeaps(rows, queries.length, k, dedup)(
+        rows => Knn.scanHeaps(bc.value, masks.value, rows, k, Distances.distance(m) _, dedup))
     }
-    Knn.mergeLocal(spark, candidates, k, dedup, id)
+    Knn.mergeLocal(spark, Knn.emitHeaps(heaps, queries(_)._1).toArray, k, dedup, id)
   }
 
   /** [[search]]'s refusals, for callers that do work before it: `k` and

@@ -305,16 +305,33 @@ object Knn {
     emitHeaps(heaps, qs(_)._1)
   }
 
-  /** [[scanHeaps]] over IVF rows (id, cell, vector): query `qs(qi)` scans
-    * only the cells `masks(qi)` probes ([[Ivf.probeMasks]]); with
-    * `distinct` a spilled id takes one slot per heap.
+  /** [[scanHeaps]] over IVF rows (id, cell, vector), returning the heaps
+    * themselves: query `qvecs(qi)` scans only the cells `masks(qi)` probes
+    * ([[Ivf.probeMasks]]); with `distinct` a spilled id takes one slot per
+    * heap.
     */
-  private[graft] def scanHeaps(qs: Array[(Long, Array[Float])], masks: Array[Array[Boolean]],
+  private[graft] def scanHeaps(qvecs: Array[Array[Float]], masks: Array[Array[Boolean]],
       rows: Iterator[(Long, Int, Array[Float])], k: Int,
-      kernel: (Array[Float], Array[Float]) => Double, distinct: Boolean): Iterator[(Long, Long, Double)] = {
-    val heaps = Array.fill(qs.length)(new TopK(k))
-    TopK.scanBlocked(rows, qs.map(_._2), heaps, kernel, masks, distinct)
-    emitHeaps(heaps, qs(_)._1)
+      kernel: (Array[Float], Array[Float]) => Double, distinct: Boolean): Array[TopK] = {
+    val heaps = Array.fill(qvecs.length)(new TopK(k))
+    TopK.scanBlocked(rows, qvecs, heaps, kernel, masks, distinct)
+    heaps
+  }
+
+  /** The local half of the reference's search over `rows`, in ONE Spark
+    * job: every partition fills one heap per query with `scan`, and the
+    * driver folds each partition's heaps into its own as that task
+    * finishes ([[TopK.mergeFrom]], with `distinct` an id once per query).
+    * The driver so holds at most k candidates per query, plus the heaps
+    * of the partitions whose results have arrived but are not folded yet
+    * (at most k per query each).
+    */
+  private[graft] def foldHeaps[T](rows: RDD[T], nq: Int, k: Int, distinct: Boolean)(
+      scan: Iterator[T] => Array[TopK]): Array[TopK] = {
+    val heaps = Array.fill(nq)(new TopK(k))
+    rows.sparkContext.runJob(rows, scan, (_: Int, part: Array[TopK]) =>
+      heaps.indices.foreach(qi => heaps(qi).mergeFrom(part(qi), distinct)))
+    heaps
   }
 
   /** Every heap's contents in ascending (dist, id) order as
@@ -354,16 +371,9 @@ object Knn {
       k: Int,
       distinct: Boolean = false,
       id: StructField = StructField("id", LongType, nullable = false)): DataFrame = {
-    val typed: Long => Any = id.dataType match {
-      case LongType => identity
-      case IntegerType => _.toInt
-      case ShortType => _.toShort
-      case ByteType => _.toByte
-      case other => throw new IllegalArgumentException(s"kNN ids must be integral, got $other")
-    }
-    // Spark's double order: NaN last, -0.0 equal to 0.0
+    val typed = idOf(id)
     def before(a: (Long, Long, Double), b: (Long, Long, Double)): Boolean = {
-      val c = if (a._3 == b._3) 0 else java.lang.Double.compare(a._3, b._3)
+      val c = TopK.compare(a._3, b._3)
       c < 0 || (c == 0 && a._2 < b._2)
     }
     val rows = candidates.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qid, cs) =>
@@ -375,6 +385,18 @@ object Knn {
     val schema = StructType(Seq(StructField("qid", LongType, nullable = false), id.copy(name = "id"),
       StructField("dist", DoubleType), StructField("rank", IntegerType, nullable = false)))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** A long id back in the type of the integral `id` field a search
+    * scanned as long; refuses any other type before the scan, which would
+    * cast a string id to null and truncate a fractional one.
+    */
+  private[graft] def idOf(id: StructField): Long => Any = id.dataType match {
+    case LongType => identity
+    case IntegerType => _.toInt
+    case ShortType => _.toShort
+    case ByteType => _.toByte
+    case other => throw new IllegalArgumentException(s"kNN ids must be integral, got $other")
   }
 
   /** Array queries must carry distinct qids: a repeated qid would merge

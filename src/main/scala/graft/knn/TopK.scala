@@ -8,16 +8,25 @@ package graft.knn
   * This reproduces the reference's max-priority-queue result semantics
   * (`/root/reference/utils/priority_queue.go`, used by `index/hnsw.go:314`)
   * with an explicit id tie-break so distributed merges are deterministic.
+  * Distances order as Spark sorts doubles ([[TopK.compare]]): NaN (a
+  * cosine distance to a zero vector) after every number, so it never
+  * shadows a real candidate at the root.
+  *
+  * Serializable, so a partition's heaps travel to the driver as they are
+  * ([[Knn.scanHeaps]]); the arrays grow with the count up to `k`, so a
+  * sparsely filled heap ships no empty slots beyond twice its count.
   */
-final class TopK(k: Int) {
-  private val dists = new Array[Double](k)
-  private val ids = new Array[Long](k)
+final class TopK(k: Int) extends Serializable {
+  private var dists = new Array[Double](math.min(k, 16))
+  private var ids = new Array[Long](math.min(k, 16))
   private var count = 0
 
   def size: Int = count
 
-  @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-    d1 > d2 || (d1 == d2 && i1 > i2)
+  @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean = {
+    val c = TopK.compare(d1, d2)
+    c > 0 || (c == 0 && i1 > i2)
+  }
 
   private def siftUp(pos0: Int): Unit = {
     var pos = pos0
@@ -70,6 +79,11 @@ final class TopK(k: Int) {
 
   def push(dist: Double, id: Long): Unit = {
     if (count < k) {
+      if (count == dists.length) {
+        val cap = math.min(k, 2 * count)
+        dists = java.util.Arrays.copyOf(dists, cap)
+        ids = java.util.Arrays.copyOf(ids, cap)
+      }
       dists(count) = dist
       ids(count) = id
       count += 1
@@ -85,20 +99,33 @@ final class TopK(k: Int) {
   def sorted: Array[(Double, Long)] = {
     val out = Array.tabulate(count)(i => (dists(i), ids(i)))
     scala.util.Sorting.stableSort(out, (a: (Double, Long), b: (Double, Long)) =>
-      a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
+      worse(b._1, b._2, a._1, a._2))
     out
   }
 
-  def mergeFrom(other: TopK): Unit = {
+  def mergeFrom(other: TopK): Unit = mergeFrom(other, distinct = false)
+
+  /** Push every candidate `other` holds; with `distinct`, as
+    * [[pushDistinct]] (the merge of two partitions' heaps over a spilled
+    * IVF assignment).
+    */
+  def mergeFrom(other: TopK, distinct: Boolean): Unit = {
     var i = 0
     while (i < other.count) {
-      push(other.dists(i), other.ids(i))
+      if (distinct) pushDistinct(other.dists(i), other.ids(i)) else push(other.dists(i), other.ids(i))
       i += 1
     }
   }
 }
 
 object TopK {
+  /** Spark's order of doubles (`SQLOrderingUtil.compareDoubles`): -0.0
+    * equals 0.0, and NaN equals NaN and sorts after every number — the
+    * order [[Knn.topK]]'s window ranks `dist` by.
+    */
+  @inline def compare(a: Double, b: Double): Int =
+    if (a < b) -1 else if (a > b) 1 else if (a == b) 0 else java.lang.Double.compare(a, b)
+
   /** Push dist(row, query) for every (row, query) pair into per-query
     * heaps, scanning in BLOCKS: a block of rows is buffered, then each
     * query vector streams over the block, so a query vector is loaded

@@ -1464,8 +1464,9 @@ object StreamingOps {
     * One pass over the resolved view keeps per-partition heaps, k-merged
     * on the driver ([[graft.knn.Ivf.search]], the reference's
     * `storage/dataset.go:349-433` shape): the view's shuffle and that pass
-    * are the call's two Spark jobs. At most k rows per query per view
-    * partition reach the driver. The search runs when called and returns
+    * are the call's two Spark jobs. Each view partition sends at most k
+    * rows per query to the driver, which folds them as its task finishes
+    * and keeps k per query. The search runs when called and returns
     * a local relation. Refuses `k` or `nprobe` below 1 and a repeated qid
     * before reading anything.
     */

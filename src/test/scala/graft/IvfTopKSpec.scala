@@ -17,6 +17,27 @@ class TopKSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(t.sorted.toSeq === Seq((1.0, 1L), (1.0, 3L)))
   }
 
+  test("a NaN distance ranks after every number, as Spark sorts doubles, and never blocks a later candidate") {
+    val t = new TopK(2)
+    Seq((Double.NaN, 1L), (3.0, 2L), (Double.NaN, 0L), (1.0, 3L), (-0.0, 5L), (0.0, 4L))
+      .foreach { case (d, i) => t.push(d, i) }
+    assert(t.sorted.toSeq === Seq((0.0, 4L), (-0.0, 5L)))
+    val nan = new TopK(3)
+    Seq((Double.NaN, 9L), (Double.NaN, 1L), (2.0, 4L)).foreach { case (d, i) => nan.push(d, i) }
+    assert(nan.sorted.map(p => (p._1.isNaN, p._2)).toSeq === Seq((false, 4L), (true, 1L), (true, 9L)))
+  }
+
+  test("a heap grows past its first slots and travels whole through Java serialization") {
+    val t = new TopK(40)
+    (0 until 100).foreach(i => t.push(((i * 37) % 100).toDouble, i.toLong))
+    val bytes = new java.io.ByteArrayOutputStream
+    new java.io.ObjectOutputStream(bytes).writeObject(t)
+    val back = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      .readObject().asInstanceOf[TopK]
+    assert(back.sorted.toSeq === t.sorted.toSeq)
+    assert(t.sorted.map(_._1).toSeq === (0 until 40).map(_.toDouble))
+  }
+
   test("merge of per-partition heaps equals global top-k (dataset.go:349)") {
     val rnd = new scala.util.Random(5)
     val items = Array.tabulate(1000)(i => (rnd.nextDouble(), i.toLong))

@@ -98,40 +98,69 @@ object KnnEquivalenceProps extends Properties("KnnEquivalence") {
   private def agreeWith(want: Seq[Row], metric: String, paths: Seq[(String, () => DataFrame)]): Prop =
     paths.map { case (name, run) =>
       val got = rowsOf(run())
-      Prop(got == want) :| s"$name ($metric): got $got, want $want"
+      Prop(same(got, want)) :| s"$name ($metric): got $got, want $want"
     }.reduce(_ && _)
 
-  /** The IVF reference at partial probe: per query, one heap over the
-    * distinct ids of the `assigned` (id, cell) rows whose cell is among the
-    * first `nprobe` of [[Ivf.probeOrder]] under `metric`.
+  /** Row equality that takes a NaN distance (cosine to a zero vector) as
+    * equal to itself.
     */
-  private def probedFold(c: Case, assigned: Seq[(Long, Int)], centroids: Array[Array[Float]],
-      nprobe: Int, metric: String): Seq[Row] = {
+  private def same(a: Seq[Row], b: Seq[Row]): Boolean =
+    a.length == b.length && a.zip(b).forall { case (x, y) =>
+      x._1 == y._1 && x._2 == y._2 && x._4 == y._4 && (x._3 == y._3 || x._3.isNaN && y._3.isNaN)
+    }
+
+  /** The IVF candidates at partial probe: per query, the distinct ids of
+    * the `assigned` (id, cell) rows whose cell is among the first `nprobe`
+    * of [[Ivf.probeOrder]] under `metric`, as (qid, id, dist).
+    */
+  private def probed(rows: Seq[(Long, Array[Float])], queries: Seq[(Long, Array[Float])],
+      assigned: Seq[(Long, Int)], centroids: Array[Array[Float]], nprobe: Int,
+      metric: String): Seq[(Long, Long, Double)] = {
     val m = Distances.metricId(metric)
-    val vector = c.rows.toMap
-    c.queries.flatMap { case (qid, qv) =>
-      val probed = Ivf.probeOrder(qv, centroids, m).take(nprobe).toSet
-      val h = new TopK(c.k)
-      assigned.collect { case (id, cell) if probed(cell) => id }.distinct
-        .foreach(id => h.push(Distances.distance(m)(vector(id), qv), id))
-      h.sorted.toSeq.zipWithIndex.map { case ((d, id), r) => (qid, id, d, r + 1) }
-    }.sorted
+    val vector = rows.toMap
+    queries.flatMap { case (qid, qv) =>
+      val cells = Ivf.probeOrder(qv, centroids, m).take(nprobe).toSet
+      assigned.collect { case (id, cell) if cells(cell) => id }.distinct
+        .map(id => (qid, id, Distances.distance(m)(vector(id), qv)))
+    }
   }
 
+  /** One bounded heap per query over `candidates`. */
+  private def heapFold(candidates: Seq[(Long, Long, Double)], k: Int): Seq[Row] =
+    candidates.groupBy(_._1).toSeq.flatMap { case (qid, cs) =>
+      val h = new TopK(k)
+      cs.foreach { case (_, id, d) => h.push(d, id) }
+      h.sorted.toSeq.zipWithIndex.map { case ((d, id), r) => (qid, id, d, r + 1) }
+    }.sorted
+
   /** [[Ivf.search]] at `nprobe` < C over a spill-1 and a spill-2
-    * assignment against [[probedFold]]; C is up to 4 distinct row vectors.
+    * assignment against the TopK fold of the probed cells' distinct ids,
+    * and that fold against the `row_number()` window over the same
+    * candidates ([[Knn.topK]], which orders NaN last as Spark sorts
+    * doubles). C is up to 4 distinct row vectors. With `zeroLed` every
+    * partition starts with a zero vector, under cosine a NaN distance that
+    * is each heap's first candidate when its cell is probed.
     */
-  private def ivfProbed(c: Case, metric: String, np: Int): Prop = {
-    val d = data(c)
+  private def ivfProbed(c: Case, metric: String, np: Int, zeroLed: Boolean = false): Prop = {
+    val s = spark
+    import s.implicits._
+    val zero = Array.fill(dim)(0f)
+    val d = if (!zeroLed) data(c) else s.sparkContext.parallelize(c.rows, c.parts)
+      .mapPartitionsWithIndex((i, it) => Iterator((1000L + i, zero)) ++ it).toDF("id", "vector")
+    val rows = c.rows ++ (0 until c.parts).map(i => (1000L + i, zero))
     val qs = c.queries.toArray
     val centroids = c.rows.map(_._2).distinctBy(_.toSeq).take(4).toArray
     val nprobe = math.max(1, math.min(np, centroids.length - 1))
     Seq(1, 2).map { spill =>
       val assigned = Ivf.assign(spark, d, centroids, metric, spill)
       val cells = assigned.select(col("id"), col("cell")).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      agreeWith(probedFold(c, cells, centroids, nprobe, metric), metric, Seq(
-        s"Ivf.search spill $spill nprobe $nprobe of ${centroids.length}" -> (() =>
-          Ivf.search(spark, assigned, centroids, qs, c.k, nprobe, metric, dedup = spill > 1))))
+      val candidates = probed(rows, c.queries, cells, centroids, nprobe, metric)
+      val want = heapFold(candidates, c.k)
+      val window = rowsOf(Knn.topK(candidates.toDF("qid", "id", "dist"), c.k))
+      (Prop(same(want, window)) :| s"TopK fold $want, window $window ($metric)") &&
+        agreeWith(want, metric, Seq(
+          s"Ivf.search spill $spill nprobe $nprobe of ${centroids.length}" -> (() =>
+            Ivf.search(spark, assigned, centroids, qs, c.k, nprobe, metric, dedup = spill > 1))))
     }.reduce(_ && _)
   }
 
@@ -199,8 +228,8 @@ object KnnEquivalenceProps extends Properties("KnnEquivalence") {
 
   property("IVF at partial probe equals the TopK fold over the probed cells' distinct ids") =
     forAll(cases, cosineCases, Gen.choose(1, 3)) { (c, cc, np) =>
-      Seq("euclidean" -> c, "manhattan" -> c, "cosine" -> cc)
-        .map { case (metric, x) => ivfProbed(x, metric, np) }.reduce(_ && _)
+      ivfProbed(c, "euclidean", np) && ivfProbed(c, "manhattan", np) && ivfProbed(cc, "cosine", np) &&
+        ivfProbed(cc, "cosine", np, zeroLed = true)
     }
 
   /** Per query, up to k candidates from each of several graph partitions

@@ -101,6 +101,36 @@ class SearchWorkSpec extends SparkTestBase {
       rows(res))
   }
 
+  test("a non-integral id column is refused before the scan, not cast to null or truncated") {
+    Seq("string", "double").foreach { t =>
+      val cast = assigned.withColumn("id", org.apache.spark.sql.functions.col("id").cast(t))
+      var e: IllegalArgumentException = null
+      assert(jobsOf { e = intercept[IllegalArgumentException](
+        Ivf.search(spark, cast, centroids, queries, k = 3, nprobe = 2)) } === 0, t)
+      assert(e.getMessage.contains("kNN ids must be integral"), e.getMessage)
+    }
+  }
+
+  test("a zero vector under cosine (NaN distance) first in its partition ranks last, as the window ranks it") {
+    val nonzero = vecs.filter(_._2.exists(_ != 0f))
+    val cells = nonzero.map(_._2).distinctBy(_.toSeq).take(3).toArray
+    val qs = nonzero.slice(20, 23).toArray
+    // the zero row leads the single partition, so it is every heap's first candidate
+    val data = ((999L, Array.fill(4)(0f)) +: nonzero).toDF("id", "vector").coalesce(1)
+    Seq(1 -> false, 2 -> true).foreach { case (spill, dedup) =>
+      val assignedCos = Ivf.assign(spark, data, cells, "cosine", spill)
+      Seq(1, 4).foreach { k =>
+        val candidates = assignedCos.as[(Long, Int, Array[Float])].collect().toSeq.flatMap {
+          case (id, _, v) => qs.map { case (qid, qv) => (qid, id, Distances.cosine(v, qv)) }
+        }.distinct.toDF("qid", "id", "dist")
+        val window = rows(graft.knn.Knn.topK(candidates, k))
+        assert(!window.exists(_._2 == 999L))
+        assert(rows(Ivf.search(spark, assignedCos, cells, qs, k, nprobe = cells.length, "cosine", dedup)) === window,
+          s"spill $spill k $k")
+      }
+    }
+  }
+
   test("jobs per call: maintained IVF at most 2, maintained HNSW at most 3, saved IVF at most 2 after its load") {
     val ivf = jobsOf(StreamingOps.searchIvfMaintained(spark, ivfDir, queries, k = 5, nprobe = 2).collect())
     assert(ivf <= 2, s"searchIvfMaintained ran $ivf jobs")
